@@ -1,10 +1,6 @@
 package graft.sources.tiff
 
-import java.awt.Rectangle
-import java.io.File
 import java.util
-
-import javax.imageio.ImageIO
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -56,9 +52,11 @@ import graft.functions.GeoMath
   * Paths/colNames must not contain ',' (flat string options).
   *
   * Scale posture: planning reads only TIFF headers (one tiny IFD read per
-  * raster); each task decodes exactly its window via an ImageIO region
-  * read, so executor memory is bounded by maxBlockSize² regardless of
-  * raster size, and tasks scale with raster area / block².
+  * raster); each task decodes exactly its window through the chunk reader
+  * ([[RawStripGrid]] over [[StripDecode]], the one pixel path for classic
+  * TIFF and BigTIFF alike), so executor memory is bounded by maxBlockSize²
+  * (plus one strip or tile) regardless of raster size, and tasks scale
+  * with raster area / block².
   */
 class GeoTiffSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "geotiff"
@@ -541,24 +539,8 @@ class GeoTiffReaderFactory(
       datumBridge)
 }
 
-/** Uniform window-of-pixels accessor: (x, y) are WINDOW-relative. Two
-  * implementations — the ImageIO region read for classic TIFF, and the raw
-  * strip reader for BigTIFF (which ImageIO cannot decode). Both hold only
-  * O(window) memory.
-  */
-private[tiff] trait PixelGrid {
-  def getSample(x: Int, y: Int): Int
-  def getSampleFloat(x: Int, y: Int): Float
-  def getSampleDouble(x: Int, y: Int): Double
-}
-
-private[tiff] final class AwtPixelGrid(r: java.awt.image.Raster, band: Int = 0) extends PixelGrid {
-  def getSample(x: Int, y: Int): Int = r.getSample(x, y, band)
-  def getSampleFloat(x: Int, y: Int): Float = r.getSampleFloat(x, y, band)
-  def getSampleDouble(x: Int, y: Int): Double = r.getSampleDouble(x, y, band)
-}
-
-/** Raw chunk window reader for BigTIFF. Uncompressed strips are seek-read
+/** Window-of-pixels accessor over the raw chunks of a classic TIFF or a
+  * BigTIFF; (x, y) are WINDOW-relative. Uncompressed strips are seek-read
   * row by row (a task reads O(window) bytes of a raster of any size:
   * sample (row, col) lives at stripOffsets(row / rowsPerStrip) +
   * ((row % rowsPerStrip) * width + col) * bytesPerSample); DEFLATE/LZW
@@ -567,8 +549,7 @@ private[tiff] final class AwtPixelGrid(r: java.awt.image.Raster, band: Int = 0) 
   * layouts (COG) decode each overlapping tile once (O(tile + window)).
   */
 private[tiff] final class RawStripGrid(meta: TiffTags.RasterMeta, window: TiffWindow,
-    band: Int = 0)
-  extends PixelGrid {
+    band: Int = 0) {
 
   require(band >= 0 && band < meta.samplesPerPixel,
     s"${meta.path}: band ${band + 1} of ${meta.samplesPerPixel} requested")
@@ -599,9 +580,9 @@ private[tiff] final class RawStripGrid(meta: TiffTags.RasterMeta, window: TiffWi
 
   private def idx(x: Int, y: Int): Int = y * rowBytes + x * pixBytes + bandOff
 
-  /** Integer sample with the same conventions as AWT's getSample: unsigned
-    * widths zero-extend, signed widths sign-extend, 32-bit returns raw bits
-    * (the caller widens u32 with & 0xffffffffL exactly as for AWT).
+  /** Integer sample: unsigned widths zero-extend, signed widths
+    * sign-extend, 32-bit returns raw bits (the caller widens u32 with
+    * & 0xffffffffL).
     */
   def getSample(x: Int, y: Int): Int = {
     val i = idx(x, y)
@@ -612,7 +593,7 @@ private[tiff] final class RawStripGrid(meta: TiffTags.RasterMeta, window: TiffWi
       case (16, _) => buf.getShort(i) & 0xffff
       case (32, _) => buf.getInt(i)
       case (b, f) => throw new IllegalStateException(
-        s"${meta.path}: unsupported BigTIFF integer layout bits=$b format=$f")
+        s"${meta.path}: unsupported TIFF integer layout bits=$b format=$f")
     }
   }
 
@@ -701,30 +682,9 @@ class GeoTiffPartitionReader(
     }
   }
 
-  private lazy val rasters: Array[PixelGrid] = {
-    val arr = new Array[PixelGrid](metas.length)
-    valueIdx.foreach { i =>
-      val rw = readWindows(i)
-      if (metas(i).bigTiff) {
-        require(bands(i) >= 1 && bands(i) <= metas(i).samplesPerPixel,
-          s"${metas(i).path}: band ${bands(i)} out of range " +
-            s"(raster has ${metas(i).samplesPerPixel} bands)")
-        arr(i) = new RawStripGrid(metas(i), rw, bands(i) - 1)
-      } else {
-        val reader = ImageIO.getImageReadersByFormatName("tiff").next()
-        val iis = ImageIO.createImageInputStream(new File(metas(i).path))
-        try {
-          reader.setInput(iis)
-          val p = reader.getDefaultReadParam
-          p.setSourceRegion(new Rectangle(rw.colOff, rw.rowOff, rw.width, rw.height))
-          arr(i) = new AwtPixelGrid(
-            reader.read(metas(i).imageIndex, p).getRaster, bands(i) - 1)
-        } finally {
-          reader.dispose()
-          iis.close()
-        }
-      }
-    }
+  private lazy val rasters: Array[RawStripGrid] = {
+    val arr = new Array[RawStripGrid](metas.length)
+    valueIdx.foreach(i => arr(i) = new RawStripGrid(metas(i), readWindows(i), bands(i) - 1))
     arr
   }
 

@@ -4,12 +4,12 @@ import java.io.RandomAccessFile
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.Inflater
 
-/** Chunk decode for the BigTIFF raw reader: window extraction over
-  * uncompressed strips (seek-only, O(window) I/O), over DEFLATE/LZW
-  * compressed strips (each overlapping strip is decompressed once, the
-  * predictor is undone, and only the window's columns are kept), and over
-  * TILED layouts (the cloud-optimized-GeoTIFF shape — same codecs, tile
-  * geometry, padded edge tiles).
+/** Chunk decode for the raster source's one pixel path (classic TIFF and
+  * BigTIFF alike): window extraction over uncompressed strips (seek-only,
+  * O(window) I/O), over compressed strips (each overlapping strip is
+  * decompressed once, the predictor is undone, and only the window's
+  * columns are kept), and over TILED layouts (the cloud-optimized-GeoTIFF
+  * shape — same codecs, tile geometry, padded edge tiles).
   *
   * Memory posture: uncompressed reads hold O(window) bytes; compressed reads
   * hold O(strip + window) — GDAL writes small strips (commonly 1–16 rows), so
@@ -43,7 +43,7 @@ private[graft] object StripDecode {
   private val LzmaMemLimitKiB: Int = 1 << 18
 
   /** Byte-size of a window/chunk buffer, computed in Long and gated at the
-    * JVM array limit: a whole-image single-strip BigTIFF (rowsPerStrip
+    * JVM array limit: a whole-image single-strip TIFF (rowsPerStrip
     * defaults to the full height) or a wide multi-band chunk can push
     * rows × width × bytesPer × spp past Int.MaxValue, which bare Int
     * arithmetic turns into a NegativeArraySizeException instead of the

@@ -227,26 +227,19 @@ class GeoTiffSourceSpec extends SparkSpec {
 
   test("unsupported BigTIFF compression is rejected with a typed error") {
     // flip the compression tag of a valid fixture to 6 (OLD-style JPEG —
-    // deprecated by TIFF TechNote 2 and unsupported; new-style 7 decodes)
-    val src = TiffFixtures.writeBigTiff(s"$tmp/big43e.tif", 4, 4,
-      (c, r) => 1.0, 0.0, 10.0, 0.5, None)
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
-    // IFD offset is at header bytes 8..15 (LE)
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val ifd = bb.getLong(8)
-    val n = bb.getLong(ifd.toInt)
-    var found = false
-    for (i <- 0 until n.toInt) {
-      val off = ifd.toInt + 8 + i * 20
-      if ((bb.getShort(off) & 0xffff) == 259) { bb.putShort(off + 12, 6); found = true }
+    // deprecated by TIFF TechNote 2 and unsupported; new-style 7 decodes),
+    // under either header width
+    for (classic <- Seq(false, true)) {
+      val src = TiffFixtures.writeBigTiff(s"$tmp/big43e_$classic.tif", 4, 4,
+        (c, r) => 1.0, 0.0, 10.0, 0.5, None, classic = classic)
+      val bad = TiffFixtures.patchIfd0(src, s"$tmp/big43e_jpeg_$classic.tif") { (bb, ifd) =>
+        bb.putShort(ifd.valuePos(259), 6)
+      }
+      val e = intercept[IllegalArgumentException] {
+        graft.sources.tiff.TiffTags.read(bad)
+      }
+      assert(e.getMessage.contains("compression 6 unsupported"), s"classic=$classic")
     }
-    assert(found)
-    val bad = s"$tmp/big43e_jpeg.tif"
-    java.nio.file.Files.write(java.nio.file.Paths.get(bad), bytes)
-    val e = intercept[IllegalArgumentException] {
-      graft.sources.tiff.TiffTags.read(bad)
-    }
-    assert(e.getMessage.contains("compression 6 unsupported"))
   }
 
   test("DEFLATE BigTIFF == uncompressed BigTIFF == classic TIFF on the same pixels") {
@@ -376,15 +369,16 @@ class GeoTiffSourceSpec extends SparkSpec {
     val plain = TiffFixtures.writeBigTiff(s"$tmp/fp_plain.tif", 60, 40, v,
       0.0, 20.0, 0.5, None, rowsPerStrip = 9)
     val b = Raster.raster2df(spark, Seq(plain)).orderBy("lat", "lon").collect().map(_.toSeq)
-    for ((bigEndian, name) <- Seq((false, "le"), (true, "be"))) {
-      val pred = TiffFixtures.writeBigTiff(s"$tmp/fp3_$name.tif", 60, 40, v,
+    for ((bigEndian, name) <- Seq((false, "le"), (true, "be")); classic <- Seq(false, true)) {
+      val pred = TiffFixtures.writeBigTiff(s"$tmp/fp3_${name}_$classic.tif", 60, 40, v,
         0.0, 20.0, 0.5, None, rowsPerStrip = 9, bigEndian = bigEndian,
-        compression = 8, predictor = 3)
+        compression = 8, predictor = 3, classic = classic)
       val m = graft.sources.tiff.TiffTags.read(pred)
-      assert(m.compression == 8 && m.predictor == 3 && m.sampleFormat == 3)
+      assert(m.compression == 8 && m.predictor == 3 && m.sampleFormat == 3 &&
+        m.bigTiff == !classic)
       val a = Raster.raster2df(spark, Seq(pred), maxBlockSize = 128)
         .orderBy("lat", "lon").collect().map(_.toSeq)
-      assert(a.length == 60 * 40 && a.sameElements(b), s"byte order $name")
+      assert(a.length == 60 * 40 && a.sameElements(b), s"byte order $name, classic=$classic")
     }
   }
 
@@ -527,7 +521,7 @@ class GeoTiffSourceSpec extends SparkSpec {
     assert(e2.getMessage.contains("IFD chain has only"))
   }
 
-  test("CLASSIC multi-page overview pyramid reads per level through ImageIO") {
+  test("CLASSIC multi-page overview pyramid reads per level") {
     def v(k: Int, c: Int, r: Int): Double = (k * 50 + c * 3 + r) % 251
     val p = TiffFixtures.writeClassicOverviews(s"$tmp/ovr_classic.tif", 18, 10, v,
       5.0, 40.0, 0.5, Some("255"), levels = 2)
@@ -579,20 +573,8 @@ class GeoTiffSourceSpec extends SparkSpec {
     // patch tag 317 in place (the compression-rejection trick): a u8 file
     // claiming predictor 3, and an f32 file claiming predictor 2, are both
     // malformed per spec and must fail loudly, never decode to garbage
-    def patchPredictor(src: String, dst: String, to: Short): String = {
-      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
-      val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val ifdOff = bb.getLong(8)
-      val n = bb.getLong(ifdOff.toInt).toInt
-      var found = false
-      for (i <- 0 until n) {
-        val off = (ifdOff + 8 + i * 20L).toInt
-        if ((bb.getShort(off) & 0xffff) == 317) { bb.putShort(off + 12, to); found = true }
-      }
-      assert(found, s"no predictor tag in $src")
-      java.nio.file.Files.write(java.nio.file.Paths.get(dst), bytes)
-      dst
-    }
+    def patchPredictor(src: String, dst: String, to: Short): String =
+      TiffFixtures.patchIfd0(src, dst)((bb, ifd) => bb.putShort(ifd.valuePos(317), to))
     def v(c: Int, r: Int): Double = (c + r).toDouble
     val u8p2 = TiffFixtures.writeBigTiff(s"$tmp/fp3_badsrc1.tif", 8, 8, v,
       0.0, 4.0, 0.5, None, dtype = TiffFixtures.U8, compression = 8, predictor = 2)
@@ -720,16 +702,17 @@ class GeoTiffSourceSpec extends SparkSpec {
     def bv(b: Int, c: Int, r: Int): Double = b * 5000.0 + math.cos(c * 0.21) * 100.0 + r
     val chunky = TiffFixtures.writeBigTiff(s"$tmp/pl3_chunky.tif", 24, 16, null,
       0.0, 8.0, 0.5, None, rowsPerStrip = 5, spp = 2, bandValue = bv)
-    for ((be, name) <- Seq((false, "le"), (true, "be"))) {
-      val planar = TiffFixtures.writeBigTiff(s"$tmp/pl3_$name.tif", 24, 16, null,
+    for ((be, name) <- Seq((false, "le"), (true, "be")); classic <- Seq(false, true)) {
+      val planar = TiffFixtures.writeBigTiff(s"$tmp/pl3_${name}_$classic.tif", 24, 16, null,
         0.0, 8.0, 0.5, None, rowsPerStrip = 5, bigEndian = be,
-        compression = 8, predictor = 3, spp = 2, bandValue = bv, planar = true)
+        compression = 8, predictor = 3, spp = 2, bandValue = bv, planar = true,
+        classic = classic)
       for (band <- Seq(1, 2)) {
         val a = Raster.raster2df(spark, Seq(planar), bands = Seq(band))
           .orderBy("lat", "lon").collect().map(_.toSeq)
         val b = Raster.raster2df(spark, Seq(chunky), bands = Seq(band))
           .orderBy("lat", "lon").collect().map(_.toSeq)
-        assert(a.length == 24 * 16 && a.sameElements(b), s"$name band $band")
+        assert(a.length == 24 * 16 && a.sameElements(b), s"$name band $band classic=$classic")
       }
     }
   }
@@ -1518,16 +1501,9 @@ class GeoTiffSourceSpec extends SparkSpec {
     val p = TiffFixtures.writeBigTiff(s"$tmp/mt_none.tif", 4, 4,
       (c, r) => 1.0, 0.0, 10.0, 0.5, None, modelTransform = Array[Double](
         0.5, 0, 0, 0, 0, -0.5, 0, 10, 0, 0, 0, 0, 0, 0, 0, 1))
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val ifd = bb.getLong(8)
-    val n = bb.getLong(ifd.toInt)
-    for (i <- 0 until n.toInt) {
-      val off = ifd.toInt + 8 + i * 20
-      if ((bb.getShort(off) & 0xffff) == 34264) bb.putShort(off, 60000.toShort)
+    val bad = TiffFixtures.patchIfd0(p, s"$tmp/mt_none_stripped.tif") { (bb, ifd) =>
+      bb.putShort(ifd.entry(34264), 60000.toShort)
     }
-    val bad = s"$tmp/mt_none_stripped.tif"
-    java.nio.file.Files.write(java.nio.file.Paths.get(bad), bytes)
     val e = intercept[IllegalArgumentException] {
       graft.sources.tiff.TiffTags.read(bad)
     }
@@ -1542,14 +1518,16 @@ class GeoTiffSourceSpec extends SparkSpec {
     val deflS = TiffFixtures.writeBigTiff(s"$tmp/z_defl.tif", 64, 48, vz,
       0.0, 20.0, 0.25, Some("-1"), rowsPerStrip = 7, compression = 8,
       dtype = TiffFixtures.U8, predictor = 2)
-    val zstdS = TiffFixtures.writeBigTiff(s"$tmp/z_zstd.tif", 64, 48, vz,
-      0.0, 20.0, 0.25, Some("-1"), rowsPerStrip = 7, compression = 50000,
-      dtype = TiffFixtures.U8, predictor = 2)
-    val m = graft.sources.tiff.TiffTags.read(zstdS)
-    assert(m.compression == 50000)
     val a = Raster.raster2df(spark, Seq(deflS)).orderBy("lat", "lon").collect().map(_.toSeq)
-    val b = Raster.raster2df(spark, Seq(zstdS)).orderBy("lat", "lon").collect().map(_.toSeq)
-    assert(a.nonEmpty && a.sameElements(b))
+    for (classic <- Seq(false, true)) {
+      val zstdS = TiffFixtures.writeBigTiff(s"$tmp/z_zstd_$classic.tif", 64, 48, vz,
+        0.0, 20.0, 0.25, Some("-1"), rowsPerStrip = 7, compression = 50000,
+        dtype = TiffFixtures.U8, predictor = 2, classic = classic)
+      val m = graft.sources.tiff.TiffTags.read(zstdS)
+      assert(m.compression == 50000 && m.bigTiff == !classic)
+      val b = Raster.raster2df(spark, Seq(zstdS)).orderBy("lat", "lon").collect().map(_.toSeq)
+      assert(a.nonEmpty && a.sameElements(b), s"classic=$classic")
+    }
     // tiled (the actual GDAL ZSTD COG shape), f32 + predictor 3
     def vf(c: Int, r: Int): Double =
       if ((r + c) % 9 == 0) -9999.0 else math.sin(c * 0.37) * 100 + r
@@ -1570,13 +1548,16 @@ class GeoTiffSourceSpec extends SparkSpec {
     val deflS = TiffFixtures.writeBigTiff(s"$tmp/lz_defl.tif", 64, 48, vz,
       0.0, 20.0, 0.25, Some("-1"), rowsPerStrip = 7, compression = 8,
       dtype = TiffFixtures.U8, predictor = 2)
-    val lzmaS = TiffFixtures.writeBigTiff(s"$tmp/lz_lzma.tif", 64, 48, vz,
-      0.0, 20.0, 0.25, Some("-1"), rowsPerStrip = 7, compression = 34925,
-      dtype = TiffFixtures.U8, predictor = 2)
-    assert(graft.sources.tiff.TiffTags.read(lzmaS).compression == 34925)
     val a = Raster.raster2df(spark, Seq(deflS)).orderBy("lat", "lon").collect().map(_.toSeq)
-    val b = Raster.raster2df(spark, Seq(lzmaS)).orderBy("lat", "lon").collect().map(_.toSeq)
-    assert(a.nonEmpty && a.sameElements(b))
+    for (classic <- Seq(false, true)) {
+      val lzmaS = TiffFixtures.writeBigTiff(s"$tmp/lz_lzma_$classic.tif", 64, 48, vz,
+        0.0, 20.0, 0.25, Some("-1"), rowsPerStrip = 7, compression = 34925,
+        dtype = TiffFixtures.U8, predictor = 2, classic = classic)
+      val m = graft.sources.tiff.TiffTags.read(lzmaS)
+      assert(m.compression == 34925 && m.bigTiff == !classic)
+      val b = Raster.raster2df(spark, Seq(lzmaS)).orderBy("lat", "lon").collect().map(_.toSeq)
+      assert(a.nonEmpty && a.sameElements(b), s"classic=$classic")
+    }
     // the legacy header-less .lzma "alone" chunk layout decodes through the
     // format sniff to the identical table
     val aloneS = TiffFixtures.writeBigTiff(s"$tmp/lz_alone.tif", 64, 48, vz,
@@ -1636,20 +1617,8 @@ class GeoTiffSourceSpec extends SparkSpec {
 
   test("JPEG-in-TIFF typed rejections: sample width, predictor, planar, photometric") {
     // patch helper: flip one SHORT tag value of a little-endian BigTIFF
-    def patched(src: String, dst: String, tag: Int, value: Short): String = {
-      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
-      val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val ifd = bb.getLong(8)
-      val n = bb.getLong(ifd.toInt)
-      var found = false
-      for (i <- 0 until n.toInt) {
-        val off = ifd.toInt + 8 + i * 20
-        if ((bb.getShort(off) & 0xffff) == tag) { bb.putShort(off + 12, value); found = true }
-      }
-      assert(found, s"tag $tag not present to patch")
-      java.nio.file.Files.write(java.nio.file.Paths.get(dst), bytes)
-      dst
-    }
+    def patched(src: String, dst: String, tag: Int, value: Short): String =
+      TiffFixtures.patchIfd0(src, dst)((bb, ifd) => bb.putShort(ifd.valuePos(tag), value))
     def rejectMsg(p: String): String =
       intercept[IllegalArgumentException] { graft.sources.tiff.TiffTags.read(p) }.getMessage
     val good = TiffFixtures.writeBigTiffTiled(s"$tmp/jpeg_ok.tif", 16, 16,
@@ -1678,37 +1647,17 @@ class GeoTiffSourceSpec extends SparkSpec {
     // writes no 262 tag, so patch an EXISTING short tag id to 262 with
     // value 5: flip tag id 339 (SampleFormat, count 1 here) to 262 and its
     // value to 5 — the resulting IFD is a legal JPEG TIFF declaring CMYK
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(good))
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val ifd = bb.getLong(8)
-    val n = bb.getLong(ifd.toInt)
-    var found = false
-    for (i <- 0 until n.toInt) {
-      val off = ifd.toInt + 8 + i * 20
-      if ((bb.getShort(off) & 0xffff) == 339) {
-        bb.putShort(off, 262.toShort); bb.putShort(off + 12, 5.toShort); found = true
+    def photometric(dst: String, value: Short): String =
+      TiffFixtures.patchIfd0(good, dst) { (bb, ifd) =>
+        bb.putShort(ifd.valuePos(339), value); bb.putShort(ifd.entry(339), 262.toShort)
       }
-    }
-    assert(found)
-    val cmyk = s"$tmp/jpeg_cmyk.tif"
-    java.nio.file.Files.write(java.nio.file.Paths.get(cmyk), bytes)
-    assert(rejectMsg(cmyk).contains("PhotometricInterpretation 5 unsupported"))
+    assert(rejectMsg(photometric(s"$tmp/jpeg_cmyk.tif", 5))
+      .contains("PhotometricInterpretation 5 unsupported"))
     // RGB-stored (photometric 2) rejects too: the JDK decoder infers the
     // colorspace from the stream (3 components, no Adobe marker → assumed
     // YCbCr) and would apply a spurious inverse transform to stored RGB —
     // the round-13 advice finding. Same patch trick, value 2.
-    val bytes2 = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(good))
-    val bb2 = java.nio.ByteBuffer.wrap(bytes2).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val ifd2 = bb2.getLong(8)
-    for (i <- 0 until bb2.getLong(ifd2.toInt).toInt) {
-      val off = ifd2.toInt + 8 + i * 20
-      if ((bb2.getShort(off) & 0xffff) == 339) {
-        bb2.putShort(off, 262.toShort); bb2.putShort(off + 12, 2.toShort)
-      }
-    }
-    val rgbStored = s"$tmp/jpeg_rgb_stored.tif"
-    java.nio.file.Files.write(java.nio.file.Paths.get(rgbStored), bytes2)
-    val m2 = rejectMsg(rgbStored)
+    val m2 = rejectMsg(photometric(s"$tmp/jpeg_rgb_stored.tif", 2))
     assert(m2.contains("PhotometricInterpretation 2 unsupported") &&
       m2.contains("spurious"))
   }
@@ -1738,5 +1687,114 @@ class GeoTiffSourceSpec extends SparkSpec {
     assert(e.getMessage.contains("big.tif"))
     // boundary: Int.MaxValue itself is accepted
     assert(graft.sources.tiff.StripDecode.checkedSize("f", "w", Int.MaxValue.toLong) == Int.MaxValue)
+  }
+
+  test("hostile tag and IFD entry counts fail with a typed error, never an OOM") {
+    def rejects(p: String, what: String): Unit = {
+      val e = intercept[IllegalArgumentException](graft.sources.tiff.TiffTags.read(p))
+      assert(e.getMessage.contains(what), e.getMessage)
+    }
+    for (classic <- Seq(false, true)) {
+      val src = TiffFixtures.writeBigTiff(s"$tmp/hostile_$classic.tif", 8, 8,
+        (c, r) => (c + r).toDouble, 0.0, 4.0, 0.5, None, rowsPerStrip = 2, classic = classic)
+      def setCount(tag: Int, n: Long)(bb: java.nio.ByteBuffer, ifd: TiffFixtures.Ifd0): Unit =
+        if (ifd.bigTiff) bb.putLong(ifd.countPos(tag), n) else bb.putInt(ifd.countPos(tag), n.toInt)
+      // 2^30 offsets (4 or 8 GiB of values in a file of a few hundred
+      // bytes): a payload size multiplied in Int wraps to 0, reads as an
+      // inline value and allocates 2^30 longs
+      rejects(TiffFixtures.patchIfd0(src, s"$tmp/hostile_so_$classic.tif")(
+        setCount(273, 1L << 30)), "tag 273")
+      // the same wrap through the DOUBLE path (2^29 x 8 bytes = 2^32)
+      rejects(TiffFixtures.patchIfd0(src, s"$tmp/hostile_ps_$classic.tif")(
+        setCount(33550, 1L << 29)), "tag 33550")
+      // IFD entry count: BigTIFF 2^31 - 1 entries overflows n * 20 to a
+      // negative array size; classic 0xFFFF entries run past the file end
+      rejects(TiffFixtures.patchIfd0(src, s"$tmp/hostile_n_$classic.tif") { (bb, ifd) =>
+        if (ifd.bigTiff) bb.putLong(ifd.at, Int.MaxValue.toLong)
+        else bb.putShort(ifd.at, 0xffff.toShort)
+      }, "entries")
+      // an IFD offset past the end of the file
+      rejects(TiffFixtures.patchIfd0(src, s"$tmp/hostile_at_$classic.tif") { (bb, ifd) =>
+        if (ifd.bigTiff) bb.putLong(8, 1L << 40) else bb.putInt(4, Int.MaxValue)
+      }, "outside")
+      // RowsPerStrip 0 would divide by zero when counting strips
+      rejects(TiffFixtures.patchIfd0(src, s"$tmp/hostile_rps_$classic.tif") { (bb, ifd) =>
+        bb.putInt(ifd.valuePos(278), 0)
+      }, "RowsPerStrip")
+    }
+  }
+
+  test("classic ImageIO-written fixtures read identically to an ImageIO region read") {
+    // ImageIO stays in the tests as the reference decoder: every classic
+    // layout, codec and sample type the JDK TIFF writer can produce must
+    // read through the chunk reader exactly as an ImageIO region read of
+    // the same window returns it, with windows that split strips and tiles
+    import javax.imageio.ImageIO
+    val (w, h, block) = (40, 28, 13)
+    type Pixels = Map[(Int, Int), Seq[Double]]
+    def oracle(p: String, image: Int, nBands: Int, nd: Option[Double]): Pixels = {
+      val reader = ImageIO.getImageReadersByFormatName("tiff").next()
+      val iis = ImageIO.createImageInputStream(new java.io.File(p))
+      try {
+        reader.setInput(iis)
+        val (iw, ih) = (reader.getWidth(image), reader.getHeight(image))
+        (for (r0 <- 0 until ih by block; c0 <- 0 until iw by block) yield {
+          val (rw, rh) = (math.min(block, iw - c0), math.min(block, ih - r0))
+          val param = reader.getDefaultReadParam
+          param.setSourceRegion(new java.awt.Rectangle(c0, r0, rw, rh))
+          val ras = reader.read(image, param).getRaster
+          for (y <- 0 until rh; x <- 0 until rw)
+            yield (c0 + x, r0 + y) -> (0 until nBands).map(b => ras.getSampleDouble(x, y, b))
+        }).flatten.filterNot { case (_, v) => nd.contains(v.head) }.toMap
+      } finally { reader.dispose(); iis.close() }
+    }
+    def scanned(m: graft.sources.tiff.TiffTags.RasterMeta, nBands: Int, overview: Int): Pixels =
+      Raster.raster2df(spark, Seq.fill(nBands)(m.path), colNames = (1 to nBands).map(b => s"b$b"),
+        bands = 1 to nBands, maxBlockSize = block, overview = overview).collect().map { row =>
+        val c = math.round((row.getDouble(0) - m.originX) / m.pixelScaleX - 0.5).toInt
+        val r = math.round((m.originY - row.getDouble(1)) / m.pixelScaleY - 0.5).toInt
+        (c, r) -> (2 until 2 + nBands).map(i => row.get(i).asInstanceOf[Number].doubleValue)
+      }.toMap
+    def sameAsOracle(p: String, nBands: Int, nd: Option[Double], overview: Int = 0,
+        code: Int = 1, tile: Int = 0): Unit = {
+      val m = graft.sources.tiff.TiffTags.readOverview(p, overview)
+      assert(!m.bigTiff && m.compression == code && m.tileWidth == tile,
+        s"$p: compression ${m.compression}, tile width ${m.tileWidth}")
+      val want = oracle(p, overview, nBands, nd)
+      val got = scanned(m, nBands, overview)
+      val differ = (want.keySet ++ got.keySet).toSeq.sorted.filter(k => got.get(k) != want.get(k))
+      val nDiffer = differ.size
+      assert(want.nonEmpty)
+      assert(nDiffer == 0, s"pixels differ in $p overview $overview, first: " +
+        differ.take(3).map(k => s"$k read ${got.get(k)}, ImageIO ${want.get(k)}").mkString("; "))
+    }
+    def value(dtype: TiffFixtures.Dtype)(c: Int, r: Int): Double = dtype match {
+      case TiffFixtures.U8 => (c * 7 + r * 13) % 256
+      case TiffFixtures.S16 => if ((c + r) % 7 == 0) -9999 else c * 331 - r * 97 - 5000
+      case TiffFixtures.F32 =>
+        if ((c + r) % 7 == 0) -9999.0 else math.sin(c * 0.37) * 1000.0 + r * 2.25
+    }
+    // JDK writer compression type name (null = none) -> its tag value
+    val codecs = Seq[(String, Int)]((null, 1), ("LZW", 5), ("Deflate", 32946),
+      ("PackBits", 32773), ("JPEG", 7))
+    for (tile <- Seq(0, 16); (codec, code) <- codecs) {
+      val tag = s"${if (tile > 0) "tiled" else "strips"}_${Option(codec).getOrElse("none")}"
+      // JPEG carries 8-bit samples only
+      val dtypes = if (codec == "JPEG") Seq(TiffFixtures.U8)
+        else Seq(TiffFixtures.U8, TiffFixtures.S16, TiffFixtures.F32)
+      for (dtype <- dtypes) {
+        val nd = if (dtype == TiffFixtures.U8) None else Some("-9999")
+        val p = TiffFixtures.write(s"$tmp/oracle_${tag}_$dtype.tif", w, h, dtype, value(dtype),
+          2.0, 30.0, 0.5, nd, tileSize = tile, compressionType = codec)
+        sameAsOracle(p, 1, nd.map(_.toDouble), code = code, tile = tile)
+      }
+      val rgb = TiffFixtures.writeRGB(s"$tmp/oracle_${tag}_rgb.tif", w, h,
+        (b, c, r) => (b * 60 + c * 5 + r * 3) % 256, 2.0, 30.0, 0.5,
+        tileSize = tile, compressionType = codec)
+      sameAsOracle(rgb, 3, None, code = code, tile = tile)
+    }
+    val ovr = TiffFixtures.writeClassicOverviews(s"$tmp/oracle_ovr.tif", w, h,
+      (k, c, r) => (k * 50 + c * 3 + r) % 251, 2.0, 30.0, 0.5, Some("0"), levels = 2)
+    for (k <- 0 to 2) sameAsOracle(ovr, 1, Some(0.0), overview = k)
   }
 }

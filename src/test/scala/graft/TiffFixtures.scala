@@ -93,6 +93,24 @@ object TiffFixtures {
     (tables.toByteArray, rest.toByteArray)
   }
 
+  /** The writer's default param with explicit tiling (`tileSize` > 0, a
+    * multiple of 16) and compression (a JDK type name such as "LZW",
+    * "Deflate", "PackBits" or "JPEG"; null = none) when asked for.
+    */
+  private def writeParam(writer: javax.imageio.ImageWriter, tileSize: Int,
+      compressionType: String): javax.imageio.ImageWriteParam = {
+    val param = writer.getDefaultWriteParam
+    if (tileSize > 0) {
+      param.setTilingMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+      param.setTiling(tileSize, tileSize, 0, 0)
+    }
+    if (compressionType != null) {
+      param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+      param.setCompressionType(compressionType)
+    }
+    param
+  }
+
   /** value(col, row) = sample; `originX/originY` = top-left corner geo
     * coords; `pixelSize` degrees per pixel (square, north-up).
     */
@@ -141,15 +159,7 @@ object TiffFixtures {
     val ios = ImageIO.createImageOutputStream(f)
     try {
       writer.setOutput(ios)
-      val param = writer.getDefaultWriteParam
-      if (tileSize > 0) {
-        param.setTilingMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-        param.setTiling(tileSize, tileSize, 0, 0)
-      }
-      if (compressionType != null) {
-        param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-        param.setCompressionType(compressionType)
-      }
+      val param = writeParam(writer, tileSize, compressionType)
       val meta = writer.getDefaultImageMetadata(ImageTypeSpecifier.createFromRenderedImage(img), param)
       val dir = TIFFDirectory.createFromMetadata(meta)
 
@@ -241,6 +251,7 @@ object TiffFixtures {
 
   /** 3-band RGB GeoTIFF (u8 per band) via ImageIO, with the same geo tags:
     * band values come from `value(band, c, r)` with band 1..3 = R,G,B.
+    * Tiling and compression as in [[write]].
     */
   def writeRGB(
       path: String,
@@ -249,7 +260,9 @@ object TiffFixtures {
       value: (Int, Int, Int) => Int,
       originX: Double,
       originY: Double,
-      pixelSize: Double): String = {
+      pixelSize: Double,
+      tileSize: Int = 0,
+      compressionType: String = null): String = {
     val img = new BufferedImage(width, height, BufferedImage.TYPE_INT_RGB)
     for (r <- 0 until height; c <- 0 until width) {
       val rgb = ((value(1, c, r) & 0xff) << 16) |
@@ -263,7 +276,7 @@ object TiffFixtures {
     val ios = ImageIO.createImageOutputStream(f)
     try {
       writer.setOutput(ios)
-      val param = writer.getDefaultWriteParam
+      val param = writeParam(writer, tileSize, compressionType)
       val meta = writer.getDefaultImageMetadata(ImageTypeSpecifier.createFromRenderedImage(img), param)
       val dir = TIFFDirectory.createFromMetadata(meta)
       val scaleTag = new TIFFTag("ModelPixelScale", 33550, 1 << TIFFTag.TIFF_DOUBLE)
@@ -310,10 +323,12 @@ object TiffFixtures {
     }
   }
 
-  /** Hand-written BigTIFF (magic 43, 8-byte offsets), same GeoTIFF tags as
-    * [[write]]. ImageIO's TIFF writer cannot emit BigTIFF, so the byte
-    * layout is assembled directly — which doubles as documentation of what
-    * TiffTags must parse. `rowsPerStrip <= 0` means one strip for the whole
+  /** Hand-written BigTIFF (magic 43, 8-byte offsets) — or, with
+    * `classic`, a classic TIFF (magic 42) with the same chunks — carrying
+    * the same GeoTIFF tags as [[write]]. ImageIO's TIFF writer can emit
+    * neither BigTIFF nor ZSTD/LZMA/predictor-3 chunks, so the byte layout is
+    * assembled directly — which doubles as documentation of what TiffTags
+    * must parse. `rowsPerStrip <= 0` means one strip for the whole
     * image. Supports f32/u8/s16 samples, compression 1 (none), 8 (DEFLATE),
     * 5 (LZW via [[lzwEncode]]) or 32773 (PackBits via [[packBitsEncode]]),
     * predictor 2 (horizontal differencing,
@@ -348,7 +363,10 @@ object TiffFixtures {
       // compression 34925 only: encode chunks in the header-less legacy
       // .lzma "alone" layout instead of the .xz container libtiff writes —
       // exercises the reader's format sniff
-      lzmaAlone: Boolean = false): String = {
+      lzmaAlone: Boolean = false,
+      // classic TIFF header (magic 42, 4-byte offsets, 12-byte entries)
+      // instead of BigTIFF: the same chunks under the other header width
+      classic: Boolean = false): String = {
     import java.nio.{ByteBuffer, ByteOrder}
     val order = if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
     val (bps, sampleFormat) = dtype match {
@@ -425,102 +443,118 @@ object TiffFixtures {
       }
     }
 
-    val pixOff = 16L
+    // classic: 8-byte header, 2-byte entry count, 12-byte entries with a
+    // 4-byte value field, LONG (4) chunk offsets; BigTIFF: 16-byte header,
+    // 8-byte count, 20-byte entries with an 8-byte field, LONG8 (16)
+    val (headerSize, countSize, entrySize, valueField, offType) =
+      if (classic) (8, 2, 12, 4, 4) else (16, 8, 20, 8, 16)
     val stripOff = new Array[Long](nChunks)
-    var cur = pixOff
+    var cur = headerSize.toLong
     for (s <- 0 until nChunks) { stripOff(s) = cur; cur += strips(s).length }
     val stripCnt = strips.map(_.length.toLong)
-    val useMt = modelTransform != null
-    val scaleOff = cur; if (!useMt) cur += 24
-    val tieOff = cur; if (!useMt) cur += 48
-    val mtOff = cur; if (useMt) cur += 128
+    def bytes(n: Int)(fill: ByteBuffer => Unit): Array[Byte] = {
+      val b = ByteBuffer.allocate(n).order(order); fill(b); b.array()
+    }
+    def shorts(vs: Seq[Int]) = bytes(2 * vs.length)(b => vs.foreach(v => b.putShort(v.toShort)))
+    def long(v: Int) = bytes(4)(_.putInt(v))
+    def offsets(vs: Seq[Long]) = bytes(vs.length * (if (classic) 4 else 8))(b =>
+      vs.foreach(v => if (classic) b.putInt(v.toInt) else b.putLong(v)))
+    def doubles(vs: Seq[Double]) = bytes(8 * vs.length)(b => vs.foreach(b.putDouble))
     val gkShorts: Array[Short] = geoKeyShorts(geoKeys)
-    val gkOff = cur
-    if (gkShorts.length * 2 > 8) cur += gkShorts.length * 2L
-    val soOff = cur; if (nChunks > 1) cur += nChunks * 8L
-    val scOff = cur; if (nChunks > 1) cur += nChunks * 8L
-    val ndBytes = noData.map(s => s.getBytes("US-ASCII") :+ 0.toByte)
-    val ndOff = cur
-    ndBytes.foreach { b => if (b.length > 8) cur += b.length }
+    // (tag, type, count, value bytes), ascending by tag as TIFF requires
+    val tags: Seq[(Int, Int, Long, Array[Byte])] = Seq(
+      Some((256, 4, 1L, long(width))),                               // ImageWidth
+      Some((257, 4, 1L, long(height))),                              // ImageLength
+      Some((258, 3, spp.toLong, shorts(Seq.fill(spp)(bps)))),        // BitsPerSample (per band)
+      Some((259, 3, 1L, shorts(Seq(compression)))),                  // Compression
+      Some((273, offType, nChunks.toLong, offsets(stripOff.toSeq))), // StripOffsets
+      Some((277, 3, 1L, shorts(Seq(spp)))),                          // SamplesPerPixel
+      Some((278, 4, 1L, long(rps))),                                 // RowsPerStrip
+      Some((279, offType, nChunks.toLong, offsets(stripCnt.toSeq))), // StripByteCounts
+      if (spp > 1 || planarOverride > 0)                             // PlanarConfiguration
+        Some((284, 3, 1L, shorts(Seq(
+          if (planarOverride > 0) planarOverride else if (planar) 2 else 1))))
+      else None,
+      if (predictor != 1) Some((317, 3, 1L, shorts(Seq(predictor)))) else None, // Predictor
+      Some((339, 3, spp.toLong, shorts(Seq.fill(spp)(sampleFormat)))), // SampleFormat (per band)
+      if (modelTransform == null) Some((33550, 12, 3L,               // ModelPixelScale
+        doubles(Seq(pixelSize, pixelSize, 0.0)))) else None,
+      if (modelTransform == null) Some((33922, 12, 6L,               // ModelTiepoint
+        doubles(Seq(0.0, 0.0, 0.0, originX, originY, 0.0)))) else None,
+      if (modelTransform != null)                                    // ModelTransformation
+        Some((34264, 12, 16L, doubles(modelTransform.toSeq))) else None,
+      if (gkShorts.nonEmpty) Some((34735, 3, gkShorts.length.toLong, // GeoKeyDirectory
+        shorts(gkShorts.toSeq.map(_ & 0xffff)))) else None,
+      noData.map { nd =>                                             // GDAL_NODATA
+        val b = nd.getBytes("US-ASCII") :+ 0.toByte
+        (42113, 2, b.length.toLong, b)
+      }).flatten
+    // values wider than the entry's value field go out of line, after the
+    // chunks; the IFD follows them
+    val valueOff: Seq[Long] = tags.map { case (_, _, _, v) =>
+      if (v.length <= valueField) 0L else { val at = cur; cur += v.length; at }
+    }
     val ifdOff = cur
-    val nTags = (if (useMt) 10 else 11) + (if (gkShorts.nonEmpty) 1 else 0) +
-      (if (ndBytes.isDefined) 1 else 0) + (if (predictor != 1) 1 else 0) +
-      (if (spp > 1 || planarOverride > 0) 1 else 0)
-    val total = (ifdOff + 8 + nTags * 20 + 8).toInt
+    val total = (ifdOff + countSize + tags.length * entrySize + (if (classic) 4 else 8)).toInt
     val buf = ByteBuffer.allocate(total).order(order)
-    // header: II/MM, 43, offset-size 8, pad 0, IFD offset
     val bom = if (bigEndian) 'M'.toByte else 'I'.toByte
-    buf.put(bom).put(bom).putShort(43).putShort(8).putShort(0).putLong(ifdOff)
+    buf.put(bom).put(bom)
+    if (classic) buf.putShort(42).putInt(ifdOff.toInt)
+    else buf.putShort(43).putShort(8).putShort(0).putLong(ifdOff)
     for (s <- 0 until nChunks) {
       buf.position(stripOff(s).toInt); buf.put(strips(s))
     }
-    if (useMt) {
-      buf.position(mtOff.toInt)
-      modelTransform.foreach(buf.putDouble)
-    } else {
-      buf.position(scaleOff.toInt)
-      buf.putDouble(pixelSize).putDouble(pixelSize).putDouble(0.0)
-      buf.position(tieOff.toInt)
-      Seq(0.0, 0.0, 0.0, originX, originY, 0.0).foreach(buf.putDouble)
-    }
-    if (gkShorts.length * 2 > 8) {
-      buf.position(gkOff.toInt)
-      gkShorts.foreach(buf.putShort)
-    }
-    if (nChunks > 1) {
-      buf.position(soOff.toInt); stripOff.foreach(buf.putLong)
-      buf.position(scOff.toInt); stripCnt.foreach(buf.putLong)
-    }
-    ndBytes.foreach { b => if (b.length > 8) { buf.position(ndOff.toInt); buf.put(b) } }
     buf.position(ifdOff.toInt)
-    buf.putLong(nTags.toLong)
-    // entries must be ascending by tag; value field is 8 bytes, values
-    // smaller than 8 bytes sit left-justified (first bytes of the field in
-    // either byte order — ByteBuffer's relative puts give exactly that)
-    def entry(tag: Int, tpe: Int, count: Long)(writeVal: ByteBuffer => Unit): Unit = {
-      buf.putShort(tag.toShort).putShort(tpe.toShort).putLong(count)
-      val pos = buf.position()
-      writeVal(buf)
-      buf.position(pos + 8)
+    if (classic) buf.putShort(tags.length.toShort) else buf.putLong(tags.length.toLong)
+    // values that fit sit left-justified in the value field (first bytes
+    // of the field in either byte order)
+    for (((tag, tpe, count, v), at) <- tags.zip(valueOff)) {
+      buf.putShort(tag.toShort).putShort(tpe.toShort)
+      if (classic) buf.putInt(count.toInt) else buf.putLong(count)
+      val field = buf.position()
+      if (v.length <= valueField) buf.put(v)
+      else {
+        if (classic) buf.putInt(at.toInt) else buf.putLong(at)
+        buf.position(at.toInt); buf.put(v)
+      }
+      buf.position(field + valueField)
     }
-    entry(256, 4, 1)(_.putInt(width))              // ImageWidth
-    entry(257, 4, 1)(_.putInt(height))             // ImageLength
-    entry(258, 3, spp.toLong)(b =>                 // BitsPerSample (per band; spp<=4 fits inline)
-      (0 until spp).foreach(_ => b.putShort(bps.toShort)))
-    entry(259, 3, 1)(_.putShort(compression.toShort)) // Compression
-    entry(273, 16, nChunks.toLong)(b =>            // StripOffsets (LONG8)
-      if (nChunks == 1) b.putLong(stripOff(0)) else b.putLong(soOff))
-    entry(277, 3, 1)(_.putShort(spp.toShort))      // SamplesPerPixel
-    entry(278, 4, 1)(_.putInt(rps))                // RowsPerStrip
-    entry(279, 16, nChunks.toLong)(b =>            // StripByteCounts (LONG8)
-      if (nChunks == 1) b.putLong(stripCnt(0)) else b.putLong(scOff))
-    if (spp > 1 || planarOverride > 0)
-      entry(284, 3, 1)(_.putShort(                 // PlanarConfiguration
-        (if (planarOverride > 0) planarOverride
-         else if (planar) 2 else 1).toShort))
-    if (predictor != 1)
-      entry(317, 3, 1)(_.putShort(predictor.toShort)) // Predictor
-    entry(339, 3, spp.toLong)(b =>                 // SampleFormat (per band)
-      (0 until spp).foreach(_ => b.putShort(sampleFormat.toShort)))
-    if (useMt)
-      entry(34264, 12, 16)(_.putLong(mtOff))       // ModelTransformation
-    else {
-      entry(33550, 12, 3)(_.putLong(scaleOff))     // ModelPixelScale
-      entry(33922, 12, 6)(_.putLong(tieOff))       // ModelTiepoint
-    }
-    if (gkShorts.nonEmpty)
-      entry(34735, 3, gkShorts.length.toLong)(b => // GeoKeyDirectory
-        if (gkShorts.length * 2 <= 8) gkShorts.foreach(b.putShort)
-        else b.putLong(gkOff))
-    ndBytes.foreach { b =>
-      entry(42113, 2, b.length.toLong)(bb =>       // GDAL_NODATA
-        if (b.length <= 8) bb.put(b) else bb.putLong(ndOff))
-    }
-    buf.putLong(0L) // next-IFD terminator
+    // next-IFD terminator: the buffer's trailing zero bytes
     val f = new File(path)
     f.getParentFile.mkdirs()
     java.nio.file.Files.write(f.toPath, buf.array())
     path
+  }
+
+  /** Where IFD0 and its entries sit in a little-endian classic or BigTIFF
+    * file: `entry(tag)` is the entry's byte position; its count field
+    * starts 4 bytes in, its value field 8 (classic) or 12 (BigTIFF) bytes
+    * in.
+    */
+  final case class Ifd0(at: Int, bigTiff: Boolean, entry: Map[Int, Int]) {
+    def countPos(tag: Int): Int = entry(tag) + 4
+    def valuePos(tag: Int): Int = entry(tag) + (if (bigTiff) 12 else 8)
+  }
+
+  /** Copy the little-endian TIFF `src` to `dst` with `edit` applied to its
+    * bytes — the way the specs forge malformed or hostile headers from a
+    * valid fixture of either header width.
+    */
+  def patchIfd0(src: String, dst: String)(edit: (java.nio.ByteBuffer, Ifd0) => Unit): String = {
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    require(bb.getShort(0) == 0x4949, s"$src is not little-endian")
+    val big = bb.getShort(2) == 43
+    val at = if (big) bb.getLong(8).toInt else bb.getInt(4)
+    val n = if (big) bb.getLong(at).toInt else bb.getShort(at) & 0xffff
+    val first = at + (if (big) 8 else 2)
+    val entries = (0 until n).map { i =>
+      val pos = first + i * (if (big) 20 else 12)
+      (bb.getShort(pos) & 0xffff) -> pos
+    }.toMap
+    edit(bb, Ifd0(at, big, entries))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dst), bytes)
+    dst
   }
 
   /** BigTIFF with an OVERVIEW PYRAMID (the COG IFD-chain shape): IFD0 at
