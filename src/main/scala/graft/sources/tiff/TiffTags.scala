@@ -549,6 +549,24 @@ object TiffTags {
         }
       uniform(258, "BitsPerSample", bps)
       uniform(339, "SampleFormat", sampleFormat)
+      // Chunk extents are untrusted like tag payloads: every strip or tile
+      // must lie inside the file, so a patched offset or byte count fails
+      // here with a typed error instead of allocating up to 2 GiB or
+      // hitting EOF inside a task. A compressed chunk's size is its byte
+      // count; an uncompressed one's is implied by the rows it holds
+      // (computed in Long, saturating, so no product can wrap).
+      val fileLen = raf.length()
+      val chunkPixBytes = (bps / 8).toLong * (if (planarCfg == 2) 1 else spp)
+      def chunkBytes(rows: Long, rowWidth: Long): Long = {
+        val rowBytes = rowWidth * chunkPixBytes
+        if (rowBytes != 0 && rows > Long.MaxValue / rowBytes) Long.MaxValue else rows * rowBytes
+      }
+      def requireChunksInFile(kind: String, offsets: IndexedSeq[Long], size: Int => Long): Unit =
+        offsets.indices.foreach { i =>
+          val (off, n) = (offsets(i), size(i))
+          require(off >= 0 && n >= 0 && off <= fileLen && n <= fileLen - off,
+            s"$path: $kind $i ($n bytes at offset $off) lies outside the $fileLen-byte file")
+        }
       if (entries.contains(322) || entries.contains(324)) {
         // Tiled layout (tags 322/323/324/325) — the cloud-optimized
         // GeoTIFF (COG) shape: TILED + DEFLATE is the modern distribution
@@ -572,6 +590,10 @@ object TiffTags {
             s"$path: compressed tiled TIFF missing TileByteCounts (325)")).toIndexedSeq
         require(compression == 1 || tCounts.length == tOffsets.length,
           s"$path: ${tCounts.length} tile byte counts for ${tOffsets.length} tiles")
+        // edge tiles are padded to the full tile in the file
+        val tileBytes = chunkBytes(tl, tw)
+        requireChunksInFile("tile", tOffsets,
+          if (compression == 1) _ => tileBytes else tCounts)
         RasterMeta(path, width, height, bps, sampleFormat,
           scaleX, scaleY, originX, originY, noData,
           rotX = rotX, rotY = rotY,
@@ -602,6 +624,12 @@ object TiffTags {
             s"$path: compressed TIFF missing StripByteCounts (279)")).toIndexedSeq
         require(compression == 1 || byteCounts.length == offsets.length,
           s"$path: ${byteCounts.length} strip byte counts for ${offsets.length} strips")
+        // the last strip of each band holds only the image's remaining rows
+        val stripsPerBand = (height + rps - 1) / rps
+        requireChunksInFile("strip", offsets,
+          if (compression == 1) s => chunkBytes(
+            math.min(rps, height - (s % stripsPerBand) * rps), width)
+          else byteCounts)
         RasterMeta(path, width, height, bps, sampleFormat,
           scaleX, scaleY, originX, originY, noData,
           rotX = rotX, rotY = rotY,

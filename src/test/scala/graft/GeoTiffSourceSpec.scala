@@ -1721,6 +1721,33 @@ class GeoTiffSourceSpec extends SparkSpec {
       rejects(TiffFixtures.patchIfd0(src, s"$tmp/hostile_rps_$classic.tif") { (bb, ifd) =>
         bb.putInt(ifd.valuePos(278), 0)
       }, "RowsPerStrip")
+      // chunk extents: an offset or byte count that runs past the end of
+      // the file fails at planning, not as a 2 GiB allocation or an EOF in
+      // a task. Strips (hand-written) and tiles (hand-written BigTIFF, JDK
+      // writer classic), uncompressed (implied size) and DEFLATE (byte count)
+      val deflated = TiffFixtures.writeBigTiff(s"$tmp/hostile_z_$classic.tif", 8, 8,
+        (c, r) => (c + r).toDouble, 0.0, 4.0, 0.5, None, rowsPerStrip = 2, compression = 8,
+        classic = classic)
+      def tiled(codec: Int): String =
+        if (classic) TiffFixtures.write(s"$tmp/hostile_t${codec}_$classic.tif", 40, 28,
+          TiffFixtures.F32, (c, r) => (c + r).toDouble, 0.0, 4.0, 0.5, None, tileSize = 16,
+          compressionType = if (codec == 1) null else "Deflate")
+        else TiffFixtures.writeBigTiffTiled(s"$tmp/hostile_t${codec}_$classic.tif", 40, 28,
+          (c, r) => (c + r).toDouble, 0.0, 4.0, 0.5, None, 16, 16, compression = codec)
+      val (raw, zipped) = (tiled(1), tiled(8))
+      def fileLen(p: String): Long = new java.io.File(p).length()
+      for ((name, p, tag, chunk, v) <- Seq(
+          // the last strip (2 rows) starts 8 bytes before the end of the file
+          ("so_eof", src, 273, 3, fileLen(src) - 8),
+          // an offset past the end: unsigned 2^32 - 16 classic, negative BigTIFF
+          ("so_neg", src, 273, 0, if (classic) 0xfffffff0L else -16L),
+          // a byte count of 2e9 would allocate 2 GB in a task
+          ("sbc_2g", deflated, 279, 1, 2000000000L),
+          ("to_eof", raw, 324, 5, fileLen(raw) - 16),
+          ("tbc_2g", zipped, 325, 2, 2000000000L))) {
+        rejects(TiffFixtures.patchIfd0(p, s"$tmp/hostile_${name}_$classic.tif")(
+          TiffFixtures.setChunk(tag, chunk, v)), "outside")
+      }
     }
   }
 

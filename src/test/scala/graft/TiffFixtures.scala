@@ -526,24 +526,24 @@ object TiffFixtures {
     path
   }
 
-  /** Where IFD0 and its entries sit in a little-endian classic or BigTIFF
-    * file: `entry(tag)` is the entry's byte position; its count field
-    * starts 4 bytes in, its value field 8 (classic) or 12 (BigTIFF) bytes
-    * in.
+  /** Where IFD0 and its entries sit in a classic or BigTIFF file:
+    * `entry(tag)` is the entry's byte position; its count field starts 4
+    * bytes in, its value field 8 (classic) or 12 (BigTIFF) bytes in.
     */
   final case class Ifd0(at: Int, bigTiff: Boolean, entry: Map[Int, Int]) {
     def countPos(tag: Int): Int = entry(tag) + 4
     def valuePos(tag: Int): Int = entry(tag) + (if (bigTiff) 12 else 8)
   }
 
-  /** Copy the little-endian TIFF `src` to `dst` with `edit` applied to its
-    * bytes — the way the specs forge malformed or hostile headers from a
-    * valid fixture of either header width.
+  /** Copy the TIFF `src` to `dst` with `edit` applied to its bytes (the
+    * buffer is in the file's byte order) — the way the specs forge
+    * malformed or hostile headers from a valid fixture of either header
+    * width.
     */
   def patchIfd0(src: String, dst: String)(edit: (java.nio.ByteBuffer, Ifd0) => Unit): String = {
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    require(bb.getShort(0) == 0x4949, s"$src is not little-endian")
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(
+      if (bytes(0) == 'M') java.nio.ByteOrder.BIG_ENDIAN else java.nio.ByteOrder.LITTLE_ENDIAN)
     val big = bb.getShort(2) == 43
     val at = if (big) bb.getLong(8).toInt else bb.getInt(4)
     val n = if (big) bb.getLong(at).toInt else bb.getShort(at) & 0xffff
@@ -555,6 +555,29 @@ object TiffFixtures {
     edit(bb, Ifd0(at, big, entries))
     java.nio.file.Files.write(java.nio.file.Paths.get(dst), bytes)
     dst
+  }
+
+  /** A [[patchIfd0]] edit that sets element `i` of the SHORT, LONG or
+    * LONG8 array of IFD0's `tag` (inline or out of line) to `v` — how the
+    * specs forge chunk offsets and byte counts.
+    */
+  def setChunk(tag: Int, i: Int, v: Long)(bb: java.nio.ByteBuffer, ifd: Ifd0): Unit = {
+    val size = (bb.getShort(ifd.entry(tag) + 2) & 0xffff) match {
+      case 3 => 2
+      case 4 => 4
+      case 16 => 8
+      case t => throw new IllegalArgumentException(s"tag $tag has non-integer type $t")
+    }
+    val count = if (ifd.bigTiff) bb.getLong(ifd.countPos(tag)) else bb.getInt(ifd.countPos(tag)).toLong
+    val at =
+      if (count * size <= (if (ifd.bigTiff) 8 else 4)) ifd.valuePos(tag)
+      else if (ifd.bigTiff) bb.getLong(ifd.valuePos(tag)).toInt
+      else bb.getInt(ifd.valuePos(tag))
+    size match {
+      case 2 => bb.putShort(at + i * 2, v.toShort)
+      case 4 => bb.putInt(at + i * 4, v.toInt)
+      case _ => bb.putLong(at + i * 8, v)
+    }
   }
 
   /** BigTIFF with an OVERVIEW PYRAMID (the COG IFD-chain shape): IFD0 at
