@@ -198,6 +198,8 @@ object SqlTableFunctions {
       fail(s"$fn argument 5 (max df fraction) must be in (0, 1], got $maxDfFrac")
     if (!docs.columns.contains(idCol))
       fail(s"$fn argument 2 (id column): no column '$idCol' in the documents table")
+    if (!docs.columns.contains(textCol))
+      fail(s"$fn argument 3 (text column): no column '$textCol' in the documents table")
     // Deferred since r18: the operator materializes its weighted postings
     // once (localCheckpoint — four consumers), and under AQE even a lazy
     // checkpoint's toRdd executes the upstream stages, so an eagerly-built
@@ -295,6 +297,8 @@ object SqlTableFunctions {
       fail(s"$fn argument 4 (merge count) must be in [1, 64], got $nMerges")
     if (!docs.columns.contains(idCol))
       fail(s"$fn argument 2 (id column): no column '$idCol' in the documents table")
+    if (!docs.columns.contains(textCol))
+      fail(s"$fn argument 3 (text column): no column '$textCol' in the documents table")
     DeferredResult.memoized(fn,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(idCol, docs.schema(idCol).dataType),
@@ -332,6 +336,8 @@ object SqlTableFunctions {
       fail(s"$fn argument 5 (iterations) must be in [0, 16], got $iters")
     if (!docs.columns.contains(idCol))
       fail(s"$fn argument 2 (id column): no column '$idCol' in the documents table")
+    if (!docs.columns.contains(textCol))
+      fail(s"$fn argument 3 (text column): no column '$textCol' in the documents table")
     DeferredResult.memoized(fn,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(idCol, docs.schema(idCol).dataType),
@@ -583,6 +589,8 @@ object SqlTableFunctions {
       fail(s"$fn argument 5 (slot count) must be in [2, 2^20], got $nSlots")
     if (!docs.columns.contains(idCol))
       fail(s"$fn argument 2 (id column): no column '$idCol' in the documents table")
+    if (!docs.columns.contains(textCol))
+      fail(s"$fn argument 3 (text column): no column '$textCol' in the documents table")
     if (!docs.columns.contains(targetCol))
       fail(s"$fn argument 4 (target flag column): no column '$targetCol' in the documents table")
     if (docs.schema(targetCol).dataType !=

@@ -405,8 +405,10 @@ object IngestPipeline {
         cfg.indexBuckets)
       Curation.mergeDocStats(spark, cfg.statsPath, kept)
     }
+    // byVerdict holds every group's count, the null group included, so its
+    // sum is the batch size without a second job over `verdicts`
     val report = BatchReport(
-      batchId, verdicts.count(), n("dup_index"), n("dup_batch"), n("gated"),
+      batchId, byVerdict.values.sum, n("dup_index"), n("dup_batch"), n("gated"),
       nKept)
     // commit the fence LAST (see the replay note above); zero-kept batches
     // are fenced too — their report must replay stably

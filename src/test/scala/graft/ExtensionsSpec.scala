@@ -606,6 +606,28 @@ class ExtensionsSpec extends SparkSpec {
       graft.plans.DeferredResult.clearMemo()
     }
   }
+
+  test("text-column TVFs reject a missing text column at analysis time") {
+    // analysis only (no action): a misspelled text column used to surface
+    // at action time, from inside the deferred operator
+    graft.plans.GraftFunctions.register(spark)
+    try {
+      spark.range(3).selectExpr("id AS doc_id", "'a b' AS text", "true AS is_t")
+        .createOrReplaceTempView("ext_txt_docs")
+      for ((fn, sql) <- Seq(
+        "sparse_cosine_join" -> "sparse_cosine_join('ext_txt_docs', 'doc_id', 'txt')",
+        "bpe_token_counts" -> "bpe_token_counts('ext_txt_docs', 'doc_id', 'txt', 2)",
+        "unigram_token_counts" -> "unigram_token_counts('ext_txt_docs', 'doc_id', 'txt', 8)",
+        "dsir_weights" -> "dsir_weights('ext_txt_docs', 'doc_id', 'txt', 'is_t', 16)")) {
+        val e = intercept[org.apache.spark.sql.AnalysisException] {
+          spark.sql(s"SELECT * FROM $sql")
+        }
+        assert(e.getMessage.contains(
+          s"$fn argument 3 (text column): no column 'txt' in the documents table"),
+          e.getMessage)
+      }
+    } finally spark.catalog.dropTempView("ext_txt_docs")
+  }
 }
 
 object ExtensionsSpec {

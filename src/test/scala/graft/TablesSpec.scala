@@ -5,9 +5,13 @@ import java.nio.file.Files
 
 /** Loader drift-tolerance: the events `ts` adaptation (NANOS-as-long vs
   * MICROS timestamp testdata) and the schema guard that turns the NEXT
-  * silent testdata regeneration into a loud, named error.
+  * silent testdata regeneration into a loud, named error; and the schema
+  * reuse that lets a later read of an unchanged table start no Spark job.
   */
 class TablesSpec extends SparkSpec {
+
+  private val allTables = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
 
   test("events exposes ts_ns/ts_us/ts regardless of on-disk ts encoding") {
     val e = Tables.events(spark, sf())
@@ -51,9 +55,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("schema guard passes the real testdata for every table") {
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
-    tables.foreach { t => assert(Tables(spark, sf(), t).columns.nonEmpty) }
+    allTables.foreach { t => assert(Tables(spark, sf(), t).columns.nonEmpty) }
   }
 
   test("NANOS-era events load per-read with NO session conf mutation") {
@@ -97,11 +99,16 @@ class TablesSpec extends SparkSpec {
     }
     w.close()
     val before = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    val e = Tables.events(spark, dir.getAbsolutePath)
-    val rows = e.select(col("event_id"), col("ts_ns"), col("ts_us")).orderBy(col("event_id")).collect()
+    def tsRows(e: org.apache.spark.sql.DataFrame) =
+      e.select(col("event_id"), col("ts_ns"), col("ts_us")).orderBy(col("event_id")).collect()
+    val rows = tsRows(Tables.events(spark, dir.getAbsolutePath))
     assert(rows.length == 7)
     assert(rows(1).getLong(1) == 1700000001500000000L)
     assert(rows(1).getLong(2) == 1700000001500000L) // ns div 1000
+    // the second read reuses the schema the fallback read ended up with
+    val (again, jobs) = jobsDuring(Tables.events(spark, dir.getAbsolutePath))
+    assert(jobs == 0)
+    assert(tsRows(again).toSeq == rows.toSeq)
     val after = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
     assert(after == before,
       s"loader mutated session conf: before=$before after=$after")
@@ -120,5 +127,79 @@ class TablesSpec extends SparkSpec {
     }
     // caught by the schema guard before the dataType branch even runs
     assert(err.getMessage.contains("`ts`"))
+  }
+
+  test("a table's second read starts no job and matches an inferred read") {
+    allTables.foreach { t =>
+      val first = Tables(spark, sf(), t)
+      val (second, jobs) = jobsDuring(Tables(spark, sf(), t))
+      assert(jobs == 0, s"$t: second read started $jobs jobs")
+      // a parquet conf set to its default value keys a fresh inference
+      val (inferred, inferJobs) = withSQLConf(
+        "spark.sql.parquet.binaryAsString" -> "false")(jobsDuring(Tables(spark, sf(), t)))
+      assert(inferJobs > 0, s"$t: the read under a new conf did not infer")
+      assert(second.schema == inferred.schema, t) // nullability and metadata too
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(second) == rows(inferred), t)
+      // only the schema is shared: each read gets its own attribute ids
+      val ids = (df: org.apache.spark.sql.DataFrame) =>
+        df.queryExecution.analyzed.output.map(_.exprId).toSet
+      assert((ids(first) intersect ids(second)).isEmpty, t)
+    }
+    val n1 = Tables.nation(spark, sf())
+    val n2 = Tables.nation(spark, sf())
+    assert(n1.join(n2, n1("n_nationkey") === n2("n_regionkey")).count() > 0)
+  }
+
+  test("overwriting a table with a drifted schema forces a fresh inference") {
+    val dir = Files.createTempDirectory("graft-tables-rewrite").toFile
+    dir.deleteOnExit()
+    val p = s"${dir.getAbsolutePath}/documents.parquet"
+    def docs(nChars: org.apache.spark.sql.Column) = spark.range(3).select(
+      col("id").as("doc_id"), lit("x").as("text"), lit("en").as("lang"),
+      lit("web").as("source"), nChars.as("n_chars"))
+    docs(lit(12)).write.mode("overwrite").parquet(p)
+    Tables(spark, dir.getAbsolutePath, "documents")
+    assert(jobsDuring(Tables(spark, dir.getAbsolutePath, "documents"))._2 == 0)
+    docs(lit("12")).write.mode("overwrite").parquet(p)
+    val (err, jobs) = jobsDuring(intercept[IllegalStateException] {
+      Tables(spark, dir.getAbsolutePath, "documents")
+    })
+    assert(jobs > 0)
+    assert(err.getMessage.contains("column `n_chars` has type string"), err.getMessage)
+  }
+
+  test("an explicitly set parquet inference conf gets its own schema entry") {
+    // a BINARY column without a UTF8 annotation: binaryAsString decides
+    // whether inference types it string or binary
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    import org.apache.parquet.schema.Types
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val dir = Files.createTempDirectory("graft-tables-conf").toFile
+    dir.deleteOnExit()
+    val schema = Types.buildMessage()
+      .addField(Types.required(INT64).named("id"))
+      .addField(Types.required(BINARY).named("blob"))
+      .named("blobs")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    GroupWriteSupport.setSchema(schema, conf)
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(
+        s"${dir.getAbsolutePath}/blobs.parquet/part-0.parquet"))
+      .withConf(conf).withType(schema).build()
+    val g = new SimpleGroupFactory(schema).newGroup()
+    g.add("id", 1L); g.add("blob", "abc")
+    w.write(g)
+    w.close()
+    def blobType() =
+      Tables(spark, dir.getAbsolutePath, "blobs").schema("blob").dataType.simpleString
+    assert(blobType() == "binary")
+    val asString = Seq("spark.sql.parquet.binaryAsString" -> "true")
+    val (t1, jobs1) = withSQLConf(asString: _*)(jobsDuring(blobType()))
+    assert(t1 == "string" && jobs1 > 0)
+    val (t2, jobs2) = jobsDuring(blobType())
+    assert(t2 == "binary" && jobs2 == 0)
+    val (t3, jobs3) = withSQLConf(asString: _*)(jobsDuring(blobType()))
+    assert(t3 == "string" && jobs3 == 0)
   }
 }
