@@ -193,32 +193,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.installPlanRewrites(spark)
-    // warmup: touch each table once (footer cache, codegen JIT). Per-table
-    // try/catch: a broken/drifted table must poison ITS queries (which fail
-    // below and are counted), not crash the JVM before anything is timed —
-    // round 7's testdata regeneration killed the whole bench exactly this way.
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings")
-      .foreach { t =>
-        try Tables(spark, sfDir, t).count()
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] warmup failed for table $t: ${e.getMessage}")
-        }
-      }
-    // warm the noop WRITE path too (datasource lookup + commit-protocol
-    // classloading): measured ~5s one-time cost that the alphabetically
-    // first query would otherwise absorb
-    spark.range(10).write.format("noop").mode("overwrite").save()
+    val spark = LocalSession("Bench")
+    warmUp(spark, sfDir)
     val names = SparkEntry.queries.keys.toSeq.sorted
     // timings(name) = one entry per sweep; -1 marks a failed run
     val timings = scala.collection.mutable.Map[String, Vector[Double]]()
@@ -385,5 +362,27 @@ object Bench {
     spark.stop()
     if (failed > 0) sys.exit(1)
     if (regressed) sys.exit(2)
+  }
+
+  /** Untimed warm-up before the first measured query: touches each table
+    * once (footer cache, codegen JIT) and warms the noop write path.
+    * Per-table try/catch: a broken/drifted table must poison ITS queries
+    * (which then fail and are counted), not crash the JVM before anything
+    * is timed — round 7's testdata regeneration killed the whole bench
+    * exactly this way. The failure is reported on stderr.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "events", "documents", "embeddings")
+      .foreach { t =>
+        try Tables(spark, sfDir, t).count()
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] warmup failed for table $t: ${e.getMessage}")
+        }
+      }
+    // warm the noop WRITE path too (datasource lookup + commit-protocol
+    // classloading): measured ~5s one-time cost that the alphabetically
+    // first query would otherwise absorb
+    spark.range(10).write.format("noop").mode("overwrite").save()
   }
 }

@@ -426,12 +426,10 @@ object Media {
     s.read.parquet(p)
   }
 
-  /** The documents-as-audio corpus render (one real PCM16 clip per doc) —
-    * shared by the q169 pair build and the scale rehearsals so the
-    * rendered corpus cannot drift between the declared query and its
-    * posture probes.
+  /** The documents-as-audio corpus render (one real PCM16 clip per doc)
+    * behind the q169 pair build.
     */
-  private[graft] def audioMedia(s: SparkSession, dir: String)
+  private def audioMedia(s: SparkSession, dir: String)
       : org.apache.spark.sql.Dataset[graft.multimodal.MediaRow] = {
     import s.implicits._
     Tables.documents(s, dir)
@@ -466,8 +464,8 @@ object Media {
     audioPairs(s, dir).orderBy(col("doc_id_a"), col("doc_id_b"))
 
   /** The trim-planted audio corpus (round 15): members (doc_id % 3 == 0 —
-    * the q167 video family's declared-slice precedent; the full-corpus
-    * posture lives in the `audio_trim_neardup_50k` rehearsal) each render
+    * the q167 video family's declared-slice precedent; BASELINE.md's
+    * `audio_trim_neardup_50k` row records the full-corpus posture) each render
     * a 256-block clip whose per-block amplitude samples the doc's sorted
     * token set (the [[audioMedia]] recipe at 4× length), EXCEPT every
     * fifth member, which instead renders the PREVIOUS member's clip with
@@ -489,13 +487,8 @@ object Media {
     */
   private[graft] val TrimSliceMod = 3
 
-  /** `sliceMod`: members are doc_id % sliceMod == 0 — [[TrimSliceMod]] for
-    * the declared queries (cost posture above), 1 for the FULL corpus in
-    * the sf2 rehearsal (`audio_trim_neardup_sf2`), so the production-scale
-    * probe renders every document through the same code path.
-    */
-  private[graft] def audioTrimMedia(s: SparkSession, dir: String,
-      sliceMod: Int = TrimSliceMod)
+  /** Members are doc_id % [[TrimSliceMod]] == 0 (cost posture above). */
+  private def audioTrimMedia(s: SparkSession, dir: String)
       : org.apache.spark.sql.Dataset[graft.multimodal.MediaRow] = {
     import s.implicits._
     // local defs only: an object-method call inside the mapPartitions
@@ -509,7 +502,7 @@ object Media {
         (1 + math.floorMod(toks(i * toks.length / 256).hashCode, 4096)).toShort
       }
     }
-    val mod = sliceMod.toLong
+    val mod = TrimSliceMod.toLong
     val docs = Tables.documents(s, dir)
       .filter(col("doc_id") % mod === 0)
       .select(col("doc_id"), col("text"))

@@ -9,7 +9,7 @@ import graft.operators.{LshIndexStore, MinHashLSH, QualityClassifier}
 import graft.queries.Curation
 
 /** The COMPOSED streaming ingest — the streaming twin of the batch
-  * curation composition (tools/PipelineRehearsal): a continuous feed of
+  * curation composition (PipelineSpec's capstone): a continuous feed of
   * new documents folds, micro-batch by micro-batch, into the three living
   * artifacts a standing corpus keeps —
   *

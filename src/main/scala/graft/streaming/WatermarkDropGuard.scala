@@ -4,6 +4,7 @@ import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Engine-side guard against SILENT watermark drops in streaming pipelines.
@@ -35,7 +36,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * The listener bus is asynchronous: call [[WatermarkDropGuard.assertClean]]
   * / [[WatermarkDropGuard.totalDropped]] only after the query is stopped (or
   * after `processAllAvailable()` plus [[awaitQuiescence]], which drains the
-  * bus by posting a sentinel progress check).
+  * bus).
   */
 final class WatermarkDropGuard(onDrop: WatermarkDropGuard.Drop => Unit)
   extends StreamingQueryListener {
@@ -117,12 +118,12 @@ object WatermarkDropGuard {
     g
   }
 
-  /** Drain the asynchronous listener bus so totals are stable to read.
-    * Spark exposes no public flush; a bounded sleep after the query stops is
-    * the documented pattern (the bus is a single-threaded queue — events
-    * already posted are delivered in order well within this bound).
+  /** Drain the asynchronous listener bus so totals are stable to read:
+    * returns once every progress event posted so far has reached the
+    * guard.
     */
-  def awaitQuiescence(millis: Long = 500L): Unit = Thread.sleep(millis)
+  def awaitQuiescence(spark: SparkSession): Unit =
+    Bridge.drainListenerBus(spark.sparkContext)
 
   /** Set to "false" to opt OUT of the automatic per-session guard that the
     * streaming entry points ([[Streams]], [[ChatAssembly]]) install.

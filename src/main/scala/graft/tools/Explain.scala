@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-evidence dumper for the optimization rounds: for each named
   * declared query, writes `<outDir>/<name>_<suffix>.txt` containing the
   * query's `explain("formatted")` output, and times one warm noop-sink
@@ -9,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * carries the measurement it justifies.
   *
   * Usage: runMain graft.tools.Explain <outDir> <suffix> <query...>
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -18,24 +16,9 @@ object Explain {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.installPlanRewrites(spark)
+    val spark = graft.LocalSession("Explain")
     new java.io.File(outDir).mkdirs()
-    // same warmup as Bench so timings are comparable
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings")
-      .foreach { t =>
-        try { graft.Tables(spark, sfDir, t).count(); () }
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-    spark.range(10).write.format("noop").mode("overwrite").save()
+    graft.Bench.warmUp(spark, sfDir) // the same warm-up, so timings are comparable
     for (name <- names) {
       val fn = graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query $name"))

@@ -1,19 +1,19 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** Scale-rehearsal tooling (round-7): /root/testdata tops out at sf0.1
-  * (5k docs, 1.5 MB of text), so every 100 TB posture claim was a
-  * plan-shape argument. These two mains turn the heavy-family claims into
-  * measurements: [[ScaleDataGen]] synthesizes a documents/embeddings
-  * slice 1-2 orders of magnitude past sf0.1 (same schemas, same word-soup
-  * shape, deterministic), [[ScaleRehearsal]] runs named declared queries
-  * over it with per-query shuffle-write / spill / peak-memory counters
-  * from a SparkListener. Findings land in BASELINE.md.
+/** Scale-rehearsal tooling: the testdata tops out at sf0.1 (5k docs,
+  * 1.5 MB of text), so [[ScaleDataGen]] synthesizes a documents /
+  * embeddings / events slice 1-2 orders of magnitude past it (same
+  * schemas, same word-soup shape, deterministic), and [[ScaleRehearsal]]
+  * runs named declared queries over it with per-query shuffle-write /
+  * spill / peak-memory counters from [[StageMetrics]]. Findings land in
+  * BASELINE.md.
   *
   * Usage:
   * {{{
-  *   runMain graft.tools.ScaleDataGen /tmp/graft_scale/sf2 1000000 400000
+  *   runMain graft.tools.ScaleDataGen /tmp/graft_scale/sf2 1000000 400000 10000000
   *   SPARK_GRAFT_CPUS=32 runMain graft.tools.ScaleRehearsal \
   *     /tmp/graft_scale/sf2 q100_dup_spans q105_dup_excise ...
   * }}}
@@ -40,17 +40,23 @@ object ScaleDataGen {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: ScaleDataGen <outDir> [nDocs] [nVecs] [nEvents]")
-    val outDir = args(0)
-    val nDocs = if (args.length > 1) args(1).toLong else 500000L
-    val nVecs = if (args.length > 2) args(2).toLong else 200000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession("ScaleDataGen")
+    try {
+      val outDir = args(0)
+      val nDocs = if (args.length > 1) args(1).toLong else 500000L
+      val nVecs = if (args.length > 2) args(2).toLong else 200000L
+      val nEvents = if (args.length > 3) args(3).toLong else 0L
+      generate(spark, outDir, nDocs, nVecs, nEvents)
+      println(s"""{"outDir":"$outDir","nDocs":$nDocs,"nVecs":$nVecs,"nEvents":$nEvents}""")
+    } finally spark.stop()
+  }
+
+  /** Writes `documents.parquet` (`nDocs` rows), `embeddings.parquet`
+    * (`nVecs`) and, when `nEvents > 0`, `events.parquet` under `outDir`,
+    * replacing what is there. The rows depend only on the counts. */
+  def generate(spark: SparkSession, outDir: String,
+      nDocs: Long, nVecs: Long, nEvents: Long): Unit = {
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
     val ph = phrases
     val vb = vocab
     val langs = Array("en", "en", "en", "en", "en", "en", "fr", "de", "zh", "es")
@@ -114,7 +120,6 @@ object ScaleDataGen {
     // scales with nEvents, per-user history stays ~2000 events, matching
     // the bounded-window posture the queries rely on). Gap mix: ~70%
     // 1–20 min (same session), ~30% 31–120 min (new 30-min-gap session).
-    val nEvents = if (args.length > 3) args(3).toLong else 0L
     if (nEvents > 0) {
       val nUsers = math.max(nEvents / 2000L, 64L)
       val perUser = (nEvents + nUsers - 1) / nUsers
@@ -136,17 +141,14 @@ object ScaleDataGen {
       }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.mode("overwrite").parquet(s"$outDir/events.parquet")
     }
-
-    println(s"""{"outDir":"$outDir","nDocs":$nDocs,"nVecs":$nVecs,"nEvents":$nEvents}""")
-    spark.stop()
   }
 }
 
-/** Per-stage task-metric counters shared by the rehearsal mains
-  * ([[ScaleRehearsal]], [[PipelineRehearsal]]): shuffle write, memory/disk
-  * spill, peak execution memory, max task wall — the numbers that say
-  * whether a plan would survive a 100x scale-up, not just whether it
-  * finishes.
+/** Per-stage task-metric counters for [[ScaleRehearsal]]: shuffle write,
+  * memory/disk spill, peak execution memory, max task wall — the numbers
+  * that say whether a plan would survive a 100x scale-up, not just whether
+  * it finishes. Events arrive on the asynchronous listener bus: drain it
+  * (`Bridge.drainListenerBus`) before reading the counters.
   */
 private[tools] class StageMetrics extends org.apache.spark.scheduler.SparkListener {
   @volatile var shuffleWrite = 0L
@@ -159,7 +161,7 @@ private[tools] class StageMetrics extends org.apache.spark.scheduler.SparkListen
   // (round 17: the excise salt A/B measured a max task that did NOT
   // shrink with the salt — without knowing WHICH stage owns it, a fix
   // can't be judged). TrieMap: listener events arrive on the bus thread.
-  private val stageNames =
+  val stageNames =
     scala.collection.concurrent.TrieMap.empty[Int, String]
   override def onStageSubmitted(
       ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
@@ -189,9 +191,9 @@ private[tools] class StageMetrics extends org.apache.spark.scheduler.SparkListen
   // "withThreadLocalCaptured" for all of them — the physical-operator
   // scopes are the only thing that says WHICH exchange the straggler
   // belongs to.
-  private val stageMaxTask =
+  val stageMaxTask =
     scala.collection.concurrent.TrieMap.empty[Int, Long]
-  private val stageScopes =
+  val stageScopes =
     scala.collection.concurrent.TrieMap.empty[Int, String]
   override def onStageCompleted(
       sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
@@ -214,7 +216,7 @@ private[tools] class StageMetrics extends org.apache.spark.scheduler.SparkListen
   def reset(): Unit = {
     shuffleWrite = 0; memSpill = 0; diskSpill = 0; peakExecMem = 0
     maxTaskMs = 0; maxTaskStageId = -1
-    stageMaxTask.clear()
+    stageNames.clear(); stageMaxTask.clear(); stageScopes.clear()
   }
 }
 
@@ -225,1599 +227,68 @@ private[tools] class StageMetrics extends org.apache.spark.scheduler.SparkListen
   */
 object ScaleRehearsal {
 
-  /** Shared dedup-action accounting for the near-dup rehearsal probes
-    * (video 50k / audio 50k / audio sf2 — ONE copy of the invariant, per
-    * the round-14 review): pairs → connected components → lowest-id
-    * survivors; REQUIRES sum(dup_count) == corpus size; returns
-    * (survivors, action seconds).
-    */
-  private def dedupActionStats(
-      media: org.apache.spark.sql.Dataset[graft.multimodal.MediaRow],
-      pairs: org.apache.spark.sql.DataFrame,
-      nm: Long): (Long, Double) = {
-    import org.apache.spark.sql.functions._
-    val s = media.sparkSession
-    import s.implicits._
-    val t1 = System.nanoTime()
-    val act = graft.operators.DedupClusters.clusterAssignments(
-      media.toDF().select(col("doc_id")), "doc_id",
-      pairs.select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")))
-      .filter(col("doc_id") === col("cluster_id"))
-      .agg(sum(col("cluster_size")).as("accounted"), count(lit(1)).as("survivors"))
-      .as[(Long, Long)].head()
-    val actSec = math.rint((System.nanoTime() - t1) / 1e7) / 100.0
-    require(act._1 == nm,
-      s"action accounting broke: ${act._1} accounted of $nm assets")
-    (act._2, actSec)
-  }
-
-  /** Rehearsal-only entries beyond the declared catalog: strategy-PINNED
-    * forms of operators whose declared queries auto-select, so the
-    * rehearsal can measure both sides of an auto-threshold (the numbers
-    * that calibrate [[graft.operators.SubstringDedup.SinglePassMaxBytes]]),
-    * plus scale-contract forms whose declared twins fix a parameter for
-    * oracle-checkability (q101's 8 deterministic centroids vs the
-    * k-grows-with-N semantic-dedup contract).
-    */
-  /** The q159 scale form's input: every conversation of the slice,
-    * rendered (the declared query bounds all-pairs at user_id < 5 for its
-    * oracle; these rehearsal modes fingerprint and pair ALL of them).
-    */
-  private def q159Convs(s: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val store = graft.Tables.documents(s, dir).filter(col("doc_id") < 500)
-      .select(col("doc_id"), substring(col("text"), 1, 80).as("turn_text"))
-    val ev = graft.Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), col("ts_us"),
-        graft.operators.ChatSft.roleOf(col("event_type")).as("role"),
-        pmod(col("event_id"), lit(500)).as("doc_id"))
-      .join(broadcast(store), "doc_id")
-    graft.operators.ChatSft.renderConversations(
-        graft.operators.ChatSft.sessionTurns(
-          ev, "user_id", "ts_us", "event_id", 1800000000L),
-        "user_id", "role", "turn_text")
-      .select((col("user_id") * 1000000L + col("session_id")).as("conv_id"),
-        col("rendered"))
-  }
-
-  /** One arm of the excise salt A/B: duplicated spans at the composed
-    * rehearsal's production shape, reduced to (count, order-free
-    * checksum) so arm equality is a one-row compare printed per arm.
-    */
-  private def spanChecksum(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      gramSalt: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val spans = graft.operators.SubstringDedup.duplicatedSpans(
-      graft.Tables.documents(s, dir), "doc_id", "text",
-      k = 40, hashShuffle = true, singlePass = Some(false),
-      gramSalt = gramSalt)
-    val out = spans.agg(
-      count(lit(1)).as("spans"),
-      expr("bit_xor(xxhash64(doc_id, span_start, span_end, span_len))")
-        .as("checksum"))
-      .localCheckpoint(true)
-    val row = out.head()
-    println(s"""{"probe":"excise_spans","gram_salt":$gramSalt,""" +
-      s""""spans":${row.getLong(0)},"checksum":${row.getLong(1)}}""")
-    out
-  }
-
-  private val extraQueries: Map[String,
-      (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-    // q159's UNBOUNDED scale form: every conversation in the slice
-    // fingerprinted and paired through the banded equi-join (the
-    // declared query bounds all-pairs at user_id < 5 for its oracle).
-    // maxBucket caps the genuinely-degenerate buckets this synthetic
-    // corpus produces (hundreds of single-turn conversations render
-    // byte-identically — real near-dups, quadratic within a bucket).
-    "q159_banded" -> ((s, dir) =>
-      graft.operators.SimHash.candidatePairs(q159Convs(s, dir),
-        "conv_id", "rendered", bands = 4, maxHamming = 3, maxBucket = 1024)),
-    // The capped buckets' pair-verify spread over salted reducer keys —
-    // the round-11 straggler fix (max task was 14 s of a 27 s wall with
-    // the cap alone). Same pair set by construction; q159_banded_ab
-    // checks that AT SCALE via count + order-free pair checksum.
-    "q159_banded_salted" -> ((s, dir) =>
-      graft.operators.SimHash.candidatePairs(q159Convs(s, dir),
-        "conv_id", "rendered", bands = 4, maxHamming = 3, maxBucket = 1024,
-        saltAbove = 128)),
-    "q159_banded_ab" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val convs = q159Convs(s, dir).localCheckpoint(true)
-      def run(saltAbove: Int): (Long, Long, Double) = {
-        val t0 = System.nanoTime()
-        val r = graft.operators.SimHash.candidatePairs(convs, "conv_id",
-            "rendered", bands = 4, maxHamming = 3, maxBucket = 1024,
-            saltAbove = saltAbove)
-          // bit_xor: order-free and overflow-free (ANSI sum of hashes throws)
-          .agg(count(lit(1)), bit_xor(xxhash64(col("id_a"), col("id_b"),
-            col("hamming")))).as[(Long, Long)].head()
-        (r._1, r._2, math.rint((System.nanoTime() - t0) / 1e7) / 100.0)
-      }
-      val (nU, ckU, tU) = run(0)
-      val (nS, ckS, tS) = run(128)
-      require(nU == nS && ckU == ckS,
-        s"salted pair set diverged: $nU/$ckU unsalted vs $nS/$ckS salted")
-      println(s"""{"probe":"q159_banded_ab","pairs":$nU,"checksum_equal":true,""" +
-        s""""unsalted_sec":$tU,"salted_sec":$tS}""")
-      Seq((nU, tU, tS)).toDF("pairs", "unsalted_sec", "salted_sec")
-    }),
-    // q163's strategy A/B at the scale where the strategies genuinely
-    // differ: sf0.1's conversations average ~16 tokens against a 2048
-    // capacity (every strategy lands within 0.5% of the lower bound —
-    // recorded honestly in BASELINE), so this mode packs 1M synthetic
-    // conversations with a lognormal size profile (median ~400, heavy
-    // tail past capacity) over 1000 shards. The per-shard sequential fold
-    // is the parallel unit — 1000 shards fan out across the cluster.
-    "pack_ab_1m" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val items = s.range(1000000L).mapPartitions { it =>
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x9E3779B97F4A7C15L + 5L)
-          val n = math.max(8L, math.min(6144L,
-            math.exp(rng.nextGaussian() * 0.9 + 6.0).toLong))
-          ((id % 1000L).toInt, id / 1000L, id, n)
-        }
-      }.toDF("shard", "k1", "k2", "n_tokens").localCheckpoint(true)
-      val t0 = System.nanoTime()
-      val r = graft.operators.Packing.strategyAb(items, 2048L)
-        .agg(sum("n_convs"), sum("total_tokens"), sum("oversize_convs"),
-          sum("lb_bins"), sum("q_bins"), sum("q_padding"), sum("q_overflow"),
-          sum("ff_bins"), sum("ff_padding"),
-          sum("bfd_bins"), sum("bfd_padding")).head()
-      val sec = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      println(s"""{"probe":"pack_ab_1m","sec":$sec,"convs":${r.getLong(0)},""" +
-        s""""tokens":${r.getLong(1)},"oversize":${r.getLong(2)},""" +
-        s""""lb_bins":${r.getLong(3)},"q_bins":${r.getLong(4)},""" +
-        s""""q_padding":${r.getLong(5)},"q_overflow":${r.getLong(6)},""" +
-        s""""ff_bins":${r.getLong(7)},"ff_padding":${r.getLong(8)},""" +
-        s""""bfd_bins":${r.getLong(9)},"bfd_padding":${r.getLong(10)}}""")
-      Seq((sec, r.getLong(7), r.getLong(9))).toDF("sec", "ff_bins", "bfd_bins")
-    }),
-    // q164's ACTION at the same 1M-conversation scale: time the BFD
-    // assignment fold itself, then reconcile per shard against the
-    // strategyAb card DISTRIBUTED (all 1000 shards, not a sample):
-    // max(bin) == bfd_bins and sum(max(0, C - fill)) == bfd_padding.
-    // A divergence between the card and the action would mean the two
-    // folds drifted — the invariant PackingSpec pins at 300 rows, held
-    // at 1M.
-    "pack_bfd_1m" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val cap = 2048L
-      val items = s.range(1000000L).mapPartitions { it =>
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x9E3779B97F4A7C15L + 5L)
-          val n = math.max(8L, math.min(6144L,
-            math.exp(rng.nextGaussian() * 0.9 + 6.0).toLong))
-          ((id % 1000L).toInt, id / 1000L, id, n)
-        }
-      }.toDF("shard", "k1", "k2", "n_tokens").localCheckpoint(true)
-      val t0 = System.nanoTime()
-      val asg = graft.operators.Packing.bfdAssignments(items, cap)
-        .localCheckpoint(true)
-      val nAsg = asg.count()
-      val sec = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      val fromAsg = asg.groupBy(col("shard"), col("bin"))
-        .agg(sum(col("n_tokens")).as("fill"))
-        .groupBy(col("shard"))
-        .agg(max(col("bin")).cast("long").as("a_bins"),
-          sum(greatest(lit(0L), lit(cap) - col("fill"))).as("a_padding"))
-      val card = graft.operators.Packing.strategyAb(items, cap)
-        .select(col("shard"), col("bfd_bins"), col("bfd_padding"))
-      val mismatches = fromAsg.join(card, "shard")
-        .filter(col("a_bins") =!= col("bfd_bins") ||
-          col("a_padding") =!= col("bfd_padding"))
-        .count()
-      val tot = fromAsg.agg(sum("a_bins"), sum("a_padding"))
-        .as[(Long, Long)].head()
-      require(mismatches == 0L,
-        s"$mismatches of 1000 shards diverged between bfdAssignments and strategyAb")
-      println(s"""{"probe":"pack_bfd_1m","assign_sec":$sec,"rows":$nAsg,""" +
-        s""""bins":${tot._1},"padding":${tot._2},"shard_mismatches":$mismatches}""")
-      Seq((sec, nAsg, tot._1)).toDF("assign_sec", "rows", "bins")
-    }),
-    // Video near-dup at 50k real containers (q167/q168's posture probe):
-    // 10k groups of 5 — members 0..3 identical gradient videos, member 4
-    // the inverted stranger. Asserts PLANTED RECALL (every within-group
-    // identical pair found at mean Hamming 0 — 6 per group) and the
-    // ACTION's exact accounting (sum(dup_count) == corpus size), so the
-    // rehearsal verifies at scale, not just times.
-    "video_neardup_50k" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val n = 50000L
-      val media = s.range(n).repartition(64).as[Long].mapPartitions { it =>
-        graft.multimodal.Multimodal.imageIoInMemory()
-        val ramp = Array.tabulate[Byte](256)(_.toByte)
-        val icm = new java.awt.image.IndexColorModel(8, 256, ramp, ramp, ramp)
-        val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-        it.map { jid =>
-          val id: Long = jid
-          val group = id / 5
-          // members 0..3 share the group's content seed (identical videos);
-          // member 4 is a distinct stranger. Pixels are pseudo-random per
-          // (seed, frame, x, y) — aHash needs hash-DIVERSE content for a
-          // realistic bucket distribution (the first cut used gradients,
-          // which all collapse to the same half-plane aHash and blew the
-          // candidate volume through a handful of 25k-member buckets)
-          val seed = if (id % 5 == 4) group + 1000000007L else group
-          val bos = new java.io.ByteArrayOutputStream()
-          val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-          // try/finally like Media.scala's writers: an encode failure
-          // mid-row must not leak the stream or leave the shared writer
-          // holding stale output
-          try {
-          writer.setOutput(ios)
-          writer.prepareWriteSequence(null)
-          var f = 0
-          while (f < 3) {
-            val img = new java.awt.image.BufferedImage(16, 16,
-              java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
-            val r = img.getRaster
-            var y = 0
-            while (y < 16) {
-              var x = 0
-              while (x < 16) {
-                var h = seed * 0x9E3779B97F4A7C15L + (f * 256 + y * 16 + x) * 0xC2B2AE3D27D4EB4FL
-                h ^= (h >>> 29); h *= 0xBF58476D1CE4E5B9L; h ^= (h >>> 32)
-                r.setSample(x, y, 0, (h & 0xff).toInt)
-                x += 1
-              }
-              y += 1
-            }
-            writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-            f += 1
-          }
-          writer.endWriteSequence()
-          } finally ios.close()
-          graft.multimodal.MediaRow(id, s"mem://v/$id.gif", bos.toByteArray, Map.empty)
-        }
-      }.localCheckpoint(true)
-      val nm = media.count()
-      val t0 = System.nanoTime()
-      val pairs = graft.multimodal.Multimodal
-        .videoNearDupPairs(media, stride = 1, maxMeanHamming = 3.0)
-        .localCheckpoint(true)
-      val nPairs = pairs.count()
-      val pairSec = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      val planted = pairs.filter(
-        floor(col("doc_id_a") / 5) === floor(col("doc_id_b") / 5) &&
-          pmod(col("doc_id_a"), lit(5)) < 4 && pmod(col("doc_id_b"), lit(5)) < 4 &&
-          col("mean_hamming") === 0.0).count()
-      val expectPlanted = (n / 5) * 6
-      require(planted == expectPlanted,
-        s"planted recall broke: $planted of $expectPlanted within-group pairs found")
-      val (survivors, actSec) = dedupActionStats(media, pairs, nm)
-      println(s"""{"probe":"video_neardup_50k","videos":$nm,"pairs":$nPairs,""" +
-        s""""planted_found":$planted,"survivors":$survivors,""" +
-        s""""pair_sec":$pairSec,"action_sec":$actSec}""")
-      Seq((nPairs, survivors, pairSec, actSec)).toDF("pairs", "survivors", "pair_sec", "action_sec")
-    }),
-    // Audio near-dup at 50k real PCM16 clips (q169/q170's posture probe,
-    // the video rehearsal's shape on the WAV path): 10k groups of 5 —
-    // members 0..3 identical envelopes, member 4 a stranger. Envelope
-    // windows are pseudo-random per (seed, window) so fingerprints are
-    // hash-DIVERSE (the video rehearsal's gradient lesson applied).
-    // Asserts PLANTED RECALL (6 exact-collision pairs per group) and the
-    // ACTION's exact accounting (sum(dup_count) == corpus size).
-    "audio_neardup_50k" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val n = 50000L
-      val media = s.range(n).repartition(64).as[Long].mapPartitions { it =>
-        it.map { jid =>
-          val id: Long = jid
-          val group = id / 5
-          val seed = if (id % 5 == 4) group + 1000000007L else group
-          // shared envelopeWav helper: the rehearsal renders through the
-          // SAME format path as the declared q169 corpus, so the 64x8
-          // window layout cannot drift from audioFp64's cells
-          val amps = Array.tabulate[Short](64) { i =>
-            var h = seed * 0x9E3779B97F4A7C15L + i * 0xC2B2AE3D27D4EB4FL
-            h ^= (h >>> 29); h *= 0xBF58476D1CE4E5B9L; h ^= (h >>> 32)
-            (1 + math.floorMod(h, 4096L)).toShort
-          }
-          graft.multimodal.MediaRow(id, s"mem://a/$id.wav",
-            graft.multimodal.Multimodal.envelopeWav(amps), Map.empty)
-        }
-      }.localCheckpoint(true)
-      val nm = media.count()
-      val t0 = System.nanoTime()
-      val pairs = graft.multimodal.Multimodal
-        .audioNearDupPairs(media, maxHamming = 3)
-        .localCheckpoint(true)
-      val nPairs = pairs.count()
-      val pairSec = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      val planted = pairs.filter(
-        floor(col("doc_id_a") / 5) === floor(col("doc_id_b") / 5) &&
-          pmod(col("doc_id_a"), lit(5)) < 4 && pmod(col("doc_id_b"), lit(5)) < 4 &&
-          col("hamming") === 0).count()
-      val expectPlanted = (n / 5) * 6
-      require(planted == expectPlanted,
-        s"planted recall broke: $planted of $expectPlanted within-group pairs found")
-      val (survivors, actSec) = dedupActionStats(media, pairs, nm)
-      println(s"""{"probe":"audio_neardup_50k","clips":$nm,"pairs":$nPairs,""" +
-        s""""planted_found":$planted,"survivors":$survivors,""" +
-        s""""pair_sec":$pairSec,"action_sec":$actSec}""")
-      Seq((nPairs, survivors, pairSec, actSec)).toDF("pairs", "survivors", "pair_sec", "action_sec")
-    }),
-
-    // TRIM-robust audio near-dup at 50k clips (q174/q175's posture probe,
-    // round 15): 10k groups of 5 — member 0 a 256-block base clip with
-    // pseudo-random per-block envelope, members 1–3 hop-aligned FRONT
-    // TRIMS of it (1–3 hops), member 4 a stranger. Every within-group
-    // pair among members 0–3 is a planted trim relation (6 per group, 60k
-    // total) that the WHOLE-clip fingerprint misses by construction;
-    // asserts 100% planted recall at mean_hamming 0 with the correct
-    // rank offsets, plus the action's exact accounting.
-    "audio_trim_neardup_50k" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val n = 50000L
-      val hop = 4; val bs = 8
-      val media = s.range(n).repartition(64).as[Long].mapPartitions { it =>
-        it.map { jid =>
-          val id: Long = jid
-          val group = id / 5
-          val member = (id % 5).toInt
-          val seed = if (member == 4) group + 1000000007L else group
-          val samples = Array.tabulate[Short](256 * bs) { sIdx =>
-            val i = sIdx / bs
-            var h = seed * 0x9E3779B97F4A7C15L + i * 0xC2B2AE3D27D4EB4FL
-            h ^= (h >>> 29); h *= 0xBF58476D1CE4E5B9L; h ^= (h >>> 32)
-            (1 + math.floorMod(h, 4096L)).toShort
-          }
-          val trimmed = if (member >= 1 && member <= 3)
-            samples.drop(hop * bs * member) else samples
-          graft.multimodal.MediaRow(id, s"mem://t/$id.wav",
-            graft.multimodal.Multimodal.pcm16Wav(trimmed), Map.empty)
-        }
-      }.localCheckpoint(true)
-      val nm = media.count()
-      val t0 = System.nanoTime()
-      val pairs = graft.multimodal.Multimodal
-        .audioNearDupPairsTrimTolerant(media, blockSamples = bs, hopBlocks = hop)
-        .localCheckpoint(true)
-      val nPairs = pairs.count()
-      val pairSec = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      val planted = pairs.filter(
-        floor(col("doc_id_a") / 5) === floor(col("doc_id_b") / 5) &&
-          pmod(col("doc_id_a"), lit(5)) < 4 && pmod(col("doc_id_b"), lit(5)) < 4 &&
-          col("mean_hamming") === 0.0 &&
-          // offset = member_b - member_a (front trims shift ranks down)
-          col("offset") === pmod(col("doc_id_b"), lit(5)) - pmod(col("doc_id_a"), lit(5))
-      ).count()
-      val expectPlanted = (n / 5) * 6
-      require(planted == expectPlanted,
-        s"planted trim recall broke: $planted of $expectPlanted within-group pairs found")
-      val (survivors, actSec) = dedupActionStats(media, pairs, nm)
-      println(s"""{"probe":"audio_trim_neardup_50k","clips":$nm,"pairs":$nPairs,""" +
-        s""""planted_found":$planted,"survivors":$survivors,""" +
-        s""""pair_sec":$pairSec,"action_sec":$actSec}""")
-      Seq((nPairs, survivors, pairSec, actSec)).toDF("pairs", "survivors", "pair_sec", "action_sec")
-    }),
-
-    // TRIM-robust audio near-dup over the FULL REAL corpus (rounds 15–16):
-    // 1M template-heavy documents rendered through the declared family's
-    // own code path (sliceMod=1 — no slice), 49 sub-fingerprints per clip
-    // → ~49M sub-fp rows. Round 16 turns this into the cap-posture A/B
-    // the VERDICT asked for: arm A is round-15's production posture
-    // (maxBucket=100, over-cap buckets DROPPED — the documented recall
-    // sacrifice: 2,405 of ~200k planted trims kept), arm B is the new
-    // DEFAULT (data-derived cap + representative stars). Measured per
-    // arm: direct planted-pair recall AND CLUSTER recall — the fraction
-    // of planted (base, trim) pairs landing in one dedup cluster, which
-    // is what the ACTION consumes; the representative star's whole point
-    // is that cluster recall survives the cap even where the direct pair
-    // edge is replaced by two rep edges.
-    "audio_trim_neardup_sf2" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val media = graft.queries.Media.audioTrimMedia(s, dir, sliceMod = 1)
-        .localCheckpoint(true)
-      val nm = media.count()
-      // planted trims at sliceMod=1: doc 5k+4 is a front trim of 5k+3
-      val plantedPairs = s.range(nm / 5)
-        .select((col("id") * 5 + 3).as("p_a"), (col("id") * 5 + 4).as("p_b"))
-        .localCheckpoint(true)
-      val nPlanted = plantedPairs.count()
-      def arm(name: String, mb: Int, rep: Boolean,
-          numReps: Int = 1): (Long, Long, Double, Double) = {
-        val t0 = System.nanoTime()
-        val pairs = graft.multimodal.Multimodal
-          .audioNearDupPairsTrimTolerant(media, blockSamples = 8, hopBlocks = 4,
-            maxBucket = mb, repOverCap = rep, numReps = numReps)
-          .localCheckpoint(true)
-        val nPairs = pairs.count()
-        val pairSec = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-        val direct = pairs.filter(
-          col("doc_id_b") === col("doc_id_a") + 1 &&
-            pmod(col("doc_id_b"), lit(5)) === 4 &&
-            col("mean_hamming") === 0.0 && col("offset") > 0).count()
-        // cluster recall: both planted endpoints in one dedup component
-        val asg = graft.operators.DedupClusters.clusterAssignments(
-          media.toDF().select(col("doc_id")), "doc_id",
-          pairs.select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")))
-          .localCheckpoint(true)
-        val sameCluster = plantedPairs
-          .join(asg.select(col("doc_id").as("p_a"), col("cluster_id").as("c_a")), "p_a")
-          .join(asg.select(col("doc_id").as("p_b"), col("cluster_id").as("c_b")), "p_b")
-          .filter(col("c_a") === col("c_b")).count()
-        val acc = asg.filter(col("doc_id") === col("cluster_id"))
-          .agg(sum(col("cluster_size"))).as[Long].head()
-        require(acc == nm, s"$name action accounting broke: $acc of $nm")
-        println(s"""{"probe":"audio_trim_neardup_sf2","arm":"$name",""" +
-          s""""clips":$nm,"pairs":$nPairs,"planted":$nPlanted,""" +
-          s""""planted_direct":$direct,"planted_same_cluster":$sameCluster,""" +
-          s""""pair_sec":$pairSec}""")
-        (nPairs, direct, sameCluster.toDouble, pairSec)
-      }
-      val (_, _, dropCluster, _) = arm("drop_cap100", 100, rep = false)
-      val (_, _, repCluster, _) = arm("derived_rep", graft.multimodal.Multimodal.DeriveCap, rep = true)
-      require(repCluster > dropCluster,
-        s"representative stars must recover cluster recall: $repCluster <= $dropCluster")
-      // round 17: MULTI-representative stars — the r16 single-rep residual
-      // was 59% of planted pairs stuck in MIXED over-cap buckets whose
-      // min-id rep is the wrong template variant; R=8 id-stride reps give
-      // each member 8 verified-edge chances at linear (8n) cost
-      val (_, _, rep8Cluster, _) = arm("derived_rep8",
-        graft.multimodal.Multimodal.DeriveCap, rep = true, numReps = 8)
-      require(rep8Cluster > repCluster,
-        s"multi-reps must recover mixed-bucket recall: $rep8Cluster <= $repCluster")
-      Seq((dropCluster, repCluster, rep8Cluster, nPlanted))
-        .toDF("drop_same_cluster", "rep_same_cluster", "rep8_same_cluster", "planted")
-    }),
-
-    // The R=8 arm ALONE in a fresh JVM: the three-arm A/B above exhausted
-    // the box's ~80 GB free disk on arm 3 — arms 1–2's shuffle files are
-    // only reclaimed by the ContextCleaner on GC, so within one JVM the
-    // third arm starts with most of the headroom already spent. A
-    // measured-infra constraint, not an operator property; the solo form
-    // gives the multi-rep arm the whole disk.
-    "audio_trim_rep8_sf2" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val media = graft.queries.Media.audioTrimMedia(s, dir, sliceMod = 1)
-        .localCheckpoint(true)
-      val nm = media.count()
-      val plantedPairs = s.range(nm / 5)
-        .select((col("id") * 5 + 3).as("p_a"), (col("id") * 5 + 4).as("p_b"))
-        .localCheckpoint(true)
-      val nPlanted = plantedPairs.count()
-      val t0 = System.nanoTime()
-      // numReps > 1 routes to STRATIFIED reps: edge count is ~n (each
-      // member pairs only with its own variant class's rep) and classes
-      // are EXACT variants since the pmod fold-down was dropped — the
-      // folded form's birthday collisions were measured handing most
-      // variants a wrong-variant rep (R=8: 104,143/200k cluster recall;
-      // R=1024: 116,697/200k; exact classes have no collision term).
-      val pairs = graft.multimodal.Multimodal
-        .audioNearDupPairsTrimTolerant(media, blockSamples = 8, hopBlocks = 4,
-          maxBucket = graft.multimodal.Multimodal.DeriveCap, repOverCap = true,
-          numReps = 2)
-        .localCheckpoint(true)
-      val nPairs = pairs.count()
-      val pairSec = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      val asg = graft.operators.DedupClusters.clusterAssignments(
-        media.toDF().select(col("doc_id")), "doc_id",
-        pairs.select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b")))
-        .localCheckpoint(true)
-      val sameCluster = plantedPairs
-        .join(asg.select(col("doc_id").as("p_a"), col("cluster_id").as("c_a")), "p_a")
-        .join(asg.select(col("doc_id").as("p_b"), col("cluster_id").as("c_b")), "p_b")
-        .filter(col("c_a") === col("c_b")).count()
-      val acc = asg.filter(col("doc_id") === col("cluster_id"))
-        .agg(sum(col("cluster_size"))).as[Long].head()
-      require(acc == nm, s"rep8 action accounting broke: $acc of $nm")
-      println(s"""{"probe":"audio_trim_rep8_sf2","clips":$nm,"pairs":$nPairs,""" +
-        s""""planted":$nPlanted,"planted_same_cluster":$sameCluster,""" +
-        s""""pair_sec":$pairSec}""")
-      Seq((nPairs, sameCluster, nPlanted))
-        .toDF("pairs", "rep8_same_cluster", "planted")
-    }),
-
-    // Audio near-dup over a REAL document corpus at the production cap:
-    // the declared q169's default maxBucket=10000 is sized for the sf0.1
-    // catalog; at 1M docs the synthetic corpus's template structure makes
-    // degenerate envelope mega-buckets (measured: 386.7 s / 73.6 GB spill
-    // uncapped-in-practice, and the uncapped pair graph then OOM'd the CC
-    // action). maxBucket=100 is the q44/q54 full-corpus precedent — the
-    // documented recall sacrifice on degenerate buckets that makes
-    // template-heavy corpora safe. Asserts the dedup action's exact
-    // accounting on the capped graph.
-    "audio_neardup_sf2" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val media = graft.queries.Media.audioMedia(s, dir).localCheckpoint(true)
-      val nm = media.count()
-      val t0 = System.nanoTime()
-      val pairs = graft.multimodal.Multimodal
-        .audioNearDupPairs(media, maxHamming = 3, maxBucket = 100)
-        .localCheckpoint(true)
-      val nPairs = pairs.count()
-      val pairSec = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      val (survivors, actSec) = dedupActionStats(media, pairs, nm)
-      println(s"""{"probe":"audio_neardup_sf2","clips":$nm,"pairs":$nPairs,""" +
-        s""""survivors":$survivors,"pair_sec":$pairSec,"action_sec":$actSec}""")
-      Seq((nPairs, survivors, pairSec, actSec)).toDF("pairs", "survivors", "pair_sec", "action_sec")
-    }),
-
-    "q100_window" -> ((s, dir) =>
-      graft.operators.SubstringDedup.duplicatedSpans(
-        graft.Tables.documents(s, dir), "doc_id", "text",
-        k = 20, singlePass = Some(true))),
-    "q100_twopass" -> ((s, dir) =>
-      graft.operators.SubstringDedup.duplicatedSpans(
-        graft.Tables.documents(s, dir), "doc_id", "text",
-        k = 20, singlePass = Some(false))),
-    "q100_twopass_hash" -> ((s, dir) =>
-      graft.operators.SubstringDedup.duplicatedSpans(
-        graft.Tables.documents(s, dir), "doc_id", "text",
-        k = 20, hashShuffle = true, singlePass = Some(false))),
-    // Round-17 salted-exchange A/B (VERDICT r16 task 2): the composed
-    // rehearsal's excise stage at its exact production shape (k = 40,
-    // hashShuffle), one arm FORCED to the round-16 single-key plan
-    // (gramSalt = 1), one on the derived salt (gramSalt = 0). Each arm
-    // prints its span count + an order-free span-set checksum — the two
-    // MUST match (SubstringDedupSpec's identity, re-proven at 1M), and
-    // the harness's max_task line per arm is the straggler measurement
-    // the round's done-criterion reads.
-    "excise_spans_salt1" -> ((s, dir) => spanChecksum(s, dir, gramSalt = 1)),
-    "excise_spans_salted" -> ((s, dir) => spanChecksum(s, dir, gramSalt = 0)),
-    // q111's declared form uses targetClusterSize=64 to force trained
-    // cells at verify scale; at 400k+ vectors that k would hit the
-    // driver-side Lloyd's quadratic-in-k wall (SemDeDup.pairsAuto doc) —
-    // the default 1024 target is the scale-appropriate setting
-    "q111_t1024" -> ((s, dir) =>
-      graft.operators.SemDeDup.pairsAuto(
-        graft.Tables.embeddings(s, dir), "vec_id", "embedding",
-        minCos = 0.95)),
-    // q112/q113's declared forms pin 8 deterministic centroids for the
-    // oracle (quadratic in corpus size — q101's documented trade); these
-    // are their k-grows-with-N scale forms, exercising the persisted index
-    // (trained build + incremental batch pairs) and the dedup action
-    "q112_t1024" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      val emb = graft.Tables.embeddings(s, dir)
-      val path = graft.queries.Scratch.path("semdedup_scale_idx", dir)
-      graft.queries.Scratch.once(path) {
-        graft.operators.SemDeDup.buildIndexAuto(
-          emb.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding", path)
-      }
-      graft.operators.SemDeDup.incrementalPairs(
-        emb.filter(col("vec_id") % 5 === 0), emb, "vec_id", "embedding",
-        path, minCos = 0.95)
-    }),
-    // 0.9999 discriminates the slice's planted twins (cos ~1.0) from
-    // cluster-mates (cos ~0.9997). At 0.95 EVERY cluster-mate pair
-    // qualifies: ~200M edges, whose distributed CC exhausted the 57g
-    // rehearsal JVM — measured and recorded in BASELINE.md as the "your
-    // threshold defines the edge volume" contract, not a rehearsal target
-    "q113_t1024" -> ((s, dir) =>
-      graft.operators.SemDeDup.dedupAuto(
-        graft.Tables.embeddings(s, dir), "vec_id", "embedding",
-        minCos = 0.9999)),
-    // correctness at scale, not just wall time: the slice plants a twin at
-    // every 11th id (copy of id-1, 0.002 noise → cos ≈ 1.0, vs ~0.9997
-    // between mere cluster-mates). Perfect dedup at 0.9999 drops exactly
-    // the planted copies (lowest id survives); copies that SURVIVE are the
-    // operator's misses (twin straddled a trained-cell boundary), so
-    // missed/planted is the action's measured miss rate at 400k vectors.
-    // Printed eagerly — the rehearsal's noop sink would discard the row
-    "q113_recall" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val emb = graft.Tables.embeddings(s, dir)
-      val planted = emb
-        .filter(col("vec_id") % 11 === 0 && col("vec_id") > 0).count()
-      val agg = graft.operators.SemDeDup
-        .dedupAuto(emb, "vec_id", "embedding", minCos = 0.9999)
-        .agg(
-          count(lit(1)).as("survivors"),
-          sum(when(col("vec_id") % 11 === 0 && col("vec_id") > 0, 1L)
-            .otherwise(0L)).as("planted_copies_surviving"))
-        .localCheckpoint(true)
-      val row = agg.head()
-      println(s"""{"probe":"q113_recall","planted":$planted,""" +
-        s""""survivors":${row.getLong(0)},"missed":${row.getLong(1)}}""")
-      agg
-    }),
-    // q117's scale form needs a Zipf vocabulary (the slice's 30-word
-    // uniform vocab makes EVERY term a stop term — SparseCosineJoin's
-    // documented adversarial case, where the right answer is "don't run
-    // uncapped lexical pairing on a degenerate vocab", not a bigger
-    // shuffle). Inline corpus: 1M docs x 40 tokens, 100k-term Zipf(1)
-    // vocab via log-uniform inverse CDF; df cap 1e-4 keeps terms in
-    // <=100 docs, bounding the join's sum(df^2) at ~2e8 rows — the knob a
-    // real deployment turns, measured at a realistic vocab/corpus ratio.
-    // The `dir` argument is unused: the corpus is generated in-plan
-    "q117_zipf" -> ((s, _) => {
-      import org.apache.spark.sql.functions.col
-      import s.implicits._
-      val docs = s.range(1000000L).mapPartitions { it =>
-        val nV = 100000.0
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x9E3779B97L + 13L)
-          val text = Array.fill(40) {
-            val i = math.exp(rng.nextDouble() * math.log(nV + 1)).toLong
-            s"t$i"
-          }.mkString(" ")
-          (id, text)
-        }
-      }.toDF("doc_id", "text")
-      graft.operators.SparseCosineJoin.pairs(
-        docs, "doc_id", "text", minCos = 0.3, maxDfFrac = 1e-4)
-        .filter(col("cos") <= 1.0) // keep the filter column referenced
-    }),
-    // The round-8 AUTO df cap, evaluated at the scale where its sqrt(n)
-    // regime binds (n=1M -> cap 64000): computes sum(df^2) join volume
-    // over the q117_zipf corpus's df frame uncapped / auto / df<=100 —
-    // an aggregate over |vocab| rows, so the MEASUREMENT is cheap even
-    // where the uncapped JOIN is infeasible (that's the point: the
-    // numbers printed are the join sizes a deployment would face).
-    // Printed eagerly; `dir` unused
-    "q117_autocap_volume" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val n = 1000000L
-      val docs = s.range(n).mapPartitions { it =>
-        val nV = 100000.0
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x9E3779B97L + 13L)
-          val text = Array.fill(40) {
-            val i = math.exp(rng.nextDouble() * math.log(nV + 1)).toLong
-            s"t$i"
-          }.mkString(" ")
-          (id, text)
-        }
-      }.toDF("doc_id", "text")
-      val df = docs
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
-        .groupBy(col("doc_id"), col("t")).agg(count(lit(1)))
-        .groupBy(col("t")).agg(count(lit(1)).as("df"))
-      val autoCap = math.max(256.0, math.min(n / 2.0, 64.0 * math.sqrt(n.toDouble)))
-      val vols = df.agg(
-        sum(col("df") * col("df")).as("uncapped"),
-        sum(when(col("df") <= autoCap, col("df") * col("df"))
-          .otherwise(0L)).as("auto"),
-        sum(when(col("df") <= 100, col("df") * col("df"))
-          .otherwise(0L)).as("df100"),
-        count(lit(1)).as("vocab")).localCheckpoint(true)
-      val r = vols.head()
-      println(s"""{"probe":"q117_autocap_volume","n_docs":$n,""" +
-        s""""auto_cap":${autoCap.toLong},"vocab":${r.getLong(3)},""" +
-        s""""vol_uncapped":${r.getLong(0)},"vol_auto":${r.getLong(1)},""" +
-        s""""vol_df100":${r.getLong(2)}}""")
-      vols
-    }),
-    // Round-8 quality classifier at 1M docs: feature build (token-stream
-    // aggregate + per-doc window) + closed-form centroid train/score +
-    // 3 logistic-GD iterations (each one 19-row gradient collect) — the
-    // full q120+q121 path at 200x the sf0.1 doc count. Lengths and langs
-    // are varied so the cascade labels split the corpus. Prints agreement
-    // counts eagerly; `dir` unused
-    "q120_quality_1m" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val vb = Array("spark", "join", "stream", "batch", "table", "column",
-        "row", "scan", "filter", "group", "agg", "sort", "hash", "merge",
-        "window", "key", "value", "query", "part", "line", "order", "data",
-        "fast", "slow", "big", "small", "vector", "index", "cache", "shuffle")
-      val langs = Array("en", "en", "en", "en", "fr", "de", "zh", "es", "xx", "en")
-      val docs = s.range(1000000L).mapPartitions { it =>
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x6C8E9CF5L + 7L)
-          val nTok = 5 + rng.nextInt(95)
-          // every 7th doc is repetitive (3-word vocabulary slice)
-          val pool = if (id % 7 == 0) 3 else vb.length
-          val text = Array.fill(nTok)(vb(rng.nextInt(pool))).mkString(" ")
-          (id, text, langs(rng.nextInt(langs.length)), text.length)
-        }
-      }.toDF("doc_id", "text", "lang", "n_chars")
-      val feat = graft.operators.QualityClassifier.features(docs)
-        .localCheckpoint(true)
-      val labels = graft.operators.QualityClassifier.cascadeLabels(docs)
-        .localCheckpoint(true)
-      val cent = graft.operators.QualityClassifier.centroidScores(feat, labels)
-      val w = graft.operators.QualityClassifier
-        .trainLogistic(feat, labels, iters = 3, lr = 0.5)
-      val logi = graft.operators.QualityClassifier.score(feat, w)
-        .join(labels, "doc_id")
-      val agg = cent.select(lit("centroid").as("m"),
-          (col("pred") === (col("y") === 1.0)).cast("long").as("ok"))
-        .union(logi.select(lit("logistic").as("m"),
-          (col("pred") === (col("y") === 1.0)).cast("long").as("ok")))
-        .groupBy(col("m"))
-        .agg(count(lit(1)).as("n"), sum(col("ok")).as("agree"))
-        .localCheckpoint(true)
-      agg.collect().foreach { r =>
-        println(s"""{"probe":"q120_quality_1m","model":"${r.getString(0)}",""" +
-          s""""n":${r.getLong(1)},"agree":${r.getLong(2)}}""")
-      }
-      agg
-    }),
-    // Round-8 BPE trainer at scale: 1M docs × 40 tokens over the 100k-term
-    // Zipf vocab (the q117_zipf generator) — the claim under test is that
-    // corpus-scale work is ONE word-count pass and every merge iteration
-    // runs on the ~100k-row word-TYPE table, so 16 merges cost 16 small
-    // aggregates, not 16 corpus scans. Prints the learned merge count and
-    // total encoded pieces eagerly; `dir` unused
-    "q122_bpe_1m" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val docs = s.range(1000000L).mapPartitions { it =>
-        val nV = 100000.0
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x9E3779B97L + 13L)
-          val text = Array.fill(40) {
-            val i = math.exp(rng.nextDouble() * math.log(nV + 1)).toLong
-            s"t$i"
-          }.mkString(" ")
-          (id, text)
-        }
-      }.toDF("doc_id", "text")
-      val (merges, dict) = graft.operators.Bpe.train(
-        graft.operators.Bpe.wordTypes(docs, "text"), 16)
-      val agg = dict.agg(
-        count(lit(1)).as("word_types"),
-        sum(col("freq") * size(split(trim(col("sym")), " ")))
-          .as("total_pieces")).localCheckpoint(true)
-      val r = agg.head()
-      println(s"""{"probe":"q122_bpe_1m","merges":${merges.length},""" +
-        s""""word_types":${r.getLong(0)},"total_pieces":${r.getLong(1)}}""")
-      agg
-    }),
-    // Round-8 heavy hitters at scale: exact top-20 tokens from 1M docs ×
-    // 40 tokens (100k-term Zipf vocab) BOTH ways — the bounded-state
-    // two-pass (MG capacity 4096) and the plain cardinality-sized groupBy
-    // it replaces — so the trade is a measurement, not an argument. The
-    // two must agree exactly (asserted; Zipf head ≫ n/4097). Prints both
-    // timings eagerly; `dir` unused
-    "q126_hh_1m" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val docs = s.range(1000000L).mapPartitions { it =>
-        val nV = 100000.0
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x9E3779B97L + 13L)
-          val text = Array.fill(40) {
-            val i = math.exp(rng.nextDouble() * math.log(nV + 1)).toLong
-            s"t$i"
-          }.mkString(" ")
-          (id, text)
-        }
-      }.toDF("doc_id", "text").localCheckpoint(true)
-      def timed[A](f: => A): (A, Double) = {
-        val t0 = System.nanoTime()
-        val a = f
-        (a, math.rint((System.nanoTime() - t0) / 1e7) / 100.0)
-      }
-      val (sketch, tSketch) = timed {
-        graft.operators.HeavyHitters.exactTopK(docs, "text", 20, 4096)
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      }
-      val (plain, tPlain) = timed {
-        docs.select(explode(split(col("text"), " ")).as("token"))
-          .filter(col("token") =!= "")
-          .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-          .orderBy(col("cnt").desc, col("token")).limit(20)
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      }
-      require(sketch == plain, "two-pass must equal plain exact top-20")
-      println(s"""{"probe":"q126_hh_1m","agree":true,""" +
-        s""""two_pass_sec":$tSketch,"plain_groupby_sec":$tPlain}""")
-      Seq((tSketch, tPlain)).toDF("two_pass_sec", "plain_groupby_sec")
-    }),
-    // Round-9 BPE at a PRODUCTION merge count: a real tokenizer is 8k-32k
-    // merges, round 8 only rehearsed 16. Trains 1024 merges on the 1M-doc
-    // Zipf corpus's word-TYPE table and reports per-merge wall time for
-    // the first and last 64 merges (the linearity check: each iteration
-    // is one explode+agg over the ~100k-row type table plus a 1-row
-    // argmax collect, so late merges must not cost more than early ones),
-    // then verifies applyMergesSegmented(segment=128) equals the trained
-    // dictionary syms on a 10k-word sample. `dir` unused
-    "bpe_1k_merges" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val docs = s.range(1000000L).mapPartitions { it =>
-        val nV = 100000.0
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x9E3779B97L + 13L)
-          val text = Array.fill(40) {
-            val i = math.exp(rng.nextDouble() * math.log(nV + 1)).toLong
-            s"t$i"
-          }.mkString(" ")
-          (id, text)
-        }
-      }.toDF("doc_id", "text")
-      val wt = graft.operators.Bpe.wordTypes(docs, "text").localCheckpoint(true)
-      def trainTimed(n: Int): (Seq[graft.operators.Bpe.Merge],
-          org.apache.spark.sql.DataFrame, Double) = {
-        val t0 = System.nanoTime()
-        val (m, d) = graft.operators.Bpe.train(wt, n)
-        (m, d, math.rint((System.nanoTime() - t0) / 1e7) / 100.0)
-      }
-      val (m64, _, t64) = trainTimed(64)
-      val (m1k, dict, t1k) = trainTimed(1024)
-      require(m1k.take(64) == m64, "training must be prefix-stable")
-      val perMergeHead = t64 / 64.0
-      val perMergeTail = (t1k - t64) / (1024.0 - 64.0) // amortized later merges
-      val sample = dict.select(col("word"), col("sym")).limit(10000)
-        .localCheckpoint(true)
-      val seg = graft.operators.Bpe.applyMergesSegmented(
-        sample, "word", "sym2", m1k, segment = 128)
-      val mismatch = seg.filter(col("sym") =!= col("sym2")).count()
-      require(mismatch == 0,
-        s"segmented encode diverged from training on $mismatch words")
-      println(s"""{"probe":"bpe_1k_merges","merges":${m1k.length},""" +
-        s""""train_64_sec":$t64,"train_1024_sec":$t1k,""" +
-        s""""per_merge_head_sec":${math.rint(perMergeHead * 1000) / 1000.0},""" +
-        s""""per_merge_tail_sec":${math.rint(perMergeTail * 1000) / 1000.0},""" +
-        s""""segmented_encode_mismatches":$mismatch}""")
-      Seq((t64, t1k)).toDF("train_64_sec", "train_1024_sec")
-    }),
-    // Round-9 applyMerges plan-depth cliff probe: a SINGLE expression
-    // chain is linear in merge count — this measures where it stops being
-    // viable (codegen 64KB method limit forces interpreted fallback;
-    // analyzer recursion eventually stack-overflows) using fabricated
-    // merges (depth cost is content-independent) over a 10k-word frame.
-    // Reports per-depth wall seconds, or "failed" at the cliff; the safe
-    // bound lands in Bpe.applyMerges' scaladoc. `dir` unused
-    "bpe_chain_depth" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val words = s.range(10000L)
-        .select(concat(lit("w"), col("id").cast("string")).as("word"))
-        .localCheckpoint(true)
-      val results = Seq(256, 512, 1024, 2048, 4096).map { depth =>
-        val merges = (0 until depth).map(i =>
-          graft.operators.Bpe.Merge(s"x$i", s"y$i", 1L))
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            words.select(length(
-              graft.operators.Bpe.applyMerges(col("word"), merges)).as("l"))
-              .agg(sum(col("l"))).head()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[bpe_chain_depth] depth=$depth failed: " +
-              e.getClass.getName)
-            false
-          }
-        val secs = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-        println(s"""{"probe":"bpe_chain_depth","depth":$depth,"ok":$ok,""" +
-          s""""sec":$secs}""")
-        (depth, ok, secs)
-      }
-      results.toDF("depth", "ok", "sec")
-    }),
-    // Round-9 budget-fill A/B: 20M rows across TWO sources — the shape
-    // where the naive per-source window prefix sum degenerates to two
-    // single-threaded 10M-row sort+scan tasks, and the banded two-phase
-    // form (BudgetSelect.fillScalable, 1024 bins) bounds every window
-    // partition at ~10k rows. Same kept count (equality required in-run).
-    "budget_fill_naive" -> ((s, _) => budgetFillArm(s, banded = false)),
-    "budget_fill_banded" -> ((s, _) => budgetFillArm(s, banded = true)),
-    // Round-9 k-center at scale: the declared q130 pins a 300-vector
-    // slice for the unrolled oracle; this runs the operator's real shape
-    // — k=64 greedy rounds over the full 400k x 64-dim embedding slice
-    // (64 corpus scans + 64 bounded argmax collects + checkpoints) —
-    // measuring the per-round cost the class doc claims is flat
-    "kcenter_400k" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val emb = graft.Tables.embeddings(s, dir)
-      val t0 = System.nanoTime()
-      val sel = graft.operators.KCenter.select(emb, "vec_id", "embedding", 64)
-        .localCheckpoint(true)
-      val secs = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      val n = sel.count()
-      println(s"""{"probe":"kcenter_400k","k":$n,"train_sec":$secs,""" +
-        s""""per_round_sec":${math.rint(secs / 64 * 1000) / 1000.0}}""")
-      sel
-    }),
-    // Round-10 k-center at PRODUCTION k: the round-9 rehearsal was k=64
-    // over 400k vectors; a realistic coreset/annotation budget is
-    // hundreds of centers over millions of points. 256 greedy rounds
-    // over an inline 1M x 64-dim planted-cluster corpus — with the
-    // batched-checkpoint update (CheckpointEvery=8), so the probe
-    // measures both the per-round flatness claim AND the checkpoint-churn
-    // fix (the eager-per-round form wrote the full ~270 MB state every
-    // round; this writes it every 8th). `dir` unused
-    "kcenter_1m_k256" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val emb = s.range(1000000L).mapPartitions { it =>
-        it.map { jid =>
-          val id: Long = jid
-          val cluster = (id % 64).toInt
-          val crng = new scala.util.Random(1000L + cluster)
-          val center = Array.fill(64)(crng.nextGaussian().toFloat)
-          val vrng = new scala.util.Random(id * 0x9E3779B97L + 7L)
-          (id, Array.tabulate(64)(i =>
-            center(i) + 0.08f * vrng.nextGaussian().toFloat))
-        }
-      }.toDF("vec_id", "embedding")
-      val t0 = System.nanoTime()
-      val sel = graft.operators.KCenter
-        .select(emb, "vec_id", "embedding", 256)
-        .localCheckpoint(true)
-      val secs = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      val n = sel.count()
-      println(s"""{"probe":"kcenter_1m_k256","k":$n,"train_sec":$secs,""" +
-        s""""per_round_sec":${math.rint(secs / 256 * 1000) / 1000.0},""" +
-        s""""checkpoint_every":${graft.operators.KCenter.CheckpointEvery}}""")
-      sel
-    }),
-    // Round-9 sparse-cosine head-term skew probe: a designed corpus where
-    // ONE term (df = 20k of 200k docs, under the AutoDf cap of ~28.6k)
-    // carries 4e8 of the ~5.6e8 candidate pairs — all on one join key.
-    // AQE's skew split can't see it (the hot key's INPUT is ~20k posting
-    // rows, far under the 256MB partition threshold; the df² blowup is in
-    // the join OUTPUT). Run both arms and compare max_task_sec: salted
-    // (default, S=ceil((df/4096)²)=24 sub-keys) vs unsalted
-    // (saltDfAbove=MaxValue). Both count the same pairs (composition is
-    // exact); the unsalted arm's max task carries the whole hot term.
-    "sparse_skew_salted" -> ((s, _) => sparseSkewArm(s, salted = true)),
-    "sparse_skew_unsalted" -> ((s, _) => sparseSkewArm(s, salted = false)),
-    // Round-9 k-means trainer at scale: k=64, 5 Lloyd rounds over the full
-    // 400k x 64-dim slice — 6 corpus scans (5 assign+recompute + 1 final
-    // assign), 4096-row mean collects per round. The slice PLANTS 64
-    // gaussian clusters (label = base % 64) and the 64 lowest-id seeds
-    // land one per planted cluster, so cluster RECOVERY is measurable at
-    // scale, not just wall time: purity = Σ_c max_label_count(c) / n.
-    "kmeans_400k" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val emb = graft.Tables.embeddings(s, dir)
-      val t0 = System.nanoTime()
-      val cents = graft.operators.KMeans.train(emb, "vec_id", "embedding",
-        k = 64, iters = 5)
-      val tTrain = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      val asg = graft.operators.KMeans
-        .assign(emb, "vec_id", "embedding", cents)
-        .join(emb.select(col("vec_id").as("id"), col("label")), "id")
-      val agg = asg.groupBy(col("cluster"), col("label"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("cluster"))
-        .agg(sum(col("n")).as("size"), max(col("n")).as("majority"))
-        .agg(count(lit(1)).as("clusters"), sum(col("size")).as("n"),
-          sum(col("majority")).as("pure"))
-        .localCheckpoint(true)
-      val r = agg.head()
-      val purity = math.rint(r.getLong(2).toDouble / r.getLong(1) * 1e4) / 1e4
-      println(s"""{"probe":"kmeans_400k","k":64,"iters":5,""" +
-        s""""train_sec":$tTrain,"clusters_nonempty":${r.getLong(0)},""" +
-        s""""n":${r.getLong(1)},"purity":$purity}""")
-      agg
-    }),
-    // Round-9 hard-negative mining at a production anchor batch: 256
-    // anchors x 400k corpus with label exclusion — the brute-force arm of
-    // q135's contract. ~100M scored candidate rows stream through the
-    // per-anchor top-5 window; metrics show whether the anchor-keyed
-    // exchange (scores only, no embeddings) stays proportionate.
-    "hardneg_400k" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      import graft.plans.GraftFunctions.vecDot
-      graft.plans.GraftFunctions.register(s)
-      val emb = graft.Tables.embeddings(s, dir)
-      def nm(c: org.apache.spark.sql.Column) = sqrt(vecDot(c, c))
-      val anchors = emb.filter(col("vec_id") < 256)
-        .select(col("vec_id").as("a_id"), col("label").as("a_label"),
-          col("embedding").as("a_emb"), nm(col("embedding")).as("a_nm"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("a_id")).orderBy(col("cos").desc, col("vec_id"))
-      emb.select(col("vec_id"), col("label"), col("embedding"),
-          nm(col("embedding")).as("nm"))
-        .join(broadcast(anchors), col("label") =!= col("a_label"))
-        .select(col("a_id"), col("vec_id"),
-          (vecDot(col("embedding"), col("a_emb"))
-            / (col("nm") * col("a_nm"))).as("cos"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-    }),
-    // Round-9 WordPiece trainer at 1M docs (the q122_bpe_1m corpus): the
-    // likelihood selection adds two unigram-count joins per merge on the
-    // ~100k-row type table — this pins that the added per-merge cost
-    // stays type-table-bounded (corpus-scale work is still ONE pass).
-    "wp_16_1m" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val docs = s.range(1000000L).mapPartitions { it =>
-        val nV = 100000.0
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x9E3779B97L + 13L)
-          val text = Array.fill(40) {
-            val i = math.exp(rng.nextDouble() * math.log(nV + 1)).toLong
-            s"t$i"
-          }.mkString(" ")
-          (id, text)
-        }
-      }.toDF("doc_id", "text")
-      val t0 = System.nanoTime()
-      val (merges, dict) = graft.operators.Bpe.trainWordPiece(
-        graft.operators.Bpe.wordTypes(docs, "text"), 16)
-      val agg = dict.agg(count(lit(1)).as("word_types"),
-        sum(col("freq") * size(split(trim(col("sym")), " ")))
-          .as("total_pieces")).localCheckpoint(true)
-      val r = agg.head()
-      val secs = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      println(s"""{"probe":"wp_16_1m","merges":${merges.length},""" +
-        s""""word_types":${r.getLong(0)},"total_pieces":${r.getLong(1)},""" +
-        s""""train_sec":$secs}""")
-      agg
-    }),
-    // Round-10 WordPiece at a PRODUCTION merge count (the bpe_1k_merges
-    // treatment): 1024 merges over the 1M-doc Zipf corpus's type table.
-    // WordPiece's likelihood argmax adds two unigram-count joins per
-    // merge — the claim under test is that those joins stay type-table-
-    // bounded so the per-merge cost is flat from merge 1 to merge 1024
-    // (head/tail timing), and the 128-segment chained apply reproduces
-    // the trained syms exactly (the segmented-apply cliff holds for the
-    // WordPiece merge sequence too). `dir` unused
-    "wp_1k_merges" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val docs = s.range(1000000L).mapPartitions { it =>
-        val nV = 100000.0
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x9E3779B97L + 13L)
-          val text = Array.fill(40) {
-            val i = math.exp(rng.nextDouble() * math.log(nV + 1)).toLong
-            s"t$i"
-          }.mkString(" ")
-          (id, text)
-        }
-      }.toDF("doc_id", "text")
-      val wt = graft.operators.Bpe.wordTypes(docs, "text").localCheckpoint(true)
-      def trainTimed(n: Int): (Seq[graft.operators.Bpe.Merge],
-          org.apache.spark.sql.DataFrame, Double) = {
-        val t0 = System.nanoTime()
-        val (m, d) = graft.operators.Bpe.trainWordPiece(wt, n)
-        (m, d, math.rint((System.nanoTime() - t0) / 1e7) / 100.0)
-      }
-      val (m64, _, t64) = trainTimed(64)
-      val (m1k, dict, t1k) = trainTimed(1024)
-      require(m1k.take(64) == m64, "training must be prefix-stable")
-      val perMergeHead = t64 / 64.0
-      val perMergeTail = (t1k - t64) / (1024.0 - 64.0)
-      val sample = dict.select(col("word"), col("sym")).limit(10000)
-        .localCheckpoint(true)
-      val seg = graft.operators.Bpe.applyMergesSegmented(
-        sample, "word", "sym2", m1k, segment = 128)
-      val mismatch = seg.filter(col("sym") =!= col("sym2")).count()
-      require(mismatch == 0,
-        s"segmented encode diverged from training on $mismatch words")
-      println(s"""{"probe":"wp_1k_merges","merges":${m1k.length},""" +
-        s""""train_64_sec":$t64,"train_1024_sec":$t1k,""" +
-        s""""per_merge_head_sec":${math.rint(perMergeHead * 1000) / 1000.0},""" +
-        s""""per_merge_tail_sec":${math.rint(perMergeTail * 1000) / 1000.0},""" +
-        s""""segmented_encode_mismatches":$mismatch}""")
-      Seq((t64, t1k)).toDF("train_64_sec", "train_1024_sec")
-    }),
-    // Round-11 unigram-LM at a PRODUCTION vocabulary (the verdict's
-    // Missing #3): 8192 pieces over the 1M-doc Zipf corpus's type table,
-    // maxPieceLen at the 8 cap. Claims under test: (a) each hard-EM round
-    // is one type-table scan + a ≤|V| collect whose cost is FLAT from
-    // round 1 to round 5 (the native UnigramSegF hash lookups — the old
-    // map-literal form was O(|V|) per DP candidate and would not finish);
-    // (b) the trajectory is prefix-stable across retrains; (c) encoding
-    // the full 1M-doc corpus under the trained model is one dictionary
-    // join. `dir` unused.
-    // Round-12 profile of the 93.5 s unigram 1M-doc encode: both round-11
-    // rehearsal runs logged a 3.7 GiB broadcast falling back to disk
-    // mid-encode — this probe re-runs ONLY the encode under a trained
-    // 8k-piece model, prints the final adaptive plan (the verify skill's
-    // AQE rule: collect the SAME Dataset first), and stage-times it, so
-    // the broadcast's owner and the time split (segment vs join vs agg)
-    // stop being guesses. `dir` unused.
-    "unigram_encode_profile" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val docs = s.range(1000000L).mapPartitions { it =>
-        val nV = 100000.0
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x9E3779B97L + 13L)
-          val text = Array.fill(40) {
-            val i = math.exp(rng.nextDouble() * math.log(nV + 1)).toLong
-            s"t$i"
-          }.mkString(" ")
-          (id, text)
-        }
-      }.toDF("doc_id", "text").localCheckpoint(true)
-      val wt = graft.operators.Bpe.wordTypes(docs, "text").localCheckpoint(true)
-      val (_, lp) = graft.operators.UnigramLm.train(
-        wt, maxPieceLen = 8, vocabSize = 8192, iters = 1, maxWordLen = 16)
-      val t0 = System.nanoTime()
-      val enc = graft.operators.UnigramLm.encodeCounts(
-        docs, lp, "doc_id", "text", maxPieceLen = 8, maxWordLen = 16)
-      // collect() executes THIS Dataset's QueryExecution, so the final
-      // adaptive plan (real join strategies) is readable afterwards
-      val rows = enc.collect()
-      val tEnc = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      val total = rows.iterator.map(_.getLong(1)).sum
-      println(s"== encode docs=${rows.length} total_pieces=$total in $tEnc s; final plan:")
-      println(enc.queryExecution.executedPlan.toString.take(8000))
-      Seq((tEnc, total)).toDF("encode_sec", "total_pieces")
-    }),
-    "unigram_8k_1m" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val docs = s.range(1000000L).mapPartitions { it =>
-        val nV = 100000.0
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x9E3779B97L + 13L)
-          val text = Array.fill(40) {
-            val i = math.exp(rng.nextDouble() * math.log(nV + 1)).toLong
-            s"t$i"
-          }.mkString(" ")
-          (id, text)
-        }
-      }.toDF("doc_id", "text")
-      val wt = graft.operators.Bpe.wordTypes(docs, "text").localCheckpoint(true)
-      val nTypes = wt.count()
-      def trainTimed(iters: Int): (org.apache.spark.sql.DataFrame,
-          Map[String, Double], Double) = {
-        val t0 = System.nanoTime()
-        val (traj, lp) = graft.operators.UnigramLm.train(
-          wt, maxPieceLen = 8, vocabSize = 8192, iters = iters, maxWordLen = 16)
-        val trajRows = traj.count() // force the trajectory
-        require(trajRows == (iters + 1).toLong * lp.size,
-          s"trajectory has $trajRows rows for ${lp.size} pieces x ${iters + 1} iters")
-        (traj, lp, math.rint((System.nanoTime() - t0) / 1e7) / 100.0)
-      }
-      val (traj1, lp1, t1) = trainTimed(1)
-      val (traj5, lp5, t5) = trainTimed(5)
-      // prefix stability: iters 0..1 of the 5-round run == the 1-round run
-      val diff = traj5.filter(col("iter") <= 1).withColumnRenamed("prob", "p5")
-        .join(traj1.withColumnRenamed("prob", "p1"), Seq("iter", "piece"), "full")
-        .filter(col("p5").isNull || col("p1").isNull || col("p5") =!= col("p1"))
-        .count()
-      require(diff == 0, s"trajectory not prefix-stable: $diff diverging rows")
-      val perRoundHead = t1 / 1.0
-      val perRoundTail = (t5 - t1) / 4.0
-      // materialize the synthetic corpus before timing the encode:
-      // encodeCounts scans its input twice (type build + doc join), and in
-      // production both scans hit parquet — re-running the RNG generator
-      // per scan would charge rehearsal scaffolding to the operator
-      val docsM = docs.localCheckpoint(true)
-      val tEnc0 = System.nanoTime()
-      val enc = graft.operators.UnigramLm.encodeCounts(
-        docsM, lp5, "doc_id", "text", maxPieceLen = 8, maxWordLen = 16)
-        .agg(count(lit(1)).as("docs"), sum(col("n_pieces")).as("total_pieces"))
-        .localCheckpoint(true)
-      val er = enc.head()
-      val tEnc = math.rint((System.nanoTime() - tEnc0) / 1e7) / 100.0
-      println(s"""{"probe":"unigram_8k_1m","vocab":${lp5.size},""" +
-        s""""word_types":$nTypes,"train_1_sec":$t1,"train_5_sec":$t5,""" +
-        s""""per_round_head_sec":${math.rint(perRoundHead * 100) / 100.0},""" +
-        s""""per_round_tail_sec":${math.rint(perRoundTail * 100) / 100.0},""" +
-        s""""encode_docs":${er.getLong(0)},""" +
-        s""""encode_total_pieces":${er.getLong(1)},"encode_sec":$tEnc}""")
-      Seq((t1, t5, tEnc)).toDF("train_1_sec", "train_5_sec", "encode_sec")
-    }),
-    // Round-9 trained mixture reweighting at 1M docs: the full q134
-    // composition (19-dim featurize + centroid train/score + per-source
-    // aggregate + 4 driver-side MW rounds) — the corpus pass dominates
-    // and the |S|-row iteration is free, which is the operator's claim.
-    "q134_1m" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val langs = Array("en", "en", "en", "en", "fr", "de", "zh", "es", "xx", "en")
-      val vb = Array("spark", "join", "stream", "batch", "table", "column",
-        "row", "scan", "filter", "group", "agg", "sort", "hash", "merge",
-        "window", "key", "value", "query", "part", "line", "order", "data",
-        "fast", "slow", "big", "small", "vector", "index", "cache", "shuffle")
-      val docs = s.range(1000000L).mapPartitions { it =>
-        it.map { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x6C8E9CF5L + 7L)
-          val nTok = 5 + rng.nextInt(95)
-          val pool = if (id % 7 == 0) 3 else vb.length
-          val text = Array.fill(nTok)(vb(rng.nextInt(pool))).mkString(" ")
-          (id, text, langs(rng.nextInt(langs.length)), text.length,
-            s"src${rng.nextInt(20)}")
-        }
-      }.toDF("doc_id", "text", "lang", "n_chars", "source")
-      val t0 = System.nanoTime()
-      val preds = graft.operators.QualityClassifier.centroidScores(
-        graft.operators.QualityClassifier.features(docs),
-        graft.operators.QualityClassifier.cascadeLabels(docs))
-        .select(col("doc_id"), col("pred"))
-      val per = docs
-        .select(col("doc_id"), col("source"),
-          size(split(col("text"), " ")).cast("long").as("n_tok"))
-        .join(preds, "doc_id")
-        .groupBy(col("source"))
-        .agg(sum(col("n_tok")).as("tokens"),
-          graft.queries.Parity.r6(avg(col("pred").cast("double"))).as("m"))
-        .localCheckpoint(true)
-      val tot = per.agg(sum(col("tokens")).as("ct"))
-      val base = per.crossJoin(broadcast(tot))
-        .select(col("source"),
-          graft.queries.Parity.r6(col("tokens") / col("ct")).as("w0"),
-          col("m"))
-      val traj = graft.operators.MixtureReweight.reweight(
-        base, "source", "w0", "m", iters = 4, eta = 0.5, cap = 0.06)
-        .localCheckpoint(true)
-      val secs = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      val nRows = traj.count()
-      println(s"""{"probe":"q134_1m","traj_rows":$nRows,"total_sec":$secs}""")
-      traj
-    }),
-    // Round-9 filtered-ANN A/B at the same 256-anchor batch: brute
-    // different-label top-5 (the hardneg_400k arm, ~100M scored pairs)
-    // vs Ann.ivfHardNegatives (cell-pruned candidates, label filter in
-    // the candidate stage). Prints both walls and the IVF arm's recall
-    // against the brute answer — the filtered-search over-fetch contract
-    // measured at scale. Runs both arms itself; `dir` is the slice.
-    "hardneg_ivf_ab" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      import graft.plans.GraftFunctions.vecDot
-      import s.implicits._
-      graft.plans.GraftFunctions.register(s)
-      val emb = graft.Tables.embeddings(s, dir)
-      def nm(c: org.apache.spark.sql.Column) = sqrt(vecDot(c, c))
-      def timed[A](f: => A): (A, Double) = {
-        val t0 = System.nanoTime()
-        val a = f
-        (a, math.rint((System.nanoTime() - t0) / 1e7) / 100.0)
-      }
-      val anchors = emb.filter(col("vec_id") < 256)
-        .select(col("vec_id").as("a_id"), col("label").as("a_label"),
-          col("embedding").as("a_emb"), nm(col("embedding")).as("a_nm"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("a_id")).orderBy(col("cos").desc, col("vec_id"))
-      val (brute, tBrute) = timed {
-        emb.select(col("vec_id"), col("label"), col("embedding"),
-            nm(col("embedding")).as("nmv"))
-          .join(broadcast(anchors), col("label") =!= col("a_label"))
-          .select(col("a_id"), col("vec_id"),
-            (vecDot(col("embedding"), col("a_emb"))
-              / (col("nmv") * col("a_nm"))).as("cos"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
-          .select("a_id", "vec_id").as[(Long, Long)].collect()
-          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      }
-      val corpus = emb.select(col("vec_id").as("id"), col("embedding"))
-        .as[graft.operators.Vec]
-      val labels = emb.select(col("vec_id").as("id"), col("label"))
-      val qIds = (0L until 256L).toSeq
-      val (approx, tIvf) = timed {
-        graft.operators.Ann.ivfHardNegatives(s, corpus, labels, qIds,
-            k = 5, nCells = 64, nprobe = 8)
-          .select(col("q_id"), col("id")).as[(Long, Long)].collect()
-          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      }
-      val recalls = qIds.map { q =>
-        val e = brute.getOrElse(q, Set.empty)
-        if (e.isEmpty) 1.0
-        else approx.getOrElse(q, Set.empty).intersect(e).size.toDouble / e.size
-      }
-      val mean = math.rint(recalls.sum / recalls.size * 1e4) / 1e4
-      println(s"""{"probe":"hardneg_ivf_ab","anchors":256,""" +
-        s""""brute_sec":$tBrute,"ivf_sec":$tIvf,"ivf_recall_at5":$mean,""" +
-        s""""ncells":64,"nprobe":8}""")
-      Seq((tBrute, tIvf, mean)).toDF("brute_sec", "ivf_sec", "recall")
-    }),
-    // Round-9 LPA at scale: 4 synchronous rounds on the same 1M-node
-    // power-law digraph as q118_graph (5M edges, undirected-mirrored to
-    // 10M) — per round one |E| join + one (node, label) aggregate + the
-    // rank-1 window (map-side-pruned by WindowGroupLimit). Prints the
-    // community count eagerly (the quality signal: hub structure should
-    // collapse the graph into far fewer communities than nodes).
-    "q140_graph" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val n = 1000000L
-      val edges = s.range(n).mapPartitions { it =>
-        it.flatMap { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x5851F42DL + 99L)
-          (0 until 5).map { _ =>
-            val u = rng.nextDouble()
-            (id, (n * u * u * u).toLong.min(n - 1))
-          }
-        }
-      }.toDF("src", "dst")
-      val lab = graft.operators.LabelPropagation
-        .runLong(edges, "src", "dst", iters = 4)
-      val agg = lab.agg(count(lit(1)).as("nodes"),
-        countDistinct(col("lbl")).as("communities")).localCheckpoint(true)
-      val r = agg.head()
-      println(s"""{"probe":"q140_graph","nodes":${r.getLong(0)},""" +
-        s""""communities":${r.getLong(1)}}""")
-      agg
-    }),
-    // q118's scale form: 1M-node power-law digraph, 5 out-edges per node
-    // (dst = floor(n*u^3) skews in-degree toward low ids — hub structure
-    // like a web graph), 5 PageRank iterations. Measures the per-iteration
-    // |E|-join + |V|-aggregate cost and the localCheckpoint overhead that
-    // bounds the iterative plan. `dir` unused, corpus generated in-plan
-    "q118_graph" -> ((s, _) => {
-      import s.implicits._
-      val n = 1000000L
-      val edges = s.range(n).mapPartitions { it =>
-        it.flatMap { jid =>
-          val id: Long = jid
-          val rng = new scala.util.Random(id * 0x5851F42DL + 99L)
-          (0 until 5).map { _ =>
-            val u = rng.nextDouble()
-            (id, (n * u * u * u).toLong.min(n - 1))
-          }
-        }
-      }.toDF("src", "dst")
-      graft.operators.PageRank.run(edges, "src", "dst", iters = 5)
-    }))
-
-  /** One arm of the budget-fill A/B (see budget_fill_*): deterministic
-    * 20M-row (doc_id, source, score, n_pieces) frame over two sources;
-    * budget = ~30% of total tokens per source. Emits the kept count (the
-    * two arms must agree; asserted by comparing against the closed-form
-    * expectation is impossible — scores are hashed — so the A/B runner
-    * compares the two printed counts). */
-  private def budgetFillArm(s: SparkSession,
-      banded: Boolean): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import s.implicits._
-    val n = 20000000L
-    val perDoc = s.range(n).select(
-        col("id").as("doc_id"),
-        concat(lit("src"), pmod(col("id"), lit(2L)).cast("string")).as("source"),
-        (pmod(xxhash64(col("id")), lit(100000L)) / 100000.0).as("score"),
-        (lit(1L) + pmod(col("id"), lit(37L))).as("n_pieces"))
-      .localCheckpoint(true)
-    val budgetVal = (n * 19L * 3L) / 20L // ~30% of E[sum n_pieces] per 2 sources
-    val budget = Seq(budgetVal).toDF("budget_tokens")
-    val kept =
-      if (banded)
-        graft.queries.BudgetSelect
-          .fillScalable(perDoc, budget, scoreLo = 0.0, scoreHi = 1.0, nBins = 1024)
-          .agg(count(lit(1)).as("n_kept"), sum(col("n_pieces")).as("tokens_kept"))
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("source")).orderBy(col("score").desc, col("doc_id"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        perDoc.crossJoin(broadcast(budget))
-          .withColumn("cum_before",
-            coalesce(sum(col("n_pieces")).over(w), lit(0L)))
-          .filter(col("cum_before") < col("budget_tokens"))
-          .agg(count(lit(1)).as("n_kept"), sum(col("n_pieces")).as("tokens_kept"))
-      }
-    val r = kept.localCheckpoint(true).head()
-    println(s"""{"probe":"budget_fill_${if (banded) "banded" else "naive"}",""" +
-      s""""n_kept":${r.getLong(0)},"tokens_kept":${r.getLong(1)}}""")
-    kept
-  }
-
-  /** The skew-probe corpus + one arm of the A/B (see sparse_skew_*): 200k
-    * docs; docs ≡ 0 (mod 10) contain hot term "hh" (df = 20000); every doc
-    * gets 20 terms drawn from a 100k-term uniform vocab (df ≈ 40 each). The
-    * aggregate count forces the full dot-product join. */
-  private def sparseSkewArm(s: SparkSession,
-      salted: Boolean): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import s.implicits._
-    val docs = s.range(200000L).mapPartitions { it =>
-      it.map { jid =>
-        val id: Long = jid
-        val rng = new scala.util.Random(id * 0x9E3779B97L + 21L)
-        val rare = Array.fill(20)(s"r${rng.nextInt(100000)}").mkString(" ")
-        val text = if (id % 10 == 0) s"hh $rare" else rare
-        (id, text)
-      }
-    }.toDF("id", "text").localCheckpoint(true)
-    val pairs = graft.operators.SparseCosineJoin.pairs(
-      docs, "id", "text", minCos = 0.5,
-      saltDfAbove = if (salted) 4096 else Int.MaxValue)
-    pairs.agg(count(lit(1)).as("n_pairs"))
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleRehearsal <dir> <query> [query...]")
-    val dir = args(0)
-    val names = args.drop(1).toSeq
-    val unknown = names
-      .filterNot(graft.SparkEntry.queries.contains)
-      .filterNot(extraQueries.contains)
-    require(unknown.isEmpty,
-      s"unknown queries: ${unknown.mkString(", ")} — declared names are in " +
-        s"SparkEntry.queries, rehearsal extras: ${extraQueries.keys.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // 256, not the bench contract's 32 (round 17): the excise probe's
-      // 20 GB gram exchange over 32 fixed reducers put 600+ MB in every
-      // sort task — 78 GB of spill and a 236 s straggler of plain VOLUME,
-      // not skew (the salt A/B split the keys checksum-identically and
-      // the straggler did not move). A real cluster sizes reducer count
-      // to data — the brief's own knob rule — and AQE coalesces the
-      // small stages back down (advisory 64 MB), so light probes pay ~0.
-      .config("spark.sql.shuffle.partitions", 8 * cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The sf2 slice is ~180 MB across 32 small part files; the default
-      // 128 MB maxPartitionBytes bin-packs them into TWO scan partitions,
-      // so any map-heavy first stage (per-doc gram explode + partial
-      // aggregation) runs on 2 of 32 cores — measured as a 125 s max-task
-      // straggler on q149's 140 s wall. 8 MB splits the slice across the
-      // box the way a real cluster's file count would; this is the
-      // knob-sizing the 100 TB brief calls out, applied to the REHEARSAL
-      // session (per-query shapes unchanged).
-      .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.installPlanRewrites(spark)
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
-    spark.range(10).write.format("noop").mode("overwrite").save()
-    def gb(x: Long): Double = math.rint(x / 1e7) / 100.0
-    for (name <- names) {
-      val fn = graft.SparkEntry.queries.getOrElse(name, extraQueries(name))
-      metrics.reset()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[rehearsal] $name failed: $e"); false
-        }
-      val secs = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-      // listener bus is async (private API) — give in-flight task-end
-      // events a beat before reading the counters
-      Thread.sleep(500)
-      println(s"""{"query":"$name","ok":$ok,"sec":$secs,""" +
-        s""""shuffle_write_gb":${gb(metrics.shuffleWrite)},""" +
-        s""""mem_spill_gb":${gb(metrics.memSpill)},""" +
-        s""""disk_spill_gb":${gb(metrics.diskSpill)},""" +
-        s""""peak_task_mem_gb":${gb(metrics.peakExecMem)},""" +
-        s""""max_task_sec":${metrics.maxTaskMs / 1000.0},""" +
-        s""""max_task_stage":"${metrics.maxTaskStage}",""" +
-        s""""top_stages":"${metrics.topStages()}"}""")
-    }
-    spark.stop()
+    val spark = graft.LocalSession("ScaleRehearsal")
+    // 8×cpus, not the bench contract's cpus (round 17): the excise probe's
+    // 20 GB gram exchange over 32 fixed reducers put 600+ MB in every
+    // sort task — 78 GB of spill and a 236 s straggler of plain VOLUME,
+    // not skew (the salt A/B split the keys checksum-identically and
+    // the straggler did not move). A real cluster sizes reducer count
+    // to data — the brief's own knob rule — and AQE coalesces the
+    // small stages back down (advisory 64 MB), so light probes pay ~0.
+    spark.conf.set("spark.sql.shuffle.partitions", (8 * graft.LocalSession.cpus).toString)
+    // The sf2 slice is ~180 MB across 32 small part files; the default
+    // 128 MB maxPartitionBytes bin-packs them into TWO scan partitions,
+    // so any map-heavy first stage (per-doc gram explode + partial
+    // aggregation) runs on 2 of 32 cores — measured as a 125 s max-task
+    // straggler on q149's 140 s wall. 8 MB splits the slice across the
+    // box the way a real cluster's file count would; this is the
+    // knob-sizing the 100 TB brief calls out, applied to the REHEARSAL
+    // session (per-query shapes unchanged).
+    spark.conf.set("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
+    try run(spark, args(0), args.drop(1).toSeq, println)
+    finally spark.stop()
   }
-}
 
-/** Streaming rehearsal for [[graft.streaming.ChatAssembly]]: run the
-  * stateful conversation assembler over a [[ScaleDataGen]] events slice
-  * as a REAL file-source stream (time-range-sorted part files, bounded
-  * files-per-trigger), and check it against the batch
-  * `sessionTurns → renderConversations` composition — count and an
-  * unordered content checksum over the conversations the final watermark
-  * closed. Prints one JSON line with wall time and PEAK STATE ROWS (the
-  * bounded-state claim, measured: state holds ~one open conversation per
-  * active user regardless of history length).
-  *
-  * Usage: `runMain graft.tools.StreamRehearsal /tmp/graft_scale_chat`
-  */
-object StreamRehearsal {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 1, "usage: StreamRehearsal <sliceDir> [filesPerTrigger]")
-    val dir = args(0)
-    val perTrigger = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
-    // same wiring as queries.SftPrep.turns: role map + content-store join
-    val store = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("doc_id") < 500)
-      .select(col("doc_id"), substring(col("text"), 1, 80).as("text"))
-    val ev = spark.read.parquet(s"$dir/events.parquet")
-      .select(col("event_id"), col("user_id"), col("ts"),
-        graft.operators.ChatSft.roleOf(col("event_type")).as("role"),
-        pmod(col("event_id"), lit(500)).as("doc_id"))
-      .join(broadcast(store), "doc_id")
-      .select(col("event_id"), col("user_id"), col("ts"), col("role"), col("text"))
-    // time-range-sorted part files: the file source processes parts in
-    // path order, so event time is monotone ACROSS triggers and nothing
-    // is ever late — lateness semantics are unit-tested; this rehearsal
-    // measures throughput and state size at volume
-    val inDir = s"$dir/stream_turns"
-    ev.repartitionByRange(64, col("ts")).sortWithinPartitions(col("ts"))
-      .write.mode("overwrite").parquet(inDir)
-    // the file source orders by (modification time, path); parallel part
-    // writes finish in arbitrary order, which would process time ranges
-    // out of order and drop whole ranges as late — stamp mtimes in path
-    // (= ts-range) order
-    locally {
-      val parts = new java.io.File(inDir).listFiles()
-        .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        // a silent stamp failure reintroduces the out-of-order late-drop
-        // trap this block exists to prevent — fail loudly instead
-        require(f.setLastModified(1700000000000L + i * 1000L),
-          s"could not stamp mtime on ${f.getPath}")
+  /** Writes each named query over the slice at `dir` through the noop sink
+    * and passes one JSON line per query to `emit`: `ok`, wall seconds and
+    * the [[StageMetrics]] counters. Every name must be a declared query
+    * (`SparkEntry.queries`); an unknown one fails before anything runs.
+    * A failing query is reported with `"ok":false` and the sweep goes on.
+    */
+  def run(spark: SparkSession, dir: String, names: Seq[String],
+      emit: String => Unit): Unit = {
+    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
+    require(unknown.isEmpty,
+      s"unknown queries: ${unknown.mkString(", ")}; declared names are in SparkEntry.queries")
+    val sc = spark.sparkContext
+    val metrics = new StageMetrics
+    sc.addSparkListener(metrics)
+    try {
+      spark.range(10).write.format("noop").mode("overwrite").save()
+      def gb(x: Long): Double = math.rint(x / 1e7) / 100.0
+      for (name <- names) {
+        val fn = graft.SparkEntry.queries(name)
+        Bridge.drainListenerBus(sc) // earlier jobs' events land before the reset
+        metrics.reset()
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[rehearsal] $name failed: $e"); false
+          }
+        val secs = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
+        Bridge.drainListenerBus(sc) // every task-end event reaches the counters
+        emit(s"""{"query":"$name","ok":$ok,"sec":$secs,""" +
+          s""""shuffle_write_gb":${gb(metrics.shuffleWrite)},""" +
+          s""""mem_spill_gb":${gb(metrics.memSpill)},""" +
+          s""""disk_spill_gb":${gb(metrics.diskSpill)},""" +
+          s""""peak_task_mem_gb":${gb(metrics.peakExecMem)},""" +
+          s""""max_task_sec":${metrics.maxTaskMs / 1000.0},""" +
+          s""""max_task_stage":"${metrics.maxTaskStage}",""" +
+          s""""top_stages":"${metrics.topStages()}"}""")
       }
-    }
-    val schema = spark.read.parquet(inDir).schema
-    val nEvents = spark.read.parquet(inDir).count()
-    var nClosed = 0L
-    var checksum = 0L
-    // peak state via a listener, NOT q.recentProgress — that is a ring
-    // buffer (default 100 updates) and a long run would silently evict
-    // early-trigger peaks from the headline bounded-state measurement
-    var peakState = 0L
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress.stateOperators.map(_.numRowsTotal).foldLeft(0L)(math.max)
-        StreamRehearsal.synchronized { peakState = math.max(peakState, p) }
-      }
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    // the engine-side late-drop guard: if the mtime stamping above ever
-    // regresses, the run fails loudly instead of silently losing ranges
-    val dropGuard = graft.streaming.WatermarkDropGuard.install(spark)
-    val t0 = System.nanoTime()
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", perTrigger).parquet(inDir)
-      .as[graft.streaming.TurnEvent]
-    val q = graft.streaming.ChatAssembly.assemble(stream, "30 minutes", "10 minutes")
-      .writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[graft.streaming.ClosedConv], _: Long) =>
-        val r = df.agg(count(lit(1)),
-          sum(pmod(xxhash64(col("user_id"), col("rendered")), lit(1L << 40)))).collect()(0)
-        StreamRehearsal.synchronized {
-          nClosed += r.getLong(0)
-          checksum += (if (r.isNullAt(1)) 0L else r.getLong(1))
-        }
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    // the listener bus is async — drain it before reading the peak
-    Thread.sleep(500)
-    q.stop()
-    dropGuard.assertClean() // zero tolerance: a drop here means lost ranges
-    dropGuard.uninstall(spark)
-    spark.streams.removeListener(listener)
-    val secs = math.rint((System.nanoTime() - t0) / 1e7) / 100.0
-    // batch composition: the conversations the final watermark closed
-    val gapUs = 1800000000L
-    val turns = graft.operators.ChatSft.sessionTurns(
-      ev.withColumn("ts_us", unix_micros(col("ts"))),
-      "user_id", "ts_us", "event_id", gapUs)
-    val wmUs = (ev.agg(max(unix_micros(col("ts")))).as[Long].head()
-      / 1000L - 600000L) * 1000L // engine watermark: max event ms - 10 min
-    val rendered = graft.operators.ChatSft
-      .renderConversations(turns, "user_id", "role", "text")
-    val lastTs = turns.groupBy(col("user_id"), col("session_id"))
-      .agg(max(col("ts_us")).as("last_us"))
-    val closedBatch = rendered.join(lastTs, Seq("user_id", "session_id"))
-      .filter(col("last_us") + gapUs < wmUs)
-    val b = closedBatch.agg(count(lit(1)),
-      sum(pmod(xxhash64(col("user_id"), col("rendered")), lit(1L << 40)))).collect()(0)
-    val (bn, bchk) = (b.getLong(0), if (b.isNullAt(1)) 0L else b.getLong(1))
-    println(s"""{"rehearsal":"chat_stream","events":$nEvents,""" +
-      s""""closed_stream":$nClosed,"closed_batch":$bn,""" +
-      s""""checksum_match":${checksum == bchk},""" +
-      s""""peak_state_rows":$peakState,"sec":$secs}""")
-    spark.stop()
+    } finally sc.removeSparkListener(metrics)
   }
 }

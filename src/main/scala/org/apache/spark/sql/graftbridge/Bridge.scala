@@ -4,12 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 
-/** The one `private[sql]` hop graft needs: wrap a custom LogicalPlan
-  * ([[graft.plans.AsOfJoinPlan]]) back into a public DataFrame. Spark
-  * offers no public constructor for this — every library that injects
+/** The package-private Spark hops graft needs, in one place: wrap a
+  * custom LogicalPlan ([[graft.plans.AsOfJoinPlan]]) back into a public
+  * DataFrame, convert Column ⇄ Expression, and drain the listener bus.
+  * Spark offers no public API for these — every library that injects
   * custom logical operators (rather than just expressions) ships exactly
-  * this shim in an `org.apache.spark.sql` subpackage. Nothing else may go
-  * through here; all other graft/Spark interop uses public APIs.
+  * this kind of shim in an `org.apache.spark.sql` subpackage. Nothing
+  * else may go through here; all other graft/Spark interop uses public
+  * APIs.
   */
 object Bridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
@@ -25,4 +27,10 @@ object Bridge {
 
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** Blocks until every listener event posted so far has been delivered
+    * (streaming query progress included), so counters a listener keeps
+    * are complete to read. Spark keeps the bus package-private. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

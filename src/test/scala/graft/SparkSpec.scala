@@ -1,9 +1,9 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.graftbridge.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +19,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * counted, and before it comes off, so none of `f`'s are missed. */
   def jobsDuring[T](f: => T): (T, Int) = {
     val sc = spark.sparkContext
-    Bus.drain(sc)
+    Bridge.drainListenerBus(sc)
     val jobs = new AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -27,7 +27,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     sc.addSparkListener(listener)
     try {
       val r = f
-      Bus.drain(sc)
+      Bridge.drainListenerBus(sc)
       (r, jobs.get)
     } finally sc.removeSparkListener(listener)
   }

@@ -62,7 +62,7 @@ class WatermarkDropGuardSpec extends SparkSpec {
         .writeStream.format("memory").queryName(qname)
         .outputMode(OutputMode.Append).start()
       try q.processAllAvailable() finally q.stop()
-      WatermarkDropGuard.awaitQuiescence()
+      WatermarkDropGuard.awaitQuiescence(spark)
       val got = spark.table(qname).as[ClosedConv].collect()
         .map(c => (c.user_id, c.n_turns)).toSet
       (got, guard, drops.synchronized(drops.toSeq))
@@ -132,7 +132,7 @@ class WatermarkDropGuardSpec extends SparkSpec {
         .writeStream.format("memory").queryName("t_wmg_auto")
         .outputMode(OutputMode.Append).start()
       try q.processAllAvailable() finally q.stop()
-      WatermarkDropGuard.awaitQuiescence()
+      WatermarkDropGuard.awaitQuiescence(s2)
       val g = WatermarkDropGuard.autoGuard(s2)
         .getOrElse(fail("watermark declaration did not auto-install the guard"))
       assert(g.totalDropped == convA.size.toLong,
