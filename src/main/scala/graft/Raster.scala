@@ -61,9 +61,18 @@ object Raster {
     reader.load()
   }
 
-  /** Write the point table as CSV. `separator` accepts "," ";" or "t" (tab),
-    * matching the reference CLI. `singleFile=true` mirrors the reference's
-    * one-output-file behavior (driver-side merge; avoid at scale).
+  /** Write the point table as CSV: a header line, then one line per point,
+    * through the point-table writer [[graft.sources.PointCsv]], which
+    * formats each value as Spark's CSV writer does and each distinct value
+    * once per column. `separator` is "," ";" or "t" (tab), matching the
+    * reference CLI. `singleFile=true` mirrors the reference's one output
+    * file: the frame is coalesced to one partition, so one task scans and
+    * writes every point (avoid at scale).
+    *
+    * Nothing is quoted, so a column name must not contain the separator,
+    * '"', CR or LF, must not be empty, start with '#' (Spark's writer would
+    * quote those) or start or end with a blank or control character (Spark's
+    * writer would trim it); such names are rejected here.
     */
   def raster2csv(
       spark: SparkSession,
@@ -77,11 +86,22 @@ object Raster {
       bands: Seq[Int] = Nil,
       resample: String = "",
       datumBridge: String = ""): Unit = {
-    val sep = if (separator == "t") "\t" else separator
+    val sep = separator match {
+      case "," | ";" => separator
+      case "t" => "\t"
+      case _ => throw new IllegalArgumentException(
+        s"separator must be ',', ';' or 't' (tab), got '$separator'")
+    }
+    val badNames = colNames.filter(n => n.isEmpty || n.head <= ' ' || n.last <= ' ' ||
+      n.head == '#' || n.exists(c => c == sep.head || c == '"' || c == '\r' || c == '\n'))
+    require(badNames.isEmpty,
+      s"column names must be non-empty, hold no separator, '\"', CR or LF, and neither " +
+        s"start with '#' nor start or end with a blank: ${badNames.mkString("[", "], [", "]")}")
     val df = raster2df(spark, rasters, colNames, maxBlockSize, calcArea, bands,
       resample = resample, datumBridge = datumBridge)
     val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite").option("sep", sep).option("header", true).csv(output)
+    out.write.mode("overwrite").option("sep", sep)
+      .format(classOf[graft.sources.PointCsv].getName).save(output)
   }
 
   /** Zonal statistics over a raster point table: grid cells of

@@ -1800,6 +1800,7 @@ class GeoTiffSourceSpec extends SparkSpec {
       case TiffFixtures.S16 => if ((c + r) % 7 == 0) -9999 else c * 331 - r * 97 - 5000
       case TiffFixtures.F32 =>
         if ((c + r) % 7 == 0) -9999.0 else math.sin(c * 0.37) * 1000.0 + r * 2.25
+      case d => throw new IllegalArgumentException(s"no ImageIO oracle for $d")
     }
     // JDK writer compression type name (null = none) -> its tag value
     val codecs = Seq[(String, Int)]((null, 1), ("LZW", 5), ("Deflate", 32946),

@@ -14,10 +14,28 @@ import javax.imageio.plugins.tiff.{TIFFDirectory, TIFFField, TIFFTag, TIFFTagSet
   * TIFFTagSet or the writer silently drops them.
   */
 object TiffFixtures {
-  sealed trait Dtype
-  case object F32 extends Dtype
-  case object U8 extends Dtype
-  case object S16 extends Dtype
+  /** A sample type by its TIFF BitsPerSample and SampleFormat (1 unsigned,
+    * 2 signed, 3 float). The ImageIO writer takes F32, U8 and S16; the
+    * hand-assembled TIFF writers take all of them.
+    */
+  sealed abstract class Dtype(val bps: Int, val sampleFormat: Int) {
+    /** Appends `v` as one sample; integer types keep its low `bps` bits. */
+    def put(b: java.nio.ByteBuffer, v: Double): Unit =
+      if (sampleFormat == 3) { if (bps == 32) b.putFloat(v.toFloat) else b.putDouble(v) }
+      else bps match {
+        case 8 => b.put(v.toLong.toByte)
+        case 16 => b.putShort(v.toLong.toShort)
+        case _ => b.putInt(v.toLong.toInt)
+      }
+  }
+  case object F32 extends Dtype(32, 3)
+  case object U8 extends Dtype(8, 1)
+  case object S16 extends Dtype(16, 2)
+  case object I8 extends Dtype(8, 2)
+  case object U16 extends Dtype(16, 1)
+  case object I32 extends Dtype(32, 2)
+  case object U32 extends Dtype(32, 1)
+  case object F64 extends Dtype(64, 3)
 
   /** GeoKeyDirectory (34735) payload from inline SHORT keys: the 4-short
     * header (version 1, revision 1.0, nKeys) followed by one
@@ -145,6 +163,7 @@ object TiffFixtures {
         val cs = ColorSpace.getInstance(ColorSpace.CS_GRAY)
         val cm = new ComponentColorModel(cs, false, false, Transparency.OPAQUE, DataBuffer.TYPE_SHORT)
         (DataBuffer.TYPE_SHORT, new BufferedImage(cm, raster, false, null))
+      case d => throw new IllegalArgumentException(s"the ImageIO fixture writes f32, u8 or s16, not $d")
     }
     val wr = img.getRaster
     for (r <- 0 until height; c <- 0 until width) {
@@ -369,12 +388,8 @@ object TiffFixtures {
       classic: Boolean = false): String = {
     import java.nio.{ByteBuffer, ByteOrder}
     val order = if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
-    val (bps, sampleFormat) = dtype match {
-      case F32 => (32, 3)
-      case U8 => (8, 1)
-      case S16 => (16, 2)
-    }
-    require(predictor != 2 || dtype != F32, "predictor 2 requires integer samples")
+    val (bps, sampleFormat) = (dtype.bps, dtype.sampleFormat)
+    require(predictor != 2 || dtype.sampleFormat != 3, "predictor 2 requires integer samples")
     require(predictor != 3 || dtype == F32, "predictor 3 requires float samples")
     require(Set(1, 5, 8, 32773, 34925, 50000).contains(compression),
       s"fixture compression $compression unsupported")
@@ -400,11 +415,7 @@ object TiffFixtures {
       val raw = ByteBuffer.allocate(rows * width * bytesPer * chunkSpp).order(order)
       for (r <- s * rps until s * rps + rows; c <- 0 until width;
            b <- (if (planar) bandSel until bandSel + 1 else 0 until spp))
-        dtype match {
-          case F32 => raw.putFloat(sampleAt(b, c, r).toFloat)
-          case U8 => raw.put((sampleAt(b, c, r).toInt & 0xff).toByte)
-          case S16 => raw.putShort(sampleAt(b, c, r).toInt.toShort)
-        }
+        dtype.put(raw, sampleAt(b, c, r))
       val arr = raw.array()
       if (predictor == 2) {
         val bb = ByteBuffer.wrap(arr).order(order)
@@ -610,11 +621,7 @@ object TiffFixtures {
     require(levels >= 1, "need at least one overview level")
     require(Set(1, 8).contains(compression), "overview fixture supports none/DEFLATE")
     val order = ByteOrder.LITTLE_ENDIAN
-    val (bps, sampleFormat) = dtype match {
-      case F32 => (32, 3)
-      case U8 => (8, 1)
-      case S16 => (16, 2)
-    }
+    val (bps, sampleFormat) = (dtype.bps, dtype.sampleFormat)
     val bytesPer = bps / 8
     val ndBytes = noData.map(s => s.getBytes("US-ASCII") :+ 0.toByte)
     def deflate(arr: Array[Byte]): Array[Byte] = {
@@ -637,11 +644,7 @@ object TiffFixtures {
       val strips = Array.tabulate(nStrips) { s =>
         val rows = math.min(rps, h - s * rps)
         val raw = ByteBuffer.allocate(rows * w * bytesPer).order(order)
-        for (r <- s * rps until s * rps + rows; c <- 0 until w) dtype match {
-          case F32 => raw.putFloat(valueAt(k, c, r).toFloat)
-          case U8 => raw.put((valueAt(k, c, r).toInt & 0xff).toByte)
-          case S16 => raw.putShort(valueAt(k, c, r).toInt.toShort)
-        }
+        for (r <- s * rps until s * rps + rows; c <- 0 until w) dtype.put(raw, valueAt(k, c, r))
         if (compression == 8) deflate(raw.array()) else raw.array()
       }
       Lvl(w, h, rps, strips)
@@ -758,12 +761,8 @@ object TiffFixtures {
       jpegTablesShared: Boolean = false): String = {
     import java.nio.{ByteBuffer, ByteOrder}
     val order = if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
-    val (bps, sampleFormat) = dtype match {
-      case F32 => (32, 3)
-      case U8 => (8, 1)
-      case S16 => (16, 2)
-    }
-    require(predictor != 2 || dtype != F32, "predictor 2 requires integer samples")
+    val (bps, sampleFormat) = (dtype.bps, dtype.sampleFormat)
+    require(predictor != 2 || dtype.sampleFormat != 3, "predictor 2 requires integer samples")
     require(predictor != 3 || dtype == F32, "predictor 3 requires float samples")
     require(Set(1, 5, 7, 8, 32773, 34925, 50000).contains(compression),
       s"fixture compression $compression unsupported")
@@ -792,11 +791,7 @@ object TiffFixtures {
           if (r >= height || c >= width) 0.0
           else if (spp == 1) value(c, r)
           else bandValue(b, c, r)
-        dtype match {
-          case F32 => raw.putFloat(v.toFloat)
-          case U8 => raw.put((v.toInt & 0xff).toByte)
-          case S16 => raw.putShort(v.toInt.toShort)
-        }
+        dtype.put(raw, v)
       }
       val arr = raw.array()
       if (predictor == 2) {
