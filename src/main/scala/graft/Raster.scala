@@ -112,6 +112,13 @@ object Raster {
     * continent-scale raster shuffle only (zones × columns) rows. Composes
     * with the source's lon/lat window pruning: filter the frame first and
     * only intersecting raster windows are ever decoded.
+    *
+    * Rows come back ordered by (cell x, cell y). The final merge of the
+    * partials and that ordering run in ONE task (`coalesce(1)` then a
+    * local sort), so the plan has a single shuffle and no range
+    * partitioning: no sampling job, no second map stage. The limit is a
+    * zone table too large for one task to merge and sort; such a table
+    * wants its own `groupBy` with a distributed `orderBy`.
     */
   def zonalStats(points: DataFrame, cellDeg: Double): DataFrame = {
     // projected frames carry x/y instead of lon/lat (CRS-gated naming in
@@ -139,7 +146,7 @@ object Raster {
     */
   def zonalStats(points: DataFrame, cellDeg: Double, xc: String, yc: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    require(cellDeg > 0, s"cellDeg must be positive, got $cellDeg")
+    require(cellDeg > 0 && cellDeg.isFinite, s"cellDeg must be positive and finite, got $cellDeg")
     require(points.columns.contains(xc) && points.columns.contains(yc),
       s"zonalStats: coordinate columns $xc/$yc not in ${points.columns.mkString(", ")}")
     val valueCols = points.columns.filterNot(Seq(xc, yc, "area").contains)
@@ -155,7 +162,8 @@ object Raster {
         (floor(col(xc) / cellDeg) * cellDeg).as(s"cell_$xc"),
         (floor(col(yc) / cellDeg) * cellDeg).as(s"cell_$yc"))
       .agg(aggs.head, aggs.tail: _*)
-      .orderBy(col(s"cell_$xc"), col(s"cell_$yc"))
+      .coalesce(1)
+      .sortWithinPartitions(col(s"cell_$xc"), col(s"cell_$yc"))
   }
 
   /** Parsed CLI arguments (extracted from main so the flag grammar is

@@ -6,7 +6,8 @@ package graft.sources.tiff
   *   - Geographic ↔ Transverse Mercator (UTM zones): the Krüger n-series as
   *     presented in Karney 2011 ("Transverse Mercator with an accuracy of a
   *     few nanometers", J. Geodesy 85(8)) — the same series EPSG Guidance
-  *     Note 7 part 2 tabulates for method 9807. Truncated at n⁴: within a
+  *     Note 7 part 2 tabulates for method 9807, summed by Clenshaw's
+  *     recurrence on the complex ζ = ξ + iη. Truncated at n⁴: within a
   *     UTM zone's ±3° of central meridian the truncation error is
   *     sub-millimeter. Beyond ~10° of the central meridian the truncation
   *     grows fast and the map eventually stops being a diffeomorphism, so
@@ -594,21 +595,14 @@ object CrsTransform {
     val phi = math.toRadians(latDeg)
     val dl = math.toRadians(lonDeg - p.cmDeg)
     val s = math.sin(phi)
-    // conformal-latitude tangent via Gudermannian composition (Karney eq. 7–9)
-    val t = math.sinh(atanh(s) - el.e * atanh(el.e * s))
+    // conformal-latitude tangent via Gudermannian composition (Karney eq.
+    // 7–9): t = sinh(q), with the sinh taken from one exp
+    val eq = math.exp(atanh(s) - el.e * atanh(el.e * s))
+    val t = (eq - 1.0 / eq) / 2.0
     val cosD = math.cos(dl)
     val xiP = math.atan2(t, cosD)
     val etaP = asinh(math.sin(dl) / math.sqrt(t * t + cosD * cosD))
-    val xi = xiP +
-      el.a1 * math.sin(2 * xiP) * math.cosh(2 * etaP) +
-      el.a2 * math.sin(4 * xiP) * math.cosh(4 * etaP) +
-      el.a3 * math.sin(6 * xiP) * math.cosh(6 * etaP) +
-      el.a4 * math.sin(8 * xiP) * math.cosh(8 * etaP)
-    val eta = etaP +
-      el.a1 * math.cos(2 * xiP) * math.sinh(2 * etaP) +
-      el.a2 * math.cos(4 * xiP) * math.sinh(4 * etaP) +
-      el.a3 * math.cos(6 * xiP) * math.sinh(6 * etaP) +
-      el.a4 * math.cos(8 * xiP) * math.sinh(8 * etaP)
+    val (xi, eta) = kruger(el.a1, el.a2, el.a3, el.a4, 1.0, xiP, etaP)
     (p.falseEasting + p.scale * el.rectA * eta,
       p.falseNorthing + p.scale * el.rectA * xi)
   }
@@ -622,16 +616,7 @@ object CrsTransform {
     val el = p.ell
     val xi = (northing - p.falseNorthing) / (p.scale * el.rectA)
     val eta = (easting - p.falseEasting) / (p.scale * el.rectA)
-    val xiP = xi -
-      (el.b1 * math.sin(2 * xi) * math.cosh(2 * eta) +
-        el.b2 * math.sin(4 * xi) * math.cosh(4 * eta) +
-        el.b3 * math.sin(6 * xi) * math.cosh(6 * eta) +
-        el.b4 * math.sin(8 * xi) * math.cosh(8 * eta))
-    val etaP = eta -
-      (el.b1 * math.cos(2 * xi) * math.sinh(2 * eta) +
-        el.b2 * math.cos(4 * xi) * math.sinh(4 * eta) +
-        el.b3 * math.cos(6 * xi) * math.sinh(6 * eta) +
-        el.b4 * math.cos(8 * xi) * math.sinh(8 * eta))
+    val (xiP, etaP) = kruger(el.b1, el.b2, el.b3, el.b4, -1.0, xi, eta)
     val sinhE = math.sinh(etaP)
     val cosX = math.cos(xiP)
     val tauP = math.sin(xiP) / math.sqrt(sinhE * sinhE + cosX * cosX)
@@ -649,6 +634,37 @@ object CrsTransform {
       i += 1
     }
     (p.cmDeg + math.toDegrees(dl), math.toDegrees(math.atan(tau)))
+  }
+
+  /** The Krüger series ζ + sign·Σⱼ cⱼ·sin(2jζ), j = 1..4, on the complex
+    * ζ = ξ + iη: the forward map takes the α coefficients and sign +1, the
+    * inverse the β coefficients and sign −1. Summed by Clenshaw's recurrence
+    * yⱼ = 2cos(2ζ)·yⱼ₊₁ − yⱼ₊₂ + cⱼ, whose sum is sin(2ζ)·y₁ (Karney 2011
+    * §4, GeographicLib's form), so the whole series costs one sin/cos pair
+    * of 2ξ and one exp of 2η (for cosh and sinh) instead of a
+    * sin·cosh and cos·sinh per term.
+    */
+  @inline private def kruger(c1: Double, c2: Double, c3: Double, c4: Double,
+      sign: Double, xi: Double, eta: Double): (Double, Double) = {
+    val s2 = math.sin(2.0 * xi)
+    val c2x = math.cos(2.0 * xi)
+    val e2 = math.exp(2.0 * eta)
+    val ch2 = (e2 + 1.0 / e2) / 2.0
+    val sh2 = (e2 - 1.0 / e2) / 2.0
+    // a = 2cos(2ζ) = 2(cos2ξ·cosh2η − i·sin2ξ·sinh2η)
+    val ar = 2.0 * c2x * ch2
+    val ai = -2.0 * s2 * sh2
+    // y₄ = c₄; y₃ = a·y₄ + c₃; y₂ = a·y₃ − y₄ + c₂; y₁ = a·y₂ − y₃ + c₁
+    val y3r = ar * c4 + c3
+    val y3i = ai * c4
+    val y2r = ar * y3r - ai * y3i - c4 + c2
+    val y2i = ar * y3i + ai * y3r
+    val y1r = ar * y2r - ai * y2i - y3r + c1
+    val y1i = ar * y2i + ai * y2r - y3i
+    // sin(2ζ) = sin2ξ·cosh2η + i·cos2ξ·sinh2η
+    val zr = s2 * ch2
+    val zi = c2x * sh2
+    (xi + sign * (zr * y1r - zi * y1i), eta + sign * (zr * y1i + zi * y1r))
   }
 
   private def atanh(x: Double): Double = 0.5 * math.log((1.0 + x) / (1.0 - x))

@@ -191,6 +191,113 @@ class CrsTransformSpec extends AnyFunSuite {
     assert(nW != nN && math.abs(nW - nN) < 0.01, s"dN=${nW - nN}")
   }
 
+  // ---- the Krüger series: Clenshaw sum against the direct sum -------------
+  //
+  // forward/inverse sum the n⁴ series by Clenshaw's recurrence on the
+  // complex ζ. The reference below sums the same coefficients term by term
+  // (sin·cosh and cos·sinh per order, StrictMath sinh for the conformal
+  // latitude), so the two share only the coefficients.
+
+  private def atanhRef(x: Double): Double = 0.5 * math.log((1.0 + x) / (1.0 - x))
+  private def asinhRef(x: Double): Double = math.log(x + math.sqrt(x * x + 1.0))
+
+  private def directForward(p: CrsTransform.TmParams, lonDeg: Double, latDeg: Double)
+      : (Double, Double) = {
+    val el = p.ell
+    val phi = math.toRadians(latDeg)
+    val dl = math.toRadians(lonDeg - p.cmDeg)
+    val s = math.sin(phi)
+    val t = math.sinh(atanhRef(s) - el.e * atanhRef(el.e * s))
+    val cosD = math.cos(dl)
+    val xiP = math.atan2(t, cosD)
+    val etaP = asinhRef(math.sin(dl) / math.sqrt(t * t + cosD * cosD))
+    val xi = xiP +
+      el.a1 * math.sin(2 * xiP) * math.cosh(2 * etaP) +
+      el.a2 * math.sin(4 * xiP) * math.cosh(4 * etaP) +
+      el.a3 * math.sin(6 * xiP) * math.cosh(6 * etaP) +
+      el.a4 * math.sin(8 * xiP) * math.cosh(8 * etaP)
+    val eta = etaP +
+      el.a1 * math.cos(2 * xiP) * math.sinh(2 * etaP) +
+      el.a2 * math.cos(4 * xiP) * math.sinh(4 * etaP) +
+      el.a3 * math.cos(6 * xiP) * math.sinh(6 * etaP) +
+      el.a4 * math.cos(8 * xiP) * math.sinh(8 * etaP)
+    (p.falseEasting + p.scale * el.rectA * eta, p.falseNorthing + p.scale * el.rectA * xi)
+  }
+
+  private def directInverse(p: CrsTransform.TmParams, easting: Double, northing: Double)
+      : (Double, Double) = {
+    val el = p.ell
+    val xi = (northing - p.falseNorthing) / (p.scale * el.rectA)
+    val eta = (easting - p.falseEasting) / (p.scale * el.rectA)
+    val xiP = xi -
+      (el.b1 * math.sin(2 * xi) * math.cosh(2 * eta) +
+        el.b2 * math.sin(4 * xi) * math.cosh(4 * eta) +
+        el.b3 * math.sin(6 * xi) * math.cosh(6 * eta) +
+        el.b4 * math.sin(8 * xi) * math.cosh(8 * eta))
+    val etaP = eta -
+      (el.b1 * math.cos(2 * xi) * math.sinh(2 * eta) +
+        el.b2 * math.cos(4 * xi) * math.sinh(4 * eta) +
+        el.b3 * math.cos(6 * xi) * math.sinh(6 * eta) +
+        el.b4 * math.cos(8 * xi) * math.sinh(8 * eta))
+    val sinhE = math.sinh(etaP)
+    val cosX = math.cos(xiP)
+    val tauP = math.sin(xiP) / math.sqrt(sinhE * sinhE + cosX * cosX)
+    val dl = math.atan2(sinhE, cosX)
+    var tau = tauP
+    var i = 0
+    while (i < 5) {
+      val sq = math.sqrt(1.0 + tau * tau)
+      val sigma = math.sinh(el.e * atanhRef(el.e * tau / sq))
+      val fTau = tau * math.sqrt(1.0 + sigma * sigma) - sigma * sq
+      val dTau = (math.sqrt((1.0 + sigma * sigma) * (1.0 + tau * tau)) - sigma * tau) *
+        (1.0 - el.e2) * sq / (1.0 + (1.0 - el.e2) * tau * tau)
+      tau += (tauP - fTau) / dTau
+      i += 1
+    }
+    (p.cmDeg + math.toDegrees(dl), math.toDegrees(math.atan(tau)))
+  }
+
+  test("Clenshaw-summed series equals the direct sum within ±10° of the meridian, 84°N to 84°S") {
+    // forward within 1e-8 m, inverse within 1e-12° — on WGS84 (zone 33N/S)
+    // and GRS80 (NAD83 zone 15N)
+    for (p <- Seq(p33, p33s, CrsTransform.utmParams(26915).get)) {
+      var worstFwd = 0.0
+      var worstInv = 0.0
+      for (i <- -80 to 80; j <- -168 to 168) {
+        val lon = p.cmDeg + i / 8.0
+        val lat = j / 2.0
+        val (e, n) = CrsTransform.forward(p, lon, lat)
+        val (eRef, nRef) = directForward(p, lon, lat)
+        worstFwd = math.max(worstFwd, math.max(math.abs(e - eRef), math.abs(n - nRef)))
+        val (lon2, lat2) = CrsTransform.inverse(p, eRef, nRef)
+        val (lonRef, latRef) = directInverse(p, eRef, nRef)
+        worstInv = math.max(worstInv, math.max(math.abs(lon2 - lonRef), math.abs(lat2 - latRef)))
+      }
+      assert(worstFwd < 1e-8, s"${p.ell}/${p.cmDeg}: forward differs by $worstFwd m")
+      assert(worstInv < 1e-12, s"${p.ell}/${p.cmDeg}: inverse differs by $worstInv deg")
+    }
+  }
+
+  test("Clenshaw sum keeps every raster_zonal-shaped centroid in its 100 m UTM cell") {
+    // 1024² centroids at 2^-11° from (14°E, 47°N) southward, mapped into
+    // UTM 33N: no floor(E / 100) or floor(N / 100) index may move against
+    // the direct sum
+    val ps = 1.0 / 2048
+    var moved = 0
+    var worst = 0.0
+    for (r <- 0 until 1024; c <- 0 until 1024) {
+      val lon = 14.0 + (c + 0.5) * ps
+      val lat = 47.0 - (r + 0.5) * ps
+      val (e, n) = CrsTransform.forward(p33, lon, lat)
+      val (eRef, nRef) = directForward(p33, lon, lat)
+      worst = math.max(worst, math.max(math.abs(e - eRef), math.abs(n - nRef)))
+      if (math.floor(e / 100.0) != math.floor(eRef / 100.0) ||
+        math.floor(n / 100.0) != math.floor(nRef / 100.0)) moved += 1
+    }
+    assert(moved == 0, s"$moved centroids changed cell (largest difference $worst m)")
+    assert(worst < 1e-8, s"largest difference $worst m")
+  }
+
   // ---- round 16: conic projections (Albers 9822, LCC 9802) ----------------
   //
   // No reference vectors are reachable offline, so the pins are projection

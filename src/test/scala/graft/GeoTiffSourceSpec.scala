@@ -915,6 +915,46 @@ class GeoTiffSourceSpec extends SparkSpec {
     assert(zs.map(_.getLong(2)).sum == frame.count()) // n_pixels accounts all rows
   }
 
+  test("zonalStats: rows in cell order from one shuffle, two jobs, no range exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // f32 mask in EPSG:4326, 64×48 @ 0.05° from (14°E, 48.5°N), read in
+    // windows of at most 16 pixels a side, zipped with a UTM 33N secondary
+    // through the cross-CRS transform
+    val mask = TiffFixtures.writeBigTiff(s"$tmp/zs_order_mask.tif", 64, 48,
+      (c, r) => if ((3 * c + r) % 11 == 0) -9999.0 else c * 0.5 + r,
+      14.0, 48.5, 0.05, Some("-9999"), geoKeys = Seq(1024 -> 2, 2048 -> 4326))
+    val utm = TiffFixtures.writeBigTiff(s"$tmp/zs_order_utm.tif", 100, 100,
+      (c, r) => r * 1000.0 + c, 400000.0, 5400000.0, 4000.0, None,
+      geoKeys = Seq(1024 -> 1, 3072 -> 32633))
+    val frame = Raster.raster2df(spark, Seq(mask, utm), colNames = Seq("m", "s"),
+      maxBlockSize = 16, resample = "nearest")
+    assert(frame.rdd.getNumPartitions >= 12)
+    val zs = Raster.zonalStats(frame, 0.25)
+    val (rows, jobs) = jobsDuring(zs.collect().toSeq)
+    assert(rows.length >= 50, s"${rows.length} cells")
+    val keys = rows.map(r => (r.getDouble(0), r.getDouble(1)))
+    assert(keys.zip(keys.tail).forall { case ((x0, y0), (x1, y1)) =>
+      x0 < x1 || (x0 == x1 && y0 < y1) }, keys)
+    assert(rows == zs.orderBy("cell_lon", "cell_lat").collect().toSeq)
+    // the partial aggregate's map stage, then one task merges and sorts
+    assert(jobs == 2, s"$jobs jobs")
+    val shuffles = new AdaptiveSparkPlanHelper {}.collect(zs.queryExecution.executedPlan) {
+      case s: ShuffleExchangeLike => s
+    }
+    assert(shuffles.length == 1, zs.queryExecution.executedPlan)
+    assert(!shuffles.head.outputPartitioning.isInstanceOf[RangePartitioning])
+  }
+
+  test("zonalStats: a non-finite or non-positive cellDeg is rejected") {
+    val pts = Raster.raster2df(spark, Seq(f32))
+    for (bad <- Seq(Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN, 0.0, -1.0)) {
+      val e = intercept[IllegalArgumentException] { Raster.zonalStats(pts, bad) }
+      assert(e.getMessage.contains("cellDeg"), e.getMessage)
+    }
+  }
+
   // ---- ModelTransformation (tag 34264) ----
 
   test("axis-aligned ModelTransformation (34264) decodes equal to its ModelPixelScale twin") {
