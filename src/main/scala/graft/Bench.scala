@@ -42,7 +42,7 @@ import org.apache.spark.sql.SparkSession
   * pure harness floor (plan + noop commit) plus its real sf0.1 work —
   * ~0.56 s/query observed across the catalog — so the static 134.8 s gate
   * leaves roughly 60–70 more LIGHT queries of headroom. New families must
-  * land shared detect-once Scratch artifacts from day one (the q167/q168
+  * land shared detect-once on-disk artifacts from day one (the q167/q168
   * and q169/q170 shape); a family that rebuilds its detector per sweep
   * spends 5–20 light-query budgets.
   */
@@ -143,7 +143,7 @@ object Bench {
       .toMap
 
   /** Contention-recovery trigger: among the WARM sweeps (sweep 1 excluded —
-    * it pays every Scratch.once artifact build plus per-query codegen by
+    * it pays every on-disk artifact build plus per-query codegen by
     * design, ~30 s of structural elevation on an idle run, so including it
     * would fire the "contention" sweep on every single run and destroy the
     * flag's diagnostic value), the slowest exceeds the best by >25%.
@@ -159,7 +159,7 @@ object Bench {
 
   /** The guard-facing statistic for one query: the median of its WARM
     * observations (sweep 1 dropped when more than one sweep ran — it pays
-    * the one-time Scratch artifact builds by design). Recorded bands are
+    * the one-time on-disk artifact builds by design). Recorded bands are
     * warm-only (round 15), so comparing an all-sweep median against them is
     * wrong whenever the cold sweep is in the mix: at REPEATS=2 the
     * all-sweep median is the MEAN of cold and warm, and q174 (~106 s cold,
@@ -309,7 +309,7 @@ object Bench {
     System.err.println(trailer)
     // Record mode: persist this run's WARM spread as the band file for
     // later guard runs (only meaningful on a fully-green sweep). Warm-only
-    // (round 15): sweep 1 pays every Scratch artifact build, so including
+    // (round 15): sweep 1 pays every on-disk artifact build, so including
     // it put a query's COLD cost in its band ceiling — q174's first
     // recorded band was [0.44, 106.4], making its guard threshold ~213 s
     // against a 0.53 s warm median, i.e. inert. The guard compares

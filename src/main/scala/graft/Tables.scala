@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
-import scala.util.control.NonFatal
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md / FIXTURES.md).
   *
@@ -21,15 +18,15 @@ import scala.util.control.NonFatal
   * and no downstream operator ever sees the physical encoding.
   *
   * A table pays for one parquet schema inference (a one-task Spark job)
-  * per version of its file: the inferred `StructType` is kept under the key
-  * (path, total length from `getContentSummary`, modification time, the
-  * explicitly set `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*`
-  * confs), and every later read under that key passes it as the read
-  * schema, so building a query starts no job. A rewritten file or a
-  * changed inference conf gets a fresh inference. Only the schema is
-  * kept, never a DataFrame or plan: two reads of one table still get
-  * distinct attribute ids (self-joins such as nation n1, n2 stay
-  * unambiguous), and the schema guard still runs on every read.
+  * per version of its file: the inferred `StructType` is an [[Artifacts]]
+  * value keyed on the table's file version (path, total length,
+  * modification time) and the explicitly set `spark.sql.parquet.*` and
+  * `spark.sql.legacy.parquet.*` confs, and every later read under that
+  * key passes it as the read schema, so building a query starts no job.
+  * A rewritten file or a changed inference conf gets a fresh inference.
+  * Only the schema is kept, never a DataFrame or plan: two reads of one
+  * table still get distinct attribute ids (self-joins such as nation n1,
+  * n2 stay unambiguous), and the schema guard still runs on every read.
   *
   * Scale note: these are single-file reads here; at cluster scale the same
   * code reads directory-partitioned parquet unchanged, and every downstream
@@ -56,41 +53,24 @@ object Tables {
         .getContentSummary(p).getLength
     } catch { case scala.util.control.NonFatal(_) => 0L }
 
-  /** What an inferred parquet schema depends on (see class doc). Not the
-    * session: a `StructType` does not depend on one. */
-  private final case class SchemaKey(path: String, length: Long, mtime: Long,
-      confs: Map[String, String])
-
-  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
-
-  /** None when the path cannot be stat'ed; the read then raises Spark's
-    * own error, or, if it succeeds, is simply not remembered. */
-  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] =
-    try {
-      val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Some(SchemaKey(path, fs.getContentSummary(p).getLength,
-        fs.getFileStatus(p).getModificationTime,
-        spark.conf.getAll.filter { case (k, _) =>
-          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
-        }))
-    } catch { case NonFatal(_) => None }
-
   /** `spark.read.parquet(path)` that infers the schema once per file
-    * version; `fallback` handles an inference failure (events' NANOS
+    * version ([[Artifacts]], keyed on the explicitly set parquet confs
+    * too); `fallback` handles an inference failure (events' NANOS
     * footer), and whichever schema the read ended up with is the one kept.
-    * Plain get/put: two threads racing on a cold key both infer, which is
-    * harmless, instead of one holding a map lock across a Spark job. */
+    * A path that cannot be stat'ed is read as is and not remembered. */
   private def parquet(spark: SparkSession, path: String,
       fallback: PartialFunction[Throwable, DataFrame] = PartialFunction.empty): DataFrame = {
-    val key = schemaKey(spark, path)
-    key.flatMap(k => Option(schemas.get(k))) match {
-      case Some(known) => spark.read.schema(known).parquet(path)
-      case None =>
-        val df = try spark.read.parquet(path) catch fallback
-        key.foreach(schemas.put(_, df.schema))
-        df
+    var inferred: Option[DataFrame] = None
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
     }
+    val schema = Artifacts.get("parquet_schema", None,
+        Artifacts.version(spark, path).map(Seq(_)), confs) {
+      val df = try spark.read.parquet(path) catch fallback
+      inferred = Some(df)
+      df.schema
+    }
+    inferred.getOrElse(spark.read.schema(schema).parquet(path))
   }
 
   /** Accepted microsecond-precision timestamp encodings; NANOS-era events

@@ -458,21 +458,6 @@ object SemDeDup {
       idCol)
   }
 
-  /** [[dedup]] under [[pairsAuto]]'s trained, size-scaled quantizer — the
-    * form a 100 TB corpus runs (pair stage salted at the target, like
-    * [[pairsAuto]]).
-    */
-  def dedupAuto(
-      members: DataFrame,
-      idCol: String,
-      vecCol: String,
-      minCos: Double,
-      targetClusterSize: Int = 1024,
-      iters: Int = 5): DataFrame =
-    dedup(members, idCol, vecCol,
-      trainedCentroids(members, idCol, vecCol, targetClusterSize, iters),
-      minCos, saltAbove = targetClusterSize)
-
   // ---- persisted index lifecycle ------------------------------------
   //
   // Layout mirrors Ann.buildIvfIndex: `<path>/centroids` is the quantizer
@@ -508,17 +493,6 @@ object SemDeDup {
     assign(members, idCol, vecCol, loadCentroids(members.sparkSession, path))
       .write.mode("overwrite").parquet(s"$path/assignments")
   }
-
-  /** [[buildIndex]] under [[trainedCentroids]]' size-scaled quantizer —
-    * the one-call scale build (train k = n/targetClusterSize, persist
-    * quantizer + assignments).
-    */
-  def buildIndexAuto(
-      members: DataFrame, idCol: String, vecCol: String, path: String,
-      targetClusterSize: Int = 1024, iters: Int = 5): Unit =
-    buildIndex(members, idCol, vecCol,
-      trainedCentroids(members, idCol, vecCol, targetClusterSize, iters),
-      path)
 
   /** The stored quantizer. Broadcast-small by [[buildIndex]]'s ceiling. */
   def loadCentroids(spark: SparkSession, path: String): DataFrame =

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
@@ -41,14 +41,11 @@ import org.apache.spark.sql.types.StructType
   * TVF builds a fresh thunk — so `CREATE TABLE AS` + `SELECT count(*)`
   * against `kmeans_assign(...)` used to train twice. Builders now route
   * through [[DeferredResult.memoized]]: the thunk's output is
-  * materialized once (eager localCheckpoint) and memoized per
-  * (session, function, argsKey), where argsKey folds in every scalar
-  * argument AND the resolved input plan's `semanticHash` — replacing a
-  * temp view with a semantically different frame misses the cache, the
-  * same way the trained-artifact stores key by dataset dir. Like those
-  * stores, the memo cannot see through a parquet path whose FILES
-  * changed under an unchanged plan; `DeferredResult.clearMemo()` is the
-  * explicit invalidation hook.
+  * materialized once (eager localCheckpoint) and kept in
+  * [[graft.Artifacts]] per (function, session, the input's file
+  * versions, the input plan's `semanticHash` and every scalar argument)
+  * — re-pointing a view at a semantically different frame, or rewriting
+  * the files behind it, misses the memo.
   */
 case class DeferredResult(
     fnName: String,
@@ -67,39 +64,19 @@ object DeferredResult {
       build: () => DataFrame): DeferredResult =
     DeferredResult(fnName, DataTypeUtils.toAttributes(declared), build)
 
-  /** Memo of materialized TVF results. Keyed by the owning SparkSession
-    * OBJECT (identity — a frame trained under session A must never be
-    * served to session B, the scoreCache lesson), the function name, and
-    * the builder-supplied argsKey. Values are eagerly localCheckpoint'd
-    * frames: the training iterations run exactly once; later actions
-    * scan the checkpoint. Bounded at [[MemoCap]] entries — overflow
-    * clears the whole memo (results are reproducible; a cold retrain is
-    * correct, just slower) so a long-lived SQL session cannot
-    * accumulate unbounded checkpoint blocks.
-    */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, String), DataFrame]()
-  private val MemoCap = 64
-
-  /** Test/ops hook: drop every memoized TVF result (e.g. after
-    * overwriting the files behind a registered view in place). */
-  def clearMemo(): Unit = memo.clear()
-
   /** A DeferredResult whose thunk runs `build` AT MOST ONCE per
-    * (active session, fnName, argsKey) — EXPLAIN still executes
-    * nothing; the first action trains and checkpoints; every later
-    * action (same statement or a new one with the same arguments over a
-    * semantically identical input) re-scans the checkpoint.
+    * (fnName, active session, `input`'s files and plan, `params`) —
+    * EXPLAIN still executes nothing; the first action trains and
+    * checkpoints; every later action (same statement or a new one with
+    * the same arguments over an unchanged input) re-scans the checkpoint.
     */
-  def memoized(fnName: String, declared: StructType, argsKey: String,
-      build: () => DataFrame): DeferredResult =
-    apply(fnName, declared, () => {
-      if (memo.size > MemoCap) memo.clear()
-      memo.computeIfAbsent(
-        (org.apache.spark.sql.SparkSession.active, fnName, argsKey),
-        _ => build().localCheckpoint(eager = true))
-    })
+  def memoized(fnName: String, declared: StructType, input: DataFrame,
+      params: Seq[Any], build: () => DataFrame): DeferredResult =
+    apply(fnName, declared, () =>
+      graft.Artifacts.get(fnName, Some(SparkSession.active),
+          graft.Artifacts.versions(input.sparkSession, input.inputFiles.toSeq.sorted),
+          input.queryExecution.analyzed.semanticHash() +: params: _*)(
+        build().localCheckpoint(eager = true)))
 }
 
 case class DeferredResultExec(

@@ -73,14 +73,6 @@ object SqlTableFunctions {
   private def table(fn: String, name: String) =
     SparkSession.active.table(name)
 
-  /** Memo key for a deferred TVF ([[DeferredResult.memoized]]): every
-    * scalar argument plus the resolved input plan's semanticHash —
-    * re-pointing a view at a semantically different frame changes the
-    * key, so the memo never serves results trained on the old frame.
-    */
-  private def argsKey(df: org.apache.spark.sql.DataFrame, scalars: Any*): String =
-    (df.queryExecution.analyzed.semanticHash() +: scalars).mkString("|")
-
   /** bm25_search(index_path, 'term1,term2,...', k) */
   def bm25Builder(args: Seq[Expression]): LogicalPlan = {
     val fn = "bm25_search"
@@ -170,7 +162,7 @@ object SqlTableFunctions {
         org.apache.spark.sql.types.StructField("proj",
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.DoubleType)))),
-      argsKey(df, idCol, vecCol, m),
+      df, Seq(idCol, vecCol, m),
       () => graft.operators.RandomProjection.project(df, idCol, vecCol, m))
   }
 
@@ -212,7 +204,7 @@ object SqlTableFunctions {
         org.apache.spark.sql.types.StructField("id_b", docs.schema(idCol).dataType),
         org.apache.spark.sql.types.StructField("cos",
           org.apache.spark.sql.types.DoubleType))),
-      argsKey(docs, idCol, textCol, minCos, maxDfFrac),
+      docs, Seq(idCol, textCol, minCos, maxDfFrac),
       () => graft.operators.SparseCosineJoin
         .pairs(docs, idCol, textCol, minCos, maxDfFrac))
   }
@@ -275,7 +267,7 @@ object SqlTableFunctions {
         org.apache.spark.sql.types.StructField("id", StringType),
         org.apache.spark.sql.types.StructField("rank",
           org.apache.spark.sql.types.DoubleType))),
-      argsKey(edges, srcCol, dstCol, iters, damping, undirected),
+      edges, Seq(srcCol, dstCol, iters, damping, undirected),
       () => graft.operators.PageRank.run(
         edges, srcCol, dstCol, iters, damping, undirected))
   }
@@ -304,7 +296,7 @@ object SqlTableFunctions {
         org.apache.spark.sql.types.StructField(idCol, docs.schema(idCol).dataType),
         org.apache.spark.sql.types.StructField("n_pieces",
           org.apache.spark.sql.types.LongType))),
-      argsKey(docs, idCol, textCol, nMerges),
+      docs, Seq(idCol, textCol, nMerges),
       () => {
         val (_, dict) = graft.operators.Bpe.train(
           graft.operators.Bpe.wordTypes(docs, textCol), nMerges)
@@ -343,7 +335,7 @@ object SqlTableFunctions {
         org.apache.spark.sql.types.StructField(idCol, docs.schema(idCol).dataType),
         org.apache.spark.sql.types.StructField("n_pieces",
           org.apache.spark.sql.types.LongType))),
-      argsKey(docs, idCol, textCol, vocab, iters),
+      docs, Seq(idCol, textCol, vocab, iters),
       () => {
         val (_, lp) = graft.operators.UnigramLm.train(
           graft.operators.Bpe.wordTypes(docs, textCol),
@@ -388,7 +380,7 @@ object SqlTableFunctions {
           org.apache.spark.sql.types.StructType(Seq(
             field("doc_id", idType), field("p", DblT),
             field("pred", BooleanType))),
-          argsKey(docs, model, iters),
+          docs, Seq(model, iters),
           () => {
             val f = qc.features(docs).localCheckpoint(true)
             val w = qc.trainLogistic(f, qc.cascadeLabels(docs), iters = iters)
@@ -422,7 +414,7 @@ object SqlTableFunctions {
         org.apache.spark.sql.types.StructField("token", StringType),
         org.apache.spark.sql.types.StructField("cnt",
           org.apache.spark.sql.types.LongType))),
-      argsKey(docs, textCol, k, capacity),
+      docs, Seq(textCol, k, capacity),
       () => graft.operators.HeavyHitters.exactTopK(docs, textCol, k, capacity))
   }
 
@@ -449,7 +441,7 @@ object SqlTableFunctions {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("sel_dist2",
           org.apache.spark.sql.types.DoubleType))),
-      argsKey(df, idCol, vecCol, k),
+      df, Seq(idCol, vecCol, k),
       () => graft.operators.KCenter.select(df, idCol, vecCol, k))
   }
 
@@ -481,7 +473,7 @@ object SqlTableFunctions {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("dist2",
           org.apache.spark.sql.types.DoubleType))),
-      argsKey(df, idCol, vecCol, k, iters),
+      df, Seq(idCol, vecCol, k, iters),
       () => graft.operators.KMeans.fit(df, idCol, vecCol, k, iters))
   }
 
@@ -506,7 +498,7 @@ object SqlTableFunctions {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", StringType),
         org.apache.spark.sql.types.StructField("lbl", StringType))),
-      argsKey(df, srcCol, dstCol, iters),
+      df, Seq(srcCol, dstCol, iters),
       () => graft.operators.LabelPropagation.run(df, srcCol, dstCol, iters))
   }
 
@@ -605,7 +597,7 @@ object SqlTableFunctions {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("log_weight",
           org.apache.spark.sql.types.DoubleType))),
-      argsKey(docs, idCol, textCol, targetCol, nSlots),
+      docs, Seq(idCol, textCol, targetCol, nSlots),
       () => graft.operators.Dsir.importanceWeights(docs,
         org.apache.spark.sql.functions.col(targetCol), idCol, textCol, nSlots))
   }
@@ -700,7 +692,7 @@ object SqlTableFunctions {
           org.apache.spark.sql.types.DoubleType),
         org.apache.spark.sql.types.StructField("mmr_score",
           org.apache.spark.sql.types.DoubleType))),
-      argsKey(emb, idCol, vecCol, queryId.toLong, c, k, lambda),
+      emb, Seq(idCol, vecCol, queryId.toLong, c, k, lambda),
       () => graft.operators.Mmr.diversifiedTopK(emb, idCol, vecCol,
         queryId.toLong, c, k, lambda))
   }

@@ -351,18 +351,17 @@ object Analytics {
     * PageRank rehearsal, BASELINE round-9).
     */
   /** Persisted PageRank ranks over [[lpaEdges]] — the [[lpaLabels]]
-    * precedent: the 3-iteration trajectory runs once per (JVM, dataset)
-    * and lands in a Scratch parquet (centrality is trained once and
+    * precedent: the 3-iteration trajectory runs once per dataset version
+    * and lands in a scratch parquet (centrality is trained once and
     * consumed by every downstream report). Doubles round-trip parquet
     * bit-exactly, so the cached path is value-identical to inline.
     */
   private def prRanks(s: SparkSession, dir: String): DataFrame = {
-    val p = Scratch.path("pr118", dir)
-    Scratch.once(p) {
+    val p = graft.Artifacts.onDisk("pr118", s, dir) { out =>
       graft.operators.PageRank
         .run(lpaEdges(s, dir), "src", "dst",
           iters = 3, damping = 0.85, undirected = true)
-        .write.mode("overwrite").parquet(p)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(p)
   }
@@ -476,18 +475,17 @@ object Analytics {
   }
 
   /** Persisted community assignment: the 3-round LPA trajectory runs once
-    * per JVM and lands in a Scratch parquet (the Ann-index precedent —
-    * and the production shape: communities are trained once and consumed
+    * per dataset version and lands in a scratch parquet (the Ann-index
+    * precedent — and the production shape: communities are trained once and consumed
     * by every downstream report); q140 emits it, q142 aggregates over it.
     * The trajectory is deterministic and the string labels round-trip
     * parquet exactly, so the cached path is value-identical to inline.
     */
   private def lpaLabels(s: SparkSession, dir: String): DataFrame = {
-    val p = Scratch.path("lpa140", dir)
-    Scratch.once(p) {
+    val p = graft.Artifacts.onDisk("lpa140", s, dir) { out =>
       graft.operators.LabelPropagation
         .run(lpaEdges(s, dir), "src", "dst", iters = 3)
-        .write.mode("overwrite").parquet(p)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(p)
   }

@@ -93,8 +93,8 @@ object BudgetSelect {
     val docs = Tables.documents(s, dir)
     val scores = Classifier.cachedCentroidScores(s, dir)
       .select(col("doc_id"), col("score"))
-    // round 18: the per-doc encode is the shared per-(session, dataset)
-    // artifact (q123's frame) instead of a fresh corpus encode per sweep
+    // round 18: the per-doc encode is the shared per-dataset artifact
+    // instead of a fresh corpus encode per sweep
     val counts = Tokenizer.cachedEncodeCounts(s, dir)
     // checkpoint: perDoc feeds BOTH the 1-row budget aggregate (a
     // broadcast exchange) and the window (a shuffle exchange) — different

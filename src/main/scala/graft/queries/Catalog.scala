@@ -16,106 +16,6 @@ final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
-/** Scratch directories for queries that persist artifacts mid-query (ANN
-  * indexes, JSONL shards). Paths are pid-suffixed so two concurrent JVMs
-  * cannot race one overwrite path, and every handed-out path is deleted
-  * recursively on JVM exit so repeated driver runs do not accumulate
-  * encoded copies of the tables in /tmp. [[once]] guards per-JVM builds
-  * with an IN-MEMORY set, not a filesystem marker: a marker would let a
-  * recycled pid trust a stale directory left by a crashed run or built
-  * from an older version of the dataset.
-  */
-/** Bounded `computeIfAbsent` for the per-(session, dataset) trained-
-  * artifact caches (centroid scores, BPE/unigram models, signal frames,
-  * …): overflow clears the whole map — every value is reproducible, so a
-  * cold retrain is correct, just slower — and a JVM that cycles
-  * SparkSessions cannot pin dead sessions' checkpointed frames forever.
-  * The [[graft.plans.DeferredResult]] MemoCap rule applied to the
-  * query-side stores (round-10 review).
-  */
-object ArtifactCache {
-  val Cap = 64
-  def get[K, V](m: java.util.concurrent.ConcurrentHashMap[K, V], k: K)(
-      build: => V): V = {
-    if (m.size > Cap) {
-      // Evicted values are often localCheckpoint(true) frames whose
-      // persisted RDD blocks are NOT freed by dropping the reference —
-      // best-effort unpersist them so an overflow does not leak blocks for
-      // the JVM lifetime (round-10 advice). The size check and clear are
-      // deliberately not atomic with computeIfAbsent: a racing builder's
-      // fresh entry can be dropped and rebuilt once — benign, every value
-      // is reproducible.
-      val it = m.values().iterator()
-      while (it.hasNext) {
-        it.next() match {
-          case df: org.apache.spark.sql.Dataset[_] =>
-            try df.queryExecution.optimizedPlan match {
-              case lr: org.apache.spark.sql.execution.LogicalRDD =>
-                lr.rdd.unpersist(false); ()
-              case _ => ()
-            } catch { case scala.util.control.NonFatal(_) => () }
-          case _ => ()
-        }
-      }
-      m.clear()
-    }
-    m.computeIfAbsent(k, _ => build)
-  }
-}
-
-object Scratch {
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val issued = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      issued.forEach { p =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(p))
-      }))
-  }
-
-  /** Stable within one JVM for a (kind, dataset dir) pair. unsigned-hex
-    * hash, not math.abs: abs(Int.MinValue) is negative.
-    */
-  def path(kind: String, dir: String): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_${kind}_" +
-      s"${java.lang.Integer.toUnsignedString(dir.hashCode, 16)}" +
-      s"_p${ProcessHandle.current().pid()}"
-    issued.add(p)
-    p
-  }
-
-  /** Run `build` only the first time this JVM sees `key`; a build that
-    * throws is forgotten so the next call retries instead of trusting a
-    * half-written artifact. CONCURRENT callers block until the in-flight
-    * build completes (round-10 review: marking "built" before the
-    * parquet write finishes would let a second query sharing the
-    * artifact — q105 with q100's spans, q156/q157 with q155's turns —
-    * read a missing or half-written path under parallel suite
-    * execution); a waiter woken by a FAILED build retries it.
-    */
-  def once(key: String)(build: => Unit): Unit = {
-    while (!built.contains(key)) {
-      val latch = new java.util.concurrent.CountDownLatch(1)
-      val prev = inFlight.putIfAbsent(key, latch)
-      if (prev == null) {
-        try {
-          // double-check after winning the latch: a thread that observed
-          // !built, then stalled while another thread finished the build
-          // and removed ITS latch, would otherwise re-run the build and
-          // rewrite the parquet under concurrent readers (round-10 advice)
-          if (!built.contains(key)) { build; built.add(key) }
-          ()
-        } finally { inFlight.remove(key); latch.countDown() }
-      } else prev.await()
-    }
-  }
-  private val inFlight =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CountDownLatch]()
-}
-
 object Catalog {
   val all: Seq[QueryDef] = {
     val defs =

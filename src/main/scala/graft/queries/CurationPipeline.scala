@@ -63,11 +63,8 @@ object CurationPipeline {
     * the ntile order (nll, doc_id) is total, so the frame is
     * value-identical run to run and the checkpoint preserves it exactly.
     */
-  private val baseCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   private def cardBase(s: SparkSession, dir: String): DataFrame =
-    ArtifactCache.get(baseCache, (s, dir)) {
+    graft.Artifacts.sessionFrame("card_base", s, dir) {
       val docs = Tables.documents(s, dir)
       val train = docs.filter(col("doc_id") >= 10)
       // every signal frame is the SHARED per-(session, dataset) artifact

@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * deterministic lang-ascending tie-break — engine-order float noise
   * (~1e-14) cannot flip a comparison on an integer grid.
   *
-  * Scale posture: features ride the shared per-(JVM, dataset) char-bigram
-  * Scratch store ([[Curation.docBigrams]] — featurize once, consume
+  * Scale posture: features ride the shared per-dataset-version char-bigram
+  * on-disk store ([[Curation.docBigrams]] — featurize once, consume
   * everywhere); the model is 32 slots × 5 langs = 160 rows, broadcast; the
   * per-document windows partition on doc_id (≤ 5 rows per partition key at
   * the argmax, ≤ 32 at normalization) — nothing global, nothing collected.
@@ -110,15 +110,14 @@ object Langid {
         col("lang"))
   }
 
-  /** Scored frame once per (JVM, dataset) — q171 declares it, q172's card
+  /** Scored frame once per dataset version — q171 declares it, q172's card
     * aggregates it, and q176's untrusted-metadata curation gate joins it
     * (the detect-once discipline). Deterministic (snapped grids, integer
     * argmax), so cached == inline value for value.
     */
   private[queries] def scoresStore(s: SparkSession, dir: String): DataFrame = {
-    val p = Scratch.path("langid171", dir)
-    Scratch.once(p) {
-      langidScores(s, dir).write.mode("overwrite").parquet(p)
+    val p = graft.Artifacts.onDisk("langid171", s, dir) { out =>
+      langidScores(s, dir).write.mode("overwrite").parquet(out)
     }
     s.read.parquet(p)
   }

@@ -321,8 +321,8 @@ object Media {
     * per sweep; the full-corpus run is recorded in BASELINE (the operator
     * is unchanged — banded, bucket-capped — only the input is sliced).
     */
-  /** The sliced video near-dup PAIR frame, computed once per (JVM, dataset)
-    * and landed in a Scratch parquet (the q100/q105 shared-span shape):
+  /** The sliced video near-dup PAIR frame, computed once per dataset version
+    * and landed in a scratch parquet (the q100/q105 shared-span shape):
     * q167 declares the pairs and q168 acts on them — detect once, act
     * many. Deterministic (integer ids, avg of integer bit-counts over
     * integer n_common — exact double arithmetic) so the cached path is
@@ -330,8 +330,7 @@ object Media {
     */
   private def videoPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val p = Scratch.path("vidpairs167", dir)
-    Scratch.once(p) {
+    val p = graft.Artifacts.onDisk("vidpairs167", s, dir) { out =>
       val media = Tables.documents(s, dir)
         .filter(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("text"))
@@ -372,7 +371,7 @@ object Media {
       Multimodal.videoNearDupPairs(media, stride = 1, maxMeanHamming = 3.0)
         .select(col("doc_id_a"), col("doc_id_b"),
           round(col("mean_hamming"), 4).as("mean_hamming"), col("n_common"))
-        .write.mode("overwrite").parquet(p)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(p)
   }
@@ -411,17 +410,16 @@ object Media {
     * all-pairs path. Rows-only (DuckDB cannot decode WAV); the
     * threshold/equality semantics are spec-pinned in MultimodalSpec.
     *
-    * Computed once per (JVM, dataset) and landed in a Scratch parquet
+    * Computed once per dataset version and landed in a scratch parquet
     * (the q167→q168 detect-once shape): q169 declares the pairs, q170
     * acts on them. Deterministic (integer ids and bit-count Hamming), so
     * the cached path is value-identical to inline.
     */
   private def audioPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val p = Scratch.path("audpairs169", dir)
-    Scratch.once(p) {
+    val p = graft.Artifacts.onDisk("audpairs169", s, dir) { out =>
       Multimodal.audioNearDupPairs(audioMedia(s, dir), maxHamming = 3)
-        .write.mode("overwrite").parquet(p)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(p)
   }
@@ -526,19 +524,18 @@ object Media {
   }
 
   /** Trim-robust pair frame, detect-once (the q169/q170 artifact shape —
-    * the family lands its shared Scratch artifact from day one, per the
+    * the family lands its shared on-disk artifact from day one, per the
     * round-14 cost-model rule): q174 declares the pairs, q175 acts on
     * them. Rows-only (DuckDB cannot decode WAV); planted-trim recall and
     * offsets are spec-pinned in MultimodalSpec.
     */
   private def audioTrimPairs(s: SparkSession, dir: String): DataFrame = {
-    val p = Scratch.path("audtrim174", dir)
-    Scratch.once(p) {
+    val p = graft.Artifacts.onDisk("audtrim174", s, dir) { out =>
       Multimodal.audioNearDupPairsTrimTolerant(audioTrimMedia(s, dir),
         blockSamples = 8, hopBlocks = 4)
         .select(col("doc_id_a"), col("doc_id_b"), col("offset"),
           round(col("mean_hamming"), 4).as("mean_hamming"), col("n_common"))
-        .write.mode("overwrite").parquet(p)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(p)
   }

@@ -22,18 +22,16 @@ import graft.operators.{Dsir, Repetition}
   */
 object QualitySignals {
 
-  /** Signal frames as per-(session, dataset) trained-artifact stores
-    * (the q120/q147 pattern): each is built and checkpointed ONCE per
-    * JVM-dataset and shared by its declared query and the q154 pipeline
-    * (the stats are per-document, so the pipeline's doc_id ≥ 10
-    * population is a filter of the same frame). Session-keyed — the
-    * checkpointed frames are bound to the session that built them.
+  /** Signal frames as per-(session, dataset version) trained artifacts
+    * (the q120/q147 pattern): each is built and checkpointed ONCE and
+    * shared by its declared query and the q154 pipeline (the stats are
+    * per-document, so the pipeline's doc_id ≥ 10 population is a filter
+    * of the same frame). Session-keyed — the checkpointed frames are
+    * bound to the session that built them.
     */
-  private val store = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
   private def artifact(s: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame =
-    ArtifactCache.get(store, (s, dir, kind))(build.localCheckpoint(true))
+    graft.Artifacts.sessionFrame(s"signal_$kind", s, dir)(build.localCheckpoint(true))
 
   private[queries] def repStats(s: SparkSession, dir: String): DataFrame =
     artifact(s, dir, "rep")(Repetition.repetitiveFlag(
@@ -49,7 +47,7 @@ object QualitySignals {
   /** DSIR weights with the target slice defined by the PREDICTED language
     * (q171's in-engine classifier) instead of the metadata column — the
     * untrusted-metadata mode a real crawl needs (VERDICT r14 task 6). The
-    * langid scores ride their own per-(JVM, dataset) Scratch store, so
+    * langid scores ride their own on-disk artifact, so
     * this artifact adds one broadcast-sized equi-join over the q151 shape.
     */
   private[queries] def dsirWeightsPred(s: SparkSession, dir: String): DataFrame =

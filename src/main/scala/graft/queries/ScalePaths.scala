@@ -71,21 +71,20 @@ object ScalePaths {
     * near-dup clusters (q31/q55 use the same threshold) at low diameter.
     */
   private def q56(s: SparkSession, dir: String): DataFrame = {
-    // Detect-once Scratch artifact (the q113/q167 shape): the pair+CC
+    // Detect-once on-disk artifact (the q113/q167 shape): the pair+CC
     // chain rebuilt per bench sweep cost [0.9, 6.3] s at sf0.1 while its
     // q55 twin rode the bounded path — land the multi-member assignments
-    // once per (JVM, dataset) and let warm sweeps read parquet. Fully
+    // once per dataset version and let warm sweeps read parquet. Fully
     // deterministic (integer ids/sizes, no floats), so the cached frame is
     // value-identical to inline; DedupClustersSpec pins artifact == inline.
-    val p = Scratch.path("dedupclusters56", dir)
-    Scratch.once(p) {
+    val p = graft.Artifacts.onDisk("dedupclusters56", s, dir) { out =>
       val docs = Tables.documents(s, dir)
       val pairs = SimHash.candidatePairs(docs, "doc_id", "text",
           bands = 4, maxHamming = 2, maxBucket = 50)
         .select("id_a", "id_b")
       graft.operators.DedupClusters.clusterAssignments(docs, "doc_id", pairs)
         .filter(col("cluster_size") > 1)
-        .write.mode("overwrite").parquet(p)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(p).orderBy(col("cluster_id"), col("doc_id"))
   }
@@ -110,23 +109,19 @@ object ScalePaths {
       .orderBy(col("q_id"), col("dist2"), col("id"))
   }
 
-  /** Per-dataset scratch path ([[Scratch.path]]: pid-isolated, deleted on
-    * JVM exit). [[Scratch.once]] makes the BENCH median measure the
-    * lifecycle claim: sweep 1 pays train+encode+write once, later sweeps
-    * time SEARCH-FROM-DISK — exactly the build-once/search-many shape a
-    * production corpus runs. The guard is in-memory, so a fresh JVM always
-    * rebuilds (no stale index can be trusted across runs); a rebuild that
-    * died between codes and model writes is additionally caught by the
-    * build_id check inside the indexed searches.
-    */
-  private def idxPath(kind: String, dir: String): String =
-    Scratch.path(s"${kind}_idx", dir)
-
   /** IVF-PQ over the full embeddings table via the PERSISTED index
     * lifecycle: train+encode+write once (overwrite-idempotent), then search
     * strictly from disk — the probed cells reach the parquet scan as a
     * partition filter, the float corpus is never touched by the search.
     * Correctness pinned by PqSpec's indexed==inline equality test.
+    *
+    * The index is an on-disk [[graft.Artifacts]] value, so the BENCH median
+    * measures the lifecycle claim: sweep 1 pays train+encode+write once,
+    * later sweeps time SEARCH-FROM-DISK — exactly the build-once/search-
+    * many shape a production corpus runs. The memo is in-memory, so a fresh
+    * JVM always rebuilds (no stale index can be trusted across runs); a
+    * rebuild that died between codes and model writes is additionally
+    * caught by the build_id check inside the indexed searches.
     */
   private def q89(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -134,10 +129,9 @@ object ScalePaths {
       .select(col("vec_id").as("id"), col("embedding")).as[Vec]
     val queries = corpus.filter(v => Seq(1L, 2L, 3L).contains(v.id)).collect()
       .sortBy(_.id).map(v => (v.id, v.embedding)).toSeq
-    val path = idxPath("ivfpq", dir)
-    Scratch.once(path) {
+    val path = graft.Artifacts.onDisk("ivfpq_idx", s, dir) { out =>
       graft.operators.Pq.buildIvfPqIndex(
-        corpus.filter(v => !Seq(1L, 2L, 3L).contains(v.id)), path,
+        corpus.filter(v => !Seq(1L, 2L, 3L).contains(v.id)), out,
         nCells = 16, m = 8, k = 16)
     }
     graft.operators.Pq.ivfPqTopKManyIndexed(s, path, queries, nprobe = 6, kNN = 10)
@@ -154,10 +148,9 @@ object ScalePaths {
       .select(col("vec_id").as("id"), col("embedding")).as[Vec]
     val queries = corpus.filter(v => Seq(1L, 2L, 3L).contains(v.id)).collect()
       .sortBy(_.id).map(v => (v.id, v.embedding)).toSeq
-    val path = idxPath("pq", dir)
-    Scratch.once(path) {
+    val path = graft.Artifacts.onDisk("pq_idx", s, dir) { out =>
       graft.operators.Pq.buildPqIndex(
-        corpus.filter(v => !Seq(1L, 2L, 3L).contains(v.id)), path, m = 8, k = 16)
+        corpus.filter(v => !Seq(1L, 2L, 3L).contains(v.id)), out, m = 8, k = 16)
     }
     graft.operators.Pq.adcTopKManyIndexed(s, path, queries, kNN = 10)
       .orderBy(col("q_id"), col("dist2"), col("id"))
@@ -176,18 +169,16 @@ object ScalePaths {
     * verify scale; minCos=0.4 is q33/q101's threshold — the testdata
     * vectors are near-orthogonal, so higher cuts return nothing.
     */
-  /** q111's trained quantizer once per (session, dataset) — round 18: the
-    * pairsAuto form retrained the SAME deterministic centroids every
-    * sweep (a corpus-count probe + a bounded sample collect + driver
-    * Lloyd's per construction). The Clustering.trainedCents / cachedBpe
-    * artifact convention applied; the unrolled call below is exactly
-    * pairsAuto's body with the training hoisted. */
-  private val semCentCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
+  /** q111's trained quantizer once per (session, dataset version) —
+    * round 18: the pairsAuto form retrained the SAME deterministic
+    * centroids every sweep (a corpus-count probe + a bounded sample
+    * collect + driver Lloyd's per construction). The
+    * Clustering.trainedCents / cachedBpe artifact convention applied; the
+    * unrolled call below is exactly pairsAuto's body with the training
+    * hoisted. */
   private def q111(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val cents = ArtifactCache.get(semCentCache, (s, dir))(
+    val cents = graft.Artifacts.sessionFrame("semdedup_cents", s, dir)(
       graft.operators.SemDeDup.trainedCentroids(
         emb, "vec_id", "embedding", targetClusterSize = 64, iters = 5))
     graft.operators.SemDeDup

@@ -45,12 +45,11 @@ object SftPrep {
     * join sees the full stream.
     */
   private def turns(s: SparkSession, dir: String): DataFrame = {
-    // Shared by all three queries as a per-(JVM, dataset) artifact (the
+    // Shared by all three queries as a per-dataset-version artifact (the
     // dupSpans/lpaLabels shape): sessionization + the content join run
     // once; the frame is integer/string-deterministic and round-trips
     // parquet exactly.
-    val p = Scratch.path("chatturns", dir)
-    Scratch.once(p) {
+    val p = graft.Artifacts.onDisk("chatturns", s, dir) { out =>
       val store = Tables.documents(s, dir).filter(col("doc_id") < StoreIds)
         .select(col("doc_id"), substring(col("text"), 1, TurnChars).as("turn_text"))
       // Parity invariant (round-10 advice): the Scala pipeline sessionizes
@@ -71,7 +70,7 @@ object SftPrep {
           pmod(col("event_id"), lit(StoreIds)).as("doc_id"))
         .join(broadcast(store), "doc_id")
       ChatSft.sessionTurns(ev, "user_id", "ts_us", "event_id", GapUs)
-        .write.mode("overwrite").parquet(p)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(p)
   }
@@ -278,18 +277,17 @@ object SftPrep {
     */
   /** Rendered-conversation SimHash fingerprints of the user_id < 5 oracle
     * slice — the DETECT stage shared by q159 (pair listing) and q162 (the
-    * dedup action), built once per (JVM, dataset) like the turns artifact
+    * dedup action), built once per dataset version like the turns artifact
     * (integer fingerprints round-trip parquet exactly; a drift between the
     * two queries' fingerprinting is structurally impossible).
     */
   private def convFingerprints(s: SparkSession, dir: String): DataFrame = {
-    val p = Scratch.path("convsimhash", dir)
-    Scratch.once(p) {
+    val p = graft.Artifacts.onDisk("convsimhash", s, dir) { out =>
       graft.operators.ChatSft.renderConversations(
           turns(s, dir).filter(col("user_id") < 5), "user_id", "role", "turn_text")
         .select(col("user_id"), col("session_id"),
           graft.operators.SimHash.simhashOfText(col("rendered")).as("simhash"))
-        .write.mode("overwrite").parquet(p)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(p)
   }
@@ -355,7 +353,7 @@ object SftPrep {
     * coordinate systems cannot drift on what a conversation renders to.
     *
     * Round 17: materialized (together with [[convTokens]]' loss-token
-    * column) as the per-(JVM, dataset) `chatconv` Scratch artifact — the
+    * column) as the per-dataset-version `chatconv` on-disk artifact — the
     * turns/lpaLabels shape. Six declared queries (q157/q160/q161/q163/
     * q164/q165) each re-rendered every turn and re-aggregated per
     * conversation on every sweep (~0.4–0.8 s each at sf0.1); the rendered-
@@ -364,8 +362,7 @@ object SftPrep {
     * so the parquet round-trip is value-identical to inline.
     */
   private def convStore(s: SparkSession, dir: String): DataFrame = {
-    val p = Scratch.path("chatconv", dir)
-    Scratch.once(p) {
+    val p = graft.Artifacts.onDisk("chatconv", s, dir) { out =>
       val turnCol = ChatSft.renderTurn(col("role"), col("turn_text"))
       val nt = size(split(turnCol, " "))
       turns(s, dir)
@@ -379,7 +376,7 @@ object SftPrep {
             transform(array_sort(collect_list(struct(col("turn_idx"), col("turn")))),
               x => x.getField("turn")), "\n")).as("r_len"))
         .withColumn("shard", floor(col("user_id") / 10.0).cast("int"))
-        .write.mode("overwrite").parquet(p)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(p)
   }
@@ -388,16 +385,15 @@ object SftPrep {
     convStore(s, dir)
       .select(col("user_id"), col("session_id"), col("n_tokens"), col("r_len"))
 
-  /** q156/q160/q165's loss-mask span table as the `chatspans` Scratch
+  /** q156/q160/q165's loss-mask span table as the `chatspans` on-disk
     * artifact (round 17) — same rationale as `chatconv`: three queries
     * re-ran the per-turn render + window per sweep; the span table is
     * integer-deterministic and round-trips parquet exactly.
     */
   private def maskSpans(s: SparkSession, dir: String): DataFrame = {
-    val p = Scratch.path("chatspans", dir)
-    Scratch.once(p) {
+    val p = graft.Artifacts.onDisk("chatspans", s, dir) { out =>
       ChatSft.lossMaskSpans(turns(s, dir), "user_id", "role", "turn_text")
-        .write.mode("overwrite").parquet(p)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(p)
   }

@@ -523,7 +523,7 @@ object TextPipeline {
       |LIMIT 20""".stripMargin
 
   /** B29 — BM25 via the PERSISTED inverted index
-    * ([[graft.operators.TextIndex]]): build once per JVM (Scratch.once,
+    * ([[graft.operators.TextIndex]]): build once per dataset version (an on-disk [[graft.Artifacts]] value,
     * the q89/q90 lifecycle pattern), then score strictly from disk — the
     * query terms reach the postings parquet scan as a pushed In filter,
     * the corpus text is never touched. Same formula as q108, so the SAME
@@ -531,10 +531,9 @@ object TextPipeline {
     * form fails the hash compare, not just a spec.
     */
   private def q109(s: SparkSession, dir: String): DataFrame = {
-    val path = Scratch.path("textidx", dir)
-    Scratch.once(path) {
+    val path = graft.Artifacts.onDisk("textidx", s, dir) { out =>
       graft.operators.TextIndex.buildTextIndex(
-        Tables.documents(s, dir), "doc_id", "text", path)
+        Tables.documents(s, dir), "doc_id", "text", out)
     }
     graft.operators.TextIndex.bm25TopK(s, path, Seq("spark", "join", "stream"))
   }

@@ -29,17 +29,14 @@ object UnigramTok {
   private[queries] val W = 12  // DP width (max word length)
   private val NegInf = "-1000000000.0"
 
-  /** Trained trajectory + final log-probs once per (session, dataset) —
-    * the trained-artifact-store pattern (train once, q147 declares the
-    * trajectory, q148 encodes under the same model). Session-keyed: the
+  /** Trained trajectory + final log-probs once per (session, dataset
+    * version) — the trained-artifact-store pattern (train once, q147
+    * declares the trajectory, q148 encodes under the same model). The
     * trajectory frame is checkpoint-bound to its session.
     */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, Map[String, Double])]()
-
   private[queries] def trained(s: SparkSession, dir: String)
       : (DataFrame, Map[String, Double]) =
-    ArtifactCache.get(cache, (s, dir)) {
+    graft.Artifacts.sessionFrame("unigram_lm", s, dir) {
       val wt = Bpe.wordTypes(Tables.documents(s, dir), "text")
       val (traj, lp) = UnigramLm.train(wt, maxPieceLen = P, vocabSize = V,
         iters = T, maxWordLen = W)
@@ -66,10 +63,8 @@ object UnigramTok {
   /** Per-doc Viterbi scores as a second trained-artifact layer over the
     * same LM (q152 + the q154 pipeline share it; per-document, so q154's
     * population filter composes). */
-  private val scoredCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
   private[queries] def scoredDocs(s: SparkSession, dir: String): DataFrame =
-    ArtifactCache.get(scoredCache, (s, dir))(
+    graft.Artifacts.sessionFrame("unigram_scores", s, dir)(
       UnigramLm.scoreCounts(Tables.documents(s, dir), trained(s, dir)._2,
         "doc_id", "text", maxPieceLen = P, maxWordLen = W)
         .localCheckpoint(true))

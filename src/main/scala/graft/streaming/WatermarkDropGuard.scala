@@ -137,7 +137,8 @@ object WatermarkDropGuard {
 
   // weak keys: the session's listener bus holds the guard, never the
   // reverse, so a dropped session unregisters itself from this map instead
-  // of being pinned for the JVM lifetime (the ArtifactCache session rule)
+  // of being pinned for the JVM lifetime (as graft.Artifacts bounds the
+  // session-bound frames it keeps)
   private val auto = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, WatermarkDropGuard]())
 

@@ -209,8 +209,9 @@ class SemDeDupSpec extends SparkSpec {
       (902L, centers(0).map(_ + 0.011f)))
     val emb = rows.toDF("vec_id", "embedding")
     val got = SemDeDup
-      .dedupAuto(emb, "vec_id", "embedding", minCos = 0.9999,
-        targetClusterSize = 16)
+      .dedup(emb, "vec_id", "embedding",
+        SemDeDup.trainedCentroids(emb, "vec_id", "embedding", targetClusterSize = 16),
+        minCos = 0.9999, saltAbove = 16)
       .select("vec_id", "dup_count")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(!got.contains(901L) && !got.contains(902L),
@@ -262,7 +263,7 @@ class SemDeDupSpec extends SparkSpec {
     assert(got == oneShot, "streamed index drifted from one-shot build")
   }
 
-  test("buildIndexAuto: the persisted trained index reproduces pairsAuto exactly") {
+  test("trained buildIndex: the persisted index reproduces pairsAuto exactly") {
     import spark.implicits._
     val centers = Array(vec(1, 10f), vec(2, 10f), vec(3, 10f))
     val emb = ((0 until 90).map { i =>
@@ -273,8 +274,9 @@ class SemDeDupSpec extends SparkSpec {
       (901L, centers(0).map(_ + 0.01f)))).toDF("vec_id", "embedding")
     val path = java.nio.file.Files
       .createTempDirectory("graft_semdedup_auto").toString + "/idx"
-    SemDeDup.buildIndexAuto(emb, "vec_id", "embedding", path,
-      targetClusterSize = 16)
+    SemDeDup.buildIndex(emb, "vec_id", "embedding",
+      SemDeDup.trainedCentroids(emb, "vec_id", "embedding", targetClusterSize = 16),
+      path)
     val indexed = pairSet(SemDeDup.pairsIndexed(emb, "vec_id", "embedding", path, 0.9))
     // both paths train on the same data with the same deterministic
     // trainer, so the persisted-index route must be EXACTLY the inline one
