@@ -36,7 +36,10 @@ import scala.util.control.NonFatal
   * values count toward [[Cap]]; past it they are all dropped and their
   * checkpointed blocks unpersisted (every value is reproducible, so a cold
   * rebuild is correct, just slower), so a JVM that cycles sessions does
-  * not pin dead sessions' frames.
+  * not pin dead sessions' frames. A session-bound build over new input
+  * versions drops and unpersists the completed entries of the same
+  * (kind, session, params) over other versions at once, so a rewritten
+  * dataset frees its old frames without waiting for the cap.
   */
 object Artifacts {
 
@@ -88,7 +91,7 @@ object Artifacts {
     val mine = new CompletableFuture[Any]()
     val prev = slots.putIfAbsent(key, mine)
     if (prev == null) {
-      if (key.session.isDefined) evictOverCap(key)
+      if (key.session.isDefined) { dropSuperseded(key); evictOverCap(key) }
       try { val v = build; mine.complete(v); v }
       catch {
         case t: Throwable =>
@@ -104,6 +107,21 @@ object Artifacts {
       }
     }
   }
+
+  /** A session-bound build for new input versions supersedes the
+    * completed entries of its (kind, session, params) built over other
+    * versions: they are dropped and unpersisted now, not at the cap. */
+  private def dropSuperseded(next: Key): Unit =
+    slots.keySet.asScala.filter(k => k.kind == next.kind && k.session == next.session &&
+      k.params == next.params && k.inputs != next.inputs).foreach { k =>
+      val f = slots.get(k)
+      if (f != null && f.isDone && !f.isCompletedExceptionally && slots.remove(k, f))
+        unpersist(f.join())
+    }
+
+  /** Session-bound keys held now, with their inputs (a test hook). */
+  private[graft] def sessionBound: Seq[(String, Seq[FileVersion])] =
+    slots.keySet.asScala.toSeq.filter(_.session.isDefined).map(k => (k.kind, k.inputs))
 
   private def evictOverCap(keep: Key): Unit = {
     val bound = slots.keySet.asScala.filter(k => k.session.isDefined && k != keep).toSeq

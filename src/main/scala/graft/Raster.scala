@@ -69,6 +69,18 @@ object Raster {
     * file: the frame is coalesced to one partition, so one task scans and
     * writes every point (avoid at scale).
     *
+    * `output` is replaced, never appended to: the write runs under
+    * overwrite, the only mode the sink accepts. Files land in a staging dir
+    * under `output` first; once every task has committed, the old content
+    * of `output` is removed, the new `part-*.csv` files move in and
+    * `_SUCCESS` is written, so a write that fails leaves the old output as
+    * it was. Each window with at least one valid point gives one file; the
+    * first window gives a header-only file when it has none, so an
+    * all-NoData raster still yields a header, and other all-NoData windows
+    * give no file. The tasks' `recordsWritten`/`bytesWritten` output
+    * metrics are set by the sink's writers, from the rows and bytes they
+    * wrote.
+    *
     * Nothing is quoted, so a column name must not contain the separator,
     * '"', CR or LF, must not be empty, start with '#' (Spark's writer would
     * quote those) or start or end with a blank or control character (Spark's

@@ -456,6 +456,33 @@ private[tiff] final class RawStripGrid(meta: TiffTags.RasterMeta, window: TiffWi
 
   private def idx(x: Int, y: Int): Int = y * rowBytes + x * pixBytes + bandOff
 
+  /** Window pixels in sparse chunks, which decode to zero bytes; their
+    * samples are set to the raster's NoData when it has one, so a
+    * secondary sampled there yields its NoData (0 when it has none).
+    */
+  private val sparse: Option[java.util.BitSet] = StripDecode.sparsePixels(meta, window, plane)
+  for (bits <- sparse; nd <- meta.noData) {
+    var i = bits.nextSetBit(0)
+    while (i >= 0) {
+      val at = idx(i % window.width, i / window.width)
+      (meta.bitsPerSample, meta.sampleFormat) match {
+        case (32, 3) => buf.putFloat(at, nd.toFloat)
+        case (64, 3) => buf.putDouble(at, nd)
+        case (8, _) => buf.put(at, nd.toLong.toByte)
+        case (16, _) => buf.putShort(at, nd.toLong.toShort)
+        case (32, _) => buf.putInt(at, nd.toLong.toInt)
+        case _ => ()
+      }
+      i = bits.nextSetBit(i + 1)
+    }
+  }
+
+  /** Whether the window reads any sparse chunk. */
+  def hasSparse: Boolean = sparse.isDefined
+
+  /** Whether window pixel (x, y) lies in a sparse chunk. */
+  def isSparse(x: Int, y: Int): Boolean = sparse.exists(_.get(y * window.width + x))
+
   /** Integer sample: unsigned widths zero-extend, signed widths
     * sign-extend, 32-bit returns raw bits (the caller widens u32 with
     * & 0xffffffffL).
@@ -699,7 +726,7 @@ class GeoTiffPartitionReader(
     * the float's exact decimal expansion, and (b) unsigned-32 nodata
     * >= 2^31, which getSampleDouble sign-extends.
     */
-  private lazy val maskedAt: (Int, Int) => Boolean = m0.noData match {
+  private lazy val noDataAt: (Int, Int) => Boolean = m0.noData match {
     case None => (_, _) => false
     case Some(nd) => types(0) match {
       case FloatType =>
@@ -714,6 +741,13 @@ class GeoTiffPartitionReader(
       case t => throw new IllegalStateException(s"unexpected type $t")
     }
   }
+
+  /** A mask pixel emits no row when it is NoData or lies in a sparse
+    * chunk, NoData declared or not.
+    */
+  private lazy val maskedAt: (Int, Int) => Boolean =
+    if (!rasters(0).hasSparse) noDataAt
+    else (x, y) => rasters(0).isSparse(x, y) || noDataAt(x, y)
 
   /** One extractor per required field, resolved ONCE — the per-pixel loop
     * must not do string comparisons or name lookups (this runs per valid
@@ -730,16 +764,28 @@ class GeoTiffPartitionReader(
     else if (f == yName)
       (x: Int, y: Int) => java.lang.Double.valueOf(
         m0.latOf((window.colOff + x).toDouble, (window.rowOff + y).toDouble))
-    else if (f == "area" && calcArea)
+    else if (f == "area" && calcArea) {
       // full-affine area (round-15): delegates to the historical trapezoid
       // bit-for-bit when rotX = rotY = 0, so axis-aligned outputs are
       // unchanged; on rotated grids the centroid latitude varies per COLUMN
       // too, which latOf already carries
-      (x: Int, y: Int) => java.lang.Double.valueOf(
+      def area(x: Int, y: Int): java.lang.Double = java.lang.Double.valueOf(
         GeoMath.pixelAreaAffineM2(
           m0.latOf((window.colOff + x).toDouble, (window.rowOff + y).toDouble),
           m0.pixelScaleX, m0.pixelScaleY, m0.rotX, m0.rotY))
-    else {
+      if (m0.rotY != 0.0) area _
+      else {
+        // rotY = 0: latOf, the one input that varies, is the same double at
+        // every column of a row, so the row's first point computes the area
+        // for the rest of the row (the same call on the same double)
+        var row = -1
+        var rowArea: java.lang.Double = null
+        (x: Int, y: Int) => {
+          if (y != row) { row = y; rowArea = area(x, y) }
+          rowArea
+        }
+      }
+    } else {
       val i = colNames.indexOf(f)
       require(i >= 0, s"unknown required column $f")
       valueExtractor(i)

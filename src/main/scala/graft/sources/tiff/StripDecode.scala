@@ -76,13 +76,47 @@ private[graft] object StripDecode {
         val row = (window.rowOff + y).toLong
         val strip = (row / meta.rowsPerStrip).toInt
         val rowInStrip = row % meta.rowsPerStrip
-        raf.seek(meta.stripOffsets(stripBase + strip) +
-          (rowInStrip * meta.width + window.colOff) * pixBytes)
-        raf.readFully(arr, y * rowBytes, rowBytes)
+        val off = meta.stripOffsets(stripBase + strip)
+        // a sparse strip (offset 0) holds no bytes: its rows stay zero
+        if (off != 0) {
+          raf.seek(off + (rowInStrip * meta.width + window.colOff) * pixBytes)
+          raf.readFully(arr, y * rowBytes, rowBytes)
+        }
         y += 1
       }
       arr
     } finally raf.close()
+  }
+
+  /** The pixels of `window` (bit y × width + x) that lie in a sparse
+    * chunk of `plane` (-1: chunky), or None when none does. A sparse chunk
+    * has offset 0 (TiffTags admits offset 0 only with byte count 0, the
+    * chunk GDAL's SPARSE_OK leaves unwritten when all its pixels are
+    * NoData); the window reads decode it to zero bytes.
+    */
+  def sparsePixels(meta: TiffTags.RasterMeta, window: TiffWindow,
+      plane: Int = -1): Option[java.util.BitSet] = {
+    val bits = new java.util.BitSet()
+    if (meta.tiled) {
+      val (tw, tl) = (meta.tileWidth, meta.tileLength)
+      val tilesAcross = (meta.width + tw - 1) / tw
+      val tileBase = if (plane >= 0) plane * tilesAcross * ((meta.height + tl - 1) / tl) else 0
+      for (tr <- window.rowOff / tl to (window.rowOff + window.height - 1) / tl;
+           tc <- window.colOff / tw to (window.colOff + window.width - 1) / tw
+           if meta.tileOffsets(tileBase + tr * tilesAcross + tc) == 0) {
+        val x0 = math.max(window.colOff, tc * tw) - window.colOff
+        val x1 = math.min(window.colOff + window.width, (tc + 1) * tw) - window.colOff
+        for (y <- math.max(window.rowOff, tr * tl) until
+            math.min(window.rowOff + window.height, (tr + 1) * tl))
+          bits.set((y - window.rowOff) * window.width + x0, (y - window.rowOff) * window.width + x1)
+      }
+    } else {
+      val stripBase = if (plane >= 0) plane * stripsPerBand(meta) else 0
+      for (y <- 0 until window.height
+           if meta.stripOffsets(stripBase + ((window.rowOff + y) / meta.rowsPerStrip).toInt) == 0)
+        bits.set(y * window.width, (y + 1) * window.width)
+    }
+    if (bits.isEmpty) None else Some(bits)
   }
 
   /** Strips per band: the planar layout stores each band's strips
@@ -204,6 +238,9 @@ private[graft] object StripDecode {
     val expected = checkedSize(meta.path, s"$kind $chunkIdx decode buffer",
       rows.toLong * rowWidth * bytesPer * spp)
     val out = new Array[Byte](expected)
+    // a sparse chunk (offset 0) holds no bytes: it decodes to zeros, with
+    // no predictor to undo
+    if (offsets(chunkIdx) == 0) return out
     if (meta.compression == 1) {
       raf.seek(offsets(chunkIdx))
       raf.readFully(out)

@@ -554,18 +554,34 @@ object TiffTags {
       // here with a typed error instead of allocating up to 2 GiB or
       // hitting EOF inside a task. A compressed chunk's size is its byte
       // count; an uncompressed one's is implied by the rows it holds
-      // (computed in Long, saturating, so no product can wrap).
+      // (computed in Long, saturating, so no product can wrap), and its
+      // byte count, when the file gives one, must cover it. A chunk at
+      // offset 0 with byte count 0 is sparse (GDAL's SPARSE_OK leaves
+      // all-NoData chunks unwritten): it holds no bytes and reads as
+      // NoData, so offset 0 means sparse from here on. Any other chunk at
+      // offset 0 would read the TIFF header as pixels.
       val fileLen = raf.length()
       val chunkPixBytes = (bps / 8).toLong * (if (planarCfg == 2) 1 else spp)
       def chunkBytes(rows: Long, rowWidth: Long): Long = {
         val rowBytes = rowWidth * chunkPixBytes
         if (rowBytes != 0 && rows > Long.MaxValue / rowBytes) Long.MaxValue else rows * rowBytes
       }
-      def requireChunksInFile(kind: String, offsets: IndexedSeq[Long], size: Int => Long): Unit =
+      def requireChunksInFile(kind: String, offsets: IndexedSeq[Long], counts: IndexedSeq[Long],
+          implied: Int => Long): Unit =
         offsets.indices.foreach { i =>
-          val (off, n) = (offsets(i), size(i))
-          require(off >= 0 && n >= 0 && off <= fileLen && n <= fileLen - off,
-            s"$path: $kind $i ($n bytes at offset $off) lies outside the $fileLen-byte file")
+          val (off, count) = (offsets(i), counts.lift(i))
+          if (off != 0 || !count.contains(0L)) {
+            require(off != 0,
+              s"$path: $kind $i starts at offset 0, inside the TIFF header, with byte count " +
+                count.fold("absent")(_.toString) + " (only a sparse chunk, byte count 0, may)")
+            val n = if (compression == 1) implied(i) else count.get
+            if (compression == 1) count.foreach { c =>
+              require(c >= n, s"$path: uncompressed $kind $i has byte count $c, " +
+                s"short of the $n bytes its pixels take")
+            }
+            require(off >= 0 && n >= 0 && off <= fileLen && n <= fileLen - off,
+              s"$path: $kind $i ($n bytes at offset $off) lies outside the $fileLen-byte file")
+          }
         }
       if (entries.contains(322) || entries.contains(324)) {
         // Tiled layout (tags 322/323/324/325) — the cloud-optimized
@@ -584,16 +600,15 @@ object TiffTags {
           planesPerChunk
         require(tOffsets.length.toLong == nTiles,
           s"$path: ${tOffsets.length} tile offsets for $nTiles tiles")
-        val tCounts =
-          if (compression == 1) Vector.empty[Long]
-          else longs(325).getOrElse(throw new IllegalArgumentException(
-            s"$path: compressed tiled TIFF missing TileByteCounts (325)")).toIndexedSeq
-        require(compression == 1 || tCounts.length == tOffsets.length,
+        val tCounts = longs(325).map(_.toIndexedSeq).getOrElse {
+          require(compression == 1, s"$path: compressed tiled TIFF missing TileByteCounts (325)")
+          Vector.empty[Long]
+        }
+        require(tCounts.isEmpty || tCounts.length == tOffsets.length,
           s"$path: ${tCounts.length} tile byte counts for ${tOffsets.length} tiles")
         // edge tiles are padded to the full tile in the file
         val tileBytes = chunkBytes(tl, tw)
-        requireChunksInFile("tile", tOffsets,
-          if (compression == 1) _ => tileBytes else tCounts)
+        requireChunksInFile("tile", tOffsets, tCounts, _ => tileBytes)
         RasterMeta(path, width, height, bps, sampleFormat,
           scaleX, scaleY, originX, originY, noData,
           rotX = rotX, rotY = rotY,
@@ -601,7 +616,8 @@ object TiffTags {
           bigTiff = bigTiff, littleEndian = order == ByteOrder.LITTLE_ENDIAN,
           compression = compression, predictor = predictor,
           tileWidth = tw, tileLength = tl,
-          tileOffsets = tOffsets, tileByteCounts = tCounts,
+          tileOffsets = tOffsets,
+          tileByteCounts = if (compression == 1) Vector.empty else tCounts,
           planarConfig = planarCfg, imageIndex = overview,
           crsModelType = crsModelType, epsg = epsg, jpegTables = jpegTables)
       } else {
@@ -618,25 +634,24 @@ object TiffTags {
         require(offsets.length.toLong == expectStrips,
           s"$path: ${offsets.length} strip offsets for $expectStrips strips " +
             s"(rowsPerStrip=$rps, planes=$planesPerChunk)")
-        val byteCounts =
-          if (compression == 1) Vector.empty[Long]
-          else longs(279).getOrElse(throw new IllegalArgumentException(
-            s"$path: compressed TIFF missing StripByteCounts (279)")).toIndexedSeq
-        require(compression == 1 || byteCounts.length == offsets.length,
+        val byteCounts = longs(279).map(_.toIndexedSeq).getOrElse {
+          require(compression == 1, s"$path: compressed TIFF missing StripByteCounts (279)")
+          Vector.empty[Long]
+        }
+        require(byteCounts.isEmpty || byteCounts.length == offsets.length,
           s"$path: ${byteCounts.length} strip byte counts for ${offsets.length} strips")
         // the last strip of each band holds only the image's remaining rows
         val stripsPerBand = (height + rps - 1) / rps
-        requireChunksInFile("strip", offsets,
-          if (compression == 1) s => chunkBytes(
-            math.min(rps, height - (s % stripsPerBand) * rps), width)
-          else byteCounts)
+        requireChunksInFile("strip", offsets, byteCounts,
+          s => chunkBytes(math.min(rps, height - (s % stripsPerBand) * rps), width))
         RasterMeta(path, width, height, bps, sampleFormat,
           scaleX, scaleY, originX, originY, noData,
           rotX = rotX, rotY = rotY,
           samplesPerPixel = spp,
           bigTiff = bigTiff, littleEndian = order == ByteOrder.LITTLE_ENDIAN,
           rowsPerStrip = rps, stripOffsets = offsets,
-          compression = compression, predictor = predictor, stripByteCounts = byteCounts,
+          compression = compression, predictor = predictor,
+          stripByteCounts = if (compression == 1) Vector.empty else byteCounts,
           planarConfig = planarCfg, imageIndex = overview,
           crsModelType = crsModelType, epsg = epsg, jpegTables = jpegTables)
       }

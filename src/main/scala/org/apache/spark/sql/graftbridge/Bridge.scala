@@ -6,7 +6,8 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession}
 
 /** The package-private Spark hops graft needs, in one place: wrap a
   * custom LogicalPlan ([[graft.plans.AsOfJoinPlan]]) back into a public
-  * DataFrame, convert Column ⇄ Expression, and drain the listener bus.
+  * DataFrame, convert Column ⇄ Expression, drain the listener bus, and
+  * set a write task's output metrics.
   * Spark offers no public API for these — every library that injects
   * custom logical operators (rather than just expressions) ships exactly
   * this kind of shim in an `org.apache.spark.sql` subpackage. Nothing
@@ -33,4 +34,18 @@ object Bridge {
     * are complete to read. Spark keeps the bus package-private. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Sets the running task's `outputMetrics` to what its writer wrote.
+    * Spark's file writer fills them, but its DSv2 write task
+    * (`WritingSparkTask`) leaves them at 0 and their setters are
+    * package-private; [[graft.sources.PointCsv]]'s writers call this at
+    * commit, so the Spark UI and listeners that read
+    * `recordsWritten`/`bytesWritten` see the CSV sink's output. A no-op
+    * outside a task. */
+  def setOutputMetrics(records: Long, bytes: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { tc =>
+      val m = tc.taskMetrics().outputMetrics
+      m.setRecordsWritten(records)
+      m.setBytesWritten(bytes)
+    }
 }

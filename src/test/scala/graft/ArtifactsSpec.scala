@@ -77,6 +77,9 @@ class ArtifactsSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-artifacts-fresh")
     val rewritten = copyDataset(root.resolve("rewritten"))
     val before = queries.map(q => q -> answer(q, rewritten)).toMap
+    val old = Artifacts.tables(spark, rewritten).get
+    def oldBound: Seq[String] = Artifacts.sessionBound.collect { case (kind, in) if in == old => kind }
+    assert(oldBound.nonEmpty, "no session-bound artifact was built over the dataset")
     val changed = changedTables(root.resolve("stage"))
     overwrite(rewritten, changed)
     val filtered = copyDataset(root.resolve("filtered"))
@@ -86,6 +89,8 @@ class ArtifactsSpec extends SparkSpec {
       assert(expected != before(q), s"$q: the rewrite does not change its answer")
       assert(answer(q, rewritten) == expected, s"$q served an artifact of the old files")
     }
+    // rebuilding over the new files dropped every frame built over the old
+    assert(oldBound.isEmpty, s"session-bound artifacts of the old files remain: ${oldBound.sorted}")
   }
 
   test("on-disk artifacts of datasets whose dir names share a String.hashCode stay apart") {

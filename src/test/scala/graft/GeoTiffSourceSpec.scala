@@ -1865,4 +1865,81 @@ class GeoTiffSourceSpec extends SparkSpec {
       (k, c, r) => (k * 50 + c * 3 + r) % 251, 2.0, 30.0, 0.5, Some("0"), levels = 2)
     for (k <- 0 to 2) sameAsOracle(ovr, 1, Some(0.0), overview = k)
   }
+
+  test("sparse chunks (offset 0, byte count 0) read as NoData in every layout and codec") {
+    val (w, h, nd, secNd) = (40, 28, -9999.0, -7.0)
+    def maskV(c: Int, r: Int): Double = if ((c * 7 + r * 3) % 11 == 0) nd else c * 0.5 + r
+    def secV(c: Int, r: Int): Double = (c * 13 + r * 5) % 300 - 150.0
+    def rows(paths: Seq[String], block: Int): Seq[String] =
+      Raster.raster2df(spark, paths, maxBlockSize = block).collect().map(_.toString).toSeq.sorted
+    // stripped (4-row strips, classic and BigTIFF) and tiled (16x16),
+    // uncompressed and DEFLATE: mask chunk 2 and secondary chunk 4 sparse
+    for (tiled <- Seq(false, true); classic <- Seq(true, false) if !(tiled && classic);
+         codec <- Seq(1, 8)) {
+      val tag = s"${if (tiled) "t" else "s"}${if (classic) "c" else "b"}$codec"
+      def inChunk(k: Int)(c: Int, r: Int): Boolean =
+        if (tiled) r / 16 == k / 3 && c / 16 == k % 3 else r / 4 == k
+      def raster(name: String, v: (Int, Int) => Double, noData: Option[Double],
+          dtype: TiffFixtures.Dtype): String = {
+        val p = s"$tmp/sparse_${name}_$tag.tif"
+        val ndText = noData.map(d => s"${d.toInt}")
+        if (tiled) TiffFixtures.writeBigTiffTiled(p, w, h, v, 10.0, 50.0, 0.01, ndText, 16, 16,
+          dtype = dtype, compression = codec)
+        else TiffFixtures.writeBigTiff(p, w, h, v, 10.0, 50.0, 0.01, ndText, rowsPerStrip = 4,
+          dtype = dtype, compression = codec, classic = classic)
+      }
+      def sparsed(p: String, k: Int): String =
+        TiffFixtures.sparse(p, p.replace(".tif", "_sparse.tif"), tiled, Seq(k))
+      val inMask = inChunk(2) _
+      val inSec = inChunk(4) _
+      val mask = raster("mask", maskV, Some(nd), TiffFixtures.F32)
+      val sec = raster("sec", secV, Some(secNd), TiffFixtures.S16)
+      val secBare = raster("secbare", secV, None, TiffFixtures.S16)
+      // oracles: the same rasters written densely with NoData (0 without
+      // one) over the sparse chunk
+      val maskOracle = raster("mask_o", (c, r) => if (inMask(c, r)) nd else maskV(c, r),
+        Some(nd), TiffFixtures.F32)
+      val secOracle = raster("sec_o", (c, r) => if (inSec(c, r)) secNd else secV(c, r),
+        Some(secNd), TiffFixtures.S16)
+      val secBareOracle = raster("secbare_o", (c, r) => if (inSec(c, r)) 0.0 else secV(c, r),
+        None, TiffFixtures.S16)
+      for (block <- Seq(7, 64)) {
+        val got = rows(Seq(sparsed(mask, 2), sparsed(sec, 4), sparsed(secBare, 4)), block)
+        assert(got == rows(Seq(maskOracle, secOracle, secBareOracle), block), s"$tag block $block")
+        assert(got.size < rows(Seq(mask, sec, secBare), block).size, tag)
+      }
+      // a mask without NoData: its sparse chunk's pixels emit no row
+      val bare = raster("maskbare", (c, r) => c * 0.5 + r, None, TiffFixtures.F32)
+      val n = Raster.raster2df(spark, Seq(sparsed(bare, 2)), maxBlockSize = 7).count()
+      val chunkPixels = (for (r <- 0 until h; c <- 0 until w if inMask(c, r)) yield 1).size
+      assert(chunkPixels > 0 && n == w * h - chunkPixels, s"$tag: $n rows")
+    }
+  }
+
+  test("a chunk at offset 0 that is not sparse, and a short uncompressed byte count, fail at planning") {
+    def rejects(p: String, what: String): Unit = {
+      val e = intercept[IllegalArgumentException](Raster.raster2df(spark, Seq(p)).count())
+      assert(e.getMessage.contains(what), e.getMessage)
+    }
+    val v = (c: Int, r: Int) => (c + r).toDouble
+    for (codec <- Seq(1, 8)) {
+      val strips = TiffFixtures.writeBigTiff(s"$tmp/off0_s$codec.tif", 8, 8, v, 0.0, 4.0, 0.5,
+        None, rowsPerStrip = 2, compression = codec, classic = true)
+      val tiles = TiffFixtures.writeBigTiffTiled(s"$tmp/off0_t$codec.tif", 40, 28, v, 0.0, 4.0,
+        0.5, None, 16, 16, compression = codec)
+      rejects(TiffFixtures.patchIfd0(strips, s"$tmp/off0_s${codec}_p.tif")(
+        TiffFixtures.setChunk(273, 1, 0L)), "offset 0")
+      rejects(TiffFixtures.patchIfd0(tiles, s"$tmp/off0_t${codec}_p.tif")(
+        TiffFixtures.setChunk(324, 3, 0L)), "offset 0")
+    }
+    // uncompressed strips of 2 x 8 f32 pixels take 64 bytes; tiles 1 KiB
+    val strips = TiffFixtures.writeBigTiff(s"$tmp/short_s.tif", 8, 8, v, 0.0, 4.0, 0.5,
+      None, rowsPerStrip = 2, classic = true)
+    rejects(TiffFixtures.patchIfd0(strips, s"$tmp/short_s_p.tif")(
+      TiffFixtures.setChunk(279, 2, 63L)), "short of the 64 bytes")
+    val tiles = TiffFixtures.writeBigTiffTiled(s"$tmp/short_t.tif", 40, 28, v, 0.0, 4.0, 0.5,
+      None, 16, 16)
+    rejects(TiffFixtures.patchIfd0(tiles, s"$tmp/short_t_p.tif")(
+      TiffFixtures.setChunk(325, 5, 1000L)), "short of the 1024 bytes")
+  }
 }

@@ -4,15 +4,25 @@ import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.connector.catalog.SupportsWrite
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import scala.jdk.CollectionConverters._
 
 import graft.sources.PointCsv
 
 /** `Raster.raster2csv` writes through [[PointCsv]]; every file it writes
   * must equal what Spark's own CSV writer (`header=true`, same `sep`) writes
   * for the same `raster2df` frame, byte for byte and line for line in row
-  * order.
+  * order. The write path's own rules are checked too: which windows leave
+  * a file, the one accepted save mode, a failed write leaving the old
+  * output, the task output metrics, and the size of what each task is
+  * sent.
   */
 class PointCsvSpec extends SparkSpec {
   private val tmp = s"${System.getProperty("java.io.tmpdir")}/graft-pointcsv"
@@ -213,5 +223,128 @@ class PointCsvSpec extends SparkSpec {
     assert(data.sorted == want.sorted)
     Raster.raster2csv(spark, Seq(classicMask), out, maxBlockSize = block, singleFile = true)
     assert(parts(out).size == 1)
+  }
+
+  /** Every file under `dir` (no checksum sidecars) by name, with its bytes. */
+  private def snapshot(dir: String): Map[String, Seq[Byte]] =
+    new File(dir).listFiles().filterNot(_.getName.endsWith(".crc"))
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+
+  test("raster2csv leaves a file per window that has a point, plus a header-only first file") {
+    val block = 4
+    // NoData everywhere but the rightmost band of windows: the first window
+    // and the middle ones are empty
+    val right = TiffFixtures.writeBigTiff(s"$tmp/right_only.tif", w, h,
+      (c, r) => if (c >= 8) maskValue(c, r) else -9999.0, x0, y0, ps, Some("-9999"), classic = true)
+    val df = Raster.raster2df(spark, Seq(right), maxBlockSize = block)
+    val perWindow = df.rdd.mapPartitionsWithIndex((i, it) => Iterator(i -> it.size)).collect().toMap
+    assert(perWindow(0) == 0 && perWindow.count(_._2 == 0) > 1 && perWindow.exists(_._2 > 0))
+    val out = s"$tmp/empty_windows"
+    Raster.raster2csv(spark, Seq(right), out, maxBlockSize = block)
+    val files = parts(out)
+    assert(files.size == 1 + perWindow.count { case (i, n) => i != 0 && n > 0 })
+    val header = df.columns.mkString(",")
+    val first = files.filter(_.getName.startsWith("part-00000-"))
+    assert(first.size == 1 && new String(Files.readAllBytes(first.head.toPath), UTF_8) == s"$header\n")
+    assert(text(out).split("\n").count(_ != header) == perWindow.values.sum)
+    assert(new File(out, "_SUCCESS").exists)
+    assert(!new File(out).listFiles().exists(_.getName.startsWith("_temporary")))
+    // an all-NoData raster: one header-only file, from the first window
+    val none = TiffFixtures.writeBigTiff(s"$tmp/all_nodata.tif", w, h, (_, _) => -9999.0,
+      x0, y0, ps, Some("-9999"), classic = true)
+    Raster.raster2csv(spark, Seq(none), out, maxBlockSize = block)
+    assert(parts(out).map(_.getName.take(11)) == Seq("part-00000-") && text(out) == s"$header\n")
+  }
+
+  test("PointCsv refuses every save mode but overwrite before a task runs") {
+    val out = s"$tmp/modes"
+    Raster.raster2csv(spark, Seq(classicMask), out, maxBlockSize = 4)
+    val before = snapshot(out)
+    val df = Raster.raster2df(spark, Seq(classicMask), maxBlockSize = 4)
+    for (mode <- Seq("append", "errorifexists", "ignore")) {
+      val (e, jobs) = jobsDuring {
+        intercept[Exception](df.write.mode(mode).format(classOf[PointCsv].getName).save(out))
+      }
+      assert(e.isInstanceOf[IllegalArgumentException] || e.isInstanceOf[AnalysisException],
+        s"$mode: ${e.getClass.getName}: ${e.getMessage}")
+      if (mode == "append") assert(e.getMessage.contains("overwrite"), e.getMessage)
+      assert(jobs == 0, s"$mode: $jobs Spark jobs ran")
+      assert(snapshot(out) == before, s"$mode changed the output")
+    }
+  }
+
+  test("a write that fails in a task leaves the previous output byte for byte, and no staging dir") {
+    val out = s"$tmp/failed_write"
+    Raster.raster2csv(spark, Seq(classicMask), out, maxBlockSize = 4, calcArea = true)
+    val before = snapshot(out)
+    assert(before.keys.count(_.startsWith("part-")) > 1)
+    // four tasks, of which one throws after the others may have committed
+    val bad = spark.range(0, 400, 1, 4).select(col("id").cast("double").as("x"),
+      when(col("id") === 350, raise_error(lit("boom"))).otherwise(col("id")).as("y"))
+    val e = intercept[Exception] {
+      bad.write.mode("overwrite").format(classOf[PointCsv].getName).save(out)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")), e.toString)
+    assert(snapshot(out) == before)
+    assert(!new File(out).listFiles().exists(_.getName.startsWith("_temporary")))
+  }
+
+  test("task output metrics count the rows and bytes of the files written") {
+    val out = s"$tmp/metrics"
+    val (records, bytes) = (new java.util.concurrent.atomic.AtomicLong,
+      new java.util.concurrent.atomic.AtomicLong)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
+        records.addAndGet(m.outputMetrics.recordsWritten)
+        bytes.addAndGet(m.outputMetrics.bytesWritten)
+      }
+    }
+    val sc = spark.sparkContext
+    Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      Raster.raster2csv(spark, Seq(classicMask, typedRasters(6)), out, maxBlockSize = 4,
+        calcArea = true)
+      Bridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    val files = parts(out)
+    val valid = (for (r <- 0 until h; c <- 0 until w if !masked(c, r)) yield 1).size
+    assert(files.size > 1)
+    assert(records.get == valid)
+    assert(files.map(f => new String(Files.readAllBytes(f.toPath), UTF_8).count(_ == '\n') - 1).sum == valid)
+    assert(bytes.get == files.map(_.length).sum)
+  }
+
+  test("a write task is sent no Hadoop Configuration: the writer factory stays small") {
+    val frame = Raster.raster2df(spark, Seq(classicMask, typedRasters(6)), calcArea = true).schema
+    val table = new PointCsv().getTable(frame, Array.empty,
+      Map("path" -> s"$tmp/factory", "sep" -> ",").asJava).asInstanceOf[SupportsWrite]
+    val writeInfo = new LogicalWriteInfo {
+      override def options(): CaseInsensitiveStringMap =
+        new CaseInsensitiveStringMap(Map("path" -> s"$tmp/factory", "sep" -> ",").asJava)
+      override def queryId(): String = "factory-size"
+      override def schema(): StructType = frame
+    }
+    val batch = table.newWriteBuilder(writeInfo).asInstanceOf[SupportsTruncate].truncate().build().toBatch
+    def javaSize(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(o)
+      out.close()
+      bytes.size
+    }
+    try {
+      val factory = batch.createBatchWriterFactory(new PhysicalWriteInfo {
+        override def numPartitions(): Int = 16
+      })
+      // about 2 KB when measured (schema, paths, the broadcast's handle)
+      val size = javaSize(factory)
+      info(s"the writer factory serializes to $size bytes")
+      assert(size < 4096, s"the writer factory serializes to $size bytes")
+      val conf = javaSize(new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration))
+      assert(conf > 4096, s"a Hadoop Configuration serializes to only $conf bytes")
+    } finally batch.abort(Array.empty)
   }
 }

@@ -591,6 +591,17 @@ object TiffFixtures {
     }
   }
 
+  /** Copy the stripped or tiled TIFF `src` to `dst` with `chunks` made
+    * sparse: offset 0 and byte count 0, the layout GDAL's SPARSE_OK writes
+    * for a chunk whose pixels are all NoData. The chunks' bytes stay in the
+    * file, unreferenced.
+    */
+  def sparse(src: String, dst: String, tiled: Boolean, chunks: Seq[Int]): String =
+    patchIfd0(src, dst) { (bb, ifd) =>
+      val (offsets, counts) = if (tiled) (324, 325) else (273, 279)
+      chunks.foreach { i => setChunk(offsets, i, 0L)(bb, ifd); setChunk(counts, i, 0L)(bb, ifd) }
+    }
+
   /** BigTIFF with an OVERVIEW PYRAMID (the COG IFD-chain shape): IFD0 at
     * full resolution carrying the geo/nodata tags, then `levels` reduced-
     * resolution IFDs chained behind it — each with NewSubfileType = 1,
