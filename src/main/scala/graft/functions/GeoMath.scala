@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Geodesic pixel-area math on the WGS84 ellipsoid.
   *
   * A north-up geographic pixel spans [lat - dlat, lat + ...] × dlon; its
@@ -17,11 +14,8 @@ import org.apache.spark.sql.functions._
   * A6); constants are checked by property tests (zone sums ≈ analytic
   * ellipsoid area) rather than against the unavailable reference source.
   *
-  * Two forms are provided:
-  *   - [[pixelAreaM2]]: plain Scala, used inside the raster
-  *     PartitionReader (per-row, hot path, no Catalyst involved);
-  *   - [[pixelAreaColumn]]: the same formula as pure Catalyst Column
-  *     arithmetic — fully codegen'd, no UDF — for SQL-side use.
+  * [[pixelAreaM2]] is plain Scala, used inside the raster
+  * PartitionReader (per-row, hot path, no Catalyst involved).
   */
 object GeoMath {
   val SemiMajorM: Double = 6378137.0
@@ -88,16 +82,5 @@ object GeoMath {
       zoneIntegral(phi + q2 / 2.0) - zoneIntegral(phi - q2 / 2.0)
     val mean = (dF(latDeg - off) + dF(latDeg + off)) / 2.0
     math.toRadians(det / math.abs(q2)) * math.abs(mean)
-  }
-
-  /** Same formula as a Catalyst Column (codegen-friendly, no UDF). */
-  def pixelAreaColumn(lat: Column, dlatDeg: Double, dlonDeg: Double): Column = {
-    val b2 = SemiMinorM * SemiMinorM
-    def f(phi: Column): Column = {
-      val s = sin(radians(phi))
-      lit(b2 / 2.0) * (s / (lit(1.0) - lit(E2) * s * s) +
-        lit(1.0 / (2.0 * E)) * log((lit(1.0) + lit(E) * s) / (lit(1.0) - lit(E) * s)))
-    }
-    lit(math.toRadians(dlonDeg)) * abs(f(lat + lit(dlatDeg / 2.0)) - f(lat - lit(dlatDeg / 2.0)))
   }
 }

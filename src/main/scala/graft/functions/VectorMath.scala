@@ -17,8 +17,4 @@ object VectorMath {
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0),
       (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 }

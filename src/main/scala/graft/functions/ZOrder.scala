@@ -35,17 +35,11 @@ object ZOrder {
     // out-of-range inputs would silently interleave only their low bits —
     // colliding z values that quietly destroy the clustering property this
     // key exists for. Fail the task loudly instead; callers bucket first
-    // (zValueBucketed) when range isn't guaranteed.
+    // (pmod into [0, 2^bits)) when range isn't guaranteed.
     val inRange = cols.map(c => c >= 0 && c < lit(1L << bits)).reduce(_ && _)
     when(inRange, terms.reduce(_ + _))
       .otherwise(raise_error(lit(
         s"zValue input outside [0, ${1L << bits}) — bucket keys first " +
-          "(zValueBucketed) or widen bits")).cast("long"))
+          "(pmod into the range) or widen bits")).cast("long"))
   }
-
-  /** [[zValue]] with each column first bucketed into [0, 2^bits) by
-    * non-negative modulo — the convenient form for raw keys.
-    */
-  def zValueBucketed(cols: Seq[Column], bits: Int): Column =
-    zValue(cols.map(c => pmod(c, lit(1L << bits))), bits)
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 32-bit SimHash over an array of string tokens — the fused form
-  * of operators.SimHash.simhashHof's declarative double fold, bit-identical
-  * by construction (equality-tested in DedupSpec):
+  * of the declarative double fold it replaced (kept as DedupSpec's
+  * `simhashHof`), bit-identical by construction (equality-tested there):
   *
   *   - tokens deduplicated (order-free: the per-bit counts are integer
   *     sums, so HashSet dedup ≡ array_distinct);

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** One media asset: an opaque binary payload plus typed metadata — the
@@ -34,24 +34,12 @@ final case class FrameFeatures(
     height: Int,
     mean_byte: Double)
 
-/** Decoded audio features — audio-named, so image consumers
-  * (resize / frame-sample) cannot silently misread them.
-  */
-final case class DecodedAudio(
-    doc_id: Long,
-    uri: String,
-    sample_rate: Int,
-    channels: Int,
-    n_samples: Int,
-    mean_amplitude: Double)
-
 /** Multimodal column plumbing (schema, partition-preserving batched decode,
-  * feature extraction) behind a [[MediaCodec]] seam with two
-  * implementations: [[Multimodal.StubCodec]], a deterministic fake used by
-  * the oracle-checked q38 (its output is a pure function of the bytes, so
-  * DuckDB can reproduce it), and [[Multimodal.ImageIoCodec]], a REAL
-  * PNG/JPEG decoder on JDK ImageIO — no external deps — proving the same
-  * plumbing carries real image decoding.
+  * feature extraction): [[Multimodal.StubCodec]] is a deterministic fake
+  * decoder used by the oracle-checked q38 (its output is a pure function
+  * of the bytes, so DuckDB can reproduce it); the perceptual hashes and
+  * [[Multimodal.frameFeatures]] decode real PNG, GIF and PCM16 WAV bytes
+  * on the JDK's ImageIO and javax.sound, no external deps.
   *
   * Scale posture: media bytes stay opaque binary in the DataFrame (columnar
   * parquet/binaryFile storage, no driver materialization); decode runs via
@@ -60,14 +48,6 @@ final case class DecodedAudio(
   * preserves partitioning (zero shuffle).
   */
 object Multimodal {
-
-  /** A media codec: `openPartition()` is called once per partition (the
-    * place to initialize a native context) and returns the decode function
-    * bytes => (width, height, n_frames, mean_byte).
-    */
-  trait MediaCodec extends Serializable {
-    def openPartition(): Array[Byte] => (Int, Int, Int, Double)
-  }
 
   /** Keep ImageIO streams IN MEMORY (round 17, guide §1.1/§6): with the
     * default `useCache=true`, every `ImageIO.read(InputStream)` /
@@ -91,7 +71,7 @@ object Multimodal {
     * layout it pretends to parse: byte0→width, byte1→height, byte2→frame
     * count. Being a pure function of the bytes keeps q38 oracle-checkable.
     */
-  object StubCodec extends MediaCodec {
+  object StubCodec {
     final class Handle // stands in for a real per-executor codec context
 
     def open(): Handle = new Handle
@@ -108,125 +88,6 @@ object Multimodal {
     def openPartition(): Array[Byte] => (Int, Int, Int, Double) = {
       val h = open()
       bytes => decode(h, bytes)
-    }
-  }
-
-  /** Real still-image codec on JDK ImageIO (PNG/JPEG/GIF/BMP — whatever the
-    * JVM's registered readers handle). n_frames is 1; mean_byte is the mean
-    * over every 8-bit RGB component of every pixel.
-    */
-  object ImageIoCodec extends MediaCodec {
-    def openPartition(): Array[Byte] => (Int, Int, Int, Double) = {
-      imageIoInMemory()
-      bytes =>
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      require(img != null, "bytes are not a decodable image")
-      val w = img.getWidth
-      val h = img.getHeight
-      var sum = 0L
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y)
-          sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-          x += 1
-        }
-        y += 1
-      }
-      (w, h, 1, sum.toDouble / (w.toLong * h * 3))
-    }
-  }
-
-  /** Real MULTI-FRAME codec on JDK ImageIO's animated-GIF reader — the
-    * closest this container gets to video: n_frames is the actual frame
-    * count (`getNumImages(true)` forces a full directory scan), dims and
-    * mean come from frame 0. Feeding [[sampleFrames]] real frame counts is
-    * the point: the video path (decode → frame-sample → per-frame work) is
-    * then exercised end to end on a real container format, not the stub's
-    * pretend header.
-    */
-  object GifCodec extends MediaCodec {
-    def openPartition(): Array[Byte] => (Int, Int, Int, Double) = {
-      imageIoInMemory()
-      bytes =>
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      // the reader lookup can reject the bytes — from that point on the
-      // stream must close on EVERY exit, or each bad row leaks a stream
-      // for the life of the partition-long closure
-      var reader: javax.imageio.ImageReader = null
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        require(readers.hasNext, "bytes are not a decodable image container")
-        reader = readers.next()
-        reader.setInput(iis)
-        val nFrames = reader.getNumImages(true)
-        require(nFrames >= 1, "container holds no frames")
-        val img = reader.read(0)
-        val w = img.getWidth
-        val h = img.getHeight
-        var sum = 0L
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val rgb = img.getRGB(x, y)
-            sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-            x += 1
-          }
-          y += 1
-        }
-        (w, h, nFrames, sum.toDouble / (w.toLong * h * 3))
-      } finally {
-        if (reader != null) reader.dispose()
-        iis.close()
-      }
-    }
-  }
-
-  /** Real audio codec: canonical little-endian PCM16 RIFF parses on the
-    * lock-free direct path ([[parseCanonicalPcm16]] — AudioSystem
-    * serializes under a global lock, so per-row JDK decode makes an
-    * executor single-core); everything else — big-endian, compressed,
-    * WAVE_FORMAT_EXTENSIBLE — falls back to JDK javax.sound (same
-    * zero-dependency standing as [[ImageIoCodec]]'s javax.imageio), whose
-    * frame-truncation semantics the direct parse mirrors exactly. The
-    * codec tuple maps audio-semantically: (sample_rate, channels,
-    * n_samples_per_channel, mean |amplitude|); prefer the typed
-    * [[decodeAudio]] door, which names the fields honestly instead of
-    * reusing the image schema.
-    */
-  object WavCodec extends MediaCodec {
-    def openPartition(): Array[Byte] => (Int, Int, Int, Double) = { bytes =>
-      // canonical little-endian PCM16 takes the lock-free direct parse
-      // (AudioSystem serializes globally — see parseCanonicalPcm16);
-      // everything else falls back to javax.sound below, identical values
-      Multimodal.decodeCanonicalPcm16(bytes).getOrElse(
-        decodeViaJavaxSound(bytes))
-    }
-
-    private def decodeViaJavaxSound(bytes: Array[Byte]): (Int, Int, Int, Double) = {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val fmt = ais.getFormat
-        require(fmt.getEncoding ==
-          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-          fmt.getSampleSizeInBits == 16,
-          s"only signed PCM16 supported, got $fmt")
-        val data = ais.readAllBytes()
-        val n = data.length / 2
-        require(n > 0, "empty audio data") // 0/0 would be a silent NaN
-        val bb = java.nio.ByteBuffer.wrap(data).order(
-          if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-          else java.nio.ByteOrder.LITTLE_ENDIAN)
-        var sum = 0L
-        var i = 0
-        while (i < n) { sum += math.abs(bb.getShort(i * 2).toLong); i += 1 }
-        (fmt.getSampleRate.toInt, fmt.getChannels,
-          n / fmt.getChannels, sum.toDouble / n)
-      } finally ais.close()
     }
   }
 
@@ -248,33 +109,16 @@ object Multimodal {
 
   /** Batched, partition-preserving decode: one codec context per partition,
     * streamed over the rows — the Spark-idiomatic shape for expensive
-    * per-row native decodes. Defaults to the stub (q38's oracle-checkable
-    * contract); pass [[ImageIoCodec]] for real image bytes.
+    * per-row native decodes, here through the stub (q38's
+    * oracle-checkable contract).
     */
-  def decode(
-      media: Dataset[MediaRow],
-      codec: MediaCodec = StubCodec): Dataset[DecodedMedia] = {
+  def decode(media: Dataset[MediaRow]): Dataset[DecodedMedia] = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
-      val dec = codec.openPartition() // once per partition
+      val dec = StubCodec.openPartition() // once per partition
       it.map { m =>
         val (w, ht, fr, mean) = dec(m.bytes)
         DecodedMedia(m.doc_id, m.uri, w, ht, fr, mean)
-      }
-    }
-  }
-
-  /** Typed audio decode — the honest door for audio rows: decoded fields
-    * carry audio names instead of riding [[DecodedMedia]]'s image schema
-    * (where resizePlan/sampleFrames would happily "resize" a sample rate).
-    */
-  def decodeAudio(media: Dataset[MediaRow]): Dataset[DecodedAudio] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      val dec = WavCodec.openPartition() // once per partition
-      it.map { m =>
-        val (rate, ch, n, mean) = dec(m.bytes)
-        DecodedAudio(m.doc_id, m.uri, rate, ch, n, mean)
       }
     }
   }
@@ -434,11 +278,11 @@ object Multimodal {
   /** 64-bit audio energy-envelope fingerprint — [[aHash64]]'s audio twin:
     * decode PCM16 (canonical little-endian RIFF/WAVE via a lock-free
     * direct parse — see [[parseCanonicalPcm16]] for why javax.sound is
-    * only the fallback — anything else through the same JDK javax.sound
-    * path as [[WavCodec]]), split the sample stream into 64 equal time
-    * windows, mean |amplitude| per window, threshold each at the global
-    * window mean. Both decode paths produce the identical fingerprint;
-    * equality is property-pinned in MultimodalSpec. Invariant to sample-rate
+    * only the fallback — anything else through JDK javax.sound), split
+    * the sample stream into 64 equal time windows, mean |amplitude| per
+    * window, threshold each at the global window mean. Both decode paths
+    * produce the identical fingerprint; equality is property-pinned in
+    * MultimodalSpec. Invariant to sample-rate
     * metadata and robust to small edits/noise; sensitive to the loudness
     * envelope, which is what near-duplicate re-encodes preserve. Same
     * honest limitation as flat images: near-silence (or any constant
@@ -476,12 +320,11 @@ object Multimodal {
     * for 640k calls), so a 1M-clip corpus paid ~220 s of effectively
     * single-core decode before this path existed (BASELINE round-14 row).
     */
-  /** Canonical-PCM16 parse result: data offset, total sample count (across
-    * channels — the flat interleaved stream both consumers fold over),
-    * sample rate, channel count.
+  /** Canonical-PCM16 parse result: data offset and total sample count
+    * (across channels — the flat interleaved stream the envelope folds
+    * over).
     */
-  private[graft] final case class CanonicalPcm16(
-      off: Int, nSamples: Int, rate: Int, channels: Int)
+  private[graft] final case class CanonicalPcm16(off: Int, nSamples: Int)
 
   private[graft] def parseCanonicalPcm16(b: Array[Byte]): Option[CanonicalPcm16] = {
     def tag(i: Int, s: String): Boolean =
@@ -493,7 +336,6 @@ object Multimodal {
     if (b.length < 44 || !tag(0, "RIFF") || !tag(8, "WAVE")) return None
     var pos = 12
     var fmtOk = false
-    var rate = 0
     var channels = 0
     while (pos + 8 <= b.length) {
       val sz = u32(pos + 4)
@@ -516,7 +358,6 @@ object Multimodal {
         if (u16(body + 12) != 2 * channels) return None
         val r = u32(body + 4)
         if (r < 1 || r > Int.MaxValue) return None
-        rate = r.toInt
       } else if (tag(pos, "data")) {
         if (!fmtOk) return None
         // FRAME-align like javax.sound does: a data chunk that is not a
@@ -527,7 +368,7 @@ object Multimodal {
         // raises its typed "empty audio data" error.
         val frames = (sz / (2L * channels)).toInt
         if (frames < 1) return None
-        return Some(CanonicalPcm16(body, frames * channels, rate, channels))
+        return Some(CanonicalPcm16(body, frames * channels))
       }
       pos = body + sz.toInt + (sz.toInt & 1) // RIFF chunks are word-aligned
     }
@@ -540,7 +381,7 @@ object Multimodal {
     * the fingerprint space between them) — the property test then checks
     * the decode, not two hand-kept copies.
     */
-  private def envelopeFp64(absSample: Int => Long, n: Int): Long = {
+  private[graft] def envelopeFp64(absSample: Int => Long, n: Int): Long = {
     val cells = new Array[Double](64)
     var i = 0
     while (i < 64) {
@@ -574,29 +415,11 @@ object Multimodal {
     hash
   }
 
-  /** Typed canonical decode for [[WavCodec]]'s fast path — the codec tuple
-    * (rate, channels, samples per channel, mean |amplitude|) from the same
-    * lock-free parse; None → the caller falls back to javax.sound.
-    */
-  private[multimodal] def decodeCanonicalPcm16(
-      bytes: Array[Byte]): Option[(Int, Int, Int, Double)] =
-    parseCanonicalPcm16(bytes).map { c =>
-      var sum = 0L
-      var i = 0
-      while (i < c.nSamples) {
-        val idx = c.off + i * 2
-        val v = ((bytes(idx) & 0xff) | (bytes(idx + 1) << 8)).toShort
-        sum += math.abs(v.toLong)
-        i += 1
-      }
-      (c.rate, c.channels, c.nSamples / c.channels, sum.toDouble / c.nSamples)
-    }
-
   /** javax.sound decode handing `f` an |sample| accessor + count — the
     * exotic-layout fallback door shared by the whole-clip fingerprint and
     * the block envelope (one decode body, two consumers).
     */
-  private def viaJavaxSound[T](bytes: Array[Byte])(f: (Int => Long, Int) => T): T = {
+  private[graft] def viaJavaxSound[T](bytes: Array[Byte])(f: (Int => Long, Int) => T): T = {
     val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
       new java.io.ByteArrayInputStream(bytes))
     try {
@@ -614,9 +437,6 @@ object Multimodal {
       f(s => math.abs(bb.getShort(s * 2).toLong), n)
     } finally ais.close()
   }
-
-  private[graft] def audioFp64ViaJavaxSound(bytes: Array[Byte]): Long =
-    viaJavaxSound(bytes)(envelopeFp64)
 
   /** Mean |amplitude| per FIXED-SIZE block of `blockSamples` samples (a
     * trailing partial block is dropped — fixed duration is what makes a
@@ -636,10 +456,6 @@ object Multimodal {
     }
     cells
   }
-
-  /** [[blockCells]] behind the decode door — spec/rehearsal entry point. */
-  private[graft] def blockEnvelope(bytes: Array[Byte], blockSamples: Int): Array[Double] =
-    withAbsSamples(bytes)(blockCells(_, _, blockSamples))
 
   /** Canonical PCM16 mono RIFF/WAVE (8000 Hz, 512 samples) whose 64
     * constant-amplitude envelope windows (× 8 samples each) align exactly
@@ -695,7 +511,7 @@ object Multimodal {
     * whole clip's 64 scale-normalized envelope cells, so a trimmed/padded
     * near-dup — the commonest real audio edit — shifts every cell and
     * escapes. Here the envelope is computed over FIXED-duration blocks
-    * ([[blockEnvelope]]) and hashed over overlapping 64-block windows at
+    * ([[blockCells]]) and hashed over overlapping 64-block windows at
     * stride `hopBlocks`: `(doc_id, rank, sfp)`. A trim by a multiple of
     * `hopBlocks × blockSamples` samples is then a pure RANK SHIFT — the
     * interior sub-fingerprints are bit-identical; a non-hop-aligned trim
@@ -992,14 +808,6 @@ object Multimodal {
       least(lit(1.0), lit(maxSide) / greatest(col("width"), col("height"))).as("scale"))
       .withColumn("out_w", ceil(col("width") * col("scale")).cast("int"))
       .withColumn("out_h", ceil(col("height") * col("scale")).cast("int"))
-
-  /** Frame sampling for "video" media: one row per sampled frame index —
-    * pure explode, no shuffle.
-    */
-  def sampleFrames(decoded: Dataset[DecodedMedia], stride: Int): DataFrame =
-    decoded.toDF().select(
-      col("doc_id"),
-      explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_idx"))
 
   /** The VIDEO path run end to end on a real multi-frame container
     * (ImageIO's animated-GIF reader — the closest zero-dependency stand-in

@@ -32,9 +32,9 @@ final case class Vec(id: Long, embedding: Array[Float])
   */
 object Ann {
 
-  /** Cosine via the native codegen'd vec_dot expression — identical math to
-    * VectorMath.cosine (sequential double accumulate), ~an order of
-    * magnitude less per-row overhead in the scoring loop.
+  /** Cosine via the native codegen'd vec_dot expression — identical math
+    * to a cosine over VectorMath.dot (sequential double accumulate), ~an
+    * order of magnitude less per-row overhead in the scoring loop.
     */
   private def cosineNative(a: Column, b: Column): Column =
     GraftFunctions.vecDot(a, b) /
@@ -56,11 +56,6 @@ object Ann {
     val rnd = new java.util.Random(seed)
     Array.fill(tables, nbits, dim)(rnd.nextGaussian())
   }
-
-  /** First embedding's length — one limit-1 scan job. Throws on an empty
-    * corpus; operators that accept empty input take(1) and branch instead.
-    */
-  def headDim(corpus: Dataset[Vec]): Int = corpus.head().embedding.length
 
   /** (id, table, bucket) keys for every vector: bucket = sign bits of the
     * nbits hyperplane projections. Runs as a partition-local map (typed,
@@ -130,28 +125,10 @@ object Ann {
       .as[Vec].collect()
   }
 
-  /** Every 4th of a 4x sample, so seeds stay spread across the id range —
-    * take(nCells) of the ordered sample would concentrate every seed in
-    * the lowest-id quarter, which for id-correlated embeddings (time- or
-    * cluster-ordered corpora) collapses quantizer coverage.
-    */
-  private def stridedSeeds(sample: Array[Vec], nCells: Int): Array[Vec] =
-    sample.zipWithIndex.collect {
-      case (v, i) if i % 4 == 0 => v
-    }.take(nCells)
-
-  /** IVF coarse quantizer seeds: `nCells` deterministically-sampled corpus
-    * vectors (4x oversampled hash-mod filter, strided back down). A cheap
-    * stand-in for trained centroids — see [[ivfCentroidsKMeans]] for the
-    * trained path; both share the shuffle-free selection.
-    */
-  def ivfCentroids(corpus: Dataset[Vec], nCells: Int): Array[Vec] =
-    stridedSeeds(hashModSample(corpus, nCells * 4), nCells)
-
   /** Trained coarse quantizer: seeded Lloyd's iterations (spherical k-means
     * by cosine) over a BOUNDED deterministic sample of ~nCells*sampleFactor
     * vectors. The sample size is independent of corpus scale — the
-    * selection is the same shuffle-free hash-mod scan as [[ivfCentroids]].
+    * selection is the shuffle-free hash-mod scan of [[hashModSample]].
     * Deterministic: same corpus + params => same centroids.
     *
     * The assignment scan (each sample vector's nearest centroid) is
@@ -179,7 +156,8 @@ object Ann {
     if (sample.length <= nCells)
       return sample.zipWithIndex.map { case (v, i) => Vec(i.toLong, v.embedding) }
     val dim = sample(0).embedding.length
-    // strided init for the same id-spread reason as ivfCentroids: Lloyd's
+    // strided init, so seeds stay spread across the id range (the lowest
+    // ids alone collapse coverage on id-correlated corpora): Lloyd's
     // converges to a much better quantizer from spread seeds
     var cents: Array[Array[Double]] = sample.zipWithIndex.collect {
       case (v, i) if i % math.max(1, sample.length / nCells) == 0 => v
@@ -302,8 +280,8 @@ object Ann {
   /** IVF approximate top-k: search only the `nprobe` cells nearest to each
     * query vector — candidates come from a cell-key equi-join, then exact
     * cosine reranks. At scale the assignment table is computed once and
-    * reused across queries (the classic IVF index). `trained=true` (default)
-    * uses the k-means quantizer; false uses raw sampled seeds.
+    * reused across queries (the classic IVF index). The quantizer is
+    * [[ivfCentroidsKMeans]].
     */
   def ivfTopK(
       spark: SparkSession,
@@ -311,13 +289,29 @@ object Ann {
       queryIds: Seq[Long],
       k: Int,
       nCells: Int = 16,
-      nprobe: Int = 4,
-      trained: Boolean = true): DataFrame = {
-    val cents =
-      if (trained) ivfCentroidsKMeans(corpus, nCells)
-      else ivfCentroids(corpus, nCells)
+      nprobe: Int = 4): DataFrame = {
+    val cents = ivfCentroidsKMeans(corpus, nCells)
     // assignments are consumed exactly once by the candidate join — no cache
-    ivfSearch(spark, corpus, ivfAssign(corpus, cents), cents, queryIds, k, nprobe)
+    val assigned = ivfAssign(corpus, cents)
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(cents)
+    val qCells = corpus.filter(col("id").isin(queryIds: _*)).as[Vec]
+      .flatMap { q => nearestCells(q.embedding, bc.value, nprobe).map(c => (q.id, c)) }
+      .toDF("q_id", "cell")
+    val candidates = assigned.join(broadcast(qCells), "cell")
+      .filter(col("id") =!= col("q_id"))
+      .select("q_id", "id").distinct()
+    val corpusDf = corpus.toDF("id", "embedding")
+    val qDf = corpusDf.filter(col("id").isin(queryIds: _*))
+      .select(col("id").as("q_id"), col("embedding").as("q_emb"))
+    GraftFunctions.register(spark)
+    val scored = candidates
+      .join(corpusDf, "id")
+      .join(broadcast(qDf), "q_id")
+      .select(col("q_id"), col("id"),
+        cosineNative(col("embedding"), col("q_emb")).as("cos_sim"))
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** FILTERED approximate search — the production path for hard-negative
@@ -375,148 +369,6 @@ object Ann {
         cosineNative(col("embedding"), col("q_emb")).as("cos_sim"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_sim").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Persist an IVF index (centroids + per-vector cell assignments) as
-    * parquet — the build-once / search-many lifecycle: at corpus scale the
-    * assignment pass is the expensive step, so it runs once and every
-    * later query reads the (cell-keyed, partition-prunable) assignment
-    * table instead of re-quantizing the corpus.
-    */
-  def buildIvfIndex(
-      corpus: Dataset[Vec],
-      path: String,
-      nCells: Int = 16,
-      trained: Boolean = true): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents =
-      if (trained) ivfCentroidsKMeans(corpus, nCells)
-      else ivfCentroids(corpus, nCells)
-    // normalize centroid ids to their ARRAY POSITION before persisting:
-    // the assignment table's `cell` is the position, and untrained seeds
-    // otherwise keep raw corpus ids — every index consumer would then have
-    // to know position != id (a trap that produced a real probe-by-id bug
-    // in the streaming dedup). After this, cell == centroid id everywhere.
-    val normalized = cents.zipWithIndex
-      .map { case (v, i) => Vec(i.toLong, v.embedding) }
-    spark.createDataset(normalized.toIndexedSeq)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    ivfAssign(corpus, cents)
-      .write.mode("overwrite").parquet(s"$path/assignments")
-  }
-
-  /** Append new vectors to a persisted [[buildIvfIndex]] index WITHOUT
-    * retraining: the persisted centroids ARE the quantizer, so index growth
-    * is one assignment pass over the batch plus an append write — cost
-    * scales with the batch, never the indexed corpus. This is the standard
-    * IVF lifecycle for a living corpus (new embeddings arrive continuously;
-    * the quantizer is rebuilt only when distribution drift degrades recall
-    * — until then appends land in existing cells and are immediately
-    * searchable by [[ivfTopKIndexed]] and the streaming dedup).
-    *
-    * Caller owns id uniqueness across appends (same single-writer posture
-    * as the bucketed upsert: a duplicate check here would cost a full
-    * assignments scan per batch — exactly the table-proportional work this
-    * operator exists to avoid).
-    */
-  def appendToIvfIndex(newVecs: Dataset[Vec], indexPath: String): Unit = {
-    val spark = newVecs.sparkSession
-    import spark.implicits._
-    // sortBy(id) == array-position order: buildIvfIndex normalizes centroid
-    // ids to positions before persisting, so assignment here agrees with
-    // every existing cell key
-    val cents = spark.read.parquet(s"$indexPath/centroids").as[Vec]
-      .collect().sortBy(_.id)
-    require(cents.nonEmpty, s"no centroids at $indexPath — build the index first")
-    // nearestCells tolerates ragged dims by comparing the common prefix —
-    // right for the search path, wrong for growth: appending a
-    // mismatched-dim batch would silently mis-assign into a good index
-    val dim = headDim(newVecs)
-    require(dim == cents(0).embedding.length,
-      s"batch dim $dim != index dim ${cents(0).embedding.length} — wrong index path?")
-    ivfAssign(newVecs, cents).write.mode("append").parquet(s"$indexPath/assignments")
-  }
-
-  /** The assignment table minus tombstoned ids — EVERY consumer of a
-    * persisted IVF index (batch search here, the streaming dedup) must
-    * read assignments through this so deleted vectors stop matching the
-    * moment [[deleteFromIvfIndex]] returns.
-    */
-  def loadIvfAssignments(spark: SparkSession, indexPath: String): DataFrame =
-    IndexTombstones.filterLive(spark,
-      spark.read.parquet(s"$indexPath/assignments"), s"$indexPath/deletes")
-
-  /** O(batch) tombstone DELETE from a persisted [[buildIvfIndex]] index —
-    * the erasure half of the lifecycle (append is the growth half). The
-    * centroids are untouched (they are the quantizer, not data), so
-    * delete-then-search equals a same-centroid rebuild without the
-    * deleted vectors, exactly (AnnSpec). Physical reclamation at the next
-    * [[compactIvfIndex]]; a tombstoned id can only be re-appended after
-    * that compact (the tombstone hides it by id until then).
-    */
-  def deleteFromIvfIndex(
-      spark: SparkSession, indexPath: String, ids: Seq[Long]): Unit =
-    IndexTombstones.record(spark, s"$indexPath/deletes",
-      spark.read.parquet(s"$indexPath/assignments").select(col("id")), ids)
-
-  /** Fold tombstones into the assignment table physically and reset the
-    * tombstone set. Cost ∝ index (explicit maintenance, like
-    * `Curation.compactBuckets`); the assignment rows are 2 longs each, so
-    * even at corpus scale this rewrite moves ~16 bytes/vector.
-    */
-  def compactIvfIndex(spark: SparkSession, indexPath: String): Unit = {
-    val live = loadIvfAssignments(spark, indexPath).localCheckpoint(true)
-    live.write.mode("overwrite").parquet(s"$indexPath/assignments")
-    IndexTombstones.clear(spark, s"$indexPath/deletes")
-  }
-
-  /** Search against a persisted index from [[buildIvfIndex]]: loads the
-    * (small, ≤nCells) centroid set to the driver and streams the
-    * assignment table — the corpus itself is only touched to fetch
-    * candidate and query embeddings.
-    */
-  def ivfTopKIndexed(
-      spark: SparkSession,
-      corpus: Dataset[Vec],
-      indexPath: String,
-      queryIds: Seq[Long],
-      k: Int,
-      nprobe: Int = 4): DataFrame = {
-    import spark.implicits._
-    val cents = spark.read.parquet(s"$indexPath/centroids").as[Vec]
-      .collect().sortBy(_.id)
-    val assigned = loadIvfAssignments(spark, indexPath)
-    ivfSearch(spark, corpus, assigned, cents, queryIds, k, nprobe)
-  }
-
-  private def ivfSearch(
-      spark: SparkSession,
-      corpus: Dataset[Vec],
-      assigned: DataFrame,
-      cents: Array[Vec],
-      queryIds: Seq[Long],
-      k: Int,
-      nprobe: Int): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cents)
-    val qCells = corpus.filter(col("id").isin(queryIds: _*)).as[Vec]
-      .flatMap { q => nearestCells(q.embedding, bc.value, nprobe).map(c => (q.id, c)) }
-      .toDF("q_id", "cell")
-    val candidates = assigned.join(broadcast(qCells), "cell")
-      .filter(col("id") =!= col("q_id"))
-      .select("q_id", "id").distinct()
-    val corpusDf = corpus.toDF("id", "embedding")
-    val qDf = corpusDf.filter(col("id").isin(queryIds: _*))
-      .select(col("id").as("q_id"), col("embedding").as("q_emb"))
-    GraftFunctions.register(spark)
-    val scored = candidates
-      .join(corpusDf, "id")
-      .join(broadcast(qDf), "q_id")
-      .select(col("q_id"), col("id"),
-        cosineNative(col("embedding"), col("q_emb")).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("id"))
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 

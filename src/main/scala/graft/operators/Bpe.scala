@@ -44,10 +44,9 @@ import org.apache.spark.sql.functions._
   *
   * Encoding: words seen in training are encoded by a dictionary equi-join
   * against the final word-type frame — the scalable path (broadcast when
-  * the dictionary is small, shuffle join otherwise). [[applyMerges]]
-  * covers UNSEEN words with a constant-depth chain of the same literal
-  * replaces (plan size linear in the merge count, zero extra passes),
-  * and a spec proves the two paths agree on every trained word.
+  * the dictionary is small, shuffle join otherwise). BpeSpec checks it
+  * against a chain of the same literal replaces applied to the raw word
+  * (`applyMerges`) on every trained word.
   */
 object Bpe {
 
@@ -56,15 +55,15 @@ object Bpe {
   final case class Merge(l: String, r: String, cnt: Long)
 
   /** Single-space sym → doubled-delimiter form (see class doc). */
-  private def doubled(sym: Column): Column = replace(sym, lit(" "), lit("  "))
+  private[graft] def doubled(sym: Column): Column = replace(sym, lit(" "), lit("  "))
 
   /** Doubled-delimiter form → canonical single-space sym. Safe because the
     * merge step preserves the exactly-two-spaces-per-boundary invariant. */
-  private def collapsed(sym: Column): Column = replace(sym, lit("  "), lit(" "))
+  private[graft] def collapsed(sym: Column): Column = replace(sym, lit("  "), lit(" "))
 
   /** One merge applied to the DOUBLED form — preserves the invariant, so
     * these chain with one replace per merge. */
-  private def mergeOnDoubled(d: Column, m: Merge): Column =
+  private[graft] def mergeOnDoubled(d: Column, m: Merge): Column =
     replace(d, lit(s" ${m.l}  ${m.r} "), lit(s" ${m.l}${m.r} "))
 
   /** Word-type table `(word, freq, sym)` — `sym` is the spaced symbol
@@ -322,7 +321,7 @@ object Bpe {
   /** Token counts per document via the DICTIONARY path: explode words,
     * equi-join the trained word-type frame, sum piece counts. Words not in
     * the dictionary are dropped (train-corpus encoding never hits this;
-    * for novel corpora pre-extend the dictionary with [[applyMerges]]).
+    * novel corpora need their words added to the dictionary first).
     */
   def encodeCounts(docs: DataFrame, trainedWordTypes: DataFrame,
       idCol: String, textCol: String): DataFrame = {
@@ -337,56 +336,5 @@ object Bpe {
       .join(dict.hint("shuffle_hash"), "word")
       .groupBy(col(idCol))
       .agg(sum(col("n_pieces")).as("n_pieces"))
-  }
-
-  /** The general (unseen-word) encoder: applies the merge list to a raw
-    * word column as a chain of literal replaces on the doubled-delimiter
-    * form (double once, one replace per merge, collapse once — the
-    * invariant makes the chain depth `merges.length + 2`). Same
-    * operations training applied, so for any trained word this EQUALS the
-    * dictionary path (spec-pinned). Returns the spaced symbol string;
-    * wrap with `size(split(trim(…), " "))` for a piece count.
-    *
-    * Plan-depth bound (round-9 `bpe_chain_depth` probe, BASELINE.md): the
-    * chain is one Catalyst expression linear in merge count, and Catalyst
-    * analysis RECURSES over it — 256 merges analyze fine, 512 throw
-    * `StackOverflowError` on a default driver stack. The require pins the
-    * measured-safe bound; production merge counts (8k–32k) go through
-    * [[applyMergesSegmented]], which checkpoints every `segment` merges so
-    * no single plan carries the whole chain.
-    */
-  def applyMerges(word: Column, merges: Seq[Merge]): Column = {
-    require(merges.length <= 256,
-      s"applyMerges chains ${merges.length} replaces in ONE expression; " +
-        "Catalyst analysis stack-overflows past ~512 (measured) — use " +
-        "applyMergesSegmented for production merge counts")
-    collapsed(merges.foldLeft(
-      doubled(concat(lit(" "), array_join(split(word, ""), " "), lit(" ")))) {
-      (acc, m) => mergeOnDoubled(acc, m)
-    })
-  }
-
-  /** Production-merge-count encoder: applies `merges` to `df`'s `wordCol`
-    * in segments of `segment` replaces, materializing (localCheckpoint)
-    * between segments so no single plan/codegen unit carries the whole
-    * chain. Use for 8k–32k-merge vocabularies where a single expression
-    * chain stack-overflows Catalyst analysis (measured at ~512, see
-    * [[applyMerges]]); the 128 default sits 4x under the cliff. Result
-    * column `outCol` holds the spaced symbol string, identical to
-    * [[applyMerges]] output (spec-pinned).
-    */
-  def applyMergesSegmented(df: DataFrame, wordCol: String, outCol: String,
-      merges: Seq[Merge], segment: Int = 128): DataFrame = {
-    require(segment >= 1 && segment <= 256,
-      s"segment must be in [1, 256] (analysis cliff at ~512), got $segment")
-    val start = df.withColumn(outCol,
-      doubled(concat(lit(" "), array_join(split(col(wordCol), ""), " "),
-        lit(" "))))
-    val chained = merges.grouped(segment).foldLeft(start) { (acc, seg) =>
-      acc.withColumn(outCol,
-        seg.foldLeft(col(outCol))((c, m) => mergeOnDoubled(c, m)))
-        .localCheckpoint(true)
-    }
-    chained.withColumn(outCol, collapsed(col(outCol)))
   }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *   - rendering is one hash aggregate per conversation whose
   *     collect_list buffer is bounded by SESSION length (the gap bound),
   *     never by corpus size — the same bounded-struct-agg contract as
-  *     SubstringDedup.excise stitching;
+  *     SubstringDedup.exciseSpans stitching;
   *   - mask spans are a second window over the same (user, session)
   *     partitioning — Catalyst reuses one exchange for both;
   *   - the content store joins in by key; a bounded store broadcasts, an

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.plans.GraftFunctions
 import graft.plans.GraftFunctions.vecDot
@@ -49,7 +49,7 @@ object KCenter {
     * point's min squared distance to the previously chosen centers at the
     * moment it was selected (the greedy max-min value; 0.0 for the seed).
     * `rank` 1..k in selection order. The k-center coverage radius after
-    * all k picks is `max(mind2)` over [[withMinDist]]'s final frame.
+    * all k picks is `max(mind2)` over the final state frame.
     */
   def select(vectors: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     val spark = vectors.sparkSession
@@ -108,29 +108,4 @@ object KCenter {
     * scan. Exactness: unconditional — `least` composes to the identical
     * sequential min over identically r4-snapped inputs. */
   val CheckpointEvery = 8
-
-  /** The final state frame `(id, mind2)`: every point's r4 squared
-    * distance to its nearest selected center — `max(mind2)` is the
-    * k-center coverage radius², the quantity the objective bounds. Runs
-    * the same trajectory as [[select]] (same snapping, same ties). */
-  def withMinDist(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int): DataFrame = {
-    val spark = vectors.sparkSession
-    GraftFunctions.register(spark)
-    import spark.implicits._
-    val centers = select(vectors, idCol, vecCol, k)
-      .select(col("rank"), col("id").as("c_id")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val centerIds = centers.values.toSeq
-    val v = vectors.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<float>").as("emb"))
-    val cemb = v.join(broadcast(centerIds.toDF("id")), Seq("id"), "left_semi")
-      .select(col("id").as("c_id"), col("emb").as("c_emb"))
-    v.crossJoin(broadcast(cemb))
-      .select(col("id"),
-        Parity.r4(vecDot(col("emb"), col("emb")) +
-          vecDot(col("c_emb"), col("c_emb")) -
-          lit(2.0) * vecDot(col("emb"), col("c_emb"))).as("d2"))
-      .groupBy(col("id")).agg(min(col("d2")).as("mind2"))
-  }
 }

@@ -50,7 +50,7 @@ object LabelPropagation {
       .distinct().localCheckpoint(true)
     // per-round checkpoints are LAZY: the logical plan is truncated either
     // way, and deferring materialization removes one blocking driver job
-    // per round (the round-9 PageRank finding — same rule in runLong)
+    // per round (the round-9 PageRank finding)
     var lab = nodes.select(col("id"), col("id").as("lbl"))
       .localCheckpoint(false)
     var t = 0
@@ -64,69 +64,6 @@ object LabelPropagation {
       val winners = cnts.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("dst").as("id"), col("lbl").as("new_lbl"))
-      lab = lab.join(winners, Seq("id"), "left")
-        .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-        .localCheckpoint(false)
-      t += 1
-    }
-    lab
-  }
-
-  /** Long-id labels occupy the low 24 bits of the packed argmax. */
-  val LabelBits = 24
-  val MaxLongLabel: Long = 1L << LabelBits
-
-  /** The numeric-id fast path: same synchronous semantics as [[run]]
-    * (ties to the SMALLEST label — numeric order here, string order
-    * there; identical whenever ids are single-digit or equal-width), but
-    * the per-node argmax is a packed-long `max()` — count in the high
-    * bits, bit-inverted label in the low [[LabelBits]] — so both the
-    * count and the argmax plan as HashAggregates: no per-round sort, no
-    * window exchange, partial aggregation collapses map-side (the
-    * SemDeDup packed-argmin pattern, on the max side). Checkpoints are
-    * LAZY (`localCheckpoint(false)`): the logical plan is truncated
-    * either way, and deferring materialization removes one blocking
-    * driver job per round (the round-9 PageRank finding). Measured
-    * (BASELINE round-9 part 3): 4 rounds on the 1M-node/10M-edge
-    * power-law graph — string+window path 313 s, this path is the
-    * production form.
-    *
-    * Node ids must be in [0, 2^24); the guard raises in-plan. Counts are
-    * bounded by in-degree < 2^39 (the pack would need ids past 550 B
-    * edges per node to overflow — raise_error guards that too).
-    */
-  def runLong(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
-      undirected: Boolean = true): DataFrame = {
-    require(iters >= 0 && iters <= 64, s"iters in [0, 64], got $iters")
-    val base = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-    val e = (if (undirected)
-        base.union(base.select(col("dst").as("src"), col("src").as("dst")))
-      else base)
-      .distinct().localCheckpoint(true)
-    val guard = (c: org.apache.spark.sql.Column) =>
-      when(c >= 0 && c < MaxLongLabel, c).otherwise(raise_error(concat(
-        lit(s"lpa: node id out of [0, $MaxLongLabel): "), c)))
-    // guard BOTH branches: with undirected=false a dst-only node never
-    // appears as src, so an unguarded dst branch would let an
-    // out-of-range id through in violation of the documented contract
-    val nodes = e.select(guard(col("src")).as("id"))
-      .union(e.select(guard(col("dst")).as("id")))
-      .distinct().localCheckpoint(true)
-    var lab = nodes.select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(false)
-    val inv = lit(MaxLongLabel - 1L)
-    var t = 0
-    while (t < iters) {
-      val cnts = e.join(lab.select(col("id").as("src"), col("lbl")), "src")
-        .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
-      val cGuard = when(col("c") < (1L << 39), col("c"))
-        .otherwise(raise_error(lit("lpa: in-degree too large to pack")))
-      val packed = shiftleft(cGuard, LabelBits) + (inv - col("lbl"))
-      val winners = cnts
-        .groupBy(col("dst")).agg(max(packed).as("p"))
-        .select(col("dst").as("id"),
-          (inv - pmod(col("p"), lit(MaxLongLabel))).as("new_lbl"))
       lab = lab.join(winners, Seq("id"), "left")
         .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
         .localCheckpoint(false)

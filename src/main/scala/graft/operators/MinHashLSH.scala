@@ -65,17 +65,6 @@ final case class MinHashLSH(
         org.apache.spark.sql.catalyst.expressions.Literal(numHashes)))
     }
 
-  /** The pre-round-3 declarative scale-path fold — kept as the reference
-    * semantics the native expression must reproduce bit-for-bit
-    * (DedupSpec equality test).
-    */
-  private[graft] def signatureHof(text: Column): Column =
-    aggregate(
-      transform(shingles(text), s => call_function("xxhash64", s)),
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(numHashes - 1)),
-        (m, j) => least(m, call_function("xxhash64", j, h))))
-
   /** Bucket keys that contentless documents land in and must never join:
     * the band hashes of the empty-shingle-set signature (all Long.MaxValue),
     * plus md5("") — a NULL text's signature is NULL, and concat_ws skips the
@@ -92,16 +81,6 @@ final case class MinHashLSH(
       md5hex(sig.slice(b * rowsPerBand, (b + 1) * rowsPerBand).mkString(","))
     } :+ md5hex("")
   }
-
-  /** One md5 bucket key per band over the signature slice. NOTE: only apply
-    * this to a signature that is already a materialized ATTRIBUTE — handing
-    * it `signature(...)` directly re-evaluates the whole signature once per
-    * band (Catalyst does not CSE into lambda bodies); candidatePairs uses
-    * the explode-then-[[bandHash]] form for exactly that reason.
-    */
-  def bandHashes(sig: Column): Column =
-    transform(sequence(lit(0), lit(numBands - 1)),
-      b => bandHash(sig, b))
 
   /** md5 bucket key of 0-based band `b` of a signature. */
   def bandHash(sig: Column, b: Column): Column =
@@ -133,7 +112,7 @@ final case class MinHashLSH(
     // not-in filter instead of re-evaluating the shingle expression per row.
     // The signature is materialized as an attribute BELOW the Generate and
     // the per-band md5 computes above it — the single-projection
-    // posexplode(bandHashes(signature(...))) form evaluated the signature
+    // posexplode of per-band hashes of signature(...) evaluated the signature
     // once PER BAND (3x the dominant cost; lambdas defeat CSE). The bucket
     // cap + self-join scaffold (no cache, AQE exchange reuse) is shared
     // with SimHash in BandedSelfJoin.
@@ -153,24 +132,11 @@ final case class MinHashLSH(
     * re-hashes the whole corpus per batch).
     */
   def bandIndex(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    bandIndex(df, idCol, textCol, Nil)
-
-  /** [[bandIndex]] threading extra source columns through unchanged —
-    * `carry` lets a watermarked stream keep its event-time column alive to
-    * a downstream `dropDuplicatesWithinWatermark` (which requires the
-    * event-time attribute in its input schema).
-    */
-  def bandIndex(
-      df: DataFrame, idCol: String, textCol: String,
-      carry: Seq[String]): DataFrame = {
-    val extra = carry.map(col)
-    df.select(col(idCol).as("id") +: signature(col(textCol)).as("sig") +: extra: _*)
-      .select(col("id") +: col("sig") +:
-        explode(sequence(lit(0), lit(numBands - 1))).as("band") +: extra: _*)
-      .select(col("id") +: col("band") +:
-        bandHash(col("sig"), col("band")).as("key") +: extra: _*)
+    df.select(col(idCol).as("id"), signature(col(textCol)).as("sig"))
+      .select(col("id"), col("sig"),
+        explode(sequence(lit(0), lit(numBands - 1))).as("band"))
+      .select(col("id"), col("band"), bandHash(col("sig"), col("band")).as("key"))
       .filter(!col("key").isin(emptySignatureBandHashes: _*))
-  }
 
   /** Near-dup candidates of a NEW batch against an existing [[bandIndex]]:
     * one equi-join on (band, key) — cost scales with the batch size and the
@@ -197,39 +163,24 @@ final case class MinHashLSH(
       textCol: String,
       index: DataFrame,
       maxBucket: Int = 0): DataFrame =
-    rawCandidatesAgainstIndex(newDf, idCol, textCol, index, maxBucket)
+    candidatesFromBands(bandIndex(newDf, idCol, textCol), index, maxBucket)
       .distinct()
 
-  /** [[candidatesAgainstIndex]] without the trailing distinct — the shared
-    * core for the streaming path, where a global distinct is an aggregation
-    * the sink mode may not allow (Streams.streamDedupAgainstIndex uses
-    * stateful dropDuplicates instead).
-    */
-  def rawCandidatesAgainstIndex(
-      newDf: DataFrame,
-      idCol: String,
-      textCol: String,
-      index: DataFrame,
-      maxBucket: Int = 0,
-      carry: Seq[String] = Nil): DataFrame =
-    candidatesFromBands(
-      bandIndex(newDf, idCol, textCol, carry), index, maxBucket, carry)
-
   /** The (band, key) candidate join over PRECOMPUTED batch band rows — the
-    * shared core of [[rawCandidatesAgainstIndex]], and the entry the
+    * shared core of [[candidatesAgainstIndex]], and the entry the
     * bucketed-store path uses ([[LshIndexStore]]): a caller that needs the
     * batch's band rows anyway (to derive the touched store buckets for a
     * pruned index read) computes them ONCE and joins here without
     * re-hashing the batch. `batchBands` must be [[bandIndex]]-shaped
-    * (id, band, key, carry...); semantics are identical to
-    * [[rawCandidatesAgainstIndex]], including the `maxBucket`
-    * representative-star cap on the index side.
+    * (id, band, key). Returns (new_id, index_id) rows, one per shared
+    * band bucket, without a distinct: a streaming caller dedups them with
+    * state (a global distinct is an aggregation its sink mode may not
+    * allow).
     */
   def candidatesFromBands(
       batchBands: DataFrame,
       index: DataFrame,
-      maxBucket: Int = 0,
-      carry: Seq[String] = Nil): DataFrame = {
+      maxBucket: Int = 0): DataFrame = {
     // The cap bounds JOIN FAN-OUT, not batch membership (round 16, twice
     // revised by measurement): with the cap on the index side only, every
     // batch row joins at most maxBucket index rows per band, so candidate
@@ -239,7 +190,7 @@ final case class MinHashLSH(
     // bound scales with the cap, so SIZE the cap, don't widen it.) The
     // batch side is deliberately NOT aggregated: a groupBy + left_anti on
     // a STREAMING batch is an unsupported streaming plan — capping there
-    // would break streamDedupAgainstIndex(maxBucket > 0) at query start.
+    // would break a streaming caller with maxBucket > 0 at query start.
     // Over-cap INDEX buckets keep their MIN-ID ROW as a representative
     // star instead of vanishing (the round's representative-star rule):
     // every batch row that lands in a degenerate bucket still meets one
@@ -269,13 +220,11 @@ final case class MinHashLSH(
         index.join(hot, Seq("band", "key"), "left_anti")
           .unionByName(reps.select(index.columns.map(col).toIndexedSeq: _*))
       }
-    val batch = batchBands
-    batch.as("n")
+    batchBands.as("n")
       .join(idx.as("x"),
         col("n.band") === col("x.band") && col("n.key") === col("x.key"))
       .filter(col("n.id") =!= col("x.id"))
-      .select(col("n.id").as("new_id") +: col("x.id").as("index_id") +:
-        carry.map(c => col("n." + c)): _*)
+      .select(col("n.id").as("new_id"), col("x.id").as("index_id"))
   }
 
   /** Exact set-Jaccard verification of candidate pairs — the standard

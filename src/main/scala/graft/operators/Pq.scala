@@ -85,9 +85,9 @@ object Pq {
 
   /** m x k table of exact subspace squared distances from `v` (a query or
     * a query residual) to every codebook centroid — THE shared LUT builder
-    * behind all four ADC search forms, so their math cannot drift apart.
+    * behind every ADC search form, so their math cannot drift apart.
     */
-  private def lutFor(v: Array[Float], model: PqModel): Array[Array[Double]] =
+  private[graft] def lutFor(v: Array[Float], model: PqModel): Array[Array[Double]] =
     Array.tabulate(model.m) { j =>
       val qs = v.slice(j * model.subDim, (j + 1) * model.subDim)
       model.codebooks(j).map { cb =>
@@ -98,7 +98,7 @@ object Pq {
     }
 
   /** The `nprobe` nearest coarse cells to a query, ties to the lowest id. */
-  private def probeCells(
+  private[graft] def probeCells(
       q: Array[Float], centsD: Array[Array[Double]], nprobe: Int): Array[Int] =
     centsD.indices.sortBy { ci =>
       val c = centsD(ci); var d = 0.0; var i = 0
@@ -106,7 +106,7 @@ object Pq {
       (d, ci)
     }.take(nprobe).toArray
 
-  private def residual(v: Array[Float], c: Array[Float]): Array[Float] =
+  private[graft] def residual(v: Array[Float], c: Array[Float]): Array[Float] =
     Array.tabulate(v.length)(i => v(i) - c(i))
 
   /** Train per-subspace codebooks on a bounded deterministic sample.
@@ -151,31 +151,10 @@ object Pq {
     }
   }
 
-  /** ADC top-k by (approximate) squared L2: the m x k query lookup table
-    * is exact per subspace; each candidate costs m lookups. Deterministic
-    * ties to the lowest id via TakeOrdered on (dist2, id).
-    */
-  def adcTopK(
-      codes: Dataset[PqCode], model: PqModel,
-      query: Array[Float], kNN: Int): DataFrame = {
-    import codes.sparkSession.implicits._
-    require(query.length == model.m * model.subDim,
-      s"query dim ${query.length} != model dim ${model.m * model.subDim}")
-    val m = model.m
-    val lut = lutFor(query, model)
-    codes.map { c =>
-      var d = 0.0; var j = 0
-      while (j < m) { d += lut(j)(c.code(j)); j += 1 }
-      (c.id, d)
-    }.toDF("id", "dist2")
-      .orderBy(col("dist2"), col("id"))
-      .limit(kNN)
-  }
-
   /** Batch ADC: all queries' lookup tables ride one task closure and the
     * corpus is scanned ONCE — q queries cost q*m lookups per candidate in
-    * a single pass, not q passes (the realistic search shape; per-query
-    * [[adcTopK]] re-scans per call). Top-k per query via a ranking window
+    * a single pass, not q passes (a per-query search would re-scan per
+    * call). Top-k per query via a ranking window
     * on (dist2, id) — deterministic ties.
     */
   def adcTopKMany(
@@ -254,72 +233,27 @@ object Pq {
     }
   }
 
-  /** ADC search probing only the `nprobe` nearest cells: per probed cell
-    * the query RESIDUAL gets its own m x k lookup table (the residual
-    * differs per cell), then candidates in those cells cost m lookups
-    * each. The cell filter is the IVF win (≈ nprobe/nCells of the corpus
-    * scanned — with codes partitioned by cell, partition pruning); the
-    * code width is the PQ win.
-    */
-  def ivfPqTopK(
-      codes: Dataset[IvfPqCode], model: IvfPqModel,
-      query: Array[Float], nprobe: Int, kNN: Int): DataFrame = {
-    import codes.sparkSession.implicits._
-    val centsD = model.centroids.map(_.map(_.toDouble))
-    val m = model.pq.m
-    val probed = probeCells(query, centsD, nprobe)
-    // per probed cell: LUT of the query residual against the codebooks
-    val luts: Map[Int, Array[Array[Double]]] = probed.map { ci =>
-      ci -> lutFor(residual(query, model.centroids(ci)), model.pq)
-    }.toMap
-    val probedSet = probed.toSet
-    codes.filter(c => probedSet.contains(c.cell))
-      .map { c =>
-        val lut = luts(c.cell)
-        var d = 0.0; var j = 0
-        while (j < m) { d += lut(j)(c.code(j)); j += 1 }
-        (c.id, c.cell, d)
-      }.toDF("id", "cell", "dist2")
-      .orderBy(col("dist2"), col("id"))
-      .limit(kNN)
-  }
-
-  /** Batch IVF-PQ: one scan answers every query — each code row is scored
-    * against exactly the queries probing its cell (union of per-query
-    * probe sets filters the scan; per-(query, cell) residual LUTs ride the
-    * closure). Top-k per query via the same deterministic ranking window
-    * as [[adcTopKMany]].
+  /** Batch IVF-PQ ADC: per query, the `nprobe` nearest cells each get a
+    * LUT of the query RESIDUAL (it differs per cell), and one scan scores
+    * every code row against exactly the queries probing its cell. The
+    * cell filter is the IVF win (≈ nprobe/nCells of the corpus scanned),
+    * the code width the PQ win. The filter is a Column predicate, so when
+    * `codes` comes from a cell-partitioned parquet index the probed-cell
+    * restriction becomes PARTITION PRUNING — a typed lambda filter would
+    * force a full scan. Top-k per query via the same deterministic ranking
+    * window as [[adcTopKMany]].
     */
   def ivfPqTopKMany(
       codes: Dataset[IvfPqCode], model: IvfPqModel,
-      queries: Seq[(Long, Array[Float])], nprobe: Int, kNN: Int): DataFrame =
-    ivfPqScore(codes, model, ivfPqLuts(model, queries, nprobe), kNN)
-
-  /** Per query: probed cells + per-cell residual LUT (same helpers as the
-    * single-query form — the "*Many equals per-query" invariant is free).
-    */
-  private def ivfPqLuts(
-      model: IvfPqModel, queries: Seq[(Long, Array[Float])],
-      nprobe: Int): Array[(Long, Map[Int, Array[Array[Double]]])] = {
-    val centsD = model.centroids.map(_.map(_.toDouble))
-    queries.map { case (qid, q) =>
-      qid -> probeCells(q, centsD, nprobe).map { ci =>
-        ci -> lutFor(residual(q, model.centroids(ci)), model.pq)
-      }.toMap
-    }.toArray
-  }
-
-  /** One scan scores every code row against exactly the queries probing its
-    * cell. The cell filter is a Column predicate so that when `codes` comes
-    * from a cell-partitioned parquet index the probed-cell restriction
-    * becomes PARTITION PRUNING (only nprobe/nCells of the files are read) —
-    * a typed lambda filter would force a full scan.
-    */
-  private def ivfPqScore(
-      codes: Dataset[IvfPqCode], model: IvfPqModel,
-      perQuery: Array[(Long, Map[Int, Array[Array[Double]]])],
-      kNN: Int): DataFrame = {
+      queries: Seq[(Long, Array[Float])], nprobe: Int, kNN: Int): DataFrame = {
     import codes.sparkSession.implicits._
+    val centsD = model.centroids.map(_.map(_.toDouble))
+    val perQuery: Array[(Long, Map[Int, Array[Array[Double]]])] =
+      queries.map { case (qid, q) =>
+        qid -> probeCells(q, centsD, nprobe).map { ci =>
+          ci -> lutFor(residual(q, model.centroids(ci)), model.pq)
+        }.toMap
+      }.toArray
     val m = model.pq.m
     val anyProbed = perQuery.flatMap(_._2.keys).distinct.toSeq
     val scored = codes.filter(col("cell").isin(anyProbed: _*)).as[IvfPqCode]
@@ -344,11 +278,10 @@ object Pq {
   // Encode-once / search-many is the entire point of PQ at scale: training
   // and encoding cost one corpus pass each, searches cost m lookups per
   // candidate. The inline forms above retrain per call; these persist the
-  // few-KB model and the m-byte codes to parquet (mirroring
-  // Ann.buildIvfIndex / ivfTopKIndexed) so every later query reads codes
-  // from disk without touching the float corpus at all. Floats round-trip
-  // parquet exactly, so search-from-disk is bit-identical to inline search
-  // on the same model (PqSpec proves it).
+  // few-KB model and the m-byte codes to parquet so every later query
+  // reads codes from disk without touching the float corpus at all. Floats
+  // round-trip parquet exactly, so search-from-disk is bit-identical to
+  // inline search on the same model (PqSpec proves it).
   //
   // Layout: <path>/model one row per (subspace j, centroid c) codebook entry
   //         <path>/meta  one row (m, k, subDim, build_id)
@@ -426,75 +359,9 @@ object Pq {
     model
   }
 
-  /** Append new vectors to a persisted [[buildPqIndex]] index: encode with
-    * the PERSISTED codebooks (no retrain — the codebooks are the index's
-    * identity; appended codes are comparable to existing ones precisely
-    * because they share them) and append the m-byte codes. Cost ∝ batch.
-    * The appended rows carry the model's build_id, so the
-    * codes-vs-model consistency check keeps holding across appends; an
-    * index left inconsistent by a died rebuild refuses the append loudly
-    * rather than growing garbage. Caller owns id uniqueness (same
-    * single-writer posture as [[appendToIvfPqIndex]] and the bucketed
-    * upsert).
-    */
-  def appendToPqIndex(newVecs: Dataset[Vec], path: String): Unit = {
-    val spark = newVecs.sparkSession
-    val (model, buildId) = readPqModelWithId(spark, path)
-    requireConsistentBuild(spark, s"$path/codes", buildId)
-    encode(newVecs, model).withColumn("build_id", lit(buildId))
-      .write.mode("append").parquet(s"$path/codes")
-  }
-
-  /** Append to a persisted [[buildIvfPqIndex]] index: coarse-assign +
-    * residual-encode the batch with the persisted centroids and codebooks,
-    * append into the CELL PARTITIONS — only the batch's cells gain files,
-    * untouched cells are not opened, and probes keep pruning to their
-    * cells' files afterwards.
-    */
-  def appendToIvfPqIndex(newVecs: Dataset[Vec], path: String): Unit = {
-    val spark = newVecs.sparkSession
-    val (pqModel, buildId) = readPqModelWithId(spark, s"$path/pq")
-    requireConsistentBuild(spark, s"$path/codes", buildId)
-    val model = IvfPqModel(loadCentroids(spark, path), pqModel)
-    encodeIvfPq(newVecs, model).withColumn("build_id", lit(buildId))
-      .write.partitionBy("cell").mode("append").parquet(s"$path/codes")
-  }
-
-  def loadPqModel(spark: SparkSession, path: String): PqModel =
-    readPqModelWithId(spark, path)._1
-
   def loadPqCodes(spark: SparkSession, path: String): Dataset[PqCode] = {
     import spark.implicits._
-    // tombstoned (deleted) codes are folded out here so every consumer —
-    // indexed search included — stops serving them the moment
-    // deleteFromPqIndex returns
-    IndexTombstones.filterLive(spark,
-        spark.read.parquet(s"$path/codes"), s"$path/deletes")
-      .select(col("id"), col("code")).as[PqCode]
-  }
-
-  /** O(batch) tombstone DELETE from a persisted [[buildPqIndex]] index.
-    * The codebooks are untouched (they are the quantizer), so
-    * delete-then-search equals inline search over the remaining codes
-    * under the same model, exactly (PqSpec). Reclaim physically with
-    * [[compactPqIndex]]; a tombstoned id can only be re-appended after
-    * that compact.
-    */
-  def deleteFromPqIndex(
-      spark: SparkSession, path: String, ids: Seq[Long]): Unit =
-    IndexTombstones.record(spark, s"$path/deletes",
-      spark.read.parquet(s"$path/codes").select(col("id")), ids)
-
-  /** Fold tombstones into the codes physically; build_id is preserved
-    * (the model is untouched, so codes stay consistent with it) and the
-    * tombstone set resets.
-    */
-  def compactPqIndex(spark: SparkSession, path: String): Unit = {
-    val live = IndexTombstones.filterLive(spark,
-        spark.read.parquet(s"$path/codes"), s"$path/deletes")
-      .localCheckpoint(true)
-    live.write.mode("overwrite").parquet(s"$path/codes")
-    IndexTombstones.clear(spark, s"$path/deletes")
+    spark.read.parquet(s"$path/codes").select(col("id"), col("code")).as[PqCode]
   }
 
   /** Batch ADC against a persisted [[buildPqIndex]] index: model to the
@@ -538,63 +405,13 @@ object Pq {
       .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
   }
 
-  def loadIvfPqModel(spark: SparkSession, path: String): IvfPqModel =
-    IvfPqModel(loadCentroids(spark, path),
-      readPqModelWithId(spark, s"$path/pq")._1)
-
   def loadIvfPqCodes(spark: SparkSession, path: String): Dataset[IvfPqCode] = {
     import spark.implicits._
     // partition column `cell` comes back from the directory names; select to
-    // the case-class field order so the encoder binds by position too.
-    // Tombstones fold out here (see loadPqCodes); the anti-join key is the
-    // id so probes keep their cell-partition pruning untouched.
-    IndexTombstones.filterLive(spark,
-        spark.read.parquet(s"$path/codes"), s"$path/deletes")
+    // the case-class field order so the encoder binds by position too
+    spark.read.parquet(s"$path/codes")
       .select(col("id"), col("cell").cast("int").as("cell"), col("code"))
       .as[IvfPqCode]
-  }
-
-  /** O(batch) tombstone DELETE from a persisted [[buildIvfPqIndex]]
-    * index — same contract as [[deleteFromPqIndex]] (centroids and
-    * codebooks untouched; exact rebuild-without equivalence, PqSpec).
-    */
-  def deleteFromIvfPqIndex(
-      spark: SparkSession, path: String, ids: Seq[Long]): Unit =
-    IndexTombstones.record(spark, s"$path/deletes",
-      spark.read.parquet(s"$path/codes").select(col("id")), ids)
-
-  /** CELL-PRUNED physical compaction of an IVF-PQ index: only the cell
-    * partitions that actually hold tombstoned ids are rewritten (dynamic
-    * partition overwrite — the `Curation.deleteByKey` pattern in cell
-    * space); untouched cells' files are not opened. A cell emptied of all
-    * its rows cannot be dynamically overwritten (no rows to write), so
-    * emptied cells' directories are removed explicitly — the same trap
-    * deleteByKey documents.
-    */
-  def compactIvfPqIndex(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val codes = spark.read.parquet(s"$path/codes")
-    val delsOpt = IndexTombstones.parquetIfExists(spark, s"$path/deletes")
-    if (delsOpt.isEmpty) return
-    val dels = delsOpt.get
-    val affected = codes.join(broadcast(dels.select(col("id"))), "id")
-      .select(col("cell").cast("int")).distinct().as[Int].collect().toSeq
-    if (affected.nonEmpty) {
-      val live = codes.filter(col("cell").isin(affected: _*))
-        .join(broadcast(dels.select(col("id"))), Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      val surviving = live.select(col("cell").cast("int"))
-        .distinct().as[Int].collect().toSet
-      live.write.partitionBy("cell")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(s"$path/codes")
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (affected.toSet -- surviving).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes/cell=$c"), true)
-      }
-    }
-    IndexTombstones.clear(spark, s"$path/deletes")
   }
 
   /** Batch search against a persisted [[buildIvfPqIndex]] index: the probed
@@ -608,7 +425,6 @@ object Pq {
     val (pqModel, buildId) = readPqModelWithId(spark, s"$indexPath/pq")
     requireConsistentBuild(spark, s"$indexPath/codes", buildId)
     val model = IvfPqModel(loadCentroids(spark, indexPath), pqModel)
-    ivfPqScore(loadIvfPqCodes(spark, indexPath), model,
-      ivfPqLuts(model, queries, nprobe), kNN)
+    ivfPqTopKMany(loadIvfPqCodes(spark, indexPath), model, queries, nprobe, kNN)
   }
 }

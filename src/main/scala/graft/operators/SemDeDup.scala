@@ -19,19 +19,19 @@ import graft.plans.GraftFunctions.vecDot
   * makes its within-cluster join quadratic in corpus size. The round-7
   * scale rehearsal measured the consequence — at 400k vectors (200x the
   * sf0.1 corpus) the fixed-k form is ~10 BILLION pair evaluations and ran
-  * >35 min without completing, while [[pairsAuto]] with the same data and
-  * a bounded target cluster size finishes in minutes. Use q101's form for
-  * oracle parity at test scale; use [[pairsAuto]] (or [[pairs]] with
-  * trained centroids from [[Ann.ivfCentroidsKMeans]]) everywhere else.
+  * >35 min without completing, while [[pairs]] over [[trainedCentroids]]
+  * (q111) with the same data and a bounded target cluster size finishes
+  * in minutes. Use q101's form for oracle parity at test scale; use
+  * trained centroids everywhere else.
   *
   * Assignment is the broadcast-centroid argmin (q82's shape): one pass
   * over the corpus, no shuffle of the embedding column beyond the final
   * cluster-key exchange. The centroid table must therefore stay
   * broadcast-small — [[MaxCentroids]] caps k and the ceiling is enforced
   * loudly. Beyond that ceiling (k > 64k ~ a multi-billion-vector corpus
-  * at the default target), assignment itself needs an index — compose
-  * [[Ann.ivfTopKIndexed]] over a persisted centroid index instead of one
-  * broadcast argmin; the pair stage is unchanged.
+  * at the default target), assignment itself needs an index over the
+  * centroids instead of one broadcast argmin; the pair stage is
+  * unchanged.
   */
 object SemDeDup {
 
@@ -63,9 +63,8 @@ object SemDeDup {
     * bits), so the argmin is deterministic.
     *
     * Member ids must be UNIQUE — the corpus-key contract every index
-    * operator in the repo shares (see [[Ann.appendToIvfIndex]]): a
-    * duplicated id re-attaches once per copy at the embedding join and
-    * fans out into duplicated pair rows.
+    * operator in the repo shares: a duplicated id re-attaches once per
+    * copy at the embedding join and fans out into duplicated pair rows.
     */
   def pairs(
       members: DataFrame,
@@ -386,7 +385,7 @@ object SemDeDup {
     */
   val DriverTrainMaxK: Int = 2048
 
-  /** The size-scaled trained quantizer shared by every auto form:
+  /** The size-scaled trained quantizer (q111's):
     * k = ceil(n / targetClusterSize) clamped to [1, [[MaxCentroids]]],
     * trainer auto-selected by k (driver Lloyd's vs k-means|| — see class
     * doc). Returns the (c_id, c_emb) frame the explicit-centroid entry
@@ -414,20 +413,6 @@ object SemDeDup {
       else Ann.kMeansCentroidsDistributed(ds, k, iters)
     cents.toSeq.map(v => (v.id, v.embedding)).toDF("c_id", "c_emb")
   }
-
-  def pairsAuto(
-      members: DataFrame,
-      idCol: String,
-      vecCol: String,
-      minCos: Double,
-      targetClusterSize: Int = 1024,
-      iters: Int = 5): DataFrame =
-    // saltAbove = the target: clusters at/under the size the quantizer
-    // AIMS for pay one salt key (same work); only the quantizer's misses
-    // (dense regions Lloyd's could not split) spread — see pairStage
-    pairs(members, idCol, vecCol,
-      trainedCentroids(members, idCol, vecCol, targetClusterSize, iters),
-      minCos, saltAbove = targetClusterSize)
 
   /** The SemDeDup ACTION closing the pairs loop (as excise closes the
     * duplicated-spans loop): semantic duplicate components = connected
@@ -458,23 +443,19 @@ object SemDeDup {
       idCol)
   }
 
-  // ---- persisted index lifecycle ------------------------------------
+  // ---- persisted index -----------------------------------------------
   //
-  // Layout mirrors Ann.buildIvfIndex: `<path>/centroids` is the quantizer
-  // (c_id, c_emb), `<path>/assignments` the (vec_id, cluster) table,
-  // `<path>/deletes` the shared tombstone set. The quantizer is MODEL, not
-  // data: append/delete never touch it, which is exactly why
-  // delete-then-search equals rebuild-without (the IndexTombstones
-  // contract) and why append cost is one batch-sized assignment pass.
-  // Embeddings are NOT persisted — the corpus parquet already holds them;
-  // duplicating them into the index would double the 100 TB footprint for
-  // no query benefit (pair scoring re-joins the corpus by id either way).
+  // `<path>/centroids` is the quantizer (c_id, c_emb), `<path>/assignments`
+  // the (vec_id, cluster) table. Embeddings are NOT persisted — the corpus
+  // parquet already holds them; duplicating them into the index would
+  // double the footprint for no query benefit (pair scoring re-joins the
+  // corpus by id either way).
 
   /** Persist a SemDeDup index: the (broadcast-small) centroid quantizer
     * plus the corpus' cluster assignments. One assignment pass — the
-    * expensive step at corpus scale — after which [[pairsIndexed]] and
-    * [[incrementalPairs]] read the stored assignments instead of
-    * re-quantizing. Caller supplies centroids (trained via
+    * expensive step at corpus scale — after which [[incrementalPairs]]
+    * reads the stored assignments instead of re-quantizing. Caller
+    * supplies centroids (trained via
     * [[Ann.ivfCentroidsKMeans]]/[[Ann.kMeansCentroidsDistributed]], or
     * deterministic for oracle parity).
     */
@@ -498,69 +479,9 @@ object SemDeDup {
   def loadCentroids(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/centroids")
 
-  /** The assignment table minus tombstoned ids — every index consumer
-    * must read assignments through this so deleted vectors stop pairing
-    * the moment [[deleteFromIndex]] returns.
-    */
+  /** The stored (vec_id, cluster) assignment table. */
   def loadAssignments(spark: SparkSession, path: String): DataFrame =
-    IndexTombstones.filterLive(spark,
-      spark.read.parquet(s"$path/assignments"), s"$path/deletes", "vec_id")
-
-  /** Grow the index without retraining: assign the batch under the STORED
-    * quantizer and append — cost ∝ batch, never the indexed corpus. Caller
-    * owns id uniqueness across appends (single-writer posture, as with
-    * [[Ann.appendToIvfIndex]]); a tombstoned id can only be re-appended
-    * after [[compactIndex]] folds the tombstone away.
-    */
-  def appendToIndex(
-      batch: DataFrame, idCol: String, vecCol: String, path: String): Unit = {
-    val spark = batch.sparkSession
-    // empty micro-batches are routine under foreachBatch (empty trigger,
-    // source rebalance) — appending zero rows is a no-op, not a crash
-    val probe = batch.select(size(col(vecCol))).limit(1).collect()
-    if (probe.isEmpty) return
-    require(!probe(0).isNullAt(0), s"first $vecCol in the batch is null")
-    val cents = loadCentroids(spark, path)
-    val cdim = cents.select(size(col("c_emb"))).head().getInt(0)
-    val bdim = probe(0).getInt(0)
-    require(bdim == cdim,
-      s"batch dim $bdim != index dim $cdim — wrong index path?")
-    assign(batch, idCol, vecCol, cents)
-      .write.mode("append").parquet(s"$path/assignments")
-  }
-
-  /** O(batch) tombstone DELETE — the erasure half of the lifecycle. */
-  def deleteFromIndex(spark: SparkSession, path: String, ids: Seq[Long]): Unit =
-    IndexTombstones.record(spark, s"$path/deletes",
-      spark.read.parquet(s"$path/assignments").select(col("vec_id").as("id")),
-      ids)
-
-  /** Fold tombstones into the assignment table physically and reset the
-    * tombstone set. Cost ∝ index, but assignment rows are two longs — the
-    * rewrite moves ~16 bytes per indexed vector.
-    */
-  def compactIndex(spark: SparkSession, path: String): Unit = {
-    val live = loadAssignments(spark, path).localCheckpoint(true)
-    live.write.mode("overwrite").parquet(s"$path/assignments")
-    IndexTombstones.clear(spark, s"$path/deletes")
-  }
-
-  /** Full within-corpus pairs from the STORED assignments: no
-    * re-quantization — the corpus is touched only to fetch embeddings by
-    * id for the pair scoring. Equals [[pairs]] over the live (non-deleted)
-    * members under the stored centroids, exactly (SemDeDupSpec).
-    */
-  def pairsIndexed(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      path: String, minCos: Double): DataFrame = {
-    val spark = corpus.sparkSession
-    GraftFunctions.register(spark)
-    val emb = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    val assigned = loadAssignments(spark, path)
-      .join(emb, "vec_id")
-      .withColumn("nm", sqrt(vecDot(col("embedding"), col("embedding"))))
-    pairStage(assigned, minCos)
-  }
+    spark.read.parquet(s"$path/assignments")
 
   /** Incremental semantic dedup: pairs INVOLVING the batch — batch vs the
     * live indexed corpus plus within-batch — under the stored quantizer.

@@ -22,35 +22,17 @@ object SimHash {
 
   val Bits = 32
 
-  private def bitIdx: Column = sequence(lit(0), lit(Bits - 1))
-
   /** SimHash over an array of tokens (deduplicated internally). Since
     * round 3 this is the native fused expression
     * ([[graft.functions.expr.SimHash32F]]) — bit-identical to the
-    * declarative double fold it replaced ([[simhashHof]], equality-tested
-    * in DedupSpec), with one 32-int state loop instead of a fresh count
-    * array per token.
+    * declarative double fold it replaced (`DedupSpec.simhashHof`,
+    * equality-tested in DedupSpec), with one 32-int state loop instead of
+    * a fresh count array per token.
     */
   def simhash(toks: Column): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.expr.SimHash32F(
         org.apache.spark.sql.graftbridge.Bridge.expression(toks)))
-
-  /** The pre-round-3 declarative fold — the reference semantics the native
-    * expression must reproduce bit-for-bit.
-    */
-  private[graft] def simhashHof(toks: Column): Column = {
-    val counts = aggregate(
-      transform(array_distinct(toks), t => TextHash.h60(t)),
-      array_repeat(lit(0L), Bits),
-      (acc, h) => zip_with(acc, bitIdx,
-        (a, b) => a + when(call_function("shiftright", h, b) % 2 === 1, 1L).otherwise(-1L)))
-    aggregate(
-      zip_with(counts, bitIdx,
-        (s, b) => when(s > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
-      lit(0L),
-      (acc, v) => acc + v)
-  }
 
   def simhashOfText(text: Column): Column = simhash(TextHash.tokens(text))
 

@@ -103,11 +103,13 @@ object SparseCosineJoin {
     // 3-4x at sf0.1: q117 0.85 -> 0.17 s warm). LAZY localCheckpoint: the
     // first action materializes the postings once (MEMORY_AND_DISK, the
     // same rows the pair join shuffles anyway) and every consumer reads
-    // the blocks; laziness keeps plan-building job-free, which the SQL TVF
-    // builder (analysis-time construction, EXPLAIN must not run jobs)
-    // requires. Same non-reliable-storage caveat as the salted
-    // BandedSelfJoin branch: an executor loss fails the job rather than
-    // recomputing lineage.
+    // the blocks. Lazy does NOT make plan-building job-free: under AQE
+    // localCheckpoint(eager = false) still calls queryExecution.toRdd,
+    // which runs every upstream shuffle stage, so each call of this
+    // method runs Spark jobs. That is why the SQL TVF defers its builder
+    // to execution (EXPLAIN must not run jobs). Same non-reliable-storage
+    // caveat as the salted BandedSelfJoin branch: an executor loss fails
+    // the job rather than recomputing lineage.
     val w = tf.join(df, "t")
       .crossJoin(broadcast(stats))
       .filter(col("df") <= dfCap)

@@ -141,7 +141,7 @@ object SubstringDedup {
     * enclosing that gap's original text. Winnowed spans are therefore a
     * detection/reporting result (equal to [[duplicatedSpans]] re-merged
     * at gap k+w-1, restricted to selected fingerprints); to EXCISE text,
-    * use [[excise]]/[[duplicatedSpans]], which never over-cut.
+    * use [[duplicatedSpans]] and [[exciseSpans]], which never over-cut.
     */
   def winnowedSpans(
       docs: DataFrame,
@@ -260,101 +260,6 @@ object SubstringDedup {
       .select(col("doc_id"), col("span_start"), col("span_end"), col("span_len"))
   }
 
-  /** The dedup ACTION: every document with its duplicated spans cut out
-    * (Lee et al.'s aggressive mode — all copies removed; pair with a
-    * cluster-representative step to keep one). Output: (doc_id,
-    * clean_text, removed_chars); docs with no duplicated span pass
-    * through unchanged, docs that are duplicated END TO END become the
-    * empty string (a distinct case from "no spans" — the kept-segment
-    * join produces no rows for both, so membership in the span set is
-    * tracked explicitly).
-    *
-    * Stitching is relational: spans → complement segments via lag (the
-    * gap BEFORE each span) plus one terminal segment per doc, then
-    * per-doc ordered concat — collect_list of (start, seg) structs,
-    * array_sort (lexicographic on the leading int), transform to drop the
-    * key, array_join. The per-doc segment list is bounded by span count,
-    * not corpus size, so the collect_list buffer is small and the whole
-    * step stays one hash aggregate.
-    */
-  def excise(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 20,
-      minDocs: Int = 2,
-      hashShuffle: Boolean = false,
-      singlePass: Option[Boolean] = None,
-      maxGramFreq: Int = 0,
-      maxCoverage: Double = DefaultMaxCoverage,
-      gramSalt: Int = 0): DataFrame = {
-    // spans feed three branches (mid, lastSeg, hasSpan); materialize the
-    // expensive gram-explode/window pipeline once — the span list is tiny
-    // relative to the corpus. `base` is deliberately NOT cached: its three
-    // references are column-pruned scans, the right trade at corpus scale.
-    val spans = duplicatedSpans(docs, idCol, textCol, k, minDocs,
-      hashShuffle, singlePass, maxGramFreq, gramSalt).localCheckpoint()
-    exciseSpans(docs, idCol, textCol, spans, maxCoverage)
-  }
-
-  /** Corpus-DERIVED gram width — DESIGN §8.3's collision-horizon rule made
-    * the default instead of a constant the caller must guess (round 17,
-    * VERDICT r16 task 4). The 1M composition rehearsal proved the failure
-    * mode: on a dense vocabulary, k = 20 SATURATED (the expected random
-    * recurrence of every 20-char window exceeded 1, spans covered 99.4%
-    * of all characters, and excision destroyed the corpus); k = 40
-    * restored the semantics. The rule: a random k-gram spans ~k/w̄ words
-    * (w̄ = mean word length + 1 for the separator), so ~V^(k/w̄) distinct
-    * grams exist against N ≈ total chars of positions — the expected
-    * frequency of a random gram is N / V^(k/w̄), and duplication is a
-    * SIGNAL exactly when that expectation is ≤ 1:
-    *
-    *   k = ⌈ w̄ · ln(N · margin) / ln(V) ⌉, clamped to [kMin, kMax]
-    *
-    * `margin` bounds the expected RANDOM gram frequency at 1/margin, not
-    * at 1: the margin-free form (round 17's first cut) satisfies "≤ 1"
-    * but a 0.7-expected-recurrence gram space still marks a third of all
-    * random positions as duplicated — measured on the 1M slice, the
-    * margin-free k = 34 over-excised enough to shift every downstream
-    * funnel count (and push the ingest rehearsal's trained gate from 77%
-    * to 97% rejection). margin = 64 → expectation ≤ 1/64, which on the
-    * 1M slice (V = 30, w̄ ≈ 5.6, N ≈ 5e8) lands at k = 41 — the
-    * empirically-proven 40 — and on natural vocabularies (V ≥ 10⁴) it
-    * clamps to the Lee-et-al.-era floor of 20. One aggregate pass derives
-    * (V, N): `approx_count_distinct` for V (an HLL estimate is exactly
-    * right for a log argument; ±2% moves k by < 1) and token counts for
-    * N/w̄ — at 100 TB this is a map-side-combined scan, and the result
-    * should be derived once per corpus alongside the other token stats.
-    * [[coverageGuard]] stays as the loud backstop for corpora whose
-    * structure defeats the independence assumption.
-    */
-  def derivedGramWidth(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      kMin: Int = 20,
-      kMax: Int = 120,
-      margin: Double = 64.0): Int = {
-    require(kMin >= 1 && kMax >= kMin, s"need 1 <= kMin <= kMax, got [$kMin, $kMax]")
-    require(margin >= 1.0, s"margin must be >= 1 (1 = expectation-at-1), got $margin")
-    val row = docs
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .filter(col("w") =!= "")
-      .agg(
-        approx_count_distinct(col("w")).as("v"),
-        count(lit(1)).as("nw"),
-        sum(length(col("w")).cast("long")).as("wchars"))
-      .head()
-    if (row.isNullAt(2)) return kMin // empty corpus: any width is fine
-    val v = math.max(2L, row.getLong(0))
-    val nw = math.max(1L, row.getLong(1))
-    val wchars = math.max(1L, row.getLong(2))
-    val wbar = wchars.toDouble / nw.toDouble + 1.0
-    val n = (wchars + nw).toDouble // ≈ total chars ≈ gram positions
-    val k = math.ceil(wbar * math.log(n * margin) / math.log(v.toDouble)).toInt
-    math.max(kMin, math.min(kMax, k))
-  }
-
   /** Saturation ceiling for the excise ACTION (round 16): the 1M-doc
     * composed-pipeline rehearsal showed k = 20 saturating on a 30-word
     * vocabulary — nearly EVERY text window recurred somewhere, the span
@@ -371,10 +276,9 @@ object SubstringDedup {
   /** The saturation check itself — two tiny jobs (a sum over the span
     * frame, one column-pruned length scan of the corpus), throwing the
     * typed saturation error when spans cover more than `maxCoverage` of
-    * all characters. Call it ONCE per span artifact: [[excise]] runs it
-    * on its fresh spans; a detect-once/act-many span STORE runs it at
-    * build time (the q100/q105 store does), so every later
-    * [[exciseSpans]] action inherits the verdict without re-scanning.
+    * all characters. Call it ONCE per span artifact: a detect-once/act-many
+    * span STORE runs it at build time (the q100/q105 store does), so every
+    * later [[exciseSpans]] action inherits the verdict without re-scanning.
     */
   def coverageGuard(
       docs: DataFrame,
@@ -405,12 +309,27 @@ object SubstringDedup {
     }
   }
 
-  /** [[excise]] stitching over an ALREADY-COMPUTED span frame (doc_id,
-    * span_start, span_end — [[duplicatedSpans]]'s shape): the production
-    * detect-once/act-many split, and how q100/q105 share one per-dataset
-    * span artifact. The caller owns materialization of `spans` (it is
-    * referenced three times here — pass a checkpointed or persisted
-    * frame, never the raw gram pipeline).
+  /** The dedup ACTION over an ALREADY-COMPUTED span frame (doc_id,
+    * span_start, span_end — [[duplicatedSpans]]'s shape): every document
+    * with its duplicated spans cut out (Lee et al.'s aggressive mode — all
+    * copies removed; pair with a cluster-representative step to keep
+    * one). Output: (doc_id, clean_text, removed_chars); docs with no
+    * duplicated span pass through unchanged, docs that are duplicated END
+    * TO END become the empty string (a distinct case from "no spans" —
+    * the kept-segment join produces no rows for both, so membership in
+    * the span set is tracked explicitly). Taking the spans as input is the
+    * production detect-once/act-many split: q100/q105 share one
+    * per-dataset span artifact. The caller owns materialization of
+    * `spans` (it is referenced three times here — pass a checkpointed or
+    * persisted frame, never the raw gram pipeline).
+    *
+    * Stitching is relational: spans → complement segments via lag (the
+    * gap BEFORE each span) plus one terminal segment per doc, then
+    * per-doc ordered concat — collect_list of (start, seg) structs,
+    * array_sort (lexicographic on the leading int), transform to drop the
+    * key, array_join. The per-doc segment list is bounded by span count,
+    * not corpus size, so the collect_list buffer is small and the whole
+    * step stays one hash aggregate.
     */
   def exciseSpans(
       docs: DataFrame,
@@ -425,8 +344,8 @@ object SubstringDedup {
     // (1.0) because this is the detect-once/ACT-MANY entry point over a
     // caller-owned artifact (q105 re-runs it every bench sweep) — the
     // caller guards ONCE when the artifact is BUILT ([[coverageGuard]] at
-    // the span-store site; [[excise]] guards its own fresh spans), rather
-    // than re-paying a corpus length scan per action for the same verdict.
+    // the span-store site), rather than re-paying a corpus length scan per
+    // action for the same verdict.
     if (maxCoverage < 1.0) coverageGuard(docs, idCol, textCol, spans, maxCoverage)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("span_start"))
     val mid = spans

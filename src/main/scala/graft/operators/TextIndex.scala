@@ -4,21 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Persisted inverted index + BM25 search-from-disk — the TEXT twin of the
-  * ANN index lifecycle (Ann.buildIvfIndex / Pq.buildPqIndex): tokenize and
+/** Persisted inverted index + BM25 search-from-disk: tokenize and
   * aggregate the corpus ONCE, then every query reads only its own terms'
   * postings. Layout:
   *
-  *   path/postings (word, doc_id, tf, dl, gen, build_id) — one row per
+  *   path/postings (word, doc_id, tf, dl, build_id) — one row per
   *     posting, with the posting doc's LENGTH DENORMALIZED onto the row
   *     (one extra long, run-length-friendly) so scoring never joins a
   *     |docs|-row side table: a 3-term query over a 100 TB corpus reads 3
   *     terms' postings and NOTHING else.
-  *   path/doclens  (doc_id, dl, gen)  — lifecycle bookkeeping only
-  *     (append overlap check, delete dl lookup, compaction stats); the
-  *     search path never touches it (TextIndexSpec pins this on the plan).
-  *   path/deletes  (doc_id, dl)      — tombstones; see delete below.
-  *   path/stats    (n_docs, sum_dl, avgdl, gen, build_id) — 1-row corpus
+  *   path/stats    (n_docs, sum_dl, avgdl, build_id) — 1-row corpus
   *     constants, the index's COMMIT MARKER (always written last).
   *
   * At search time the query-term filter is an `In` predicate the parquet
@@ -27,26 +22,13 @@ import org.apache.spark.sql.functions._
   * pushdown.
   *
   * Consistency model (mirrors Pq's build_id + requireConsistentBuild):
-  * every build/compact stamps a fresh `build_id` into the data rows and
-  * writes stats LAST; every append increments a generation counter `gen`,
-  * stamps it on the appended rows, and commits it by rewriting stats
-  * LAST. A crash between the data writes and the stats write leaves rows
-  * whose (build_id, gen) the committed stats does not acknowledge — the
+  * every build stamps a fresh `build_id` into the postings rows and
+  * writes stats LAST. A rebuild that dies between the two writes leaves
+  * postings whose build_id the committed stats does not acknowledge — the
   * search plan carries an in-plan guard (zero extra passes: the check
   * rides the already-scanned term-pruned rows) that fails loudly instead
-  * of silently serving half-applied appends, and [[compactTextIndex]]
-  * repairs by dropping uncommitted rows. Appends additionally refuse to
-  * run on an index whose postings carry an uncommitted generation, so a
-  * died append can never be silently overlaid by the next one.
-  *
-  * Deletes are O(batch) TOMBSTONES, not rewrites: `deletes` accumulates
-  * (doc_id, dl); search anti-joins the (small, broadcast) tombstone set
-  * out of the term-pruned postings and adjusts (n_docs, avgdl) from the
-  * tombstones' own count/sum — delete-then-search is therefore EXACTLY
-  * rebuild-without-then-search (spec-proven), at batch cost. The
-  * tombstone set is bounded by deletions since the last compaction;
-  * [[compactTextIndex]] folds it in physically. Single-writer posture for
-  * all mutations, like `Curation.upsertByKey`.
+  * of scoring postings against another build's corpus constants; a
+  * rebuild repairs it.
   */
 object TextIndex {
 
@@ -67,27 +49,19 @@ object TextIndex {
 
   private def statsPath(path: String) = s"$path/stats"
 
-  private def readStats(spark: SparkSession, path: String) =
-    spark.read.parquet(statsPath(path))
-      .select("n_docs", "sum_dl", "avgdl", "gen", "build_id")
-      .collect()(0)
-
   private def writeStats(
       spark: SparkSession, path: String,
-      nDocs: Long, sumDl: Long, gen: Long, buildId: String): Unit = {
+      nDocs: Long, sumDl: Long, buildId: String): Unit = {
     import spark.implicits._
-    Seq((nDocs, sumDl, sumDl.toDouble / nDocs, gen, buildId))
-      .toDF("n_docs", "sum_dl", "avgdl", "gen", "build_id")
+    Seq((nDocs, sumDl, sumDl.toDouble / nDocs, buildId))
+      .toDF("n_docs", "sum_dl", "avgdl", "build_id")
       .coalesce(1).write.mode("overwrite").parquet(statsPath(path))
   }
 
-  private def emptyDeletes(spark: SparkSession) =
-    spark.range(0).select(col("id").as("doc_id"), col("id").as("dl"))
-
   /** Tokenize + aggregate + write. Overwrite-idempotent. The corpus is
-    * scanned exactly once (the postings write); doclens and stats derive
-    * from the WRITTEN postings, so a nondeterministic input frame cannot
-    * produce postings/doclens that disagree with each other.
+    * scanned exactly once (the postings write); stats derive from the
+    * WRITTEN postings, so a nondeterministic input frame cannot produce
+    * stats that disagree with the postings.
     */
   def buildTextIndex(
       docs: DataFrame,
@@ -97,125 +71,20 @@ object TextIndex {
     val spark = docs.sparkSession
     val buildId = java.util.UUID.randomUUID().toString
     postingsOf(docs, idCol, textCol)
-      .withColumn("gen", lit(0L)).withColumn("build_id", lit(buildId))
+      .withColumn("build_id", lit(buildId))
       .write.mode("overwrite").parquet(s"$path/postings")
-    val dl = spark.read.parquet(s"$path/postings")
+    val Array(nDocs, sumDl) = spark.read.parquet(s"$path/postings")
       .select(col("doc_id"), col("dl")).distinct()
-      .withColumn("gen", lit(0L))
-    dl.write.mode("overwrite").parquet(s"$path/doclens")
-    emptyDeletes(spark).write.mode("overwrite").parquet(s"$path/deletes")
-    val Array(nDocs, sumDl) = dl
       .agg(count(lit(1)).cast("long"), sum(col("dl")).cast("long"))
       .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
-    writeStats(spark, path, nDocs, sumDl, 0L, buildId)
-  }
-
-  /** Incremental APPEND of new documents — the text twin of
-    * `Ann.appendToIvfIndex`: postings and doclens are strictly additive
-    * (parquet append) and stats merge incrementally from the batch's own
-    * (count, sum) — TOTAL cost ∝ batch; the indexed corpus is never
-    * rescanned. Ids already indexed (even if tombstoned — the tombstone
-    * hides them by doc_id, so re-adding needs [[compactTextIndex]] first)
-    * are refused loudly BEFORE any write. Crash-consistent per the class
-    * doc: rows first with gen+1, stats commit last.
-    */
-  def appendToTextIndex(
-      newDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      path: String): Unit = {
-    val spark = newDocs.sparkSession
-    val st = readStats(spark, path)
-    val (nDocs, sumDl, gen, buildId) =
-      (st.getLong(0), st.getLong(1), st.getLong(3), st.getString(4))
-    // a died append left rows with gen > committed: refuse to overlay a
-    // second batch on the same uncommitted generation (gen is one
-    // run-length-encoded column — this scan reads metadata-sized data)
-    val maxGen = spark.read.parquet(s"$path/postings")
-      .agg(max(col("gen"))).collect()(0).getLong(0)
-    require(maxGen == gen,
-      s"appendToTextIndex: index at $path has uncommitted generation " +
-        s"$maxGen > committed $gen (an append died between its data and " +
-        "stats writes) — run compactTextIndex to repair first")
-    val existing = spark.read.parquet(s"$path/doclens").select(col("doc_id"))
-    val overlap = newDocs.select(col(idCol).as("doc_id"))
-      .join(existing, "doc_id").limit(1).count()
-    require(overlap == 0,
-      "appendToTextIndex: batch contains doc ids already indexed — " +
-        "appending would double their postings; rebuild or compact first")
-    // one materialization pins the batch: postings, doclens, and the stats
-    // delta all derive from the SAME rows even if newDocs is
-    // nondeterministic (batch-sized, so the checkpoint is cheap)
-    val newPostings = postingsOf(newDocs, idCol, textCol)
-      .localCheckpoint(true)
-    newPostings
-      .withColumn("gen", lit(gen + 1L)).withColumn("build_id", lit(buildId))
-      .write.mode("append").parquet(s"$path/postings")
-    val newDl = newPostings.select(col("doc_id"), col("dl")).distinct()
-    newDl.withColumn("gen", lit(gen + 1L))
-      .write.mode("append").parquet(s"$path/doclens")
-    val Array(bN, bSum) = newDl
-      .agg(count(lit(1)).cast("long"), sum(col("dl")).cast("long"))
-      .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
-    writeStats(spark, path, nDocs + bN, sumDl + bSum, gen + 1L, buildId)
-  }
-
-  /** O(batch) DELETE — the right-to-erasure half of the index lifecycle
-    * (the text twin of `Curation.deleteByKey`, tombstone-style): records
-    * (doc_id, dl) tombstones that [[bm25TopK]] folds out exactly. Ids not
-    * in the index are ignored; re-deleting an already-tombstoned id is a
-    * no-op (the anti-join below keeps tombstones unique, so the stats
-    * adjustment never double-counts). Physical reclamation happens at the
-    * next [[compactTextIndex]].
-    */
-  def deleteFromTextIndex(
-      spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
-    if (ids.isEmpty) return
-    val targets = spark.read.parquet(s"$path/doclens")
-      .filter(col("doc_id").isin(ids: _*))
-      .select(col("doc_id"), col("dl"))
-    val already = spark.read.parquet(s"$path/deletes").select(col("doc_id"))
-    targets.join(broadcast(already), Seq("doc_id"), "left_anti")
-      .write.mode("append").parquet(s"$path/deletes")
-  }
-
-  /** Physical maintenance: fold tombstones in, drop rows any died append
-    * left uncommitted, rewrite postings/doclens under a FRESH build_id,
-    * and reset the tombstone set — after which previously deleted ids may
-    * be re-appended. Cost ∝ index (it is the explicit compaction, like
-    * `Curation.compactBuckets`); stats rewrite last commits the new
-    * build, so a crash mid-compact leaves a loud build_id mismatch, never
-    * a silently half-compacted index.
-    */
-  def compactTextIndex(spark: SparkSession, path: String): Unit = {
-    val st = readStats(spark, path)
-    val (gen, buildId) = (st.getLong(3), st.getString(4))
-    val newBuildId = java.util.UUID.randomUUID().toString
-    val dels = spark.read.parquet(s"$path/deletes").select(col("doc_id"))
-    val live = spark.read.parquet(s"$path/postings")
-      .filter(col("gen") <= gen && col("build_id") === buildId)
-      .join(broadcast(dels), Seq("doc_id"), "left_anti")
-      .drop("gen", "build_id")
-      .withColumn("gen", lit(0L)).withColumn("build_id", lit(newBuildId))
-      .localCheckpoint(true)
-    live.write.mode("overwrite").parquet(s"$path/postings")
-    val dl = live.select(col("doc_id"), col("dl")).distinct()
-      .withColumn("gen", lit(0L))
-      .localCheckpoint(true)
-    dl.write.mode("overwrite").parquet(s"$path/doclens")
-    emptyDeletes(spark).write.mode("overwrite").parquet(s"$path/deletes")
-    val Array(nDocs, sumDl) = dl
-      .agg(count(lit(1)).cast("long"), sum(col("dl")).cast("long"))
-      .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
-    writeStats(spark, path, nDocs, sumDl, 0L, newBuildId)
+    writeStats(spark, path, nDocs, sumDl, buildId)
   }
 
   /** BM25 top-k strictly from the persisted index — no tokenization, no
-    * corpus access, no doclens access: the term filter reaches the
-    * postings scan and every other input is a 1-row (stats, tombstone
-    * aggregate) or tombstone-sized broadcast. The in-plan consistency
-    * guard (gen/build_id vs committed stats) costs nothing beyond the
-    * rows already scanned.
+    * corpus access: the term filter reaches the postings scan and the only
+    * other input is the 1-row stats broadcast. The in-plan consistency
+    * guard (build_id vs committed stats) costs nothing beyond the rows
+    * already scanned.
     */
   def bm25TopK(
       spark: SparkSession,
@@ -226,29 +95,19 @@ object TextIndex {
       b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25TopK needs at least one query term")
     val stats = spark.read.parquet(statsPath(path))
-      .select(col("n_docs"), col("sum_dl"), col("gen").as("c_gen"),
-        col("build_id").as("c_build"))
-    val dels = spark.read.parquet(s"$path/deletes")
-    val delStats = dels.agg(
-      count(lit(1)).as("del_n"),
-      coalesce(sum(col("dl")), lit(0L)).as("del_dl"))
+      .select(col("n_docs"), col("avgdl"), col("build_id").as("c_build"))
     val guarded = spark.read.parquet(s"$path/postings")
       .filter(col("word").isin(terms: _*))
-      .join(broadcast(dels.select(col("doc_id"))), Seq("doc_id"), "left_anti")
       .crossJoin(broadcast(stats))
-      .crossJoin(broadcast(delStats))
-      .withColumn("tf", when(
-        col("gen") <= col("c_gen") && col("build_id") === col("c_build"),
+      .withColumn("tf", when(col("build_id") === col("c_build"),
         col("tf")).otherwise(raise_error(concat(
           lit("text index at "), lit(path),
-          lit(" has rows beyond the committed build/generation (an append "
-            + "or compact died partway) — run compactTextIndex to repair")))))
+          lit(" has postings of another build than its committed stats (a "
+            + "build died partway) — rebuild the index")))))
     val df = guarded.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val nEff = col("n_docs") - col("del_n")
-    val avgEff = (col("sum_dl") - col("del_dl")) / nEff
-    val idf = log((nEff - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
+    val idf = log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
     val norm = col("tf") +
-      lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / avgEff)
+      lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))
     guarded.join(df, "word")
       .withColumn("term_score", idf * col("tf") * lit(k1 + 1.0) / norm)
       .groupBy(col("doc_id"))

@@ -517,53 +517,6 @@ object AsOf {
         lt, rt, tieBreak.map(resolve(rPlan, _)), isOuter,
         forward = direction == "forward", tolerance = tolerance))
   }
-
-  /** Skew-resilient as-of join: AQE's OptimizeSkewedJoin pattern-matches
-    * only the builtin SMJ/SHJ execs, so a hot key stragglers
-    * [[AsOfJoinExec]] (the merge holds O(1) state — a hot key costs TIME,
-    * never memory). This variant spreads each hot key over `salts`
-    * partitions the same way [[graft.operators.SkewJoin]] does for
-    * equi-joins: the left gets an arbitrary per-row salt, the right history
-    * is REPLICATED once per salt, and the salt joins as an extra key.
-    * Every (key, salt) group then sees the key's COMPLETE right history, so
-    * each left row finds exactly the match the unsalted join would — the
-    * result is identical for every direction/tolerance/joinType
-    * (ScaleJoinSpec proves equality under a synthetic hot key).
-    *
-    * Cost: `salts`x replication of the right side — worth it only when the
-    * right is too big to broadcast (a broadcastable right already sidesteps
-    * the shuffle via [[AsOfJoinBroadcastExec]]) and left skew is known.
-    */
-  def joinSalted(
-      left: DataFrame,
-      right: DataFrame,
-      leftKeys: Seq[String],
-      rightKeys: Seq[String],
-      leftTime: String,
-      rightTime: String,
-      salts: Int,
-      tieBreak: Seq[String] = Nil,
-      joinType: String = "inner",
-      direction: String = "backward",
-      tolerance: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{explode, lit, monotonically_increasing_id, pmod, sequence}
-    require(salts > 0, s"salts must be positive, got $salts")
-    // guard the whole schemas, not just the keys: withColumn would silently
-    // OVERWRITE a pre-existing column of the same name and the trailing
-    // drop would then remove the user's data
-    (left.columns ++ right.columns).foreach(c => require(
-      c != "__salt_l" && c != "__salt_r",
-      s"column '$c' collides with joinSalted's internal salt column"))
-    // any per-row salt assignment is correct (it only balances load)
-    val saltedLeft = left.withColumn("__salt_l",
-      pmod(monotonically_increasing_id(), lit(salts.toLong)).cast("int"))
-    val replicatedRight = right.withColumn("__salt_r",
-      explode(sequence(lit(0), lit(salts - 1))))
-    join(saltedLeft, replicatedRight,
-      leftKeys :+ "__salt_l", rightKeys :+ "__salt_r",
-      leftTime, rightTime, tieBreak, joinType, direction, tolerance)
-      .drop("__salt_l", "__salt_r")
-  }
 }
 
 /** SQL surface for the native as-of join — a table-valued function

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Bpe, QualityClassifier}
 
 /** q129: budget-constrained, quality-ranked corpus selection — the
   * curation END GAME composed from three round-8/9 trained components:
@@ -36,58 +35,6 @@ object BudgetSelect {
   /** Fraction of the corpus's total BPE tokens granted to the selection,
     * split uniformly across sources (q128's uniform-mix discipline). */
   private val BudgetFrac = 0.3
-
-  /** The 100 TB form of the greedy fill — the class doc's "two-phase
-    * prefix sum" made code. The declared q129 runs ONE window per source
-    * (fine at 20 sources × 50k docs; a sequential prefix-sum at a
-    * trillion). This form bounds every window partition:
-    *
-    *   1. quantize `score` into `nBins` fixed descending bins over
-    *      [scoreLo, scoreHi] (caller-fixed edges, the [[graft.operators.Drift]]
-    *      determinism rule; out-of-range scores clamp into the edge bins,
-    *      which preserves the order because the within-bin sort refines),
-    *   2. per-(source, bin) running sums — partitions bounded by bin
-    *      occupancy, not source size,
-    *   3. per-source bin OFFSETS from the ≤ nSources·nBins-row bin-total
-    *      frame (tiny — its own window is over ≤ nBins rows), broadcast
-    *      back.
-    *
-    * `cum_before = offset + intra` equals the single-window running sum
-    * EXACTLY — (bin asc, score desc, doc_id) is the same total order as
-    * (score desc, doc_id) because the bin function is monotone in score —
-    * and the spec asserts kept-set equality against the naive window,
-    * ties and out-of-range scores included.
-    *
-    * @param perDoc (doc_id, source, score, n_pieces)
-    * @param budget 1-row frame with `budget_tokens` (broadcast)
-    * @return the KEPT rows of `perDoc` plus their `cum_before`
-    */
-  def fillScalable(perDoc: DataFrame, budget: DataFrame,
-      scoreLo: Double, scoreHi: Double, nBins: Int = 1024): DataFrame = {
-    require(nBins >= 2 && nBins <= 100000, s"nBins must be in [2, 100000], got $nBins")
-    require(scoreHi > scoreLo, s"need scoreHi > scoreLo, got [$scoreLo, $scoreHi]")
-    val w = (scoreHi - scoreLo) / nBins
-    val bin = least(greatest(
-        floor((lit(scoreHi) - col("score")) / lit(w)), lit(0.0)),
-      lit((nBins - 1).toDouble)).cast("int")
-    val binned = perDoc.withColumn("bin", bin)
-    val wIntra = Window.partitionBy(col("source"), col("bin"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOff = Window.partitionBy(col("source")).orderBy(col("bin"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = binned.groupBy(col("source"), col("bin"))
-      .agg(sum(col("n_pieces")).as("bin_tokens"))
-      .withColumn("offset", coalesce(sum(col("bin_tokens")).over(wOff), lit(0L)))
-      .select(col("source"), col("bin"), col("offset"))
-    binned
-      .withColumn("intra", coalesce(sum(col("n_pieces")).over(wIntra), lit(0L)))
-      .join(broadcast(offsets), Seq("source", "bin"))
-      .crossJoin(broadcast(budget))
-      .withColumn("cum_before", col("offset") + col("intra"))
-      .filter(col("cum_before") < col("budget_tokens"))
-      .drop("bin", "intra", "offset", "budget_tokens")
-  }
 
   private def q129(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)

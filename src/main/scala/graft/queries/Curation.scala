@@ -654,45 +654,6 @@ object Curation {
       |    % 1000000 < FLOOR(keep_frac * 1000000)
       |GROUP BY d.source ORDER BY d.source""".stripMargin
 
-  /** The q64 split assignment as a reusable column (same md5-derived
-    * bucketing, so [[writeSplits]] output provably agrees with the
-    * oracle-checked query).
-    */
-  def splitCol(idCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val bucket = TextHash.h60(idCol.cast("string")) % 100
-    when(bucket < 80, lit("train")).when(bucket < 90, lit("val"))
-      .otherwise(lit("test"))
-  }
-
-  /** Materialize the curated corpus as training shards: parquet partitioned
-    * by (split, lang), so "read the train split for language X" is
-    * directory pruning — the scan never opens other partitions' files. At
-    * cluster scale add `.bucketBy(n, "doc_id")` (table sink) for
-    * co-located downstream joins.
-    */
-  def writeSplits(docs: DataFrame, path: String): Unit =
-    docs.withColumn("split", splitCol(col("doc_id")))
-      .write.partitionBy("split", "lang").mode("overwrite").parquet(path)
-
-  /** Small-file compaction — the standing maintenance job of any long-lived
-    * 100 TB table (streaming ingestion and per-batch writes strand
-    * thousands of KB-sized files; every downstream scan then pays one task
-    * + one footer read per file). Rewrites a directory to `targetFiles`
-    * range-partitioned, internally sorted files: file count drops to the
-    * target AND each file covers a disjoint `sortCol` range, so min/max
-    * pruning on the sort key skips whole files afterwards (same layout
-    * contract as the Z-order path, one-dimensional form).
-    */
-  def compactShards(
-      spark: SparkSession, in: String, out: String,
-      sortCol: String, targetFiles: Int): Unit = {
-    require(targetFiles > 0, "targetFiles must be positive")
-    spark.read.parquet(in)
-      .repartitionByRange(targetFiles, col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite").parquet(out)
-  }
-
   /** The key→partition mapping shared by [[writeBucketed]] and
     * [[upsertByKey]]: both sides MUST derive buckets identically or an
     * upsert would rewrite the wrong partitions.
@@ -821,14 +782,14 @@ object Curation {
   }
 
   /** Compact a [[writeBucketed]] table's fragmented buckets. Every
-    * [[upsertByKey]]/[[deleteByKey]] leaves a fresh set of files in each
+    * [[upsertByKey]] leaves a fresh set of files in each
     * touched bucket; after thousands of batches a hot bucket is thousands
     * of small files and open/footer overhead dominates its scans. This
     * reads ONLY buckets whose data-file count exceeds `maxFilesPerBucket`
     * (a driver-side directory listing, no data read), rewrites each as a
     * single file, and leaves every other bucket untouched — content is
     * unchanged, so readers are unaffected apart from the same
-    * single-writer caveat as upsert/delete. Returns the compacted bucket
+    * single-writer caveat as upsert. Returns the compacted bucket
     * ids (empty = nothing exceeded the threshold, nothing was written).
     *
     * The repartition hashes on `__bucket` into one partition per oversized
@@ -861,63 +822,6 @@ object Curation {
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").parquet(path)
     oversized.sorted
-  }
-
-  /** Partition-pruned DELETE from a [[writeBucketed]] table — the
-    * right-to-erasure / retention-enforcement half of the living-corpus
-    * lifecycle ([[upsertByKey]] is the other). Only the keys' buckets are
-    * read and rewritten, so a deletion batch costs (buckets touched ×
-    * bucket size), never the table.
-    *
-    * The one correctness trap: DYNAMIC partition overwrite replaces only
-    * partitions PRESENT IN THE WRITTEN DATA. A bucket whose every row is
-    * deleted produces no output rows, so the overwrite would silently leave
-    * its old files — and the "deleted" keys — alive. Emptied buckets are
-    * therefore detected (affected minus surviving, a driver-side set
-    * difference bounded by numBuckets) and their directories removed
-    * explicitly. Same single-writer isolation caveat as [[upsertByKey]].
-    */
-  def deleteByKey(
-      spark: SparkSession, path: String, keys: DataFrame,
-      keyCol: String, numBuckets: Int): Unit = {
-    import spark.implicits._
-    require(numBuckets > 0, "numBuckets must be positive")
-    // duplicate keys are harmless for delete (idempotent) — dedupe locally
-    val keyed = keys.select(col(keyCol)).distinct()
-      .withColumn("__bucket", bucketOf(col(keyCol), numBuckets))
-      .localCheckpoint(true)
-    val affected = keyed.select("__bucket").distinct().as[Int].collect().toSet
-    if (affected.isEmpty) return
-    val existing = spark.read.parquet(path)
-      .filter(col("__bucket").isin(affected.toSeq: _*))
-    val remaining = existing
-      .join(keyed.select(col(keyCol)), Seq(keyCol), "left_anti")
-      .localCheckpoint(true)
-    val surviving = remaining.select("__bucket").distinct().as[Int].collect().toSet
-    if (surviving.isEmpty) {
-      // would the table end up with NO buckets at all? plain parquet cannot
-      // represent an empty partitioned table (no partition dirs to carry
-      // the schema; a root-level empty file would break partition
-      // discovery for every later write) — refuse BEFORE mutating instead
-      // of leaving an unreadable husk
-      val fs0 = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val onDisk = fs0.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("__bucket="))
-        .map(_.getPath.getName.stripPrefix("__bucket=").toInt).toSet
-      require((onDisk -- affected).nonEmpty,
-        "delete would empty the whole table — drop and recreate it instead " +
-          "(plain parquet cannot represent an empty partitioned table)")
-    }
-    if (surviving.nonEmpty)
-      remaining.write.partitionBy("__bucket")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (affected -- surviving).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/__bucket=$b"), true)
-    }
   }
 
   /** B40 completion — JSONL (newline-delimited JSON) round trip: the

@@ -185,10 +185,14 @@ object Dedup {
     // count of elements equal to w through NATIVE codegen'd collection
     // expressions. The previous `size(filter(toks, t === w))` ran the
     // lambda INTERPRETED per token × 15 markers (HOFs never codegen), and
-    // measured 0.96 vs 0.62 s at sf0.1. Equal by construction: split()
-    // arrays carry no nulls, so removing every w-element counts exactly
-    // the t === w matches. Tokens materialize as an attribute first so
-    // the split runs once per row, not once per marker.
+    // measured 0.96 vs 0.62 s at sf0.1. Equal by construction for
+    // non-null text only: split() arrays carry no nulls, so removing every
+    // w-element counts exactly the t === w matches. A NULL text makes
+    // toks NULL, where size(null) = -1 gave the filter form -1 per marker
+    // term but this form 0, which can move a pred_lang tie-break; the
+    // generated documents table has no NULL text. Tokens materialize as
+    // an attribute first so the split runs once per row, not once per
+    // marker.
     val scoreCols = markers.map { case (lang, ws) =>
       ws.map(w =>
           size(col("graft_toks")) - size(array_remove(col("graft_toks"), lit(w))))
@@ -459,9 +463,9 @@ object Dedup {
     * Parity.r4 + tie-break determinism); pair scoring is q33's rounded
     * cosine. Deterministic centroids (vec_id < 8) keep it oracle-checked —
     * and quadratic in corpus size, so this form is the TEST-SCALE twin:
-    * the scale form is [[graft.operators.SemDeDup.pairsAuto]] (k grown as
-    * n/targetClusterSize; shares this query's pair code via
-    * [[graft.operators.SemDeDup.pairs]]), declared rows-only as q111.
+    * the scale form is q111, rows-only ([[graft.operators.SemDeDup.pairs]]
+    * over [[graft.operators.SemDeDup.trainedCentroids]], k grown as
+    * n/targetClusterSize; it shares this query's pair code).
     */
   private def q101(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)

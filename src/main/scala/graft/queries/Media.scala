@@ -86,9 +86,7 @@ object Media {
       |ORDER BY q_id, rank""".stripMargin
 
   /** B22/B34 — per-label embedding centroids in long form: posexplode →
-    * two-key hash aggregate. The typed-Aggregator form (operators.VectorMean)
-    * computes the same centroids group-at-a-time and is equality-tested
-    * against this in VectorMeanSpec; this long form is the oracle shape.
+    * two-key hash aggregate, the oracle shape.
     */
   private def q41(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)

@@ -168,14 +168,14 @@ object ScalePaths {
     * targetClusterSize=64 keeps k meaningful (>= 8 trained cells) at
     * verify scale; minCos=0.4 is q33/q101's threshold — the testdata
     * vectors are near-orthogonal, so higher cuts return nothing.
+    *
+    * The trained quantizer is built once per (session, dataset version):
+    * training inside the query retrained the SAME deterministic centroids
+    * every sweep (a corpus-count probe + a bounded sample collect + driver
+    * Lloyd's per construction). The Clustering.trainedCents / cachedBpe
+    * artifact convention applies: the quantizer is an artifact, the pair
+    * stage runs per call.
     */
-  /** q111's trained quantizer once per (session, dataset version) —
-    * round 18: the pairsAuto form retrained the SAME deterministic
-    * centroids every sweep (a corpus-count probe + a bounded sample
-    * collect + driver Lloyd's per construction). The
-    * Clustering.trainedCents / cachedBpe artifact convention applied; the
-    * unrolled call below is exactly pairsAuto's body with the training
-    * hoisted. */
   private def q111(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val cents = graft.Artifacts.sessionFrame("semdedup_cents", s, dir)(

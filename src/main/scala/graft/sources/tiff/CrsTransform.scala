@@ -699,14 +699,6 @@ object CrsTransform {
     (lonDeg, math.toDegrees(phi2))
   }
 
-  /** Datums the EPSG:1188 VALUE may connect — delegates to
-    * [[bridgeTransform]] so this can never drift from the value-gated
-    * design as pairs are added (it answers "does epsg1188 apply?", which
-    * is exactly WGS84 ↔ NAD83; ETRS89 has its own value, epsg1149).
-    */
-  def bridgeable(a: Ellipsoid, b: Ellipsoid): Boolean =
-    bridgeTransform("epsg1188", a, b).isDefined
-
   /** The zero-shift bridge a given option VALUE applies to a given datum
     * pair — the value is informed consent for ONE SPECIFIC published
     * transform, never a generic "ignore datums" switch:

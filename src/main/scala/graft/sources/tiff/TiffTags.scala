@@ -126,13 +126,6 @@ object TiffTags {
       */
     def nonGeographic: Boolean = crsModelType.exists(_ != 2)
 
-    /** True when the grid carries rotation/shear terms (full-affine 34264):
-      * coordinates are then functions of BOTH indices and the axis-aligned
-      * shortcuts (separable window pruning, trapezoid pixel area) don't
-      * apply.
-      */
-    def rotated: Boolean = rotX != 0.0 || rotY != 0.0
-
     /** Pixel-centroid geo-X of pixel (col, row) — the FULL affine
       * `x = ox + (col+½)·sx + (row+½)·rx`; rx = 0 on axis-aligned grids
       * reduces this exactly to the historical lon-of-col form.
@@ -333,7 +326,6 @@ object TiffTags {
           val b = payload(e)
           Array.tabulate(e.count.toInt)(i => b.getDouble(i * 8))
         }
-      def doubles(tag: Int): Option[Array[Double]] = doublesIn(entries, tag)
 
       def asciiIn(es: Map[Int, Entry], tag: Int): Option[String] = es.get(tag).map { e =>
         val b = payload(e)

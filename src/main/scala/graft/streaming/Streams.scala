@@ -1,49 +1,16 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Typed event row shared by the streaming operators and their tests. */
-final case class Event(
-    event_id: Long,
-    user_id: Long,
-    event_type: String,
-    ts: Timestamp,
-    value: Double)
-
-/** Running per-user aggregate emitted by [[Streams.runningUserStats]]. */
-final case class UserStats(user_id: Long, n_events: Long, sum_value: Double)
-
-/** One open session interval in [[Streams.sessionsWithTimeout]]'s state
-  * (event time in microseconds — see [[IntervalState]]).
-  */
-final case class OpenSession(
-    start_us: Long, last_us: Long, n_events: Long, sum_value: Double)
-
-/** Per-user state of [[Streams.sessionsWithTimeout]]: ALL open sessions,
-  * sorted by start — a non-late out-of-order event may open an EARLIER
-  * session than the current one, or bridge two neighbors into one, so a
-  * single open interval cannot represent the state faithfully. Bounded by
-  * the watermark: sessions more than the gap behind it close and leave.
-  */
-final case class OpenSessions(sessions: Seq[OpenSession])
-
-/** A CLOSED session emitted by [[Streams.sessionsWithTimeout]]. */
-final case class ClosedSession(
-    user_id: Long, s_start: Timestamp, s_end: Timestamp,
-    n_events: Long, sum_value: Double)
-
-/** Streaming operators (SURVEY §2B B35–B38), written as plain
+/** Streaming operators (SURVEY §2B B35–B36), written as plain
   * DataFrame→DataFrame transforms so the SAME code runs on a batch frame and
   * on a `readStream`/MemoryStream frame — batch results double as the oracle
   * for the streaming path (tested in StreamingSpec).
   *
   * Scale posture: all aggregations key on (window/session, group) so state
   * is partitioned by group key across executors; watermarks bound state
-  * size; `flatMapGroupsWithState` keeps one small state object per user.
+  * size.
   */
 object Streams {
 
@@ -84,18 +51,6 @@ object Streams {
       .select(col("user_id"), col("w.start").as("s_start"), col("w.end").as("s_end"),
         col("n_events"), col("sum_value"))
 
-  /** B37 — watermarked tumbling aggregate: in append mode a window only
-    * emits once the watermark passes its end, and events later than the
-    * watermark are dropped.
-    */
-  def watermarkedTumbling(events: DataFrame, delay: String = "10 minutes"): DataFrame =
-    tumblingCounts(wm(events, "ts", delay))
-
-  /** B38 — stateful dedup by event_id, state bounded by the watermark. */
-  def dedupWithinWatermark(events: DataFrame, delay: String = "10 minutes"): DataFrame =
-    wm(events, "ts", delay)
-      .dropDuplicatesWithinWatermark("event_id")
-
   /** Stream-stream inner join: match each purchase to the clicks of the
     * same user in the preceding hour. Both sides are watermarked so Spark
     * can bound the join state buffers (the unbounded-state trap of
@@ -114,318 +69,5 @@ object Streams {
         col("c_ts") <= col("p_ts") &&
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"))
       .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"))
-  }
-
-  /** Streaming ingestion dedup: flag each arriving document that collides
-    * with the existing corpus's persisted LSH band index
-    * ([[graft.operators.MinHashLSH.bandIndex]]) — a STREAM-STATIC equi-join
-    * on (band, key), the Spark-first shape for "dedup new data against
-    * what we already have": the static side is a plain DataFrame (readable
-    * from parquet, broadcast or shuffled by Catalyst as its size
-    * dictates), the stream side computes signatures per micro-batch with a
-    * stateless join. The trailing dropDuplicates collapses multi-band hits
-    * AND suppresses re-emission if the same document arrives again — its
-    * state is one row per emitted collision pair — fine for bounded tests,
-    * unbounded growth on an unbounded stream. Pass `watermark` (event-time
-    * column, delay) to bound it: the stream is watermarked BEFORE the
-    * signature computation, the event-time column rides through the band
-    * join (dropDuplicatesWithinWatermark needs it in its input schema), and
-    * the dedup switches to `dropDuplicatesWithinWatermark`, whose state
-    * expires once the watermark passes a pair's event time + delay.
-    *
-    * @param watermark optional (eventTimeCol, delay) — e.g. `("ts", "10
-    *   minutes")`; None keeps the exact-dedup default for bounded inputs.
-    */
-  def streamDedupAgainstIndex(
-      docs: DataFrame,
-      index: DataFrame,
-      lsh: graft.operators.MinHashLSH = graft.operators.MinHashLSH(),
-      maxBucket: Int = 0,
-      watermark: Option[(String, String)] = None): DataFrame = watermark match {
-    case Some((tsCol, delay)) =>
-      lsh.rawCandidatesAgainstIndex(
-          wm(docs, tsCol, delay), "doc_id", "text", index,
-          maxBucket, carry = Seq(tsCol))
-        .select(col("new_id").as("doc_id"), col("index_id").as("matched_id"),
-          col(tsCol))
-        .dropDuplicatesWithinWatermark("doc_id", "matched_id")
-        // event time was only input to the dedup's state expiry — drop it
-        // so both modes emit the same (doc_id, matched_id) schema
-        .drop(tsCol)
-    case None =>
-      lsh.rawCandidatesAgainstIndex(docs, "doc_id", "text", index, maxBucket)
-        .select(col("new_id").as("doc_id"), col("index_id").as("matched_id"))
-        .dropDuplicates("doc_id", "matched_id")
-  }
-
-  /** Streaming EMBEDDING dedup against a persisted IVF index
-    * ([[graft.operators.Ann.buildIvfIndex]]) — the vector analog of
-    * [[streamDedupAgainstIndex]]: each arriving vector probes its `nprobe`
-    * nearest coarse cells (computed per row against the ≤nCells centroids
-    * loaded once at plan time — an expression over literal centroids, no
-    * per-batch driver work), candidates come from a STREAM-STATIC equi-join
-    * on the cell key against the persisted assignment table, and exact
-    * cosine ≥ `threshold` (the same native vec_dot math as the batch IVF
-    * search) decides a duplicate. All stateless per micro-batch except the
-    * trailing pair dedup, which follows the text operator's contract:
-    * exact `dropDuplicates` for bounded inputs, or pass `watermark`
-    * (event-time column, delay) to switch to
-    * `dropDuplicatesWithinWatermark` so pair state expires with the
-    * watermark instead of growing forever.
-    *
-    * @param vectors streaming frame with `id` (LONG), `embedding`
-    *   (ARRAY<FLOAT>), plus the event-time column when `watermark` is set
-    * @param corpus the INDEXED corpus (`id`, `embedding`) — the static side
-    *   that candidate embeddings are fetched from (the assignment table
-    *   stores only (id, cell), exactly like the batch search path)
-    */
-  def streamDedupAgainstIvfIndex(
-      vectors: DataFrame,
-      indexPath: String,
-      corpus: DataFrame,
-      threshold: Double = 0.9,
-      nprobe: Int = 4,
-      watermark: Option[(String, String)] = None): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
-    def cosine(a: Column, b: Column): Column =
-      graft.plans.GraftFunctions.vecDot(a, b) /
-        (sqrt(graft.plans.GraftFunctions.vecDot(a, a)) *
-          sqrt(graft.plans.GraftFunctions.vecDot(b, b)))
-    val cents = spark.read.parquet(s"$indexPath/centroids")
-      .as[graft.operators.Vec].collect().sortBy(_.id)
-    // (−score, cell) structs sort lexicographically: highest score first,
-    // ties to the LOWER cell — the batch nearestCells rule. Two subtleties:
-    //   - the probe key is the centroid's ARRAY POSITION in id order, the
-    //     assignment table's cell convention (Ann.buildIvfIndex normalizes
-    //     persisted centroid ids to positions, but zipWithIndex keeps this
-    //     correct even for an index whose ids drifted — probing by a wrong
-    //     key would silently match nothing)
-    //   - cosine's query-norm divisor is constant across cells and cannot
-    //     change the per-row ranking, so score = dot * (1/|c|) with the
-    //     reciprocal centroid norms precomputed here — custom expressions
-    //     are not constant-folded, so the full cosine would re-evaluate
-    //     vecDot(emb, emb) once per centroid per row in a hot stream
-    val cellScores = array(cents.toIndexedSeq.zipWithIndex.map { case (c, ci) =>
-      val invNorm = 1.0 / math.sqrt(
-        c.embedding.foldLeft(0.0)((s, x) => s + x.toDouble * x))
-      struct((-graft.plans.GraftFunctions.vecDot(
-          col("embedding"), typedlit(c.embedding.toSeq)) * lit(invNorm))
-        .as("nscore"), lit(ci).as("cell"))
-    }: _*)
-    // the watermark MUST be declared on the raw input: declared downstream
-    // of the similarity filter it would only see rows that survived the
-    // threshold, so a batch of non-duplicates would never advance it and
-    // dedup state would never expire
-    val src = watermark match {
-      case Some((tsCol, delay)) => wm(vectors, tsCol, delay)
-      case None => vectors
-    }
-    val probed = src
-      .withColumn("cell", explode(
-        slice(array_sort(cellScores), 1, nprobe).getField("cell")))
-    // through loadIvfAssignments so tombstoned (erased) vectors stop
-    // matching the moment they are deleted from the index
-    val assigned = graft.operators.Ann.loadIvfAssignments(spark, indexPath)
-      .select(col("id").as("matched_id"), col("cell"))
-    val matchedEmb = corpus
-      .select(col("id").as("matched_id"), col("embedding").as("matched_emb"))
-    val scored = probed
-      .join(assigned, "cell")
-      .join(matchedEmb, "matched_id")
-      .withColumn("cos_sim", cosine(col("embedding"), col("matched_emb")))
-      .filter(col("cos_sim") >= threshold && col("id") =!= col("matched_id"))
-    watermark match {
-      case Some((tsCol, delay)) =>
-        // event time rides the chain from `src` and only feeds the dedup's
-        // state expiry — drop it so both modes emit the same schema
-        scored.select(col("id"), col("matched_id"), col(tsCol))
-          .dropDuplicatesWithinWatermark("id", "matched_id")
-          .drop(tsCol)
-      case None =>
-        scored.select(col("id"), col("matched_id"))
-          .dropDuplicates("id", "matched_id")
-    }
-  }
-
-  /** STREAM-STREAM AS-OF join (within tolerance), composed Spark-first:
-    * a watermarked interval join buffers only `tolerance` of right history
-    * per key (the state bound stream-stream joins demand), then a
-    * watermarked `max_by` aggregate keeps the LATEST right match per left
-    * row — pandas merge_asof's backward semantics, incrementally, in
-    * append mode. Rows emit once the watermark closes their group; a left
-    * row with no right match within tolerance does not emit (inner
-    * semantics — the composed form cannot express outer without a second
-    * state layer; use the batch AsOf.join for that).
-    *
-    * Contrast with [[graft.plans.AsOf]]: the custom operator is the batch
-    * and stream-STATIC path (zero state); this composition is the
-    * both-sides-streaming path, built entirely from operators whose state
-    * eviction Spark already manages.
-    *
-    * Input contract: left rows are KEYED by `event_id` — the final
-    * aggregate groups on it, so physically duplicated deliveries of the
-    * same event (at-least-once sources) intentionally collapse to one
-    * output row. For sources that can redeliver with the same key, that is
-    * the dedup you want; if duplicate event_ids are distinct events,
-    * dedupe or re-key upstream (`dropDuplicatesWithinWatermark`).
-    */
-  def streamAsOf(
-      left: DataFrame,
-      right: DataFrame,
-      tolerance: String = "1 hour",
-      delay: String = "10 minutes"): DataFrame = {
-    val l = wm(left, "ts", delay)
-      .select(col("event_id").as("l_id"), col("user_id").as("l_user"),
-        col("ts").as("l_ts"), col("value").as("l_value"))
-    val r = wm(right, "ts", delay)
-      .select(col("user_id").as("r_user"), col("ts").as("r_ts"),
-        col("value").as("r_value"))
-    l.join(r,
-      col("l_user") === col("r_user") &&
-        col("r_ts") <= col("l_ts") &&
-        col("r_ts") >= col("l_ts") - expr(s"INTERVAL $tolerance"))
-      .groupBy(col("l_id"), col("l_user"), col("l_ts"), col("l_value"))
-      // max of the struct, not max_by: struct ordering tie-breaks equal
-      // r_ts by r_value deterministically
-      .agg(max(struct(col("r_ts"), col("r_value"))).as("m"))
-      .select(col("l_id").as("event_id"), col("l_user").as("user_id"),
-        col("l_ts").as("ts"), col("l_value").as("value"),
-        col("m.r_ts").as("matched_ts"), col("m.r_value").as("matched_value"))
-  }
-
-  /** B38 — custom sessionization with EVENT-TIME TIMEOUT: the pattern
-    * `session_window` cannot express — each session closes and emits
-    * EXACTLY once, when the WATERMARK passes strictly beyond its gap
-    * deadline (`GroupStateTimeout.EventTimeTimeout` fires the group
-    * function with `hasTimedOut` even when no new rows arrive). Open
-    * sessions are held (never closed inline) so non-late OUT-OF-ORDER
-    * events can still extend or bridge them; state is the [[OpenSessions]]
-    * interval list per active user — bounded by the watermark horizon, not
-    * history, so nothing leaks and the emitted sessions equal the batch
-    * `session_window` oracle.
-    *
-    * The insert/sweep hooks are where production variants hang their
-    * session caps (max duration / max events) and richer session payloads.
-    *
-    * The interval-list machinery (insert-then-merge, strict sweep,
-    * timeout clamp) is [[IntervalState]], shared with
-    * [[ChatAssembly.assemble]]; event time is MICROSECONDS end to end
-    * (full Timestamp precision — the batch `session_window` oracle
-    * sessionizes at full precision too).
-    */
-  def sessionsWithTimeout(
-      events: Dataset[Event],
-      gap: String = "30 minutes",
-      delay: String = "10 minutes"): Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    val giv = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(gap))
-    require(giv.months == 0 && giv.days == 0,
-      "session gap must be a sub-day interval")
-    val gapUs = giv.microseconds
-    def close(uid: Long, s: OpenSession): ClosedSession =
-      ClosedSession(uid, IntervalState.usToTs(s.start_us),
-        IntervalState.usToTs(s.last_us), s.n_events, s.sum_value)
-    wm(events, "ts", delay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OpenSessions, ClosedSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Event], state: GroupState[OpenSessions]) =>
-          val prior = state.getOption.map(_.sessions).getOrElse(Seq.empty)
-          val merged = rows.foldLeft(prior) { (ss, e) =>
-            val t = IntervalState.tsToUs(e.ts)
-            IntervalState.insert(ss, OpenSession(t, t, 1, e.value), gapUs)(
-              _.start_us, _.last_us,
-              (p, s) => OpenSession(p.start_us, math.max(p.last_us, s.last_us),
-                p.n_events + s.n_events, p.sum_value + s.sum_value))
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (done, open) = IntervalState.sweep(merged, wmUs, gapUs)(_.last_us)
-          if (open.isEmpty) state.remove()
-          else {
-            state.update(OpenSessions(open))
-            val tUs = IntervalState.timeoutUs(open, wmUs, gapUs)(_.last_us)
-            state.setTimeoutTimestamp(
-              math.max(Math.floorDiv(tUs, 1000L), state.getCurrentWatermarkMs() + 1))
-          }
-          done.map(close(uid, _)).iterator
-      }
-  }
-
-  /** Streaming quality scoring — the deployment shape of the trained
-    * classifier ([[graft.operators.QualityClassifier]]): weights are
-    * trained OFFLINE (batch) and folded into each micro-batch as literals;
-    * the per-batch work is the same bounded feature build + one aggregate
-    * as the batch path, so stream scores are identical to batch scores by
-    * construction (StreamingSpec pins it). foreachBatch rather than a
-    * direct streaming plan because the feature build aggregates per
-    * document — legal inside a micro-batch, unbounded as a raw streaming
-    * aggregation.
-    */
-  def scoreQualityBatches(
-      docs: DataFrame,
-      weights: Array[Double])(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      sink(graft.operators.QualityClassifier.score(
-        graft.operators.QualityClassifier.features(batch), weights), id)
-    }
-
-  /** Streaming corpus-drift monitoring: each micro-batch's distribution
-    * is PSI-compared against a STATIC reference snapshot (the
-    * [[graft.operators.Drift]] fixed-bucket math, q127) and the per-batch
-    * metric rows go to `sink` tagged with the batch id — the
-    * ingestion-time "is this feed still the corpus we trained on?" alarm
-    * wired into the same lifecycle as [[streamDedupAgainstIndex]].
-    * `foreachBatch` because PSI is a chained aggregation (bucket counts,
-    * then a sum over buckets) that a raw streaming plan cannot express;
-    * per micro-batch it runs the EXACT batch operator, inheriting its
-    * determinism (fixed caller-supplied edges, ε-smoothing, null
-    * sentinel) and its oracle-checked math. Reference-side bucket counts
-    * are recomputed per batch — pre-aggregate the reference to its bucket
-    * histogram once if the snapshot is large (the operator only needs its
-    * shares, which is why `reference` accepts any static frame).
-    *
-    * @param numeric     (column, lo, hi, nBuckets) per monitored numeric
-    * @param categorical monitored categorical columns
-    */
-  def monitorDriftBatches(
-      docs: DataFrame,
-      reference: DataFrame,
-      numeric: Seq[(String, Double, Double, Int)],
-      categorical: Seq[String])(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(numeric.nonEmpty || categorical.nonEmpty,
-      "monitorDriftBatches: nothing to monitor")
-    docs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val parts =
-        numeric.map { case (c, lo, hi, n) =>
-          graft.operators.Drift.numericPsi(reference, batch, c, lo, hi, n) } ++
-        categorical.map(c =>
-          graft.operators.Drift.categoricalPsi(reference, batch, c))
-      sink(parts.reduce(_.unionByName(_)), id)
-    }
-  }
-
-  /** B38 — custom state: running per-user event count + value sum,
-    * re-emitted on every update (OutputMode.Update).
-    */
-  def runningUserStats(events: Dataset[Event]): Dataset[UserStats] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserStats, UserStats](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[UserStats]) =>
-          val prev = state.getOption.getOrElse(UserStats(userId, 0L, 0.0))
-          var n = prev.n_events
-          var s = prev.sum_value
-          rows.foreach { e => n += 1; s += e.value }
-          val next = UserStats(userId, n, s)
-          state.update(next)
-          Iterator.single(next)
-      }
   }
 }

@@ -126,7 +126,7 @@ object WatermarkDropGuard {
     Bridge.drainListenerBus(spark.sparkContext)
 
   /** Set to "false" to opt OUT of the automatic per-session guard that the
-    * streaming entry points ([[Streams]], [[ChatAssembly]]) install.
+    * streaming entry points ([[Streams]]) install.
     *
     * The conf is consulted only at install time: it must be "false" BEFORE
     * the session's first watermark-bearing call — flipping it after a guard

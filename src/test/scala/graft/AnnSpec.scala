@@ -10,7 +10,7 @@ class AnnSpec extends SparkSpec {
     .select(col("vec_id").as("id"), col("embedding"))
     .as[Vec].cache()
 
-  private lazy val dim = Ann.headDim(corpus)
+  private lazy val dim = corpus.head().embedding.length
 
   test("brute force: self is its own nearest neighbor with cos 1.0") {
     val queries = corpus.toDF().filter(col("id") === 1)
@@ -124,139 +124,6 @@ class AnnSpec extends SparkSpec {
     // size would recall ~their fraction of the corpus (<0.35); require the
     // LSH structure to do clearly better on the clustered embeddings
     assert(meanRecall > 0.35, s"mean recall $meanRecall (per-query: $recalls)")
-  }
-
-  test("persisted IVF index: indexed search == direct search") {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-ivf-index"
-    Ann.buildIvfIndex(corpus, path, nCells = 16)
-    val direct = Ann.ivfTopK(spark, corpus, Seq(1L, 2L, 3L), k = 10, nCells = 16, nprobe = 4)
-      .select("q_id", "rank", "id").as[(Long, Int, Long)].collect().toSet
-    val indexed = Ann.ivfTopKIndexed(spark, corpus, path, Seq(1L, 2L, 3L), k = 10, nprobe = 4)
-      .select("q_id", "rank", "id").as[(Long, Int, Long)].collect().toSet
-    assert(indexed == direct)
-    assert(indexed.nonEmpty)
-    // the persisted centroid set is bounded and typed
-    assert(spark.read.parquet(s"$path/centroids").count() <= 16)
-  }
-
-  test("appendToIvfIndex: append == one-build index with the same centroids") {
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_append").toString
-    val base = corpus.filter(col("id") < 400).as[Vec]
-    val batch = corpus.filter(col("id") >= 400).as[Vec]
-    assert(base.count() > 0 && batch.count() > 0, "fixture split degenerate")
-    val appended = s"$root/appended"
-    Ann.buildIvfIndex(base, appended, nCells = 16)
-    Ann.appendToIvfIndex(batch, appended)
-    // every corpus vector must now be assigned exactly once
-    val assigned = spark.read.parquet(s"$appended/assignments")
-    assert(assigned.count() == corpus.count())
-    assert(assigned.select("id").distinct().count() == corpus.count())
-    // reference: an index whose assignments were built in ONE pass from the
-    // SAME persisted centroids (a public rebuild would retrain on the full
-    // corpus and move the quantizer — exactly what append avoids)
-    val fresh = s"$root/fresh"
-    val cents = spark.read.parquet(s"$appended/centroids").as[Vec]
-      .collect().sortBy(_.id)
-    spark.read.parquet(s"$appended/centroids")
-      .write.parquet(s"$fresh/centroids")
-    Ann.ivfAssign(corpus, cents).write.parquet(s"$fresh/assignments")
-    val qs = Seq(1L, 2L, 3L, 410L)
-    val viaAppend = Ann.ivfTopKIndexed(spark, corpus, appended, qs, k = 10, nprobe = 4)
-      .select("q_id", "rank", "id").as[(Long, Int, Long)].collect().toSet
-    val viaFresh = Ann.ivfTopKIndexed(spark, corpus, fresh, qs, k = 10, nprobe = 4)
-      .select("q_id", "rank", "id").as[(Long, Int, Long)].collect().toSet
-    assert(viaAppend == viaFresh)
-    assert(viaAppend.nonEmpty)
-    // appended vectors are really in the searchable set: some result row
-    // returns a batch id as a neighbor (410's cell-mates include batch ids)
-    assert(viaAppend.exists { case (_, _, id) => id >= 400L },
-      "no appended vector ever surfaced as a neighbor")
-    // appending to a never-built path fails loudly
-    val err = intercept[Exception] {
-      Ann.appendToIvfIndex(batch, s"$root/absent")
-    }
-    assert(err.getMessage != null)
-    // a mismatched-dim batch must be refused, not prefix-assigned
-    val wrongDim = Seq(Vec(9999L, Array.fill(3)(0.5f))).toDS()
-    val dimErr = intercept[IllegalArgumentException] {
-      Ann.appendToIvfIndex(wrongDim, appended)
-    }
-    assert(dimErr.getMessage.contains("index dim"), dimErr.getMessage)
-  }
-
-  test("streaming ingestion: foreachBatch appends micro-batches to the persisted IVF index") {
-    // the embedding twin of the streaming upsert: vectors arrive as a
-    // stream, each micro-batch is assigned under the persisted quantizer
-    // and appended — the index grows continuously without a rebuild, and
-    // batch searches see the streamed vectors immediately after
-    implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_stream").toString + "/idx"
-    val base = corpus.filter(col("id") < 400).as[Vec]
-    Ann.buildIvfIndex(base, path, nCells = 16)
-    val baseCount = base.count()
-    val arrivals = corpus.filter(col("id") >= 400).as[Vec].collect()
-      .sortBy(_.id).take(20)
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Array[Float])]
-    val q = input.toDF().toDF("id", "embedding").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Ann.appendToIvfIndex(batch.as[Vec], path)
-      }
-      .start()
-    try {
-      input.addData(arrivals.take(10).map(v => (v.id, v.embedding)).toSeq)
-      q.processAllAvailable()
-      input.addData(arrivals.drop(10).map(v => (v.id, v.embedding)).toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val assigned = spark.read.parquet(s"$path/assignments")
-    assert(assigned.count() == baseCount + 20)
-    // streamed ids are assigned to valid cells and searchable
-    val streamedCells = assigned
-      .filter(col("id").isin(arrivals.map(_.id).toSeq: _*))
-      .select("cell").as[Int].collect()
-    assert(streamedCells.length == 20)
-    assert(streamedCells.forall(c => c >= 0 && c < 16))
-    val hits = Ann.ivfTopKIndexed(spark, corpus, path,
-        Seq(arrivals.head.id), k = 5, nprobe = 4)
-      .select("id").as[Long].collect()
-    assert(hits.nonEmpty, "streamed vector's neighborhood is empty")
-  }
-
-  test("deleteFromIvfIndex: delete == same-centroid rebuild without; compact folds it in") {
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_del").toString
-    val idx = s"$root/idx"; val ref = s"$root/ref"
-    Ann.buildIvfIndex(corpus, idx, nCells = 16)
-    val qs = Seq(1L, 3L, 4L)
-    // victims = actual baseline hits, so the delete provably changes results
-    val baseline = Ann.ivfTopKIndexed(spark, corpus, idx, qs, k = 10, nprobe = 4)
-      .select("q_id", "rank", "id").as[(Long, Int, Long)].collect().toSet
-    val victims = baseline.map(_._3).filterNot(qs.contains).take(3).toSeq
-    assert(victims.nonEmpty)
-    Ann.deleteFromIvfIndex(spark, idx, victims)
-    // reference: an index with the SAME centroids whose assignments were
-    // built from the remaining vectors only (a public rebuild would
-    // retrain the quantizer — the delete contract deliberately does not)
-    val cents = spark.read.parquet(s"$idx/centroids").as[Vec].collect().sortBy(_.id)
-    spark.read.parquet(s"$idx/centroids").write.parquet(s"$ref/centroids")
-    Ann.ivfAssign(corpus.filter(!col("id").isin(victims: _*)).as[Vec], cents)
-      .write.parquet(s"$ref/assignments")
-    def search(path: String) =
-      Ann.ivfTopKIndexed(spark, corpus, path, qs, k = 10, nprobe = 4)
-        .select("q_id", "rank", "id").as[(Long, Int, Long)].collect().toSet
-    val afterDelete = search(idx)
-    assert(afterDelete == search(ref) && afterDelete.nonEmpty)
-    assert(afterDelete != baseline)
-    assert(!afterDelete.exists(r => victims.contains(r._3)))
-    // re-deleting + deleting a never-indexed id are both no-ops
-    Ann.deleteFromIvfIndex(spark, idx, victims :+ 999999999L)
-    assert(search(idx) == afterDelete)
-    // compaction: identical results, tombstones physically folded + reset
-    Ann.compactIvfIndex(spark, idx)
-    assert(search(idx) == afterDelete)
-    assert(spark.read.parquet(s"$idx/assignments")
-      .filter(col("id").isin(victims: _*)).count() == 0)
-    assert(spark.read.parquet(s"$idx/deletes").count() == 0)
   }
 
   test("ann operators leave no cached RDDs behind (round-1 leak)") {

@@ -62,24 +62,11 @@ class BpeSpec extends SparkSpec {
     assert(sym == " aa aa ", s"got '$sym'")
   }
 
-  test("segmented merge application equals the single-expression chain") {
-    val docs = Tables.documents(spark, sf())
-    val (merges, _) = Bpe.train(Bpe.wordTypes(docs, "text"), 8)
-    val words = docs.select(explode(split(col("text"), " ")).as("word"))
-      .filter(col("word") =!= "").distinct()
-    // segment=3 forces multiple checkpointed segments over 8 merges
-    val seg = Bpe.applyMergesSegmented(words, "word", "sym", merges, segment = 3)
-    val mismatches = seg
-      .withColumn("sym1", Bpe.applyMerges(col("word"), merges))
-      .filter(col("sym") =!= col("sym1")).count()
-    assert(mismatches == 0)
-  }
-
   test("dictionary encode equals the applyMerges fold on every trained word") {
     val docs = Tables.documents(spark, sf())
     val (merges, dict) = Bpe.train(Bpe.wordTypes(docs, "text"), 8)
     val viaFold = dict.select(col("word"),
-      size(split(trim(Bpe.applyMerges(col("word"), merges)), " ")).as("nf"),
+      size(split(trim(BpeSpec.applyMerges(col("word"), merges)), " ")).as("nf"),
       size(split(trim(col("sym")), " ")).as("nd"))
     assert(viaFold.filter(col("nf") =!= col("nd")).count() == 0)
   }
@@ -123,8 +110,8 @@ class BpeSpec extends SparkSpec {
     assert(m1 == m2)
     // the trained dictionary symbols obey the same two-spaces invariant
     // machinery as BPE: re-applying the learned merges reproduces them
-    val reapplied = Bpe.applyMergesSegmented(
-      d1.select(col("word"), col("sym")), "word", "sym2", m1, segment = 2)
+    val reapplied = d1.select(col("word"), col("sym"),
+      BpeSpec.applyMerges(col("word"), m1).as("sym2"))
     assert(reapplied.filter(col("sym") =!= col("sym2")).isEmpty)
     assert(d2.select(col("word"), col("sym")).except(
       d1.select(col("word"), col("sym"))).isEmpty)
@@ -169,5 +156,24 @@ class BpeSpec extends SparkSpec {
       assert(wtDist.select("word", "freq", "sym")
         .except(wtFast.select("word", "freq", "sym")).isEmpty)
     }
+  }
+}
+
+object BpeSpec {
+  import org.apache.spark.sql.Column
+
+  /** The merge list applied to a raw word column as one chain of literal
+    * replaces on the doubled-delimiter form (double once, one replace per
+    * merge, collapse once): the operations training applied, so for any
+    * trained word it must EQUAL the dictionary encode. Returns the spaced
+    * symbol string. Catalyst analysis recurses over the chain and
+    * overflows the default stack past ~512 merges, so keep it short.
+    */
+  def applyMerges(word: Column, merges: Seq[Bpe.Merge]): Column = {
+    require(merges.length <= 256, s"${merges.length} merges chain too deep")
+    Bpe.collapsed(merges.foldLeft(
+      Bpe.doubled(concat(lit(" "), array_join(split(word, ""), " "), lit(" ")))) {
+      (acc, m) => Bpe.mergeOnDoubled(acc, m)
+    })
   }
 }

@@ -535,8 +535,8 @@ class CrsTransformSpec extends AnyFunSuite {
     assert(CrsTransform.between(4269, 3413, datumBridge = "epsg1188").isDefined)
     assert(CrsTransform.between(4269, 3413).isEmpty)
     assert(CrsTransform.between(4267, 4326, datumBridge = "epsg1188").isEmpty, "NAD27 never bridges")
-    assert(!CrsTransform.bridgeable(CrsTransform.Wgs84, CrsTransform.Wgs84))
-    assert(CrsTransform.bridgeable(CrsTransform.Wgs84, CrsTransform.Grs80))
+    assert(CrsTransform.bridgeTransform("epsg1188", CrsTransform.Wgs84, CrsTransform.Wgs84).isEmpty)
+    assert(CrsTransform.bridgeTransform("epsg1188", CrsTransform.Wgs84, CrsTransform.Grs80).isDefined)
     // the zero-shift bridge: longitude EXACTLY unchanged (the geocentric
     // translation is zero and both ellipsoids share an axis); latitude
     // moves by the flattening difference only — hand bound: Δφ ≈

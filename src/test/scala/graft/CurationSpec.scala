@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{Catalog, Curation}
+import graft.queries.Curation
 import org.apache.spark.sql.functions._
 
 class CurationSpec extends SparkSpec {
@@ -104,65 +104,6 @@ class CurationSpec extends SparkSpec {
     assert(got(60L) == "v60" && got(8L) == "V8" && got(0L) == "v0")
   }
 
-  test("deleteByKey removes exactly the keys, spares untouched buckets, erases emptied ones") {
-    val t = java.nio.file.Files.createTempDirectory("graft_delete").toString + "/t"
-    val df0 = (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
-    Curation.writeBucketed(df0, t, "id", numBuckets = 8)
-    def listing(): Map[String, Long] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(t))
-        .filter(f => f.getPath.contains("__bucket=") && !f.getName.startsWith("."))
-        .map(f => f.getPath -> f.lastModified()).toMap
-    }
-    val before = listing()
-    // victim bucket: delete EVERY key in it (the dynamic-partition-overwrite
-    // trap — zero surviving rows means the overwrite alone would leave the
-    // old files, and the deleted keys, alive) plus one key elsewhere
-    val byBucket = df0.withColumn("b", Curation.bucketOf(col("id"), 8))
-      .as[(Long, String, Int)].collect()
-      .groupBy(_._3).view.mapValues(_.map(_._1).toSet).toMap
-    val victim = byBucket.keys.min
-    val partial = byBucket.keys.max
-    assert(victim != partial, "fixture degenerate: one bucket")
-    val partialKey = byBucket(partial).head
-    val toDelete = byBucket(victim) + partialKey
-    Curation.deleteByKey(spark, t,
-      toDelete.toSeq.toDF("id"), "id", numBuckets = 8)
-    val got = spark.read.parquet(t).select("id").as[Long].collect().toSet
-    assert(got == (0L until 100L).toSet -- toDelete,
-      s"wrong survivors: missing=${(0L until 100L).toSet -- toDelete -- got} extra=${got.intersect(toDelete)}")
-    // the emptied bucket's directory must be GONE, not stale
-    assert(!new java.io.File(s"$t/__bucket=$victim").exists(),
-      s"emptied bucket $victim left stale files")
-    // untouched buckets byte-identical (same paths, same mtimes)
-    val after = listing()
-    (0 until 8).filterNot(Set(victim, partial)).foreach { b =>
-      val pre = before.filter(_._1.contains(s"__bucket=$b/"))
-      val post = after.filter(_._1.contains(s"__bucket=$b/"))
-      assert(pre == post, s"untouched bucket $b was rewritten")
-    }
-    // deleting nothing is a no-op that rewrites nothing
-    val snap = listing()
-    Curation.deleteByKey(spark, t,
-      Seq.empty[Long].toDF("id"), "id", numBuckets = 8)
-    assert(listing() == snap, "empty delete batch rewrote files")
-    // delete is idempotent: repeating the same batch changes nothing
-    Curation.deleteByKey(spark, t,
-      toDelete.toSeq.toDF("id"), "id", numBuckets = 8)
-    assert(spark.read.parquet(t).count() == (100 - toDelete.size).toLong)
-    // emptying the WHOLE table is refused before mutating (plain parquet
-    // cannot represent an empty partitioned table)
-    val all = spark.read.parquet(t).select("id").as[Long].collect().toSeq
-    val err2 = intercept[IllegalArgumentException] {
-      Curation.deleteByKey(spark, t, all.toDF("id"), "id", numBuckets = 8)
-    }
-    assert(err2.getMessage.contains("empty the whole table"), err2.getMessage)
-    assert(spark.read.parquet(t).count() == (100 - toDelete.size).toLong,
-      "refused delete must not have mutated the table")
-  }
-
   test("compactBuckets rewrites only fragmented buckets, down to one file each") {
     val t = java.nio.file.Files.createTempDirectory("graft_compactb").toString + "/t"
     val df0 = (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
@@ -238,7 +179,7 @@ class CurationSpec extends SparkSpec {
     assert(maintained == full)
   }
 
-  test("living table vs reference model: random upsert/delete/compact sequences agree") {
+  test("living table vs reference model: random upsert/compact sequences agree") {
     // state-machine property: the bucketed table under any op sequence must
     // equal a driver-side Map applying the same ops — the whole-table
     // contract the individual tests can't cover combinatorially
@@ -247,22 +188,14 @@ class CurationSpec extends SparkSpec {
     var model = (0L until 60L).map(i => i -> s"v$i").toMap
     Curation.writeBucketed(model.toSeq.toDF("id", "v"), t, "id", numBuckets = 8)
     (1 to 12).foreach { step =>
-      rnd.nextInt(3) match {
+      rnd.nextInt(2) match {
         case 0 => // upsert: mix of updates and inserts, unique keys
           val keys = (0 until (1 + rnd.nextInt(6)))
             .map(_ => rnd.nextLong(200L)).distinct
           val batch = keys.map(k => k -> s"u$step-$k")
           model ++= batch
           Curation.upsertByKey(spark, t, batch.toDF("id", "v"), "id", 8)
-        case 1 => // delete: some present, some absent
-          val keys = (0 until (1 + rnd.nextInt(6)))
-            .map(_ => rnd.nextLong(200L)).distinct
-          // never empty the whole table (that is refused by contract)
-          val safe = if (keys.toSet == model.keySet) keys.tail else keys
-          model --= safe
-          if (safe.nonEmpty)
-            Curation.deleteByKey(spark, t, safe.toDF("id"), "id", 8)
-        case 2 =>
+        case 1 =>
           Curation.compactBuckets(spark, t, maxFilesPerBucket = 2)
       }
       val got = spark.read.parquet(t).select("id", "v")
@@ -297,27 +230,6 @@ class CurationSpec extends SparkSpec {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
     assert(files.size == 1, s"stats table fragmented: ${files.size} files")
     docs.unpersist()
-  }
-
-  test("writeSplits lays out (split, lang) partitions and pruning hits them") {
-    val docs = Tables.documents(spark, sf())
-    val out = java.nio.file.Files.createTempDirectory("graft_splits").toString
-    Curation.writeSplits(docs, out)
-    val back = spark.read.parquet(out)
-    assert(back.count() == docs.count())
-    val dirs = new java.io.File(out).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(dirs == Set("split=train", "split=val", "split=test"))
-    // the (split, lang) predicate must land in PartitionFilters (directory
-    // pruning), not PushedFilters (row-group skipping)
-    val scan = back.filter(col("split") === "train" && col("lang") === "en")
-      .queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [isnotnull(split"), scan)
-    // and the on-disk split agrees with the oracle-checked q64 assignment
-    val q64 = Catalog.queries("q64_hash_split")(spark, sf())
-    val disagree = back.select(col("doc_id"), col("split").as("s_disk"))
-      .join(q64, "doc_id").filter(col("split") =!= col("s_disk")).count()
-    assert(disagree == 0)
   }
 
   test("char_bigram_counts matches the explode+count derivation") {
@@ -361,33 +273,5 @@ class CurationSpec extends SparkSpec {
     // HOF and native forms, which must stay distinct plans there)
     GraftFunctions.removePlanRewrites(spark)
     assert(!exp.extraOptimizations.contains(RewriteDotProduct))
-  }
-
-  test("compactShards: 64 stranded files -> target count, disjoint sorted ranges") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("compact").toString
-    // simulate streaming-ingestion debris: 64 tiny unsorted files
-    spark.range(10000).select($"id", ($"id" % 97).as("v"))
-      .repartition(64).write.parquet(s"$base/in")
-    def parquetFiles(p: String) =
-      new java.io.File(p).listFiles.count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles(s"$base/in") == 64)
-    graft.queries.Curation.compactShards(spark, s"$base/in", s"$base/out", "id", 4)
-    assert(parquetFiles(s"$base/out") == 4)
-    // content identical
-    val in = spark.read.parquet(s"$base/in")
-    val out = spark.read.parquet(s"$base/out")
-    assert(out.exceptAll(in).isEmpty && in.exceptAll(out).isEmpty)
-    // each file covers a DISJOINT id range (the pruning contract): sort
-    // files by their min id and check max(file_i) < min(file_{i+1})
-    val ranges = out.groupBy(input_file_name().as("f"))
-      .agg(min("id").as("lo"), max("id").as("hi"))
-      .orderBy("lo").select("lo", "hi").as[(Long, Long)].collect()
-    assert(ranges.length == 4)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo2, _)) => assert(hi < lo2, ranges.mkString(","))
-      case _ =>
-    }
   }
 }

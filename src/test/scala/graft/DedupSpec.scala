@@ -200,7 +200,7 @@ class DedupSpec extends SparkSpec {
     for (lsh <- Seq(MinHashLSH(12, 3, 3), MinHashLSH(8, 2, 1))) {
       val both = corpus.select(
         lsh.signature(col("text")).as("native"),
-        lsh.signatureHof(col("text")).as("hof"))
+        DedupSpec.signatureHof(lsh, col("text")).as("hof"))
       assert(both.filter(not(col("native") <=> col("hof"))).count() == 0)
     }
     // empty shingle set -> all-MaxValue accumulator, exactly like the fold
@@ -214,13 +214,13 @@ class DedupSpec extends SparkSpec {
     val corpus = Tables.documents(spark, sf()).limit(150)
     val both = corpus.select(
       SimHash.simhashOfText(col("text")).as("native"),
-      SimHash.simhashHof(split(col("text"), " ")).as("hof"))
+      DedupSpec.simhashHof(split(col("text"), " ")).as("hof"))
     assert(both.filter(not(col("native") <=> col("hof"))).count() == 0)
     // edge parity: duplicate tokens, empty-string token, null token
     val edge = spark.range(1).select(
       array(lit("a"), lit("a"), lit(""), lit(null).cast("string"), lit("b")).as("toks"))
     val r = edge.select(SimHash.simhash(col("toks")).as("native"),
-      SimHash.simhashHof(col("toks")).as("hof")).head()
+      DedupSpec.simhashHof(col("toks")).as("hof")).head()
     assert(r.getLong(0) == r.getLong(1))
   }
 
@@ -346,5 +346,33 @@ class DedupSpec extends SparkSpec {
       val estJ = sig(a).zip(sig(b)).count { case (x, y) => x == y }.toDouble / 128
       assert(math.abs(trueJ - estJ) < 0.35, s"pair ($a,$b): true=$trueJ est=$estJ")
     }
+  }
+}
+
+/** The declarative folds the native MinHash and SimHash expressions
+  * replaced — the reference semantics those must reproduce bit for bit.
+  */
+object DedupSpec {
+  import org.apache.spark.sql.Column
+
+  def signatureHof(lsh: MinHashLSH, text: Column): Column =
+    aggregate(
+      transform(lsh.shingles(text), s => call_function("xxhash64", s)),
+      array_repeat(lit(Long.MaxValue), lsh.numHashes),
+      (acc, h) => zip_with(acc, sequence(lit(0), lit(lsh.numHashes - 1)),
+        (m, j) => least(m, call_function("xxhash64", j, h))))
+
+  def simhashHof(toks: Column): Column = {
+    val bitIdx = sequence(lit(0), lit(SimHash.Bits - 1))
+    val counts = aggregate(
+      transform(array_distinct(toks), t => TextHash.h60(t)),
+      array_repeat(lit(0L), SimHash.Bits),
+      (acc, h) => zip_with(acc, bitIdx,
+        (a, b) => a + when(call_function("shiftright", h, b) % 2 === 1, 1L).otherwise(-1L)))
+    aggregate(
+      zip_with(counts, bitIdx,
+        (s, b) => when(s > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
+      lit(0L),
+      (acc, v) => acc + v)
   }
 }

@@ -71,7 +71,9 @@ class FileStreamSpec extends SparkSpec {
           org.apache.spark.sql.types.StringType)))
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(dir.getAbsolutePath)
-      val q = Streams.streamDedupAgainstIndex(stream, index, lsh)
+      val q = lsh.candidatesFromBands(lsh.bandIndex(stream, "doc_id", "text"), index)
+        .select(col("new_id").as("doc_id"), col("index_id").as("matched_id"))
+        .dropDuplicates("doc_id", "matched_id")
         .writeStream.format("memory").queryName("fs_jsonl_dedup")
         .outputMode(OutputMode.Append).start()
       try q.processAllAvailable() finally q.stop()

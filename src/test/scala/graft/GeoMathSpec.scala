@@ -144,9 +144,29 @@ class GeoMathSpec extends AnyFunSuite {
     val spark = SparkSpec.session
     import spark.implicits._
     val lats = Seq(-89.5, -45.5, 0.5, 33.5, 89.5).toDF("lat")
-    val viaCol = lats.select(GeoMath.pixelAreaColumn(org.apache.spark.sql.functions.col("lat"), 0.5, 0.5))
+    val viaCol = lats.select(GeoMathSpec.pixelAreaColumn(org.apache.spark.sql.functions.col("lat"), 0.5, 0.5))
       .as[Double].collect()
     val viaScala = Seq(-89.5, -45.5, 0.5, 33.5, 89.5).map(GeoMath.pixelAreaM2(_, 0.5, 0.5))
     viaCol.zip(viaScala).foreach { case (a, b) => assert(relEq(a, b)) }
+  }
+}
+
+object GeoMathSpec {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions._
+  import GeoMath.{E, E2, SemiMinorM}
+
+  /** The zone-integral difference written out again as Catalyst Column
+    * arithmetic (no UDF): an independent transcription of the formula
+    * [[GeoMath.pixelAreaM2]] evaluates in Scala inside the raster reader.
+    */
+  def pixelAreaColumn(lat: Column, dlatDeg: Double, dlonDeg: Double): Column = {
+    val b2 = SemiMinorM * SemiMinorM
+    def f(phi: Column): Column = {
+      val s = sin(radians(phi))
+      lit(b2 / 2.0) * (s / (lit(1.0) - lit(E2) * s * s) +
+        lit(1.0 / (2.0 * E)) * log((lit(1.0) + lit(E) * s) / (lit(1.0) - lit(E) * s)))
+    }
+    lit(math.toRadians(dlonDeg)) * abs(f(lat + lit(dlatDeg / 2.0)) - f(lat - lit(dlatDeg / 2.0)))
   }
 }

@@ -982,7 +982,7 @@ class GeoTiffSourceSpec extends SparkSpec {
     val p = TiffFixtures.writeBigTiff(s"$tmp/mt_rot.tif", 10, 8, v7,
       10.0, 50.0, 0.5, Some("-9999"), modelTransform = rot)
     val m = graft.sources.tiff.TiffTags.read(p)
-    assert(m.rotated && m.rotX == 0.1 && m.rotY == -0.1)
+    assert(m.rotX == 0.1 && m.rotY == -0.1)
     assert(m.pixelScaleX == 0.49 && m.pixelScaleY == 0.49)
     assert(m.originX == 10.0 && m.originY == 50.0)
     // every emitted point inverts exactly (2x2 affine inverse) to an

@@ -29,7 +29,7 @@ class KCenterSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf()).filter(col("vec_id") < 200)
     val sel5 = KCenter.select(emb, "vec_id", "embedding", 5)
       .orderBy(col("rank")).collect()
-    val radius4 = KCenter.withMinDist(emb, "vec_id", "embedding", 4)
+    val radius4 = KCenterSpec.withMinDist(emb, "vec_id", "embedding", 4)
       .agg(max(col("mind2"))).collect()(0).getDouble(0)
     assert(sel5(4).getDouble(2) == radius4,
       s"greedy duality broken: pick5 ${sel5(4).getDouble(2)} vs radius4 $radius4")
@@ -37,7 +37,7 @@ class KCenterSpec extends SparkSpec {
 
   test("coverage radius shrinks monotonically as k grows") {
     val emb = Tables.embeddings(spark, sf()).filter(col("vec_id") < 200)
-    def radius(k: Int): Double = KCenter.withMinDist(emb, "vec_id", "embedding", k)
+    def radius(k: Int): Double = KCenterSpec.withMinDist(emb, "vec_id", "embedding", k)
       .agg(max(col("mind2"))).collect()(0).getDouble(0)
     val r2 = radius(2); val r6 = radius(6)
     assert(r6 < r2, s"more centers must not worsen coverage: $r2 -> $r6")
@@ -87,5 +87,37 @@ class KCenterSpec extends SparkSpec {
     intercept[IllegalArgumentException](KCenter.select(v, "vec_id", "embedding", 0))
     intercept[IllegalArgumentException](
       KCenter.select(v.filter(col("vec_id") < 0), "vec_id", "embedding", 2))
+  }
+}
+
+object KCenterSpec {
+  import graft.plans.GraftFunctions
+  import graft.plans.GraftFunctions.vecDot
+  import graft.queries.Parity
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+
+  /** Every point's r4 squared distance to its nearest center of
+    * [[KCenter.select]]`(k)`, as `(id, mind2)` — `max(mind2)` is the
+    * k-center coverage radius², the quantity the objective bounds. Same
+    * snapping as the selection's own state frame.
+    */
+  def withMinDist(vectors: DataFrame, idCol: String, vecCol: String,
+      k: Int): DataFrame = {
+    val spark = vectors.sparkSession
+    GraftFunctions.register(spark)
+    import spark.implicits._
+    val centerIds = KCenter.select(vectors, idCol, vecCol, k)
+      .select(col("id")).as[Long].collect().toSeq
+    val v = vectors.select(col(idCol).cast("long").as("id"),
+      col(vecCol).cast("array<float>").as("emb"))
+    val cemb = v.join(broadcast(centerIds.toDF("id")), Seq("id"), "left_semi")
+      .select(col("id").as("c_id"), col("emb").as("c_emb"))
+    v.crossJoin(broadcast(cemb))
+      .select(col("id"),
+        Parity.r4(vecDot(col("emb"), col("emb")) +
+          vecDot(col("c_emb"), col("c_emb")) -
+          lit(2.0) * vecDot(col("emb"), col("c_emb"))).as("d2"))
+      .groupBy(col("id")).agg(min(col("d2")).as("mind2"))
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.LabelPropagation
-import org.apache.spark.sql.functions._
 
 class LabelPropagationSpec extends SparkSpec {
   import spark.implicits._
@@ -47,37 +46,6 @@ class LabelPropagationSpec extends SparkSpec {
     val r2 = labelsOf(LabelPropagation.run(g, "src", "dst", 2))
     assert(r2("s") == "s" && r2("l1") == "l1" &&
       r2("l2") == "l1" && r2("l3") == "l1", r2.toString)
-  }
-
-  test("packed long path equals the string path on single-digit ids") {
-    // single-digit ids: numeric tie order == string tie order, so the two
-    // paths must agree label-for-label
-    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L),
-      (3L, 4L)).toDF("src", "dst")
-    val viaLong = LabelPropagation.runLong(g, "src", "dst", 3)
-      .as[(Long, Long)].collect().toMap
-    val viaString = LabelPropagation.run(
-        g.select(col("src").cast("string").as("src"),
-          col("dst").cast("string").as("dst")), "src", "dst", 3)
-      .as[(String, String)].collect()
-      .map { case (k, v) => k.toLong -> v.toLong }.toMap
-    assert(viaLong == viaString, s"$viaLong vs $viaString")
-  }
-
-  test("long path plans hash aggregates, not a sort window") {
-    val g = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val plan = LabelPropagation.runLong(g, "src", "dst", 1)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("SortAggregate"), plan)
-    assert(!plan.contains("Window"), plan)
-  }
-
-  test("long path guards the id domain") {
-    val g = Seq((1L, LabelPropagation.MaxLongLabel)).toDF("src", "dst")
-    val ex = intercept[Exception] {
-      LabelPropagation.runLong(g, "src", "dst", 1).collect()
-    }
-    assert(ex.getMessage != null)
   }
 
   test("iteration bound is guarded") {

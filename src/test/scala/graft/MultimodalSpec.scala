@@ -1,6 +1,6 @@
 package graft
 
-import graft.multimodal.{DecodedMedia, Multimodal}
+import graft.multimodal.Multimodal
 import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
@@ -42,75 +42,9 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("ImageIoCodec decodes real PNG bytes through the same plumbing") {
-    import graft.multimodal.MediaRow
-    // generate deterministic PNGs in-memory: doc i is (8+i)x(5+i), all
-    // pixels gray level g = 40*i
-    def png(i: Int): Array[Byte] = {
-      val w = 8 + i; val h = 5 + i; val g = 40 * i
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val rgb = (g << 16) | (g << 8) | g
-      for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgb)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
-    }
-    val rows = (0 until 4).map(i =>
-      MediaRow(i.toLong, s"mem://png/$i.png", png(i), Map("format" -> "png"))).toDS()
-    val decoded = Multimodal.decode(rows.repartition(2), Multimodal.ImageIoCodec)
-    assert(decoded.rdd.getNumPartitions == 2) // partition-preserving
-    val d = decoded.collect().sortBy(_.doc_id)
-    assert(d.length == 4)
-    d.foreach { m =>
-      val i = m.doc_id.toInt
-      assert(m.width == 8 + i && m.height == 5 + i && m.n_frames == 1)
-      // uniform gray image: mean over RGB components == the gray level
-      assert(math.abs(m.mean_byte - 40 * i) < 1e-9, s"doc $i mean ${m.mean_byte}")
-    }
-    // real resize plan over real decoded dims
-    val plan = Multimodal.resizePlan(decoded, maxSide = 6).collect()
-    assert(plan.forall(r => r.getAs[Int]("out_w") <= 6 && r.getAs[Int]("out_h") <= 6))
-  }
-
-  test("WavCodec decodes real PCM16 audio through the same plumbing") {
-    import graft.multimodal.MediaRow
-    // synthesize canonical RIFF/WAVE PCM16: doc i is (8000*(i+1)) Hz mono,
-    // 400 samples of a square wave at amplitude 1000*(i+1) -> mean |amp|
-    // is exactly the amplitude
-    def wav(i: Int): Array[Byte] = {
-      val rate = 8000 * (i + 1); val n = 400; val amp = (1000 * (i + 1)).toShort
-      val dataLen = n * 2
-      val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-        .put("WAVE".getBytes("US-ASCII"))
-      bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-        .putShort(1).putShort(1).putInt(rate).putInt(rate * 2)
-        .putShort(2).putShort(16)
-      bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
-      for (s <- 0 until n)
-        bb.putShort(if (s % 2 == 0) amp else (-amp).toShort)
-      bb.array()
-    }
-    val rows = (0 until 3).map(i =>
-      MediaRow(i.toLong, s"mem://wav/$i.wav", wav(i), Map("format" -> "wav"))).toDS()
-    val decoded = Multimodal.decodeAudio(rows.repartition(2))
-    assert(decoded.rdd.getNumPartitions == 2) // partition-preserving
-    val d = decoded.collect().sortBy(_.doc_id)
-    assert(d.length == 3)
-    d.foreach { m =>
-      val i = m.doc_id.toInt
-      assert(m.sample_rate == 8000 * (i + 1))
-      assert(m.channels == 1)
-      assert(m.n_samples == 400)
-      assert(math.abs(m.mean_amplitude - 1000 * (i + 1)) < 1e-9)
-    }
-  }
-
-  test("WavCodec rejects non-audio and corrupt bytes loudly, never loops") {
+  test("audioFp64 rejects non-audio and corrupt bytes loudly, never loops") {
     intercept[Exception] {
-      Multimodal.WavCodec.openPartition()(Array.fill[Byte](64)(7))
+      Multimodal.audioFp64(Array.fill[Byte](64)(7))
     }
     // crafted negative chunk size: must error, not spin or parse garbage
     val bb = java.nio.ByteBuffer.allocate(32)
@@ -119,7 +53,7 @@ class MultimodalSpec extends SparkSpec {
       .put("WAVE".getBytes("US-ASCII"))
     bb.put("fmt ".getBytes("US-ASCII")).putInt(-8)
     intercept[Exception] {
-      Multimodal.WavCodec.openPartition()(bb.array())
+      Multimodal.audioFp64(bb.array())
     }
     // structurally valid but EMPTY data chunk: loud, not a silent NaN
     def emptyWav: Array[Byte] = {
@@ -134,20 +68,9 @@ class MultimodalSpec extends SparkSpec {
       b.array()
     }
     val err = intercept[Exception] {
-      Multimodal.WavCodec.openPartition()(emptyWav)
+      Multimodal.audioFp64(emptyWav)
     }
     assert(err.getMessage.contains("empty audio"), err.getMessage)
-  }
-
-  test("ImageIoCodec rejects undecodable bytes loudly") {
-    import graft.multimodal.MediaRow
-    val junk = Seq(MediaRow(1L, "u", Array[Byte](1, 2, 3, 4), Map.empty)).toDS()
-    val e = intercept[Exception] {
-      Multimodal.decode(junk, Multimodal.ImageIoCodec).collect()
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("not a decodable image")))
   }
 
   test("aHash: near-identical images collide, distinct images diverge, banding finds the pair") {
@@ -244,43 +167,6 @@ class MultimodalSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L)), s"got $pairs")
   }
 
-  test("GifCodec reads real multi-frame containers; frame sampling runs on true counts") {
-    import graft.multimodal.MediaRow
-    def gif(frames: Int, shade: Int): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-      writer.setOutput(ios)
-      writer.prepareWriteSequence(null)
-      (0 until frames).foreach { f =>
-        val img = new java.awt.image.BufferedImage(16, 16,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = (shade + f * 16) % 256
-        for (y <- 0 until 16; x <- 0 until 16)
-          img.setRGB(x, y, (g << 16) | (g << 8) | g)
-        writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-      }
-      writer.endWriteSequence(); writer.dispose(); ios.close()
-      bos.toByteArray
-    }
-    val rows = Seq(
-      MediaRow(1L, "mem://a.gif", gif(5, 10), Map("format" -> "gif")),
-      MediaRow(2L, "mem://b.gif", gif(1, 40), Map("format" -> "gif")),
-      MediaRow(3L, "mem://c.gif", gif(8, 70), Map("format" -> "gif"))).toDS()
-    val decoded = Multimodal.decode(rows, Multimodal.GifCodec)
-    val byId = decoded.collect().map(d => d.doc_id -> d).toMap
-    assert(byId(1L).n_frames == 5 && byId(2L).n_frames == 1 && byId(3L).n_frames == 8)
-    assert(byId(1L).width == 16 && byId(1L).height == 16)
-    // frame-0 mean: GIF palettizes, so allow quantization slack
-    assert(math.abs(byId(2L).mean_byte - 40.0) < 8.0, s"${byId(2L).mean_byte}")
-    // sampling stride 3 over the REAL frame counts
-    val sampled = Multimodal.sampleFrames(decoded, stride = 3)
-      .as[(Long, Int)].collect().groupBy(_._1).view
-      .mapValues(_.map(_._2).sorted.toSeq).toMap
-    assert(sampled(1L) == Seq(0, 3) && sampled(2L) == Seq(0) &&
-      sampled(3L) == Seq(0, 3, 6), s"$sampled")
-  }
-
   test("resize plan caps the longest side") {
     val decoded = Multimodal.decode(Multimodal.toMediaRows(Multimodal.mediaFromDocuments(docs)))
     val plan = Multimodal.resizePlan(decoded, maxSide = 64).collect()
@@ -288,13 +174,6 @@ class MultimodalSpec extends SparkSpec {
       val (w, h) = (r.getAs[Int]("out_w"), r.getAs[Int]("out_h"))
       w <= 64 && h <= 64 && w >= 1 && h >= 1
     })
-  }
-
-  test("frame sampling explodes sampled indices only") {
-    val one = Seq(DecodedMedia(1L, "u", 4, 4, 7, 0.0)).toDS()
-    val frames = Multimodal.sampleFrames(one, stride = 2)
-      .select("frame_idx").as[Int].collect().toSeq
-    assert(frames == Seq(0, 2, 4, 6))
   }
 
   test("frameFeatures decodes only the sampled frames, each with ITS OWN pixels") {
@@ -443,7 +322,7 @@ class MultimodalSpec extends SparkSpec {
       val amps = Array.tabulate[Short](64)(_ =>
         (1 + rnd.nextInt(4096)).toShort)
       val wav = Multimodal.envelopeWav(amps)
-      assert(Multimodal.audioFp64(wav) == Multimodal.audioFp64ViaJavaxSound(wav),
+      assert(Multimodal.audioFp64(wav) == MultimodalSpec.audioFp64ViaJavaxSound(wav),
         s"fast path diverged on envelope wav $k")
     }
     // VARYING samples incl. negatives (a constant |amplitude| hashes to 0
@@ -469,7 +348,7 @@ class MultimodalSpec extends SparkSpec {
     }
     Seq(wav(8000, 1, 400, 1), wav(44100, 2, 1001, 2), wav(44100, 2, 1000, 3),
       wav(16000, 1, 65, 4)).foreach { w =>
-      assert(Multimodal.audioFp64(w) == Multimodal.audioFp64ViaJavaxSound(w),
+      assert(Multimodal.audioFp64(w) == MultimodalSpec.audioFp64ViaJavaxSound(w),
         "fast path diverged from javax.sound")
     }
     // sub-frame data (one stereo sample = half a frame) must stay a LOUD
@@ -491,7 +370,7 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.parseCanonicalPcm16(badAlign).isEmpty,
       "mismatched blockAlign must not take the fast path")
     assert(Multimodal.audioFp64(badAlign) ==
-      Multimodal.audioFp64ViaJavaxSound(badAlign))
+      MultimodalSpec.audioFp64ViaJavaxSound(badAlign))
     val goodAlign = wav(8000, 1, 400, 6)
     assert(Multimodal.parseCanonicalPcm16(goodAlign).isDefined)
     assert(Multimodal.audioFp64(goodAlign) == Multimodal.audioFp64(badAlign),
@@ -647,4 +526,13 @@ class MultimodalSpec extends SparkSpec {
     def toMap3: Map[Long, (Int, Int, Int)] =
       rows.map { case (id, a, b, c) => id -> ((a, b, c)) }.toMap
   }
+}
+
+object MultimodalSpec {
+
+  /** [[Multimodal.audioFp64]] forced through the javax.sound decode — the
+    * reference its lock-free canonical-PCM16 parse must reproduce.
+    */
+  def audioFp64ViaJavaxSound(bytes: Array[Byte]): Long =
+    Multimodal.viaJavaxSound(bytes)(Multimodal.envelopeFp64)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, DedupClusters, MinHashLSH, SubstringDedup, Vec}
+import graft.operators.{Ann, DedupClusters, MinHashLSH, Vec}
 import graft.queries.Curation
 import org.apache.spark.sql.functions._
 
@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * through the library's PUBLIC API on the real testdata — JSONL ingestion,
   * exact duplicated-substring excision (Lee et al.-style, acting before the
   * fuzzier near-dup pass), LSH near-dup dedup to a survivor set, the living bucketed table
-  * (upsert → delete → compact), incrementally maintained stats,
-  * train/val/test sharding, and the growing embedding index. Every stage is
+  * (upsert → compact), incrementally maintained stats, and the embedding
+  * and text indexes. Every stage is
   * unit-tested elsewhere; this spec proves they COMPOSE: each stage
   * consumes the previous stage's real output, and the invariants asserted
   * at the end (row accounting, key uniqueness, stats equality, index
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  test("jsonl → dedup → living table → stats → splits → index: the stages compose") {
+  test("jsonl → dedup → living table → stats → index: the stages compose") {
     val root = java.nio.file.Files.createTempDirectory("graft_pipeline").toString
     val docs = Tables.documents(spark, sf())
 
@@ -33,7 +33,7 @@ class PipelineSpec extends SparkSpec {
     // verbatim boilerplate cannot glue otherwise-distinct docs together in
     // the fuzzier near-dup stage; fully-excised docs (nothing original
     // left) drop out of the corpus here
-    val excised = SubstringDedup.excise(ingested, "doc_id", "text", k = 20)
+    val excised = SubstringDedupSpec.excise(ingested, "doc_id", "text", k = 20)
     assert(excised.count() == nRaw, "excise must emit every input doc")
     val removed = excised.agg(sum(col("removed_chars"))).as[Long].head()
     assert(removed > 0, "synthetic corpus is heavily duplicated; none removed")
@@ -55,24 +55,20 @@ class PipelineSpec extends SparkSpec {
     val nSurv = survivors.count()
     assert(nSurv > 0 && nSurv <= nRaw)
 
-    // 3 — the living table: bucketed layout, then one correction upsert,
-    // one deletion, one compaction pass
+    // 3 — the living table: bucketed layout, then one correction upsert
+    // and one compaction pass
     val table = s"$root/corpus"
     Curation.writeBucketed(survivors, table, "doc_id", numBuckets = 8)
     val firstId = survivors.agg(min(col("doc_id"))).as[Long].head()
-    val delId = survivors.agg(max(col("doc_id"))).as[Long].head()
-    assert(firstId != delId, "fixture degenerate: one survivor")
     val fix = survivors.filter(col("doc_id") === firstId)
       .withColumn("text", concat(col("text"), lit(" [fixed]")))
     Curation.upsertByKey(spark, table, fix, "doc_id", numBuckets = 8)
-    Curation.deleteByKey(spark, table, Seq(delId).toDF("doc_id"), "doc_id", numBuckets = 8)
     Curation.compactBuckets(spark, table, maxFilesPerBucket = 4)
     val live = spark.read.parquet(table)
-    assert(live.count() == nSurv - 1, "row accounting after upsert+delete")
-    assert(live.select("doc_id").distinct().count() == nSurv - 1, "keys stay unique")
+    assert(live.count() == nSurv, "row accounting after upsert")
+    assert(live.select("doc_id").distinct().count() == nSurv, "keys stay unique")
     assert(live.filter(col("doc_id") === firstId)
       .select("text").as[String].head().endsWith("[fixed]"), "correction visible")
-    assert(live.filter(col("doc_id") === delId).isEmpty, "deleted key gone")
 
     // 4 — stats maintained batch-by-batch over the ingest == recompute
     val statsPath = s"$root/stats"
@@ -85,26 +81,15 @@ class PipelineSpec extends SparkSpec {
     assert(statsSet(spark.read.parquet(statsPath)) ==
       statsSet(Curation.docStats(ingested)), "maintained stats drifted")
 
-    // 5 — training shards from the LIVE table (not the raw ingest)
-    Curation.writeSplits(live, s"$root/splits")
-    val shards = spark.read.parquet(s"$root/splits")
-    assert(shards.count() == live.count(), "sharding dropped or duplicated rows")
-
-    // 6 — the embedding index grows alongside the corpus: build on the
-    // backfill, append the arrivals, search sees both
+    // 5 — embedding search over the corpus's vectors: IVF cells, then
+    // exact cosine over the probed candidates
     val emb = Tables.embeddings(spark, sf())
       .select(col("vec_id").as("id"), col("embedding")).as[Vec]
-    val idx = s"$root/ivf"
-    Ann.buildIvfIndex(emb.filter(col("id") < 400).as[Vec], idx, nCells = 16)
-    Ann.appendToIvfIndex(emb.filter(col("id") >= 400).as[Vec], idx)
-    assert(spark.read.parquet(s"$idx/assignments").count() == emb.count(),
-      "index incomplete after append")
-    val hits = Ann.ivfTopKIndexed(spark, emb, idx, Seq(1L), k = 5, nprobe = 4)
-    assert(hits.count() > 0, "indexed search returned nothing")
+    val hits = Ann.ivfTopK(spark, emb, Seq(1L), k = 5, nprobe = 4)
+    assert(hits.count() > 0, "IVF search returned nothing")
 
-    // 6b — the SEMANTIC dedup index lives the same lifecycle: built on the
-    // backfill, grown by append, queried for arrival-time duplicate
-    // decisions without re-quantizing the corpus
+    // 6 — the SEMANTIC dedup index: built on the backfill, then queried
+    // for arrival-time duplicate decisions without re-quantizing the corpus
     val embDf = emb.toDF("vec_id", "embedding")
     val semIdx = s"$root/semidx"
     val semCents = embDf.filter(col("vec_id") < 8)
@@ -112,10 +97,9 @@ class PipelineSpec extends SparkSpec {
     graft.operators.SemDeDup.buildIndex(
       embDf.filter(col("vec_id") >= 8 && col("vec_id") < 400),
       "vec_id", "embedding", semCents, semIdx)
-    graft.operators.SemDeDup.appendToIndex(
-      embDf.filter(col("vec_id") >= 400), "vec_id", "embedding", semIdx)
-    val semPairs = graft.operators.SemDeDup
-      .pairsIndexed(embDf, "vec_id", "embedding", semIdx, minCos = -1.0)
+    val semPairs = graft.operators.SemDeDup.incrementalPairs(
+      embDf.filter(col("vec_id") >= 400), embDf, "vec_id", "embedding", semIdx,
+      minCos = -1.0)
     assert(semPairs.count() > 0, "semantic index yielded no same-cluster pairs")
 
     // 7 — text → vector → ANN with NO external embedding model: the
@@ -135,52 +119,16 @@ class PipelineSpec extends SparkSpec {
       "each text query must retrieve a full top-5 from its hashed vectors")
 
     // 8 — the LIVE corpus becomes keyword-searchable: inverted index built
-    // from the living table (post-upsert/delete), BM25 retrieval returns
-    // surviving docs only — the deleted doc must be unfindable
+    // from the living table (post-upsert), BM25 retrieval returns live docs
     val tIdx = s"$root/textidx"
     graft.operators.TextIndex.buildTextIndex(live, "doc_id", "text", tIdx)
     val ranked = graft.operators.TextIndex
       .bm25TopK(spark, tIdx, Seq("spark", "join", "stream"), k = 10)
     assert(ranked.count() > 0, "retrieval over the live corpus found nothing")
     val rankedIds = ranked.select("doc_id").as[Long].collect().toSet
-    assert(!rankedIds.contains(delId), "deleted doc resurfaced in retrieval")
     assert(rankedIds.subsetOf(
       live.select("doc_id").as[Long].collect().toSet),
       "retrieval returned a doc not in the live table")
-
-    // 9 — right-to-erasure closes the lifecycle: one request removes a doc
-    // from the CORPUS and every INDEX serving it (text + embedding), at
-    // batch cost, no rebuilds — and it stops being findable anywhere
-    // provably findable before erasure; >= 8 so it is also a semantic-index
-    // member (ids < 8 are that index's centroids, never indexed data)
-    val eraseId = rankedIds.find(_ >= 8)
-      .getOrElse(sys.error("all top-ranked docs are centroid ids — fixture degenerate"))
-    // count the erased id's semantic pairs BEFORE deleting — semPairs is
-    // a lazy frame and must not be trusted to replay pre-delete state
-    // after the tombstone lands
-    val semPairsOfErased = semPairs
-      .filter(col("vec_a") === eraseId || col("vec_b") === eraseId).count()
-    Curation.deleteByKey(spark, table, Seq(eraseId).toDF("doc_id"), "doc_id", numBuckets = 8)
-    graft.operators.TextIndex.deleteFromTextIndex(spark, tIdx, Seq(eraseId))
-    Ann.deleteFromIvfIndex(spark, idx, Seq(eraseId))
-    graft.operators.SemDeDup.deleteFromIndex(spark, semIdx, Seq(eraseId))
-    assert(spark.read.parquet(table).filter(col("doc_id") === eraseId).isEmpty,
-      "erased doc still in the corpus")
-    val rankedAfter = graft.operators.TextIndex
-      .bm25TopK(spark, tIdx, Seq("spark", "join", "stream"), k = 10)
-      .select("doc_id").as[Long].collect().toSet
-    assert(!rankedAfter.contains(eraseId), "erased doc resurfaced in retrieval")
-    val nnAfter = Ann.ivfTopKIndexed(spark, emb, idx,
-      Seq(1L, 2L, 3L).filterNot(_ == eraseId), k = 20, nprobe = 16)
-    assert(nnAfter.filter(col("id") === eraseId).isEmpty,
-      "erased doc resurfaced as an ANN candidate")
-    val semAfter = graft.operators.SemDeDup
-      .pairsIndexed(embDf, "vec_id", "embedding", semIdx, minCos = -1.0)
-    assert(semAfter
-      .filter(col("vec_a") === eraseId || col("vec_b") === eraseId).isEmpty,
-      "erased doc still pairs in the semantic index")
-    assert(semPairsOfErased > 0,
-      "erasure not exercised: the erased id had no semantic pairs to lose")
   }
 
   test("cascade → trained quality filter → BPE-budget packing → drift alarm compose") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, Pq, Vec}
+import graft.operators.{Pq, Vec}
 import org.apache.spark.sql.functions._
 
 class PqSpec extends SparkSpec {
@@ -15,7 +15,7 @@ class PqSpec extends SparkSpec {
   test("training is deterministic; codes are within [0, k) and m long") {
     val a = Pq.train(corpus, m = 8, k = 16, iters = 8)
     assert(model.codebooks.flatten.flatten.toSeq == a.codebooks.flatten.flatten.toSeq)
-    assert(model.subDim * model.m == Ann.headDim(corpus))
+    assert(model.subDim * model.m == corpus.head().embedding.length)
     val codes = Pq.encode(corpus, model).collect()
     assert(codes.length == corpus.count())
     codes.foreach { c =>
@@ -27,7 +27,7 @@ class PqSpec extends SparkSpec {
   test("adc self-query ranks the query's own code distance at zero-ish top") {
     val q = corpus.filter(_.id == 7L).head().embedding
     val codes = Pq.encode(corpus, model)
-    val top = Pq.adcTopK(codes, model, q, kNN = 5)
+    val top = PqSpec.adcTopK(codes, model, q, kNN = 5)
       .select("id").as[Long].collect().toSeq
     // the query vector's own quantization cell must be among the closest
     assert(top.contains(7L), s"top-5 $top does not contain the query itself")
@@ -41,7 +41,7 @@ class PqSpec extends SparkSpec {
       .orderBy("q_id", "dist2", "id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val single = qs.flatMap { case (qid, q) =>
-      Pq.adcTopK(codes, model, q, kNN = 7)
+      PqSpec.adcTopK(codes, model, q, kNN = 7)
         .collect().map(r => (qid, r.getLong(0))).toSeq
     }
     assert(many == single)
@@ -72,7 +72,7 @@ class PqSpec extends SparkSpec {
       val q = all.find(_.id == qid).get.embedding
       val exact = all.filter(v => !queryIds.contains(v.id))
         .sortBy(v => (l2(q, v.embedding), v.id)).take(10).map(_.id).toSet
-      val approx = Pq.ivfPqTopK(codes, ivfpq, q, nprobe = 6, kNN = 10)
+      val approx = PqSpec.ivfPqTopK(codes, ivfpq, q, nprobe = 6, kNN = 10)
         .select("id").as[Long].collect().toSet
       approx.intersect(exact).size.toDouble / exact.size
     }
@@ -92,7 +92,7 @@ class PqSpec extends SparkSpec {
       .orderBy("q_id", "dist2", "id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val single = qs.flatMap { case (qid, q) =>
-      Pq.ivfPqTopK(codes, ivfpq, q, nprobe = 6, kNN = 7)
+      PqSpec.ivfPqTopK(codes, ivfpq, q, nprobe = 6, kNN = 7)
         .collect().map(r => (qid, r.getLong(0))).toSeq
     }
     assert(many == single)
@@ -101,12 +101,9 @@ class PqSpec extends SparkSpec {
 
   test("persisted PQ index: model round-trips parquet; search-from-disk == inline") {
     val path = java.nio.file.Files.createTempDirectory("graft_pq_idx").toString
+    // the few-KB model must round-trip parquet bit-exactly: the distances
+    // below are compared exactly, so any codebook drift would show
     val built = Pq.buildPqIndex(corpus, path, m = 8, k = 16)
-    // the few-KB model must round-trip parquet bit-exactly
-    val loaded = Pq.loadPqModel(spark, path)
-    assert((loaded.m, loaded.k, loaded.subDim) == (built.m, built.k, built.subDim))
-    assert(loaded.codebooks.flatten.flatten.toSeq ==
-      built.codebooks.flatten.flatten.toSeq)
     val all = corpus.collect()
     val qs = Seq(3L, 9L).map(id => (id, all.find(_.id == id).get.embedding))
     val fromDisk = Pq.adcTopKManyIndexed(spark, path, qs, kNN = 7)
@@ -121,10 +118,6 @@ class PqSpec extends SparkSpec {
   test("persisted IVF-PQ index: search-from-disk == inline; probe prunes partitions") {
     val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx").toString
     val built = Pq.buildIvfPqIndex(corpus, path, nCells = 16, m = 8, k = 16)
-    val loaded = Pq.loadIvfPqModel(spark, path)
-    assert(loaded.centroids.flatten.toSeq == built.centroids.flatten.toSeq)
-    assert(loaded.pq.codebooks.flatten.flatten.toSeq ==
-      built.pq.codebooks.flatten.flatten.toSeq)
     val all = corpus.collect()
     val qs = Seq(3L, 9L).map(id => (id, all.find(_.id == id).get.embedding))
     val fromDisk = Pq.ivfPqTopKManyIndexed(spark, path, qs, nprobe = 6, kNN = 7)
@@ -152,144 +145,15 @@ class PqSpec extends SparkSpec {
     assert(pf.contains("cell"), s"cell predicate not a partition filter: [$pf]")
   }
 
-  test("appendToPqIndex: appended codes == full-corpus encode under the persisted model") {
-    val path = java.nio.file.Files.createTempDirectory("graft_pq_append").toString
-    val base = corpus.filter(col("id") < 400).as[Vec]
-    val batch = corpus.filter(col("id") >= 400).as[Vec]
-    assert(base.count() > 0 && batch.count() > 0, "fixture split degenerate")
-    val built = Pq.buildPqIndex(base, path, m = 8, k = 16)
-    Pq.appendToPqIndex(batch, path)
-    // codes on disk must equal encoding the WHOLE corpus with the model the
-    // index persisted (the append must not have retrained)
-    val got = Pq.loadPqCodes(spark, path).collect()
-      .map(c => (c.id, c.code.toSeq)).sortBy(_._1).toSeq
-    val expected = Pq.encode(corpus, built).collect()
-      .map(c => (c.id, c.code.toSeq)).sortBy(_._1).toSeq
-    assert(got == expected)
-    // search sees the appended vectors
-    val all = corpus.collect()
-    val qs = Seq(410L).map(id => (id, all.find(_.id == id).get.embedding))
-    val top = Pq.adcTopKManyIndexed(spark, path, qs, kNN = 5)
-      .select("id").as[Long].collect().toSeq
-    assert(top.contains(410L), s"appended vector not retrievable: $top")
-  }
-
-  test("appendToIvfPqIndex: cell partitions grow in place; search == full-corpus encode") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_append").toString
-    val base = corpus.filter(col("id") < 400).as[Vec]
-    val batch = corpus.filter(col("id") >= 400).as[Vec]
-    val built = Pq.buildIvfPqIndex(base, path, nCells = 16, m = 8, k = 16)
-    Pq.appendToIvfPqIndex(batch, path)
-    val got = Pq.loadIvfPqCodes(spark, path).collect()
-      .map(c => (c.id, c.cell, c.code.toSeq)).sortBy(_._1).toSeq
-    val expected = Pq.encodeIvfPq(corpus, built).collect()
-      .map(c => (c.id, c.cell, c.code.toSeq)).sortBy(_._1).toSeq
-    assert(got == expected)
-    val all = corpus.collect()
-    val qs = Seq(3L, 410L).map(id => (id, all.find(_.id == id).get.embedding))
-    val fromDisk = Pq.ivfPqTopKManyIndexed(spark, path, qs, nprobe = 6, kNN = 7)
-      .orderBy("q_id", "dist2", "id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val inline = Pq.ivfPqTopKMany(Pq.encodeIvfPq(corpus, built), built, qs,
-        nprobe = 6, kNN = 7)
-      .orderBy("q_id", "dist2", "id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(fromDisk == inline)
-  }
-
-  test("deleteFromPqIndex: delete == inline search over remaining codes; compact folds") {
-    val path = java.nio.file.Files.createTempDirectory("graft_pq_del").toString
-    val built = Pq.buildPqIndex(corpus, path, m = 8, k = 16)
-    val all = corpus.collect()
-    val qs = Seq(3L, 9L).map(id => (id, all.find(_.id == id).get.embedding))
-    def fromDisk() = Pq.adcTopKManyIndexed(spark, path, qs, kNN = 7)
-      .orderBy("q_id", "dist2", "id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    // victims = baseline hits, so the delete provably changes the results
-    val victims = fromDisk().map(_._2).filterNot(Seq(3L, 9L).contains).take(2)
-    Pq.deleteFromPqIndex(spark, path, victims)
-    val inline = Pq.adcTopKMany(
-        Pq.encode(corpus.filter(!col("id").isin(victims: _*)).as[Vec], built),
-        built, qs, kNN = 7)
-      .orderBy("q_id", "dist2", "id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val afterDelete = fromDisk()
-    assert(afterDelete == inline && afterDelete.nonEmpty)
-    assert(!afterDelete.exists(r => victims.contains(r._2)))
-    Pq.compactPqIndex(spark, path)
-    assert(fromDisk() == afterDelete)
-    assert(spark.read.parquet(s"$path/codes")
-      .filter(col("id").isin(victims: _*)).count() == 0)
-    assert(spark.read.parquet(s"$path/deletes").count() == 0)
-  }
-
-  test("deleteFromIvfPqIndex: delete == inline over remaining; compaction is cell-pruned") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_del").toString
-    val built = Pq.buildIvfPqIndex(corpus, path, nCells = 16, m = 8, k = 16)
-    val all = corpus.collect()
-    val qs = Seq(3L, 9L).map(id => (id, all.find(_.id == id).get.embedding))
-    def fromDisk() = Pq.ivfPqTopKManyIndexed(spark, path, qs, nprobe = 6, kNN = 7)
-      .orderBy("q_id", "dist2", "id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val victims = fromDisk().map(_._2).filterNot(Seq(3L, 9L).contains).take(2)
-    Pq.deleteFromIvfPqIndex(spark, path, victims)
-    val inline = Pq.ivfPqTopKMany(
-        Pq.encodeIvfPq(corpus.filter(!col("id").isin(victims: _*)).as[Vec], built),
-        built, qs, nprobe = 6, kNN = 7)
-      .orderBy("q_id", "dist2", "id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val afterDelete = fromDisk()
-    assert(afterDelete == inline && afterDelete.nonEmpty)
-    // cell-pruned compaction: capture each cell directory's file listing;
-    // only cells holding a victim may change
-    val victimCells = spark.read.parquet(s"$path/codes")
-      .filter(col("id").isin(victims: _*))
-      .select(col("cell").cast("int")).distinct().as[Int].collect().toSet
-    def listing(): Map[String, Set[String]] = {
-      val root = new java.io.File(s"$path/codes")
-      root.listFiles().filter(d => d.isDirectory && d.getName.startsWith("cell="))
-        .map(d => d.getName -> d.listFiles().map(_.getName)
-          .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet).toMap
-    }
-    val before = listing()
-    Pq.compactIvfPqIndex(spark, path)
-    val after = listing()
-    for ((cellDir, files) <- after if !victimCells.contains(
-        cellDir.stripPrefix("cell=").toInt))
-      assert(files == before(cellDir), s"untouched $cellDir was rewritten")
-    assert(victimCells.forall(c => !after.contains(s"cell=$c")
-      || after(s"cell=$c") != before(s"cell=$c")))
-    assert(fromDisk() == afterDelete)
-    assert(spark.read.parquet(s"$path/codes")
-      .filter(col("id").isin(victims: _*)).count() == 0)
-    assert(spark.read.parquet(s"$path/deletes").count() == 0)
-  }
-
   test("a mismatched-dim batch cannot be encoded into an index (silent prefix codes)") {
-    val path = java.nio.file.Files.createTempDirectory("graft_pq_dim").toString
-    Pq.buildPqIndex(corpus, path, m = 8, k = 16)
     val wrongDim = Seq(Vec(9999L, Array.fill(3)(0.5f))).toDS()
     val err = intercept[Exception] {
-      Pq.appendToPqIndex(wrongDim, path)
+      Pq.encode(wrongDim, model).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: msgs(e.getCause))
     assert(msgs(err).exists(m => m != null && m.contains("model expects")),
       s"wrong error: ${msgs(err)}")
-  }
-
-  test("append to an inconsistent index is refused, not encoded against the wrong codebooks") {
-    import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_pq_append_bad").toString
-    Pq.buildPqIndex(corpus, path, m = 8, k = 16)
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    Seq((meta.getInt(0), meta.getInt(1), meta.getInt(2), "stale-build"))
-      .toDF("m", "k", "sub_dim", "build_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    val err = intercept[IllegalArgumentException] {
-      Pq.appendToPqIndex(corpus.filter(col("id") < 5).as[Vec], path)
-    }
-    assert(err.getMessage.contains("inconsistent"), err.getMessage)
   }
 
   test("a model/codes build mismatch is rejected, not silently decoded") {
@@ -324,7 +188,7 @@ class PqSpec extends SparkSpec {
       val q = all.find(_.id == qid).get.embedding
       val exact = all.filter(v => !queryIds.contains(v.id))
         .sortBy(v => (l2(q, v.embedding), v.id)).take(10).map(_.id).toSet
-      val approx = Pq.adcTopK(codes, model, q, kNN = 10)
+      val approx = PqSpec.adcTopK(codes, model, q, kNN = 10)
         .select("id").as[Long].collect().toSet
       approx.intersect(exact).size.toDouble / exact.size
     }
@@ -332,5 +196,59 @@ class PqSpec extends SparkSpec {
     // 10 of ~495 -> random baseline ~0.02; require an order better
     assert(mean > 0.2, s"mean ADC recall $mean (per-query: $recalls)")
     codes.unpersist()
+  }
+}
+
+/** Single-query ADC searches: the per-query references the batch forms
+  * [[Pq.adcTopKMany]] and [[Pq.ivfPqTopKMany]] must reproduce.
+  */
+object PqSpec {
+  import graft.operators.{IvfPqCode, IvfPqModel, PqCode, PqModel}
+  import org.apache.spark.sql.{DataFrame, Dataset}
+
+  /** ADC top-k by (approximate) squared L2: the m x k query lookup table
+    * is exact per subspace; each candidate costs m lookups. Deterministic
+    * ties to the lowest id via TakeOrdered on (dist2, id).
+    */
+  def adcTopK(
+      codes: Dataset[PqCode], model: PqModel,
+      query: Array[Float], kNN: Int): DataFrame = {
+    import codes.sparkSession.implicits._
+    require(query.length == model.m * model.subDim,
+      s"query dim ${query.length} != model dim ${model.m * model.subDim}")
+    val m = model.m
+    val lut = Pq.lutFor(query, model)
+    codes.map { c =>
+      var d = 0.0; var j = 0
+      while (j < m) { d += lut(j)(c.code(j)); j += 1 }
+      (c.id, d)
+    }.toDF("id", "dist2")
+      .orderBy(col("dist2"), col("id"))
+      .limit(kNN)
+  }
+
+  /** IVF-PQ ADC for one query: per probed cell a LUT of the query
+    * residual, then candidates in those cells cost m lookups each.
+    */
+  def ivfPqTopK(
+      codes: Dataset[IvfPqCode], model: IvfPqModel,
+      query: Array[Float], nprobe: Int, kNN: Int): DataFrame = {
+    import codes.sparkSession.implicits._
+    val centsD = model.centroids.map(_.map(_.toDouble))
+    val m = model.pq.m
+    val probed = Pq.probeCells(query, centsD, nprobe)
+    val luts: Map[Int, Array[Array[Double]]] = probed.map { ci =>
+      ci -> Pq.lutFor(Pq.residual(query, model.centroids(ci)), model.pq)
+    }.toMap
+    val probedSet = probed.toSet
+    codes.filter(c => probedSet.contains(c.cell))
+      .map { c =>
+        val lut = luts(c.cell)
+        var d = 0.0; var j = 0
+        while (j < m) { d += lut(j)(c.code(j)); j += 1 }
+        (c.id, c.cell, d)
+      }.toDF("id", "cell", "dist2")
+      .orderBy(col("dist2"), col("id"))
+      .limit(kNN)
   }
 }

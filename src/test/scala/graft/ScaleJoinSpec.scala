@@ -30,8 +30,7 @@ class ScaleJoinSpec extends SparkSpec {
     val right = spark.range(50 * 20)
       .select(($"id" % 50).as("rk"), expr("(id DIV 50) * 47 % 1000").as("rt"),
         ($"id" * 3).as("rv"))
-    // kill broadcast so BOTH forms run the shuffle-merge exec — the path
-    // the salt exists to balance (a broadcastable right needs no salting)
+    // kill broadcast so BOTH forms run the shuffle-merge exec
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -40,7 +39,7 @@ class ScaleJoinSpec extends SparkSpec {
         val plain = graft.plans.AsOf.join(left, right, Seq("k"), Seq("rk"),
           "t", "rt", tieBreak = Seq("rv"), joinType = jt, direction = dir,
           tolerance = tol)
-        val salted = graft.plans.AsOf.joinSalted(left, right, Seq("k"), Seq("rk"),
+        val salted = ScaleJoinSpec.joinSalted(left, right, Seq("k"), Seq("rk"),
           "t", "rt", salts = 8, tieBreak = Seq("rv"), joinType = jt,
           direction = dir, tolerance = tol)
         assert(salted.columns.toSeq == plain.columns.toSeq)
@@ -79,5 +78,42 @@ class ScaleJoinSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS bkt_orders")
       spark.sql("DROP TABLE IF EXISTS bkt_custs")
     }
+  }
+}
+
+object ScaleJoinSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** The as-of join with each key spread over `salts` partitions: the left
+    * gets an arbitrary per-row salt, the right history is REPLICATED once
+    * per salt, and the salt joins as an extra key. Every (key, salt) group
+    * sees the key's complete right history, so for every direction,
+    * tolerance and join type [[graft.plans.AsOf.join]] must return exactly
+    * the unsalted rows: a second key column and a hot key change nothing.
+    */
+  def joinSalted(
+      left: DataFrame,
+      right: DataFrame,
+      leftKeys: Seq[String],
+      rightKeys: Seq[String],
+      leftTime: String,
+      rightTime: String,
+      salts: Int,
+      tieBreak: Seq[String] = Nil,
+      joinType: String = "inner",
+      direction: String = "backward",
+      tolerance: Option[Long] = None): DataFrame = {
+    require(salts > 0, s"salts must be positive, got $salts")
+    (left.columns ++ right.columns).foreach(c => require(
+      c != "__salt_l" && c != "__salt_r",
+      s"column '$c' collides with joinSalted's internal salt column"))
+    val saltedLeft = left.withColumn("__salt_l",
+      pmod(monotonically_increasing_id(), lit(salts.toLong)).cast("int"))
+    val replicatedRight = right.withColumn("__salt_r",
+      explode(sequence(lit(0), lit(salts - 1))))
+    graft.plans.AsOf.join(saltedLeft, replicatedRight,
+      leftKeys :+ "__salt_l", rightKeys :+ "__salt_r",
+      leftTime, rightTime, tieBreak, joinType, direction, tolerance)
+      .drop("__salt_l", "__salt_r")
   }
 }

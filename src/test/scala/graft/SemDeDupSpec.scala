@@ -3,7 +3,7 @@ package graft
 import graft.operators.SemDeDup
 import org.apache.spark.sql.functions._
 
-/** SemDeDup's scale form ([[SemDeDup.pairsAuto]], q111): trained-centroid
+/** SemDeDup's scale form ([[SemDeDupSpec.pairsAuto]], q111): trained-centroid
   * clustering with k grown as n/targetClusterSize. The pair math is shared
   * with the oracle-checked q101 via [[SemDeDup.pairs]]; these tests pin
   * the properties the oracle cannot: planted duplicates are found, the
@@ -51,7 +51,7 @@ class SemDeDupSpec extends SparkSpec {
       (900L, centers(0).map(_ + 0.01f)),
       (901L, centers(0).map(_ + 0.01f)))
     val emb = rows.toDF("vec_id", "embedding")
-    val got = SemDeDup
+    val got = SemDeDupSpec
       .pairsAuto(emb, "vec_id", "embedding", minCos = 0.9999,
         targetClusterSize = 16)
       .collect()
@@ -64,7 +64,7 @@ class SemDeDupSpec extends SparkSpec {
   test("pairsAuto only under-reports: every pair is a true pair; recall measured") {
     val emb = Tables.embeddings(spark, sf("sf0.01"))
       .select(col("vec_id"), col("embedding"))
-    val got = SemDeDup
+    val got = SemDeDupSpec
       .pairsAuto(emb, "vec_id", "embedding", minCos = 0.4,
         targetClusterSize = 64)
       .select(col("vec_a"), col("vec_b"), col("cos_sim"))
@@ -136,7 +136,7 @@ class SemDeDupSpec extends SparkSpec {
     df.collect().map(r => (r.getAs[Long]("cluster"), r.getAs[Long]("vec_a"),
       r.getAs[Long]("vec_b"), r.getAs[Double]("cos_sim"))).toSet
 
-  test("persisted index: build/pairsIndexed/append/delete/compact lifecycle") {
+  test("persisted index: incremental pairs == union pairs with a batch member") {
     import spark.implicits._
     val centers = Array(vec(1, 10f), vec(2, 10f), vec(3, 10f))
     def mk(ids: Range, seedOff: Int) = ids.map { i =>
@@ -153,12 +153,8 @@ class SemDeDupSpec extends SparkSpec {
     val path = s"$root/idx"
     val minCos = 0.9
 
-    // build on existing: indexed pairs == inline pairs, exactly
     SemDeDup.buildIndex(existing, "vec_id", "embedding", cents, path)
-    val inline = pairSet(SemDeDup.pairs(existing, "vec_id", "embedding", cents, minCos))
-    assert(inline.nonEmpty, "test geometry produced no pairs — thresholds wrong")
-    assert(pairSet(SemDeDup.pairsIndexed(existing, "vec_id", "embedding", path, minCos))
-      == inline, "pairsIndexed drifted from inline pairs")
+    assert(SemDeDup.loadAssignments(spark, path).count() == 60)
 
     // incremental: pairs involving the batch == union pairs filtered to batch members
     val incr = pairSet(SemDeDup.incrementalPairs(
@@ -169,31 +165,6 @@ class SemDeDupSpec extends SparkSpec {
       s"incremental drifted: ${incr.size} vs expected ${expected.size}")
     assert(expected.exists(p => p._2 < 60), "no cross batch-vs-indexed pair exercised")
     assert(expected.exists(p => p._2 >= 60 && p._3 >= 60), "no within-batch pair exercised")
-
-    // append: index over existing+batch == one-shot build over the union
-    SemDeDup.appendToIndex(batch, "vec_id", "embedding", path)
-    assert(pairSet(SemDeDup.pairsIndexed(union, "vec_id", "embedding", path, minCos))
-      == unionPairs, "append drifted from one-shot build")
-
-    // delete: tombstoned ids stop pairing immediately, == rebuild-without
-    val gone = Seq(0L, 3L, 61L)
-    SemDeDup.deleteFromIndex(spark, path, gone)
-    val without = union.filter(!col("vec_id").isin(gone: _*))
-    val rebuilt = pairSet(SemDeDup.pairs(without, "vec_id", "embedding", cents, minCos))
-    assert(pairSet(SemDeDup.pairsIndexed(union, "vec_id", "embedding", path, minCos))
-      == rebuilt, "delete-then-pairs != rebuild-without")
-    assert(rebuilt != unionPairs, "deleted ids had no pairs — delete not exercised")
-
-    // compact folds tombstones physically; results unchanged; re-append works
-    SemDeDup.compactIndex(spark, path)
-    assert(pairSet(SemDeDup.pairsIndexed(union, "vec_id", "embedding", path, minCos))
-      == rebuilt, "compact changed results")
-    SemDeDup.appendToIndex(
-      union.filter(col("vec_id") === 0L), "vec_id", "embedding", path)
-    assert(pairSet(SemDeDup.pairsIndexed(union, "vec_id", "embedding", path, minCos))
-      == pairSet(SemDeDup.pairs(
-        union.filter(!col("vec_id").isin(3L, 61L)), "vec_id", "embedding", cents, minCos)),
-      "re-append after compact drifted")
   }
 
   test("dedup action: keeps the lowest-id representative with its dup_count") {
@@ -223,46 +194,6 @@ class SemDeDupSpec extends SparkSpec {
       "a singleton claimed duplicates")
   }
 
-  test("streaming ingestion: foreachBatch grows the index; pairs equal a one-shot build") {
-    // the semantic twin of the streaming IVF/text-index ingestion: vectors
-    // arrive as a stream, each micro-batch assigns under the persisted
-    // quantizer and appends — after the stream drains, the incrementally
-    // grown index yields EXACTLY the pairs of an index built in one shot
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val centers = Array(vec(1, 10f), vec(2, 10f), vec(3, 10f))
-    def mk(ids: Range) = ids.map { i =>
-      val c = centers(i % 3)
-      val n = vec(400 + i, 2f)
-      (i.toLong, c.zip(n).map { case (a, b) => a + b })
-    }
-    val existing = mk(0 until 60).toDF("vec_id", "embedding")
-    val arrivals = mk(60 until 80)
-    val union = existing.unionByName(arrivals.toDF("vec_id", "embedding"))
-    val cents = centers.zipWithIndex.map { case (c, i) => (i.toLong, c) }
-      .toSeq.toDF("c_id", "c_emb")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_semdedup_stream").toString + "/idx"
-    SemDeDup.buildIndex(existing, "vec_id", "embedding", cents, path)
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Array[Float])]
-    val q = input.toDF().toDF("vec_id", "embedding").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        SemDeDup.appendToIndex(batch, "vec_id", "embedding", path)
-      }
-      .start()
-    try {
-      input.addData(arrivals.take(10))
-      q.processAllAvailable()
-      input.addData(arrivals.drop(10))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = pairSet(SemDeDup.pairsIndexed(union, "vec_id", "embedding", path, 0.9))
-    val oneShot = pairSet(SemDeDup.pairs(union, "vec_id", "embedding", cents, 0.9))
-    assert(oneShot.nonEmpty, "test geometry produced no pairs")
-    assert(got == oneShot, "streamed index drifted from one-shot build")
-  }
-
   test("trained buildIndex: the persisted index reproduces pairsAuto exactly") {
     import spark.implicits._
     val centers = Array(vec(1, 10f), vec(2, 10f), vec(3, 10f))
@@ -277,32 +208,17 @@ class SemDeDupSpec extends SparkSpec {
     SemDeDup.buildIndex(emb, "vec_id", "embedding",
       SemDeDup.trainedCentroids(emb, "vec_id", "embedding", targetClusterSize = 16),
       path)
-    val indexed = pairSet(SemDeDup.pairsIndexed(emb, "vec_id", "embedding", path, 0.9))
+    // the ids >= 45 re-arrive as a batch: the persisted index pairs them
+    // with the rest and with each other under the stored quantizer
+    val batch = emb.filter(col("vec_id") >= 45)
+    val indexed = pairSet(SemDeDup.incrementalPairs(
+      batch, emb, "vec_id", "embedding", path, 0.9))
     // both paths train on the same data with the same deterministic
     // trainer, so the persisted-index route must be EXACTLY the inline one
-    val inline = pairSet(SemDeDup.pairsAuto(emb, "vec_id", "embedding", 0.9,
-      targetClusterSize = 16))
+    val inline = pairSet(SemDeDupSpec.pairsAuto(emb, "vec_id", "embedding", 0.9,
+      targetClusterSize = 16)).filter(p => p._2 >= 45 || p._3 >= 45)
     assert(inline.nonEmpty && indexed == inline,
       s"auto-built index drifted: ${indexed.size} vs ${inline.size}")
-  }
-
-  test("appendToIndex refuses a dimension-mismatched batch") {
-    import spark.implicits._
-    val cents = Seq((0L, Array(1f, 0f, 0f, 0f))).toDF("c_id", "c_emb")
-    val ok = Seq((1L, Array(1f, 1f, 1f, 1f))).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("graft_semdedup_dim").toString + "/idx"
-    SemDeDup.buildIndex(ok, "vec_id", "embedding", cents, path)
-    val bad = Seq((2L, Array(1f, 1f))).toDF("vec_id", "embedding")
-    val e = intercept[IllegalArgumentException] {
-      SemDeDup.appendToIndex(bad, "vec_id", "embedding", path)
-    }
-    assert(e.getMessage.contains("dim"), e.getMessage)
-    // an EMPTY batch is a no-op, not a crash — foreachBatch delivers them
-    // routinely (empty trigger, source rebalance)
-    val before = SemDeDup.loadAssignments(spark, path).count()
-    SemDeDup.appendToIndex(
-      ok.filter(col("vec_id") < 0), "vec_id", "embedding", path)
-    assert(SemDeDup.loadAssignments(spark, path).count() == before)
   }
 
   test("q112 declared form returns rows with a batch member in every pair") {
@@ -320,4 +236,23 @@ class SemDeDupSpec extends SparkSpec {
     assert(rows.nonEmpty, "q111 returned no rows at sf0.01")
     assert(rows.forall(r => r.getAs[Long]("vec_a") < r.getAs[Long]("vec_b")))
   }
+}
+
+object SemDeDupSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** q111's composition as one call: [[SemDeDup.pairs]] over
+    * [[SemDeDup.trainedCentroids]], salting only the clusters the
+    * quantizer failed to split below its target size.
+    */
+  def pairsAuto(
+      members: DataFrame,
+      idCol: String,
+      vecCol: String,
+      minCos: Double,
+      targetClusterSize: Int = 1024,
+      iters: Int = 5): DataFrame =
+    SemDeDup.pairs(members, idCol, vecCol,
+      SemDeDup.trainedCentroids(members, idCol, vecCol, targetClusterSize, iters),
+      minCos, saltAbove = targetClusterSize)
 }

@@ -2,11 +2,21 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.streaming.{Event, Streams, UserStats}
+import graft.streaming.Streams
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+
+/** Typed event row the streaming specs feed through MemoryStream and
+  * parquet file streams.
+  */
+final case class Event(
+    event_id: Long,
+    user_id: Long,
+    event_type: String,
+    ts: Timestamp,
+    value: Double)
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -76,7 +86,7 @@ class StreamingSpec extends SparkSpec {
   test("watermark drops events later than the delay (append mode)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
-    val q = Streams.watermarkedTumbling(input.toDF(), "5 minutes").writeStream
+    val q = Streams.tumblingCounts(Streams.wm(input.toDF(), "ts", "5 minutes")).writeStream
       .format("memory").queryName("t_wm").outputMode(OutputMode.Append).start()
     try {
       // batch 1: events up to t=40 -> watermark advances to 35
@@ -96,15 +106,6 @@ class StreamingSpec extends SparkSpec {
       .as[(Double, Long, Double)].collect().toMap2
     // the first 10-min window emitted BEFORE the late event arrived: n=1, sum=1.0
     assert(rows(1440.0) == ((1L, 1.0)))
-  }
-
-  test("dropDuplicatesWithinWatermark removes repeated event_ids") {
-    val streamed = runStream(
-      Seq(batch1 ++ batch1, batch1 :+ Event(7, 3, "click", ts(15), 7.0)),
-      OutputMode.Append, "t_dedup")(Streams.dedupWithinWatermark(_, "1 hour"))
-    assert(streamed.count() == batch1.size + 1)
-    assert(streamed.select("event_id").as[Long].collect().toSet ==
-      (batch1.map(_.event_id).toSet + 7L))
   }
 
   test("stream-stream join matches clicks to purchases within the hour") {
@@ -140,9 +141,14 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val lsh = graft.operators.MinHashLSH(12, 3, 1)
     val index = lsh.bandIndex(corpus, "doc_id", "text")
+    // stateless band join per micro-batch; the trailing dropDuplicates
+    // collapses multi-band hits and suppresses a re-sent document
+    def dedup(docs: DataFrame, maxBucket: Int): DataFrame =
+      lsh.candidatesFromBands(lsh.bandIndex(docs, "doc_id", "text"), index, maxBucket)
+        .select(col("new_id").as("doc_id"), col("index_id").as("matched_id"))
+        .dropDuplicates("doc_id", "matched_id")
     val input = MemoryStream[(Long, String)]
-    val q = Streams.streamDedupAgainstIndex(
-        input.toDF().toDF("doc_id", "text"), index, lsh)
+    val q = dedup(input.toDF().toDF("doc_id", "text"), maxBucket = 0)
       .writeStream.format("memory").queryName("t_lshdedup")
       .outputMode(OutputMode.Append).start()
     try {
@@ -161,8 +167,7 @@ class StreamingSpec extends SparkSpec {
     // cap is index-side only — a batch-side groupBy + left_anti here would
     // throw UnsupportedOperationChecker at query start)
     val input2 = MemoryStream[(Long, String)]
-    val q2 = Streams.streamDedupAgainstIndex(
-        input2.toDF().toDF("doc_id", "text"), index, lsh, maxBucket = 5)
+    val q2 = dedup(input2.toDF().toDF("doc_id", "text"), maxBucket = 5)
       .writeStream.format("memory").queryName("t_lshdedup_cap")
       .outputMode(OutputMode.Append).start()
     try {
@@ -171,85 +176,6 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
     assert(spark.table("t_lshdedup_cap").as[(Long, Long)].collect().toSet ==
       Set((20L, 1L)))
-  }
-
-  test("watermarked LSH dedup: suppressed within the delay, state expires after") {
-    implicit val sqlCtx = spark.sqlContext
-    val dup = "the quick brown fox jumps over the lazy dog"
-    val corpus = Seq((1L, dup)).toDF("doc_id", "text")
-    val lsh = graft.operators.MinHashLSH(12, 3, 1)
-    val index = lsh.bandIndex(corpus, "doc_id", "text")
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val q = Streams.streamDedupAgainstIndex(
-        input.toDF().toDF("doc_id", "text", "ts"), index, lsh,
-        watermark = Some(("ts", "10 minutes")))
-      .writeStream.format("memory").queryName("t_lshdedup_wm")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(Seq((10L, dup, ts(0))))
-      q.processAllAvailable()
-      // same collision pair again, within the watermark delay: suppressed
-      input.addData(Seq((10L, dup, ts(5))))
-      q.processAllAvailable()
-      // push the watermark far past ts(5) + 10min -> pair state evicted
-      input.addData(Seq((99L, "zebra xylophone quark nebula glyph prism", ts(500))))
-      q.processAllAvailable()
-      // the same pair after expiry IS re-emitted — proof state was dropped,
-      // i.e. the dedup state is bounded by the watermark, not unbounded
-      input.addData(Seq((10L, dup, ts(501))))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_lshdedup_wm").select("doc_id", "matched_id")
-      .as[(Long, Long)].collect().toSeq
-    assert(got.count(_ == ((10L, 1L))) == 2, got)
-    assert(got.size == 2, got)
-  }
-
-  test("streaming embedding dedup vs persisted IVF index: collisions flagged, state watermark-bounded") {
-    implicit val sqlCtx = spark.sqlContext
-    // 8 near-orthogonal indexed vectors; index persisted once, searched many
-    val dim = 4
-    // ids 1-4: unit axes; ids 5-8: two-axis diagonals — eight distinct
-    // directions, no pair above cosine 0.71, so threshold 0.95 isolates
-    def mk(i: Int): Array[Float] = {
-      val a = new Array[Float](dim)
-      if (i < 4) a(i) = 1f
-      else { a(i - 4) = 0.7f; a((i - 3) % dim) = 0.7f }
-      a
-    }
-    val corpusVecs = (0 until 8).map(i => graft.operators.Vec(i.toLong + 1, mk(i)))
-    val corpus = spark.createDataset(corpusVecs)
-    val idxPath = java.nio.file.Files.createTempDirectory("graft_sivf").toString
-    // trained = false persists RAW sampled seeds whose Vec.id is a corpus
-    // vector id, NOT the 0..nCells-1 array position — the regression shape
-    // where probing by centroid id instead of position matches nothing
-    graft.operators.Ann.buildIvfIndex(corpus, idxPath, nCells = 4, trained = false)
-    val dupEmb: Seq[Float] = Seq(0.999f, 0.02f, 0f, 0f)   // ~= vector 1 only
-    val novel: Seq[Float] = Seq(0.5f, -0.5f, 0.5f, -0.5f) // far from all
-    val input = MemoryStream[(Long, Seq[Float], Timestamp)]
-    val q = Streams.streamDedupAgainstIvfIndex(
-        input.toDF().toDF("id", "embedding", "ts"), idxPath, corpus.toDF(),
-        threshold = 0.95, nprobe = 2,
-        watermark = Some(("ts", "10 minutes")))
-      .writeStream.format("memory").queryName("t_ivfdedup")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(Seq((100L, dupEmb, ts(0)), (101L, novel, ts(0))))
-      q.processAllAvailable()
-      // same collision pair within the delay: suppressed by dedup state
-      input.addData(Seq((100L, dupEmb, ts(5))))
-      q.processAllAvailable()
-      // advance the watermark far past ts(5) + 10min -> pair state evicted
-      input.addData(Seq((102L, novel, ts(500))))
-      q.processAllAvailable()
-      // after expiry the pair re-emits — proof the state is bounded by the
-      // watermark (the unbounded-dedup trap the watermark mode exists for)
-      input.addData(Seq((100L, dupEmb, ts(501))))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_ivfdedup").as[(Long, Long)].collect().toSeq
-    assert(got.count(_ == ((100L, 1L))) == 2, s"got $got")
-    assert(got.size == 2, s"novel vectors must not be flagged: $got")
   }
 
   test("stream-static as-of enrichment: each event joins its reference version") {
@@ -284,133 +210,6 @@ class StreamingSpec extends SparkSpec {
       3L -> None, 4L -> None))
   }
 
-  test("stream-stream as-of: each left row gets the LATEST right match in tolerance") {
-    implicit val sqlCtx = spark.sqlContext
-    val lIn = MemoryStream[Event]
-    val rIn = MemoryStream[Event]
-    val q = Streams.streamAsOf(lIn.toDF(), rIn.toDF(), "1 hour", "10 minutes")
-      .writeStream.format("memory").queryName("t_stream_asof")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // user 1: two right versions before the left event; latest (t=20) wins
-      // user 2: right version AFTER the left event only -> no match, no row
-      // user 3: right version 2h before the left event -> outside tolerance
-      rIn.addData(Seq(
-        Event(100, 1, "v", ts(5), 1.0),
-        Event(101, 1, "v", ts(20), 2.0),
-        Event(102, 2, "v", ts(50), 9.0),
-        Event(103, 3, "v", ts(0), 7.0)))
-      lIn.addData(Seq(
-        Event(1, 1, "click", ts(30), 0.5),
-        Event(2, 2, "click", ts(40), 0.6),
-        Event(3, 3, "click", ts(130), 0.7)))
-      q.processAllAvailable()
-      // push both watermarks far ahead so the join state closes and the
-      // aggregate emits its final groups (the flush rows themselves stay
-      // open — nothing ever advances the watermark past them)
-      rIn.addData(Seq(Event(199, 9, "v", ts(500), 0.0)))
-      lIn.addData(Seq(Event(99, 9, "click", ts(500), 0.0)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_stream_asof")
-      .select("event_id", "matched_ts", "matched_value")
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2)))
-      .toSet
-    // user 1's left row matched the LATEST of its two right versions;
-    // user 2 (right only after) and user 3 (outside tolerance) emit nothing
-    assert(got == Set((1L, ts(20), 2.0)), got)
-  }
-
-  test("event-time-timeout sessionizer closes by gap AND by watermark, exactly once") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = Streams.sessionsWithTimeout(input.toDS(), "30 minutes", "10 minutes")
-      .writeStream.format("memory").queryName("t_sess_timeout")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // user 1: two events, one session; user 2: single event
-      input.addData(Seq(
-        Event(1, 1, "click", ts(0), 1.0),
-        Event(2, 1, "click", ts(5), 2.0),
-        Event(3, 2, "view", ts(3), 3.0)))
-      q.processAllAvailable()
-      // user 1 again past the 30-min gap: closes [0,5] inline AND opens a
-      // new session; watermark -> ts(50), timing out user 2's [3,3]
-      input.addData(Seq(Event(4, 1, "click", ts(60), 4.0)))
-      q.processAllAvailable()
-      // watermark -> ts(190): user 1's [60,60] deadline (ts 90) passes
-      input.addData(Seq(Event(5, 3, "view", ts(200), 5.0)))
-      q.processAllAvailable()
-      // watermark -> ts(390): closes user 3; user 9 stays open (not emitted)
-      input.addData(Seq(Event(6, 9, "view", ts(400), 6.0)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_sess_timeout")
-      .as[graft.streaming.ClosedSession].collect().toSet
-    assert(got == Set(
-      graft.streaming.ClosedSession(1, ts(0), ts(5), 2, 3.0),
-      graft.streaming.ClosedSession(2, ts(3), ts(3), 1, 3.0),
-      graft.streaming.ClosedSession(1, ts(60), ts(60), 1, 4.0),
-      graft.streaming.ClosedSession(3, ts(200), ts(200), 1, 5.0)), got)
-    // every closed session agrees with the batch session_window oracle
-    val batch = Streams.sessionStats(Seq(
-      Event(1, 1, "click", ts(0), 1.0), Event(2, 1, "click", ts(5), 2.0),
-      Event(3, 2, "view", ts(3), 3.0), Event(4, 1, "click", ts(60), 4.0),
-      Event(5, 3, "view", ts(200), 5.0)).toDF(), "30 minutes")
-      .select(col("user_id"), col("s_start"), col("n_events"), col("sum_value"))
-      .as[(Long, Timestamp, Long, Double)].collect().toSet
-    assert(got.map(s => (s.user_id, s.s_start, s.n_events, s.sum_value)) == batch)
-  }
-
-  test("sessionizer merges non-late OUT-OF-ORDER events, including bridging two sessions") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    // generous lateness (60m) so old-but-valid events arrive across batches
-    val q = Streams.sessionsWithTimeout(input.toDS(), "30 minutes", "60 minutes")
-      .writeStream.format("memory").queryName("t_sess_ooo")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // user 1: two sessions 50min apart...
-      input.addData(Seq(
-        Event(1, 1, "a", ts(0), 1.0),
-        Event(2, 1, "a", ts(50), 2.0)))
-      q.processAllAvailable()
-      // ...then an OUT-OF-ORDER event at t=25 bridges them into ONE
-      input.addData(Seq(Event(3, 1, "a", ts(25), 4.0)))
-      q.processAllAvailable()
-      // advance the watermark far enough to close everything of user 1
-      input.addData(Seq(Event(9, 9, "a", ts(400), 0.0)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("t_sess_ooo")
-      .as[graft.streaming.ClosedSession].collect().toSet
-    assert(got == Set(
-      graft.streaming.ClosedSession(1, ts(0), ts(50), 3, 7.0)), got)
-    // and it equals the batch session_window oracle on the same events
-    val batch = Streams.sessionStats(Seq(
-      Event(1, 1, "a", ts(0), 1.0), Event(2, 1, "a", ts(50), 2.0),
-      Event(3, 1, "a", ts(25), 4.0)).toDF(), "30 minutes")
-      .select(col("user_id"), col("s_start"), col("n_events"), col("sum_value"))
-      .as[(Long, Timestamp, Long, Double)].collect().toSet
-    assert(got.map(s => (s.user_id, s.s_start, s.n_events, s.sum_value)) == batch)
-  }
-
-  test("flatMapGroupsWithState keeps running per-user state across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = Streams.runningUserStats(input.toDS()).writeStream
-      .format("memory").queryName("t_state").outputMode(OutputMode.Update).start()
-    try {
-      input.addData(batch1); q.processAllAvailable()
-      input.addData(batch2); q.processAllAvailable()
-    } finally q.stop()
-    // last update per user reflects ALL events
-    val last = spark.table("t_state").as[UserStats].collect()
-      .groupBy(_.user_id).map { case (u, rows) => u -> rows.maxBy(_.n_events) }
-    assert(last(1L) == UserStats(1L, 3, 8.0))
-    assert(last(2L) == UserStats(2L, 3, 13.0))
-  }
-
   test("streaming geofence: the BATCH spatial join runs unchanged stream-static") {
     // SpatialJoin.pointsInZones is pure stateless composition (project +
     // explode + equi-join + filter), so a streaming point feed against
@@ -440,73 +239,5 @@ class StreamingSpec extends SparkSpec {
   private implicit class MapOps(rows: Array[(Double, Long, Double)]) {
     def toMap2: Map[Double, (Long, Double)] =
       rows.map { case (k, a, b) => k -> ((a, b)) }.toMap
-  }
-
-  test("streaming drift monitor: in-distribution batch quiet, shifted batch alarms") {
-    implicit val sqlCtx = spark.sqlContext
-    // reference: lengths uniform over [100, 500), langs uniform over 4
-    val ref = (0 until 2000)
-      .map(i => (i.toLong, (100 + i % 400).toDouble, s"l${i % 4}"))
-      .toDF("id", "len", "lang")
-    val input = MemoryStream[(Long, Double, String)]
-    val got = scala.collection.mutable.Map[Long, Map[String, Double]]()
-    val q = Streams.monitorDriftBatches(
-        input.toDF().toDF("id", "len", "lang"), ref,
-        numeric = Seq(("len", 0.0, 600.0, 12)),
-        categorical = Seq("lang")) { (psi, id) =>
-      got(id) = psi.collect()
-        .map(r => r.getAs[String]("metric") -> r.getAs[Double]("psi")).toMap
-    }.start()
-    try {
-      // batch 0: drawn from the reference distribution
-      input.addData((0 until 1000)
-        .map(i => (i.toLong, (100 + i % 400).toDouble, s"l${i % 4}")))
-      q.processAllAvailable()
-      // batch 1: length distribution shifted up, one language vanished
-      input.addData((0 until 1000)
-        .map(i => (i.toLong, (450 + i % 150).toDouble, s"l${i % 2}")))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(got(0L)("len") < 0.1 && got(0L)("lang") < 0.1,
-      s"in-distribution batch must read stable: ${got(0L)}")
-    assert(got(1L)("len") > 0.25 && got(1L)("lang") > 0.25,
-      s"shifted batch must fire the action threshold: ${got(1L)}")
-    // per-batch math IS the batch operator: replay batch 1 through it
-    val replay = graft.operators.Drift.numericPsi(
-      ref, (0 until 1000)
-        .map(i => (i.toLong, (450 + i % 150).toDouble, s"l${i % 2}"))
-        .toDF("id", "len", "lang"), "len", 0.0, 600.0, 12)
-      .collect()(0).getAs[Double]("psi")
-    assert(replay == got(1L)("len"))
-  }
-
-  test("streaming quality scoring equals batch scoring with the same weights") {
-    implicit val sqlCtx = spark.sqlContext
-    val train = Tables.documents(spark, sf())
-    val feat = graft.operators.QualityClassifier.features(train).localCheckpoint(true)
-    val labels = graft.operators.QualityClassifier.cascadeLabels(train).localCheckpoint(true)
-    val w = graft.operators.QualityClassifier.trainLogistic(feat, labels, iters = 3)
-
-    // stream the same corpus through in two micro-batches
-    val rows = train.select(col("doc_id"), col("text"), col("n_chars"))
-      .as[(Long, String, Long)].collect()
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, String, Long)]
-    val got = scala.collection.mutable.Map[Long, (Double, Boolean)]()
-    val q = Streams.scoreQualityBatches(
-        input.toDF().toDF("doc_id", "text", "n_chars"), w) { (scored, _) =>
-      scored.collect().foreach(r =>
-        got(r.getAs[Long]("doc_id")) = (r.getAs[Double]("p"), r.getAs[Boolean]("pred")))
-    }.start()
-    try {
-      input.addData(b1.toSeq); q.processAllAvailable()
-      input.addData(b2.toSeq); q.processAllAvailable()
-    } finally q.stop()
-
-    val batchScores = graft.operators.QualityClassifier.score(feat, w)
-      .collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        (r.getAs[Double]("p"), r.getAs[Boolean]("pred"))).toMap
-    assert(got.toMap == batchScores)
   }
 }

@@ -136,39 +136,6 @@ class SubstringDedupSpec extends SparkSpec {
     }
   }
 
-  test("derivedGramWidth: dense vocabularies widen k, natural ones keep the floor") {
-    val rng = new scala.util.Random(7)
-    // dense: 30-word vocabulary, 400 docs x 80 words — the 1M slice's
-    // regime scaled down; the collision-horizon rule must push k well
-    // above the 20 default (at slice scale it lands at ~41, the
-    // empirically-proven 40)
-    val vocab = Vector.tabulate(30)(i => s"word$i")
-    val dense = (1 to 400).map { i =>
-      (i.toLong, Seq.fill(80)(vocab(rng.nextInt(30))).mkString(" "))
-    }.toDF("doc_id", "text")
-    val kDense = SubstringDedup.derivedGramWidth(dense, "doc_id", "text")
-    assert(kDense > 20 && kDense < 60, s"dense corpus derived k = $kDense")
-    // the margin is load-bearing: expectation-at-1 (margin = 1) must give
-    // a strictly narrower k than the default expectation-at-1/64 — the
-    // 1M measurement showed the narrower k over-excising (BASELINE r17)
-    val kDense1 = SubstringDedup
-      .derivedGramWidth(dense, "doc_id", "text", margin = 1.0)
-    assert(kDense > kDense1,
-      s"margin must widen k: margin-free $kDense1 vs default $kDense")
-    // natural: high-diversity vocabulary — the rule clamps to the floor
-    val natural = (1 to 400).map { i =>
-      (i.toLong, Seq.fill(80)(rng.alphanumeric.take(6).mkString).mkString(" "))
-    }.toDF("doc_id", "text")
-    val kNat = SubstringDedup.derivedGramWidth(natural, "doc_id", "text")
-    assert(kNat == 20, s"natural corpus derived k = $kNat")
-    // monotone in corpus size at fixed vocabulary: more positions -> wider k
-    val denseBig = (1 to 400).map { i =>
-      (i.toLong, Seq.fill(800)(vocab(rng.nextInt(30))).mkString(" "))
-    }.toDF("doc_id", "text")
-    val kBig = SubstringDedup.derivedGramWidth(denseBig, "doc_id", "text")
-    assert(kBig >= kDense, s"k must not shrink with corpus size: $kDense -> $kBig")
-  }
-
   test("excise removes exactly the spans: unchanged, partial, and total cases") {
     val docs = Seq(
       (1L, "AAA(" + shared + ")with an unrelated ending here"),
@@ -177,7 +144,7 @@ class SubstringDedupSpec extends SparkSpec {
       (4L, shared), // duplicated end to end -> empty
       (5L, shared)
     ).toDF("doc_id", "text")
-    val got = SubstringDedup.excise(docs, "doc_id", "text")
+    val got = SubstringDedupSpec.excise(docs, "doc_id", "text")
       .as[(Long, String, Int)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got(1L) == (("AAA()with an unrelated ending here", shared.length)))
     assert(got(2L) == (("BBBBBB[]totally different tail text", shared.length)))
@@ -193,7 +160,7 @@ class SubstringDedupSpec extends SparkSpec {
     val d1 = shared + "xxxxxxxxxxxxxxxxxxxxxxxxxxxxxx" + s2 + "1-tail-one"
     val d2 = shared + "yyyyyyyyyyyyyyyyyyyyyyyyyyyyyy" + s2 + "2-tail-two"
     val docs = Seq((1L, d1), (2L, d2)).toDF("doc_id", "text")
-    val got = SubstringDedup.excise(docs, "doc_id", "text")
+    val got = SubstringDedupSpec.excise(docs, "doc_id", "text")
       .as[(Long, String, Int)].collect().map(r => r._1 -> r._2).toMap
     assert(got(1L) == "x" * 30 + "1-tail-one")
     assert(got(2L) == "y" * 30 + "2-tail-two")
@@ -368,13 +335,13 @@ class SubstringDedupSpec extends SparkSpec {
       (i.toLong, pool(i % 2) + " " + pool((i + 1) % 2))
     }.toDF("doc_id", "text")
     val eSat = intercept[IllegalArgumentException] {
-      SubstringDedup.excise(saturated, "doc_id", "text").collect()
+      SubstringDedupSpec.excise(saturated, "doc_id", "text").collect()
     }
     assert(eSat.getMessage.contains("collision floor") &&
       eSat.getMessage.contains("maxCoverage = 1.0"), eSat.getMessage)
     // the explicit opt-in performs the action (a genuinely template-heavy
     // corpus CAN be excised deliberately) — and here removes everything
-    val optIn = SubstringDedup.excise(saturated, "doc_id", "text",
+    val optIn = SubstringDedupSpec.excise(saturated, "doc_id", "text",
       maxCoverage = 1.0)
       .agg(sum(length(col("clean_text")))).as[Long].head()
     assert(optIn == 0L, s"opt-in should excise the saturated corpus, kept $optIn chars")
@@ -382,8 +349,27 @@ class SubstringDedupSpec extends SparkSpec {
     // fixture above) never trips the default guard — pinned by the other
     // excise tests running guard-enabled — and the threshold is validated
     val eArg = intercept[IllegalArgumentException] {
-      SubstringDedup.excise(saturated, "doc_id", "text", maxCoverage = 0.0)
+      SubstringDedupSpec.excise(saturated, "doc_id", "text", maxCoverage = 0.0)
     }
     assert(eArg.getMessage.contains("(0, 1]"))
+  }
+}
+
+object SubstringDedupSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** Detect then act in one call: [[SubstringDedup.duplicatedSpans]]
+    * materialized once (the action references it three times), then
+    * [[SubstringDedup.exciseSpans]] with the saturation guard on.
+    */
+  def excise(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      k: Int = 20,
+      maxCoverage: Double = SubstringDedup.DefaultMaxCoverage): DataFrame = {
+    val spans = SubstringDedup.duplicatedSpans(docs, idCol, textCol, k)
+      .localCheckpoint()
+    SubstringDedup.exciseSpans(docs, idCol, textCol, spans, maxCoverage)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.TextIndex
 import graft.queries.Catalog
-import org.apache.spark.sql.functions._
 
 class TextIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -34,62 +33,7 @@ class TextIndexSpec extends SparkSpec {
     assert(top.head._1 == 3L && top.map(_._1).toSet == Set(1L, 3L))
   }
 
-  test("append equals rebuild: indexing half the corpus then appending the rest") {
-    val docs = Tables.documents(spark, sf()).select(col("doc_id"), col("text"))
-    val full = java.nio.file.Files.createTempDirectory("ti_full").toString
-    val inc = java.nio.file.Files.createTempDirectory("ti_inc").toString
-    TextIndex.buildTextIndex(docs, "doc_id", "text", full)
-    TextIndex.buildTextIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", inc)
-    TextIndex.appendToTextIndex(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", inc)
-    val terms = Seq("spark", "join", "stream")
-    val a = TextIndex.bm25TopK(spark, full, terms).as[(Long, Double)].collect().toSeq
-    val b = TextIndex.bm25TopK(spark, inc, terms).as[(Long, Double)].collect().toSeq
-    assert(a.nonEmpty && a == b)
-  }
-
-  test("appending already-indexed ids is refused before any write") {
-    val root = java.nio.file.Files.createTempDirectory("ti_dup").toString
-    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
-    TextIndex.buildTextIndex(docs, "doc_id", "text", root)
-    val before = TextIndex.bm25TopK(spark, root, Seq("beta")).as[(Long, Double)].collect().toSeq
-    val e = intercept[IllegalArgumentException] {
-      TextIndex.appendToTextIndex(Seq((2L, "beta again")).toDF("doc_id", "text"),
-        "doc_id", "text", root)
-    }
-    assert(e.getMessage.contains("already indexed"))
-    // the refused append must not have touched the index
-    val after = TextIndex.bm25TopK(spark, root, Seq("beta")).as[(Long, Double)].collect().toSeq
-    assert(after == before)
-  }
-
-  test("streaming ingestion: foreachBatch grows the text index; scores match a full rebuild") {
-    // the text twin of the streaming IVF ingestion: documents arrive as a
-    // stream, each micro-batch appends its postings — retrieval sees the
-    // streamed docs immediately, no rebuild
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, sf()).select(col("doc_id"), col("text"))
-    val path = java.nio.file.Files.createTempDirectory("ti_stream").toString
-    TextIndex.buildTextIndex(docs.filter(col("doc_id") < 40), "doc_id", "text", path)
-    val arrivals = docs.filter(col("doc_id") >= 40 && col("doc_id") < 60)
-      .as[(Long, String)].collect().sortBy(_._1)
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        TextIndex.appendToTextIndex(batch, "doc_id", "text", path)
-      }
-      .start()
-    try {
-      input.addData(arrivals.take(10).toSeq); q.processAllAvailable()
-      input.addData(arrivals.drop(10).toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val full = java.nio.file.Files.createTempDirectory("ti_stream_full").toString
-    TextIndex.buildTextIndex(docs.filter(col("doc_id") < 60), "doc_id", "text", full)
-    val terms = Seq("spark", "join", "stream")
-    assert(TextIndex.bm25TopK(spark, path, terms).as[(Long, Double)].collect().toSeq ==
-      TextIndex.bm25TopK(spark, full, terms).as[(Long, Double)].collect().toSeq)
-  }
-
-  test("search never touches doclens: scoring reads term-pruned postings only") {
+  test("search scans only the postings and the stats row") {
     val root = java.nio.file.Files.createTempDirectory("ti_nodl").toString
     val docs = Seq(
       (1L, "spark joins the stream"), (2L, "a quiet unrelated sentence"),
@@ -97,111 +41,37 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.buildTextIndex(docs, "doc_id", "text", root)
     val q = TextIndex.bm25TopK(spark, root, Seq("spark", "stream"))
     q.collect()
-    val plan = q.queryExecution.executedPlan.toString
-    // dl is denormalized onto the postings rows at build time — the plan
-    // must scan postings/stats/deletes but NEVER the |docs|-row doclens
-    assert(!plan.contains("doclens"), plan)
-    assert(plan.contains("postings"), plan)
+    // dl is denormalized onto the postings rows at build time, so scoring
+    // joins no |docs|-row side table: the plan reads exactly two tables
+    val scans = q.queryExecution.executedPlan.toString.linesIterator
+      .filter(_.contains("FileScan")).toSeq
+    assert(scans.forall(l => l.contains("postings") || l.contains("stats")) &&
+      scans.exists(_.contains("postings")) && scans.exists(_.contains("stats")),
+      scans.mkString("\n"))
   }
 
-  test("delete-then-search equals rebuild-without-then-search, exactly") {
-    val docs = Tables.documents(spark, sf()).select(col("doc_id"), col("text"))
-    val full = java.nio.file.Files.createTempDirectory("ti_del").toString
-    val ref = java.nio.file.Files.createTempDirectory("ti_del_ref").toString
-    TextIndex.buildTextIndex(docs, "doc_id", "text", full)
-    val victims = TextIndex.bm25TopK(spark, full, Seq("spark", "join", "stream"), k = 5)
-      .as[(Long, Double)].collect().map(_._1).take(3).toSeq
-    TextIndex.deleteFromTextIndex(spark, full, victims)
-    TextIndex.buildTextIndex(
-      docs.filter(!col("doc_id").isin(victims: _*)), "doc_id", "text", ref)
-    val terms = Seq("spark", "join", "stream")
-    val afterDelete = TextIndex.bm25TopK(spark, full, terms).as[(Long, Double)].collect().toSeq
-    val rebuilt = TextIndex.bm25TopK(spark, ref, terms).as[(Long, Double)].collect().toSeq
-    assert(afterDelete.nonEmpty && afterDelete == rebuilt)
-    assert(afterDelete.forall(r => !victims.contains(r._1)))
-    // idempotent re-delete: tombstones never double-count the stats
-    TextIndex.deleteFromTextIndex(spark, full, victims)
-    assert(TextIndex.bm25TopK(spark, full, terms).as[(Long, Double)].collect().toSeq
-      == afterDelete)
-    // deleting an id that was never indexed is a no-op
-    TextIndex.deleteFromTextIndex(spark, full, Seq(999999999L))
-    assert(TextIndex.bm25TopK(spark, full, terms).as[(Long, Double)].collect().toSeq
-      == afterDelete)
-  }
-
-  test("compaction folds tombstones physically and re-opens deleted ids for append") {
-    val root = java.nio.file.Files.createTempDirectory("ti_compact").toString
-    val docs = Seq(
-      (1L, "spark joins the stream"), (2L, "spark quiet sentence"),
-      (3L, "stream of words"), (4L, "unrelated filler text")).toDF("doc_id", "text")
-    TextIndex.buildTextIndex(docs, "doc_id", "text", root)
-    TextIndex.deleteFromTextIndex(spark, root, Seq(2L))
-    val tombstoned = TextIndex.bm25TopK(spark, root, Seq("spark", "stream"))
-      .as[(Long, Double)].collect().toSeq
-    TextIndex.compactTextIndex(spark, root)
-    // scores identical after physical compaction
-    assert(TextIndex.bm25TopK(spark, root, Seq("spark", "stream"))
-      .as[(Long, Double)].collect().toSeq == tombstoned)
-    // tombstones folded in: postings/doclens no longer carry doc 2,
-    // deletes is empty again
-    assert(spark.read.parquet(s"$root/postings")
-      .filter(col("doc_id") === 2L).count() == 0)
-    assert(spark.read.parquet(s"$root/deletes").count() == 0)
-    // and the erased id can come back as a NEW document
-    TextIndex.appendToTextIndex(
-      Seq((2L, "spark returns anew")).toDF("doc_id", "text"), "doc_id", "text", root)
-    val back = TextIndex.bm25TopK(spark, root, Seq("spark")).as[(Long, Double)].collect()
-    assert(back.map(_._1).contains(2L))
-  }
-
-  test("incremental stats: many appends leave stats exactly equal to a rebuild's") {
-    val root = java.nio.file.Files.createTempDirectory("ti_stats").toString
-    val ref = java.nio.file.Files.createTempDirectory("ti_stats_ref").toString
-    val docs = Tables.documents(spark, sf())
-      .select(col("doc_id"), col("text")).filter(col("doc_id") < 90)
-    TextIndex.buildTextIndex(docs.filter(col("doc_id") < 30), "doc_id", "text", root)
-    TextIndex.appendToTextIndex(
-      docs.filter(col("doc_id") >= 30 && col("doc_id") < 60), "doc_id", "text", root)
-    TextIndex.appendToTextIndex(
-      docs.filter(col("doc_id") >= 60), "doc_id", "text", root)
-    TextIndex.buildTextIndex(docs, "doc_id", "text", ref)
-    val a = spark.read.parquet(s"$root/stats")
-      .select("n_docs", "sum_dl", "avgdl").collect()(0)
-    val b = spark.read.parquet(s"$ref/stats")
-      .select("n_docs", "sum_dl", "avgdl").collect()(0)
-    assert(a == b, s"incremental stats $a != rebuilt stats $b")
-  }
-
-  test("a died append is detected loudly and compaction repairs it") {
+  test("a died rebuild is detected loudly and a rebuild repairs it") {
     val root = java.nio.file.Files.createTempDirectory("ti_crash").toString
     val docs = Seq(
       (1L, "spark joins the stream"), (2L, "spark quiet sentence")).toDF("doc_id", "text")
     TextIndex.buildTextIndex(docs, "doc_id", "text", root)
     val before = TextIndex.bm25TopK(spark, root, Seq("spark"))
       .as[(Long, Double)].collect().toSeq
-    // simulate an append that died between the postings write and the
-    // stats commit: orphan rows carrying gen+1 under the same build
-    val buildId = spark.read.parquet(s"$root/stats")
-      .select("build_id").as[String].head()
-    Seq(("spark", 9L, 2L, 2L, 1L, buildId))
-      .toDF("word", "doc_id", "tf", "dl", "gen", "build_id")
-      .write.mode("append").parquet(s"$root/postings")
-    // queries touching the orphan rows fail loudly instead of serving a
-    // half-applied append
+    // simulate a rebuild that died between the postings write and the
+    // stats commit: the committed stats name another build
+    val st = spark.read.parquet(s"$root/stats").collect()(0)
+    Seq((st.getLong(0), st.getLong(1), st.getDouble(2), "stale-build"))
+      .toDF("n_docs", "sum_dl", "avgdl", "build_id")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
+    // queries fail loudly instead of scoring postings against another
+    // build's corpus constants
     val e = intercept[Exception] {
       TextIndex.bm25TopK(spark, root, Seq("spark")).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("compactTextIndex")), e.toString)
-    // the next append refuses instead of overlaying the dead generation
-    val e2 = intercept[IllegalArgumentException] {
-      TextIndex.appendToTextIndex(
-        Seq((7L, "new words")).toDF("doc_id", "text"), "doc_id", "text", root)
-    }
-    assert(e2.getMessage.contains("uncommitted generation"))
-    // compaction drops the uncommitted rows and restores the committed view
-    TextIndex.compactTextIndex(spark, root)
+    assert(messages(e).exists(_.contains("rebuild the index")), e.toString)
+    TextIndex.buildTextIndex(docs, "doc_id", "text", root)
     assert(TextIndex.bm25TopK(spark, root, Seq("spark"))
       .as[(Long, Double)].collect().toSeq == before)
   }

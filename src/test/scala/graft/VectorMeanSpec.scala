@@ -1,8 +1,12 @@
 package graft
 
-import graft.operators.VectorMean
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+/** q41_vector_stats' posexplode/avg long form checked against a typed
+  * Aggregator that sums each group's vectors element-wise.
+  */
 class VectorMeanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,4 +37,37 @@ class VectorMeanSpec extends SparkSpec {
       .agg(new VectorMean(4).toColumn).collect()
     assert(out.isEmpty)
   }
+}
+
+/** Element-wise mean of a group of float vectors. The buffer is (running
+  * component sums, count); merge is associative and commutative, so Spark
+  * combines map-side partials before the shuffle.
+  */
+final case class VecMeanBuf(sums: Array[Double], n: Long)
+
+class VectorMean(dim: Int)
+  extends Aggregator[Array[Float], VecMeanBuf, Array[Double]] {
+
+  override def zero: VecMeanBuf = VecMeanBuf(Array.ofDim[Double](dim), 0L)
+
+  override def reduce(b: VecMeanBuf, a: Array[Float]): VecMeanBuf = {
+    require(a.length == dim,
+      s"ragged embedding dimensions: got ${a.length}, expected $dim")
+    var i = 0
+    while (i < dim) { b.sums(i) += a(i); i += 1 }
+    VecMeanBuf(b.sums, b.n + 1)
+  }
+
+  override def merge(x: VecMeanBuf, y: VecMeanBuf): VecMeanBuf = {
+    var i = 0
+    while (i < dim) { x.sums(i) += y.sums(i); i += 1 }
+    VecMeanBuf(x.sums, x.n + y.n)
+  }
+
+  override def finish(b: VecMeanBuf): Array[Double] =
+    if (b.n == 0) Array.ofDim[Double](dim) else b.sums.map(_ / b.n)
+
+  override def bufferEncoder: Encoder[VecMeanBuf] = Encoders.product[VecMeanBuf]
+  override def outputEncoder: Encoder[Array[Double]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
 }
