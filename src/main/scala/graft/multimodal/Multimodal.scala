@@ -242,7 +242,7 @@ object Multimodal {
   private def bandedFpPairs(
       hashes: DataFrame, fpCol: String,
       maxHamming: Int, maxBucket: Int, repOverCap: Boolean,
-      numReps: Int = 1): DataFrame = {
+      numReps: Int): DataFrame = {
     require(maxHamming < 4,
       "4 bands over 64 bits are only pigeonhole-complete for Hamming <= 3; " +
         "raise the band count to raise the threshold")

@@ -40,7 +40,6 @@ object Dsir {
     require(nSlots >= 2 && nSlots <= (1 << 20),
       s"nSlots must be in [2, 2^20], got $nSlots")
     val s = raw.sparkSession
-    import s.implicits._
     val slots = raw
       .select(isTarget.as("is_t"), explode(TextHash.tokens(col(textCol))).as("tok"))
       .filter(col("tok") =!= "")

@@ -414,7 +414,6 @@ object Media {
     * the cached path is value-identical to inline.
     */
   private def audioPairs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val p = graft.Artifacts.onDisk("audpairs169", s, dir) { out =>
       Multimodal.audioNearDupPairs(audioMedia(s, dir), maxHamming = 3)
         .write.mode("overwrite").parquet(out)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{MixtureReweight, QualityClassifier}
+import graft.operators.MixtureReweight
 
 /** q134: trained source-mixture reweighting
   * ([[graft.operators.MixtureReweight]]) — the dynamic counterpart to

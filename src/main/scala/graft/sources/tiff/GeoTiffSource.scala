@@ -3,16 +3,17 @@ package graft.sources.tiff
 import java.util
 
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 import graft.functions.GeoMath
 
@@ -33,14 +34,24 @@ import graft.functions.GeoMath
   *
   * Spark mapping:
   *   - window planning (A2)  -> one InputPartition per <=maxBlockSize² window
+  *   - row emission          -> a columnar PartitionReader: per window, the
+  *                              mask walk collects up to
+  *                              [[GeoTiffPartitionReader.BatchRows]] valid
+  *                              pixels, and each required column is filled
+  *                              into one reused OnHeapColumnVector by its
+  *                              own typed loop; Spark's ColumnarToRow
+  *                              codegen hands the rows on (no row reader)
   *   - NoData mask (A3)      -> applied inside the PartitionReader, and the
   *                              residual filter is still evaluated by Spark
   *   - lon/lat range filters -> window (partition) pruning via the inverse
   *                              affine transform (SupportsPushDownFilters)
   *   - column pruning (A1)   -> SupportsPushDownRequiredColumns; pruned
   *                              value columns skip their raster read
-  *                              entirely
+  *                              entirely, and a zero-column scan still
+  *                              walks the mask for its row count
   *   - area (A6)             -> computed per row from the window's latitude
+  *   - SQL metrics           -> [[GeoTiffMetrics]] on the scan node, counted
+  *                              per window and per batch
   *
   * Options: `paths` (comma-separated, first = mask raster), `colNames`
   * (comma-separated, default val1..valN), `bands` (comma-separated 1-based
@@ -58,9 +69,9 @@ import graft.functions.GeoMath
   * Scale posture: planning reads only TIFF headers (one tiny IFD read per
   * raster); each task decodes exactly its window through the chunk reader
   * ([[RawStripGrid]] over [[StripDecode]], the one pixel path for classic
-  * TIFF and BigTIFF alike), so executor memory is bounded by maxBlockSize²
-  * (plus one strip or tile) regardless of raster size, and tasks scale
-  * with raster area / block².
+  * TIFF and BigTIFF alike), so executor memory is O(maxBlockSize²) (plus
+  * one strip or tile, and one batch of BatchRows rows) regardless of
+  * raster size, and tasks scale with raster area / block².
   */
 class GeoTiffSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "geotiff"
@@ -133,7 +144,7 @@ object GeoTiffTable {
     * undeclared — the reference era's files) CRS, neutral x/y when the
     * GeoKeyDirectory declares a projected/geocentric model. THE single
     * point of truth — the table's schema and the partition reader's
-    * extractors both resolve names here, so they cannot drift apart.
+    * column fillers both resolve names here, so they cannot drift apart.
     */
   def coordNames(meta: TiffTags.RasterMeta): (String, String) =
     if (meta.nonGeographic) ("x", "y") else ("lon", "lat")
@@ -239,7 +250,7 @@ class GeoTiffTable(
     // emits (coordNames depends on the CRS kind, so the check lives here,
     // after metas resolve — a band named "lon" on a projected x/y frame is
     // legal and zonalStats' ambiguity guard handles it): a duplicate field
-    // name would make the extractor emit the coordinate for both copies
+    // name would make the reader fill the coordinate for both copies
     // and the band values silently unreadable. Case-insensitive because
     // Spark's default analyzer resolves names case-insensitively.
     val cn = GeoTiffTable.coordNames(first)
@@ -398,6 +409,40 @@ class GeoTiffScan(
   override def createReaderFactory(): PartitionReaderFactory =
     new GeoTiffReaderFactory(metas.toArray, colNames.toArray, required, calcArea,
       bands.toArray, resampleNearest, datumBridge)
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = GeoTiffMetrics.all
+}
+
+/** The scan node's SQL metrics, summed over tasks. Readers count them per
+  * window and per batch, never per pixel. Spark re-creates a metric from
+  * its class name to aggregate it, so each is a class of its own.
+  */
+object GeoTiffMetrics {
+  sealed abstract class Sum(metricName: String, desc: String) extends CustomSumMetric {
+    override def name(): String = metricName
+    override def description(): String = desc
+  }
+  final class Windows extends Sum("windows", "windows read")
+  final class PixelsVisited extends Sum("pixelsVisited", "mask pixels visited")
+  final class RowsOut extends Sum("rowsOut", "rows out")
+  final class Batches extends Sum("batches", "column batches out")
+  final class BytesRead extends Sum("bytesRead", "bytes read from the rasters")
+  final class BytesDecoded extends Sum("bytesDecoded", "chunk bytes decoded")
+  final class DecodeNs extends Sum("decodeNs", "window read and decode time (ns)")
+  final class FillNs extends Sum("fillNs", "mask walk and column fill time (ns)")
+
+  def all: Array[CustomMetric] = Array(new Windows, new PixelsVisited, new RowsOut,
+    new Batches, new BytesRead, new BytesDecoded, new DecodeNs, new FillNs)
+
+  private val names: Array[String] = all.map(_.name())
+
+  /** One task's values, in the order of [[all]]. */
+  def values(vs: Long*): Array[CustomTaskMetric] = names.zip(vs).map { case (n, v) =>
+    new CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
+  }
 }
 
 class GeoTiffReaderFactory(
@@ -409,7 +454,12 @@ class GeoTiffReaderFactory(
     resampleNearest: Boolean,
     datumBridge: String)
   extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("the geotiff source reads column batches only")
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     new GeoTiffPartitionReader(metas, colNames, required,
       partition.asInstanceOf[GeoTiffPartition].window, calcArea, bands, resampleNearest,
       datumBridge)
@@ -425,7 +475,7 @@ class GeoTiffReaderFactory(
   * layouts (COG) decode each overlapping tile once (O(tile + window)).
   */
 private[tiff] final class RawStripGrid(meta: TiffTags.RasterMeta, window: TiffWindow,
-    band: Int = 0) {
+    band: Int, bytes: StripDecode.ByteCounts) {
 
   require(band >= 0 && band < meta.samplesPerPixel,
     s"${meta.path}: band ${band + 1} of ${meta.samplesPerPixel} requested")
@@ -437,24 +487,26 @@ private[tiff] final class RawStripGrid(meta: TiffTags.RasterMeta, window: TiffWi
   private val planar = meta.planarConfig == 2
   private val plane = if (planar) band else -1
   private val pixBytes = if (planar) bytesPer else bytesPer * meta.samplesPerPixel
-  private val rowBytes = window.width * pixBytes
   private val bandOff = if (planar) 0 else band * bytesPer
   private val buf: java.nio.ByteBuffer = {
     val arr =
-      if (meta.tiled) StripDecode.readTiledWindow(meta, window, bytesPer, plane)
+      if (meta.tiled) StripDecode.readTiledWindow(meta, window, bytesPer, plane, bytes)
       // predictor 2 stores row deltas from COLUMN 0, so a window read that
       // skips columns cannot undo it — an uncompressed predictor-2 strip
       // (legal: some writers strip the codec but keep the predictor) must
       // take the full-strip decode path, not the raw seek-read
       else if (meta.compression == 1 && meta.predictor == 1)
-        StripDecode.readRawWindow(meta, window, bytesPer, plane)
-      else StripDecode.readCompressedWindow(meta, window, bytesPer, plane)
+        StripDecode.readRawWindow(meta, window, bytesPer, plane, bytes)
+      else StripDecode.readCompressedWindow(meta, window, bytesPer, plane, bytes)
     java.nio.ByteBuffer.wrap(arr).order(
       if (meta.littleEndian) java.nio.ByteOrder.LITTLE_ENDIAN
       else java.nio.ByteOrder.BIG_ENDIAN)
   }
 
-  private def idx(x: Int, y: Int): Int = y * rowBytes + x * pixBytes + bandOff
+  /** Byte offset of window pixel p = y × width + x (a window row is
+    * exactly width pixels, so rows need no stride of their own).
+    */
+  private def at(p: Int): Int = p * pixBytes + bandOff
 
   /** Window pixels in sparse chunks, which decode to zero bytes; their
     * samples are set to the raster's NoData when it has one, so a
@@ -464,50 +516,80 @@ private[tiff] final class RawStripGrid(meta: TiffTags.RasterMeta, window: TiffWi
   for (bits <- sparse; nd <- meta.noData) {
     var i = bits.nextSetBit(0)
     while (i >= 0) {
-      val at = idx(i % window.width, i / window.width)
       (meta.bitsPerSample, meta.sampleFormat) match {
-        case (32, 3) => buf.putFloat(at, nd.toFloat)
-        case (64, 3) => buf.putDouble(at, nd)
-        case (8, _) => buf.put(at, nd.toLong.toByte)
-        case (16, _) => buf.putShort(at, nd.toLong.toShort)
-        case (32, _) => buf.putInt(at, nd.toLong.toInt)
+        case (32, 3) => buf.putFloat(at(i), nd.toFloat)
+        case (64, 3) => buf.putDouble(at(i), nd)
+        case (8, _) => buf.put(at(i), nd.toLong.toByte)
+        case (16, _) => buf.putShort(at(i), nd.toLong.toShort)
+        case (32, _) => buf.putInt(at(i), nd.toLong.toInt)
         case _ => ()
       }
       i = bits.nextSetBit(i + 1)
     }
   }
 
-  /** Whether the window reads any sparse chunk. */
-  def hasSparse: Boolean = sparse.isDefined
-
-  /** Whether window pixel (x, y) lies in a sparse chunk. */
-  def isSparse(x: Int, y: Int): Boolean = sparse.exists(_.get(y * window.width + x))
-
-  /** Integer sample: unsigned widths zero-extend, signed widths
-    * sign-extend, 32-bit returns raw bits (the caller widens u32 with
-    * & 0xffffffffL).
+  /** NoData test on a sample's byte offset, at the raster's native
+    * precision (the value its Spark column carries): comparing a raw double
+    * would miss f32 NoData whose ASCII form is not the float's exact
+    * decimal expansion, and u32 NoData >= 2^31. Resolved once per raster.
     */
-  def getSample(x: Int, y: Int): Int = {
-    val i = idx(x, y)
-    (meta.bitsPerSample, meta.sampleFormat) match {
-      case (8, 2) => buf.get(i).toInt
-      case (8, _) => buf.get(i) & 0xff
-      case (16, 2) => buf.getShort(i).toInt
-      case (16, _) => buf.getShort(i) & 0xffff
-      case (32, _) => buf.getInt(i)
-      case (b, f) => throw new IllegalStateException(
-        s"${meta.path}: unsupported TIFF integer layout bits=$b format=$f")
+  private val noDataAt: Int => Boolean = meta.noData match {
+    case None => _ => false
+    case Some(nd) => (meta.sampleFormat, meta.bitsPerSample) match {
+      case (3, 32) =>
+        val ndF = nd.toFloat
+        o => { val v = buf.getFloat(o); v == ndF || (ndF.isNaN && v.isNaN) }
+      case (3, 64) => o => { val v = buf.getDouble(o); v == nd || (nd.isNaN && v.isNaN) }
+      case (2, 8) => o => buf.get(o).toDouble == nd
+      case (1, 8) => o => (buf.get(o) & 0xff).toDouble == nd
+      case (2, 16) => o => buf.getShort(o).toDouble == nd
+      case (1, 16) => o => (buf.getShort(o) & 0xffff).toDouble == nd
+      case (2, 32) => o => buf.getInt(o).toDouble == nd
+      case (1, 32) => o => (buf.getInt(o) & 0xffffffffL).toDouble == nd
+      case (f, b) => throw new IllegalStateException(
+        s"${meta.path}: unsupported sample format/bits $f/$b")
     }
   }
 
-  def getSampleFloat(x: Int, y: Int): Float =
-    if (meta.sampleFormat == 3 && meta.bitsPerSample == 32) buf.getFloat(idx(x, y))
-    else getSample(x, y).toFloat
+  /** Walks the window row-major from pixel `from` and writes the indices
+    * of up to `out.length` pixels that hold data into `out`: a pixel holds
+    * none when it is NoData or lies in a sparse chunk, NoData declared or
+    * not. Returns how many it wrote.
+    */
+  def collectValid(from: Int, out: Array[Int]): Int = {
+    val end = window.width * window.height
+    val bits = sparse.orNull
+    var n = 0
+    var p = from
+    while (p < end && n < out.length) {
+      if ((bits == null || !bits.get(p)) && !noDataAt(at(p))) { out(n) = p; n += 1 }
+      p += 1
+    }
+    n
+  }
 
-  def getSampleDouble(x: Int, y: Int): Double =
-    if (meta.sampleFormat == 3 && meta.bitsPerSample == 64) buf.getDouble(idx(x, y))
-    else if (meta.sampleFormat == 3) getSampleFloat(x, y).toDouble
-    else getSample(x, y).toDouble
+  /** Writes the samples of window pixels `pix(0 until n)` into rows
+    * 0 until n of `v`, typed as [[GeoTiffTable.sparkType]] says: unsigned
+    * widths zero-extend into the next wider type, signed ones pass as is.
+    * The sample type is matched once per call, not per pixel.
+    */
+  def fill(v: OnHeapColumnVector, pix: Array[Int], n: Int): Unit = {
+    var k = 0
+    (meta.sampleFormat, meta.bitsPerSample) match {
+      case (3, 32) => while (k < n) { v.putFloat(k, buf.getFloat(at(pix(k)))); k += 1 }
+      case (3, 64) => while (k < n) { v.putDouble(k, buf.getDouble(at(pix(k)))); k += 1 }
+      case (2, 8) => while (k < n) { v.putByte(k, buf.get(at(pix(k)))); k += 1 }
+      case (1, 8) =>
+        while (k < n) { v.putShort(k, (buf.get(at(pix(k))) & 0xff).toShort); k += 1 }
+      case (2, 16) => while (k < n) { v.putShort(k, buf.getShort(at(pix(k)))); k += 1 }
+      case (1, 16) => while (k < n) { v.putInt(k, buf.getShort(at(pix(k))) & 0xffff); k += 1 }
+      case (2, 32) => while (k < n) { v.putInt(k, buf.getInt(at(pix(k)))); k += 1 }
+      case (1, 32) =>
+        while (k < n) { v.putLong(k, buf.getInt(at(pix(k))) & 0xffffffffL); k += 1 }
+      case (f, b) => throw new IllegalStateException(
+        s"${meta.path}: unsupported sample format/bits $f/$b")
+    }
+  }
 }
 
 /** How raster `sec` samples the mask grid of a zip: the ONE composition
@@ -668,8 +750,11 @@ private[graft] final class SecondaryMap(mask: TiffTags.RasterMeta, sec: TiffTags
 }
 
 /** Reads one window of every (non-pruned) raster and streams the valid
-  * pixels of raster 1 as rows. Region reads keep memory at O(window), and
-  * each raster is decoded at most once per task.
+  * pixels of raster 1 as column batches: the mask walk collects up to
+  * [[GeoTiffPartitionReader.BatchRows]] valid pixels in row-major order,
+  * then each required column fills its reused vector in one typed loop.
+  * Region reads keep memory at O(window), and each raster is decoded at
+  * most once per task.
   */
 class GeoTiffPartitionReader(
     metas: Array[TiffTags.RasterMeta],
@@ -680,7 +765,8 @@ class GeoTiffPartitionReader(
     bands: Array[Int],
     resampleNearest: Boolean,
     datumBridge: String)
-  extends PartitionReader[InternalRow] {
+  extends PartitionReader[ColumnarBatch] {
+  import GeoTiffPartitionReader.BatchRows
 
   private val m0 = metas(0)
   private val fieldNames = required.fieldNames
@@ -697,141 +783,154 @@ class GeoTiffPartitionReader(
 
   private val readWindows: Array[TiffWindow] = maps.map(_.readWindow(window))
 
+  // metrics, counted per window and per batch
+  private val bytes = new StripDecode.ByteCounts
+  private var windows = 0L
+  private var decodeNs = 0L
+  private var fillNs = 0L
+  private var batches = 0L
+  private var rowsOut = 0L
+
   private lazy val rasters: Array[RawStripGrid] = {
+    val t0 = System.nanoTime()
     val arr = new Array[RawStripGrid](metas.length)
-    valueIdx.foreach(i => arr(i) = new RawStripGrid(metas(i), readWindows(i), bands(i) - 1))
+    valueIdx.foreach(i =>
+      arr(i) = new RawStripGrid(metas(i), readWindows(i), bands(i) - 1, bytes))
+    decodeNs += System.nanoTime() - t0
+    windows += 1
     arr
   }
 
-  private val types: Array[DataType] = metas.map(GeoTiffTable.sparkType)
-  private var r = 0
-  private var c = -1
-  private var current: InternalRow = _
+  private val end = window.width * window.height
+  // the next window pixel the mask walk tests
+  private var pos = 0
+  // the batch's rows: window pixel index, column and row of each
+  private val pix = new Array[Int](BatchRows)
+  private val xs = new Array[Int](BatchRows)
+  private val ys = new Array[Int](BatchRows)
+  private val vectors = OnHeapColumnVector.allocateColumns(BatchRows, required)
+  private val batch = new ColumnarBatch(vectors.toArray[ColumnVector])
 
-  private def sampleValue(i: Int, x: Int, y: Int): Any = {
-    val ras = rasters(i)
-    types(i) match {
-      case FloatType => ras.getSampleFloat(x, y)
-      case DoubleType => ras.getSampleDouble(x, y)
-      case ByteType => ras.getSample(x, y).toByte
-      case ShortType => ras.getSample(x, y).toShort
-      case IntegerType => ras.getSample(x, y)
-      case LongType => ras.getSample(x, y).toLong & 0xffffffffL
-      case t => throw new IllegalStateException(s"unexpected type $t")
-    }
-  }
-
-  /** NoData test at the FIRST raster's native precision — comparing the
-    * raw double sample would miss (a) f32 nodata whose ASCII form is not
-    * the float's exact decimal expansion, and (b) unsigned-32 nodata
-    * >= 2^31, which getSampleDouble sign-extends.
-    */
-  private lazy val noDataAt: (Int, Int) => Boolean = m0.noData match {
-    case None => (_, _) => false
-    case Some(nd) => types(0) match {
-      case FloatType =>
-        val ndF = nd.toFloat
-        (x, y) => { val v = rasters(0).getSampleFloat(x, y); v == ndF || (ndF.isNaN && v.isNaN) }
-      case DoubleType =>
-        (x, y) => { val v = rasters(0).getSampleDouble(x, y); v == nd || (nd.isNaN && v.isNaN) }
-      case ByteType => (x, y) => rasters(0).getSample(x, y).toByte.toDouble == nd
-      case ShortType => (x, y) => rasters(0).getSample(x, y).toShort.toDouble == nd
-      case IntegerType => (x, y) => rasters(0).getSample(x, y).toDouble == nd
-      case LongType => (x, y) => (rasters(0).getSample(x, y).toLong & 0xffffffffL).toDouble == nd
-      case t => throw new IllegalStateException(s"unexpected type $t")
-    }
-  }
-
-  /** A mask pixel emits no row when it is NoData or lies in a sparse
-    * chunk, NoData declared or not.
-    */
-  private lazy val maskedAt: (Int, Int) => Boolean =
-    if (!rasters(0).hasSparse) noDataAt
-    else (x, y) => rasters(0).isSparse(x, y) || noDataAt(x, y)
-
-  /** One extractor per required field, resolved ONCE — the per-pixel loop
-    * must not do string comparisons or name lookups (this runs per valid
-    * pixel, millions of times per task).
-    */
   // same affine math under either CRS naming; resolved by the table's
   // single point of truth so reader and schema cannot drift
   private val (xName, yName) = GeoTiffTable.coordNames(m0)
 
-  private lazy val extractors: Array[(Int, Int) => Any] = fieldNames.map { f =>
+  private def lonAt(k: Int): Double =
+    m0.lonOf((window.colOff + xs(k)).toDouble, (window.rowOff + ys(k)).toDouble)
+
+  private def latAt(k: Int): Double =
+    m0.latOf((window.colOff + xs(k)).toDouble, (window.rowOff + ys(k)).toDouble)
+
+  // full-affine area (round-15): delegates to the historical trapezoid
+  // bit-for-bit when rotX = rotY = 0, so axis-aligned outputs are
+  // unchanged; on rotated grids the centroid latitude varies per COLUMN
+  // too, which latOf already carries
+  private def areaAt(k: Int): Double =
+    GeoMath.pixelAreaAffineM2(latAt(k), m0.pixelScaleX, m0.pixelScaleY, m0.rotX, m0.rotY)
+
+  // rotY = 0: latOf, the one input that varies, is the same double at every
+  // column of a row, so the row's first point computes the area for the
+  // rest of the row (across batches too)
+  private var areaRow = -1
+  private var rowArea = 0.0
+
+  /** One filler per required field, resolved once: each writes rows
+    * 0 until n of its vector in its own loop, with no name lookups or
+    * type matches per pixel.
+    */
+  private lazy val fillers: Array[Int => Unit] = fieldNames.indices.map { j =>
+    val f = fieldNames(j)
+    val v = vectors(j)
     if (f == xName)
-      (x: Int, y: Int) => java.lang.Double.valueOf(
-        m0.lonOf((window.colOff + x).toDouble, (window.rowOff + y).toDouble))
+      (n: Int) => { var k = 0; while (k < n) { v.putDouble(k, lonAt(k)); k += 1 } }
     else if (f == yName)
-      (x: Int, y: Int) => java.lang.Double.valueOf(
-        m0.latOf((window.colOff + x).toDouble, (window.rowOff + y).toDouble))
+      (n: Int) => { var k = 0; while (k < n) { v.putDouble(k, latAt(k)); k += 1 } }
     else if (f == "area" && calcArea) {
-      // full-affine area (round-15): delegates to the historical trapezoid
-      // bit-for-bit when rotX = rotY = 0, so axis-aligned outputs are
-      // unchanged; on rotated grids the centroid latitude varies per COLUMN
-      // too, which latOf already carries
-      def area(x: Int, y: Int): java.lang.Double = java.lang.Double.valueOf(
-        GeoMath.pixelAreaAffineM2(
-          m0.latOf((window.colOff + x).toDouble, (window.rowOff + y).toDouble),
-          m0.pixelScaleX, m0.pixelScaleY, m0.rotX, m0.rotY))
-      if (m0.rotY != 0.0) area _
-      else {
-        // rotY = 0: latOf, the one input that varies, is the same double at
-        // every column of a row, so the row's first point computes the area
-        // for the rest of the row (the same call on the same double)
-        var row = -1
-        var rowArea: java.lang.Double = null
-        (x: Int, y: Int) => {
-          if (y != row) { row = y; rowArea = area(x, y) }
-          rowArea
+      if (m0.rotY != 0.0)
+        (n: Int) => { var k = 0; while (k < n) { v.putDouble(k, areaAt(k)); k += 1 } }
+      else (n: Int) => {
+        var k = 0
+        while (k < n) {
+          if (ys(k) != areaRow) { areaRow = ys(k); rowArea = areaAt(k) }
+          v.putDouble(k, rowArea)
+          k += 1
         }
       }
     } else {
       val i = colNames.indexOf(f)
       require(i >= 0, s"unknown required column $f")
-      valueExtractor(i)
+      valueFiller(i, v)
     }
-  }
+  }.toArray
 
-  /** Value extractor for raster i: window-relative identity on matching
-    * grids; under resample=nearest with a different grid or CRS, each mask
+  /** Filler for raster i: window-relative identity on matching grids;
+    * under resample=nearest with a different grid or CRS, each mask
     * pixel's centroid maps through [[SecondaryMap.frac]] and samples the
     * CELL containing it (floor of the fractional index — standard
     * nearest-neighbor regridding).
     */
-  private def valueExtractor(i: Int): (Int, Int) => Any = {
+  private def valueFiller(i: Int, v: OnHeapColumnVector): Int => Unit = {
     val sm = maps(i)
-    if (!sm.sampled) {
-      (x: Int, y: Int) => sampleValue(i, x, y)
-    } else {
+    val grid = rasters(i)
+    if (!sm.sampled) (n: Int) => grid.fill(v, pix, n)
+    else {
       val rw = readWindows(i)
-      (x: Int, y: Int) => {
-        val pq = sm.frac((window.colOff + x).toDouble, (window.rowOff + y).toDouble)
-        // clamp into the read window: coverage was validated at planning,
-        // so this only absorbs last-ulp boundary wobble
-        val cs = math.min(math.max(math.floor(pq._1).toInt - rw.colOff, 0), rw.width - 1)
-        val rs = math.min(math.max(math.floor(pq._2).toInt - rw.rowOff, 0), rw.height - 1)
-        sampleValue(i, cs, rs)
+      val cells = new Array[Int](BatchRows)
+      (n: Int) => {
+        var k = 0
+        while (k < n) {
+          val pq = sm.frac((window.colOff + xs(k)).toDouble, (window.rowOff + ys(k)).toDouble)
+          // clamp into the read window: coverage was validated at planning,
+          // so this only absorbs last-ulp boundary wobble
+          val cs = math.min(math.max(math.floor(pq._1).toInt - rw.colOff, 0), rw.width - 1)
+          val rs = math.min(math.max(math.floor(pq._2).toInt - rw.rowOff, 0), rw.height - 1)
+          cells(k) = rs * rw.width + cs
+          k += 1
+        }
+        grid.fill(v, cells, n)
       }
     }
   }
 
   override def next(): Boolean = {
-    while (true) {
-      c += 1
-      if (c >= window.width) { c = 0; r += 1 }
-      if (r >= window.height) return false
-      if (!maskedAt(c, r)) {
-        val values = new Array[Any](extractors.length)
-        var i = 0
-        while (i < extractors.length) { values(i) = extractors(i)(c, r); i += 1 }
-        current = new GenericInternalRow(values)
-        return true
+    if (pos >= end) return false
+    val mask = rasters(0)
+    val t0 = System.nanoTime()
+    val n = mask.collectValid(pos, pix)
+    pos = if (n == BatchRows) pix(n - 1) + 1 else end
+    if (n > 0) {
+      // window column and row of each pixel, without a division per pixel
+      var y = pix(0) / window.width
+      var rowStart = y * window.width
+      var k = 0
+      while (k < n) {
+        while (pix(k) - rowStart >= window.width) { y += 1; rowStart += window.width }
+        xs(k) = pix(k) - rowStart
+        ys(k) = y
+        k += 1
       }
+      var j = 0
+      while (j < fillers.length) { fillers(j)(n); j += 1 }
+      batch.setNumRows(n)
+      batches += 1
+      rowsOut += n
     }
-    false
+    fillNs += System.nanoTime() - t0
+    n > 0
   }
 
-  override def get(): InternalRow = current
+  override def get(): ColumnarBatch = batch
 
-  override def close(): Unit = ()
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    GeoTiffMetrics.values(windows, pos.toLong, rowsOut, batches,
+      bytes.read, bytes.decoded, decodeNs, fillNs)
+
+  override def close(): Unit = batch.close()
+}
+
+object GeoTiffPartitionReader {
+  /** Rows per column batch: the reader's one batch size, as Spark's own
+    * vectorized readers use.
+    */
+  val BatchRows = 4096
 }

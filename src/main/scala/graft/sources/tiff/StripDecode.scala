@@ -42,6 +42,15 @@ private[graft] object StripDecode {
     */
   private val LzmaMemLimitKiB: Int = 1 << 18
 
+  /** Bytes one reader took from its files (`read`) and the chunk bytes
+    * they decoded to (`decoded`, full chunk widths; a raw seek-read
+    * decodes what it reads). Sparse chunks add to neither.
+    */
+  final class ByteCounts {
+    var read = 0L
+    var decoded = 0L
+  }
+
   /** Byte-size of a window/chunk buffer, computed in Long and gated at the
     * JVM array limit: a whole-image single-strip TIFF (rowsPerStrip
     * defaults to the full height) or a wide multi-band chunk can push
@@ -62,7 +71,7 @@ private[graft] object StripDecode {
     * * bytesPerSample).
     */
   def readRawWindow(meta: TiffTags.RasterMeta, window: TiffWindow, bytesPer: Int,
-      plane: Int = -1): Array[Byte] = {
+      plane: Int = -1, bytes: ByteCounts = new ByteCounts): Array[Byte] = {
     val spp = if (plane >= 0) 1 else meta.samplesPerPixel
     val stripBase = if (plane >= 0) plane * stripsPerBand(meta) else 0
     val pixBytes = bytesPer * spp
@@ -81,6 +90,8 @@ private[graft] object StripDecode {
         if (off != 0) {
           raf.seek(off + (rowInStrip * meta.width + window.colOff) * pixBytes)
           raf.readFully(arr, y * rowBytes, rowBytes)
+          bytes.read += rowBytes
+          bytes.decoded += rowBytes
         }
         y += 1
       }
@@ -130,7 +141,7 @@ private[graft] object StripDecode {
     * width, then copy the window's columns of the window's rows.
     */
   def readCompressedWindow(meta: TiffTags.RasterMeta, window: TiffWindow, bytesPer: Int,
-      plane: Int = -1): Array[Byte] = {
+      plane: Int = -1, bytes: ByteCounts = new ByteCounts): Array[Byte] = {
     val spp = if (plane >= 0) 1 else meta.samplesPerPixel
     val stripBase = if (plane >= 0) plane * stripsPerBand(meta) else 0
     val pixBytes = bytesPer * spp
@@ -146,7 +157,7 @@ private[graft] object StripDecode {
         val stripRow0 = s.toLong * meta.rowsPerStrip
         val rowsInStrip = math.min(meta.rowsPerStrip, meta.height - stripRow0).toInt
         val strip = decodeChunk(meta, raf, stripBase + s, rows = rowsInStrip,
-          rowWidth = meta.width, bytesPer = bytesPer, tiled = false, spp = spp)
+          rowWidth = meta.width, bytesPer = bytesPer, tiled = false, spp = spp, bytes)
         // copy the intersection of this strip's rows with the window's rows
         val yLo = math.max(window.rowOff.toLong, stripRow0)
         val yHi = math.min((window.rowOff + window.height).toLong, stripRow0 + rowsInStrip)
@@ -173,7 +184,7 @@ private[graft] object StripDecode {
     * the chunk.
     */
   def readTiledWindow(meta: TiffTags.RasterMeta, window: TiffWindow, bytesPer: Int,
-      plane: Int = -1): Array[Byte] = {
+      plane: Int = -1, bytes: ByteCounts = new ByteCounts): Array[Byte] = {
     val tw = meta.tileWidth
     val tl = meta.tileLength
     val tilesAcross = (meta.width + tw - 1) / tw
@@ -195,7 +206,7 @@ private[graft] object StripDecode {
         var tc = tc0
         while (tc <= tc1) {
           val tile = decodeChunk(meta, raf, tileBase + tr * tilesAcross + tc,
-            rows = tl, rowWidth = tw, bytesPer = bytesPer, tiled = true, spp = spp)
+            rows = tl, rowWidth = tw, bytesPer = bytesPer, tiled = true, spp = spp, bytes)
           val x0 = math.max(window.colOff, tc * tw)
           val x1 = math.min(window.colOff + window.width, (tc + 1) * tw)
           val y0 = math.max(window.rowOff, tr * tl)
@@ -232,7 +243,8 @@ private[graft] object StripDecode {
       rowWidth: Int,
       bytesPer: Int,
       tiled: Boolean,
-      spp: Int): Array[Byte] = {
+      spp: Int,
+      bytes: ByteCounts): Array[Byte] = {
     val offsets = if (tiled) meta.tileOffsets else meta.stripOffsets
     val kind = if (tiled) "tile" else "strip"
     val expected = checkedSize(meta.path, s"$kind $chunkIdx decode buffer",
@@ -241,9 +253,11 @@ private[graft] object StripDecode {
     // a sparse chunk (offset 0) holds no bytes: it decodes to zeros, with
     // no predictor to undo
     if (offsets(chunkIdx) == 0) return out
+    bytes.decoded += expected
     if (meta.compression == 1) {
       raf.seek(offsets(chunkIdx))
       raf.readFully(out)
+      bytes.read += expected
     } else {
       val counts = if (tiled) meta.tileByteCounts else meta.stripByteCounts
       val compLen = counts(chunkIdx)
@@ -252,6 +266,7 @@ private[graft] object StripDecode {
       val comp = new Array[Byte](compLen.toInt)
       raf.seek(offsets(chunkIdx))
       raf.readFully(comp)
+      bytes.read += compLen
       meta.compression match {
         case 8 | 32946 => // zlib DEFLATE ("Adobe" code 8 and the legacy 32946 are the same stream)
           val inf = new Inflater()

@@ -13,10 +13,11 @@ import java.nio.{ByteBuffer, ByteOrder}
   * limit routinely. Both header widths go through the same validation and
   * the same pixel path: the chunk layout tags — strips (273/278/279) OR
   * tiles (322/323/324/325, the cloud-optimized-GeoTIFF shape) — are read
-  * and the source decodes chunks itself ([[GeoTiffPartitionReader]] via
-  * [[StripDecode]]): uncompressed, DEFLATE, LZW, PackBits, ZSTD, LZMA and
-  * new-style JPEG, with the horizontal-differencing or floating-point
-  * predictor — the layouts GDAL writes for real rasters. Multi-band files
+  * and the source decodes chunks itself (the columnar
+  * [[GeoTiffPartitionReader]] over [[RawStripGrid]] and [[StripDecode]]):
+  * uncompressed, DEFLATE, LZW, PackBits, ZSTD, LZMA and new-style JPEG,
+  * with the horizontal-differencing or floating-point predictor — the
+  * layouts GDAL writes for real rasters. Multi-band files
   * decode pixel-interleaved (chunky) or band-separate planes (planar);
   * unsupported layouts (other codecs, mixed-depth bands) are rejected at
   * planning with a typed error rather than garbage.

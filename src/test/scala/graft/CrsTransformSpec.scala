@@ -278,6 +278,27 @@ class CrsTransformSpec extends AnyFunSuite {
     }
   }
 
+  test("inverse's exp-form sinh and cosh match the StrictMath reference where they cancel") {
+    // sinh(η′) and the Newton step's σ = sinh(e·atanh(e·sinφ)) come from one
+    // exp each; E − 1/E cancels hardest near 0, so the pin walks the central
+    // meridian and the equator down to 1e-9° off them, plus the zone edges
+    // and 84°, within the same 1e-12° bound as the grid above
+    val offs = Seq(0.0, 1e-9, -1e-9, 1e-6, -1e-6, 1e-3, -1e-3, 0.5, -3.0, 3.0, 10.0, -10.0)
+    val lats = Seq(0.0, 1e-9, -1e-9, 1e-6, -1e-6, 1e-3, 0.5, -12.25, 45.0, -60.0, 84.0, -84.0)
+    for (p <- Seq(p33, p33s, CrsTransform.utmParams(26915).get)) {
+      var worst = 0.0
+      for (d <- offs; lat <- lats) {
+        val (e, n) = directForward(p, p.cmDeg + d, lat)
+        val (lon2, lat2) = CrsTransform.inverse(p, e, n)
+        val (lonRef, latRef) = directInverse(p, e, n)
+        worst = math.max(worst, math.max(math.abs(lon2 - lonRef), math.abs(lat2 - latRef)))
+      }
+      assert(worst < 1e-12, s"${p.ell}/${p.cmDeg}: inverse differs by $worst deg")
+      // on the meridian and the equator the exp form is exact: E = 1
+      assert(CrsTransform.inverse(p, p.falseEasting, p.falseNorthing) == ((p.cmDeg, 0.0)))
+    }
+  }
+
   test("Clenshaw sum keeps every raster_zonal-shaped centroid in its 100 m UTM cell") {
     // 1024² centroids at 2^-11° from (14°E, 47°N) southward, mapped into
     // UTM 33N: no floor(E / 100) or floor(N / 100) index may move against

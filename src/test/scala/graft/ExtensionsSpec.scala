@@ -444,8 +444,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("round-10 TVFs match their Scala operators; args validated") {
-    val sess = spark
-    import sess.implicits._
     graft.plans.GraftFunctions.register(spark)
     graft.Artifacts.clear()
     def msgOf(sql: String): String =

@@ -1942,4 +1942,112 @@ class GeoTiffSourceSpec extends SparkSpec {
     rejects(TiffFixtures.patchIfd0(tiles, s"$tmp/short_t_p.tif")(
       TiffFixtures.setChunk(325, 5, 1000L)), "short of the 1024 bytes")
   }
+
+  // ---- the columnar reader -------------------------------------------------
+
+  private def scanOf(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.execution.datasources.v2.BatchScanExec = {
+    val scans = df.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
+    }
+    assert(scans.size == 1, df.queryExecution.executedPlan.toString)
+    scans.head
+  }
+
+  test("raster2df plans a columnar BatchScanExec with no row-to-unsafe ProjectExec over it") {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, ProjectExec}
+    val df = Raster.raster2df(spark, Seq(f32, u8), calcArea = true)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val scan = scanOf(df)
+    assert(scan.supportsColumnar, plan.toString)
+    assert(plan.collect { case c: ColumnarToRowExec => c }.size == 1, plan.toString)
+    assert(plan.collect { case p: ProjectExec => p }.isEmpty, plan.toString)
+    // no row reader is kept beside the columnar one
+    intercept[UnsupportedOperationException](
+      scan.readerFactory.createReader(scan.inputPartitions.head))
+  }
+
+  test("a window of more than 4,096 valid pixels batches its rows in order across NoData and sparse runs") {
+    import graft.sources.tiff.TiffTags
+    // one 128 x 136 window in 4-row strips. Valid pixels per row: 96 in
+    // row 0, 32 in row 64, 64 in every other row (a NoData checkerboard),
+    // none in the sparse strip 32 (rows 128-131). So the 4,096th valid
+    // pixel sits mid-row 63 before a NoData pixel, and the 8,192nd ends
+    // row 127 before a NoData pixel and the sparse strip.
+    val (w, h, nd, secNd) = (128, 136, -9999.0, -7.0)
+    def maskNd(c: Int, r: Int): Boolean =
+      if (r == 0) c >= 96 else if (r == 64) c >= 32 else (c + r) % 2 == 0
+    def maskV(c: Int, r: Int): Double = if (maskNd(c, r)) nd else c * 0.5 + r
+    // the secondary: a 2x coarser s16 grid over the same extent, sampled
+    // at the mask centroids (cell (c / 2, r / 2)); its strip 7 (mask rows
+    // 56-63, across the first batch boundary) is sparse, so reads its NoData
+    def secV(c: Int, r: Int): Double = (c * 13 + r * 5) % 300 - 150.0
+    val mask = TiffFixtures.sparse(
+      TiffFixtures.writeBigTiff(s"$tmp/batch_mask.tif", w, h, maskV, 10.0, 50.0, 0.01,
+        Some("-9999"), rowsPerStrip = 4), s"$tmp/batch_mask_sparse.tif", tiled = false, Seq(32))
+    val sec = TiffFixtures.sparse(
+      TiffFixtures.writeBigTiff(s"$tmp/batch_sec.tif", w / 2, h / 2, secV, 10.0, 50.0, 0.02,
+        Some("-7"), rowsPerStrip = 4, dtype = TiffFixtures.S16),
+      s"$tmp/batch_sec_sparse.tif", tiled = false, Seq(7))
+    val valid = for (r <- 0 until h; c <- 0 until w if !maskNd(c, r) && r / 4 != 32)
+      yield (c, r)
+    assert(valid.size == 8448)
+    val (c1, r1) = valid(4095)
+    assert((c1, r1) == (62, 63) && maskNd(c1 + 1, r1))
+    val (c2, r2) = valid(8191)
+    assert((c2, r2) == (126, 127) && maskNd(c2 + 1, r2) && (r2 + 1) / 4 == 32)
+    val m = TiffTags.read(mask)
+    val expected = valid.map { case (c, r) =>
+      val lat = m.latOf(c, r)
+      (m.lonOf(c, r), lat, maskV(c, r).toFloat,
+        (if ((r / 2) / 4 == 7) secNd else secV(c / 2, r / 2)).toShort,
+        graft.functions.GeoMath.pixelAreaAffineM2(lat, 0.01, 0.01, 0.0, 0.0))
+    }
+    val df = Raster.raster2df(spark, Seq(mask, sec), colNames = Seq("m", "s"),
+      calcArea = true, resample = "nearest")
+    val got = df.collect().map(row =>
+      (row.getDouble(0), row.getDouble(1), row.getFloat(2), row.getShort(3), row.getDouble(4)))
+    assert(got.length == expected.size)
+    val firstDiff = got.indices.find(i => got(i) != expected(i))
+    assert(firstDiff.isEmpty, firstDiff.map(i => s"row $i: ${got(i)} vs ${expected(i)}"))
+    val metrics = scanOf(df).metrics
+    assert(metrics("windows").value == 1 && metrics("batches").value == 3)
+    assert(metrics("rowsOut").value == 8448 && metrics("pixelsVisited").value == w * h)
+  }
+
+  test("count() over a zero-column scan and a pruned select return the right counts") {
+    val df = Raster.raster2df(spark, Seq(f32, u8), colNames = Seq("a", "b"), calcArea = true)
+    val valid = for (r <- 0 until 8; c <- 0 until 10 if (r + c) % 7 != 0) yield (c, r)
+    assert(df.count() == valid.size)
+    val zero = df.select()
+    assert(zero.collect().length == valid.size)
+    assert(scanOf(zero).output.isEmpty)
+    val pruned = df.select("b")
+    assert(pruned.count() == valid.size)
+    assert(pruned.collect().map(_.getShort(0).toLong).sum == valid.map { case (c, r) => c + r }.sum)
+    assert(scanOf(pruned).output.map(_.name) == Seq("b"))
+    assert(df.select("lat", "area").count() == valid.size)
+  }
+
+  test("the scan node reports windows, pixels, rows, batches, bytes and times as SQL metrics") {
+    import graft.sources.tiff.TiffTags
+    val (w, h) = (40, 28)
+    val v = (c: Int, r: Int) => if ((c * 5 + r * 3) % 13 == 0) -9999.0 else c + r * 0.25
+    val p = TiffFixtures.writeBigTiff(s"$tmp/metrics.tif", w, h, v, 10.0, 50.0, 0.01,
+      Some("-9999"), rowsPerStrip = 4, compression = 8)
+    val df = Raster.raster2df(spark, Seq(p), maxBlockSize = 16)
+    val n = df.collect().length
+    assert(n == (for (r <- 0 until h; c <- 0 until w if v(c, r) != -9999.0) yield 1).size)
+    val metrics = scanOf(df).metrics
+    def m(name: String): Long = metrics(name).value
+    // 3 x 2 windows of at most 16 x 16, each with valid pixels: one batch
+    // per window; every window decodes each strip it overlaps at full
+    // width, so each of the 3 window columns decodes all 7 strips
+    assert(m("windows") == 6 && m("batches") == 6)
+    assert(m("pixelsVisited") == w * h && m("rowsOut") == n)
+    assert(m("bytesRead") == 3 * TiffTags.read(p).stripByteCounts.sum)
+    assert(m("bytesDecoded") == 3L * w * h * 4)
+    assert(m("decodeNs") > 0 && m("fillNs") > 0)
+  }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.HybridSearch
-import org.apache.spark.sql.functions._
 
 /** Reciprocal Rank Fusion ([[HybridSearch.rrf]], q116): hand-computed RRF
   * on tiny rankings, per-list cutoff semantics, missing-id handling, and

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.KMeans
-import org.apache.spark.sql.functions._
 
 class KMeansSpec extends SparkSpec {
   import spark.implicits._
